@@ -73,11 +73,13 @@ object Bench {
     // host-load sidecar (separate file — the driver's stdout/JSON
     // contract stays byte-compatible): loadavg at start and end makes
     // a contaminated one-shot self-diagnosing (this VM's CPU steal has
-    // historically swung untouched queries 2-9x — r20 verdict)
-    try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_HOST.json"),
-      s"""{"loadavg_start":"$loadStart","loadavg_end":"${loadavg()}","reps":$reps,"cpus":"$cpus"}"""
-        .getBytes("UTF-8"))
-    catch { case _: Throwable => () }
+    // historically swung untouched queries 2-9x — r20 verdict). Full
+    // runs only, like BENCH_LOCAL.json: it describes the full-map run.
+    if (only.isEmpty)
+      try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_HOST.json"),
+        s"""{"loadavg_start":"$loadStart","loadavg_end":"${loadavg()}","reps":$reps,"cpus":"$cpus"}"""
+          .getBytes("UTF-8"))
+      catch { case _: Throwable => () }
     // durable copy in the repo: even if the stdout line is clipped by
     // the log capture, the full per-query map survives for the judge.
     // Full-suite runs only — a SPARK_GRAFT_ONLY dev subset must not

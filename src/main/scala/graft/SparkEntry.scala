@@ -1,18 +1,14 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, to_json}
+import org.apache.spark.sql.functions.{col, concat, expr, lit, to_json}
 import graft.operators._
 import graft.dedup.Dedup
 import graft.text.TextStats
-import graft.ann.Ann
 import graft.multimodal.BinaryPipeline
 
 /** Driver contract — see /root/repo/SURVEY.md §2 for the inventory. */
 object SparkEntry {
-  private def t(name: String)(implicit s: SparkSession, dir: String): DataFrame =
-    Tables.load(s, dir, name)
-
   /** Temp dir for the at-rest index rows (a15/d14/d15), deleted on JVM
     * exit: under SPARK_GRAFT_REPS each rep rebuilds its index, and
     * without cleanup every rep leaked a full index copy in /tmp. */
@@ -36,9 +32,7 @@ object SparkEntry {
     docs
       .unionByName(docs.filter(col("doc_id") % 25 === 0)
         .select((col("doc_id") + 1000000L).as("doc_id"),
-          org.apache.spark.sql.functions.concat(
-            org.apache.spark.sql.functions.lit("X"),
-            org.apache.spark.sql.functions.expr("substring(text, 2)")).as("text")))
+          concat(lit("X"), expr("substring(text, 2)")).as("text")))
       .unionByName(docs.filter(col("doc_id") % 50 === 0)
         .select((col("doc_id") + 2000000L).as("doc_id"), col("text")))
   }
@@ -51,134 +45,42 @@ object SparkEntry {
       Tables.nation(spark, d), Tables.region(spark, d))
   }
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q01_flow_agg" -> ((s, d) => FlowAnalytics.flowAgg(Tables.lineitem(s, d))),
-    "q02_topn_flow" -> ((s, d) => FlowAnalytics.topNFlow(Tables.lineitem(s, d))),
-    "q03_speed_buckets" -> ((s, d) => FlowAnalytics.speedBuckets(Tables.lineitem(s, d))),
-    "q04_group_topn" -> ((s, d) => FlowAnalytics.groupTopN(Tables.lineitem(s, d))),
-    "q05_star_join_flow" -> ((s, d) => FlowAnalytics.starJoinFlow(
-      Tables.lineitem(s, d), Tables.orders(s, d), Tables.customer(s, d),
-      Tables.nation(s, d), Tables.region(s, d))),
-    "q06_group_concat" -> ((s, d) => FlowAnalytics.groupConcat(Tables.customer(s, d), Tables.nation(s, d))),
-    "q07_distinct_count" -> ((s, d) => FlowAnalytics.distinctCount(Tables.orders(s, d), Tables.customer(s, d))),
-    // default cap bounds the per-entity array for the generic engine;
-    // non-binding at test SFs (max events/user is 99 at sf0.1)
-    "q08_car_track" -> ((s, d) => TrackAnalytics.carTrack(Tables.events(s, d), Some(1000))),
-    "q09_funnel_step" -> ((s, d) => TrackAnalytics.funnelStep(Tables.events(s, d))),
-    "q10_collision" -> ((s, d) => TrackAnalytics.collision(Tables.events(s, d))),
-    "q11_sessionize" -> ((s, d) => TrackAnalytics.sessionize(Tables.events(s, d))),
-    "q34_session_window" -> ((s, d) => TrackAnalytics.sessionWindow(Tables.events(s, d))),
-    "q53_session_paths" -> ((s, d) => TrackAnalytics.sessionPaths(Tables.events(s, d))),
-    "q12_rollup" -> ((s, d) => RelationalOps.rollupAgg(
-      Tables.customer(s, d), Tables.nation(s, d), Tables.region(s, d))),
-    "q13_running_total" -> ((s, d) => RelationalOps.runningTotal(Tables.orders(s, d))),
-    "q31_cube" -> ((s, d) => RelationalOps.cubeAgg(Tables.orders(s, d))),
-    "q32_moving_window" -> ((s, d) => RelationalOps.movingWindow(Tables.orders(s, d))),
-    "q14_stratified_sample" -> ((s, d) => TrackAnalytics.stratifiedSample(Tables.events(s, d))),
-    "q15_pivot" -> ((s, d) => RelationalOps.pivotStatus(Tables.orders(s, d), Tables.customer(s, d))),
-    "q16_anti_join" -> ((s, d) => RelationalOps.antiJoin(Tables.customer(s, d), Tables.orders(s, d))),
-    "q17_semi_join" -> ((s, d) => RelationalOps.semiJoin(Tables.part(s, d), Tables.lineitem(s, d))),
-    "q18_set_ops" -> ((s, d) => RelationalOps.setOps(Tables.orders(s, d), Tables.customer(s, d))),
-    "q19_salted_agg" -> ((s, d) => RelationalOps.saltedAgg(Tables.orders(s, d))),
-    "q35_salted_join" -> ((s, d) => RelationalOps.saltedJoin(Tables.lineitem(s, d), Tables.supplier(s, d))),
-    "q20_time_window" -> ((s, d) => TrackAnalytics.timeWindow(Tables.events(s, d))),
-    "q21_percentile" -> ((s, d) => RelationalOps.percentiles(Tables.lineitem(s, d))),
-    "q29_percentile_approx" -> ((s, d) => RelationalOps.percentilesApprox(Tables.lineitem(s, d))),
-    "q22_orders_histogram" -> ((s, d) => RelationalOps.ordersHistogram(Tables.customer(s, d), Tables.orders(s, d))),
-    "q33_division" -> ((s, d) => RelationalOps.division(Tables.customer(s, d), Tables.orders(s, d))),
-    "q23_broadcast_dim" -> ((s, d) => FlowAnalytics.broadcastDim(
-      Tables.lineitem(s, d), Tables.supplier(s, d), Tables.nation(s, d))),
-    "q24_monitor_health" -> ((s, d) => FlowAnalytics.monitorHealth(
-      Tables.supplier(s, d), Tables.lineitem(s, d))),
-    "q25_global_stats" -> ((s, d) => FlowAnalytics.globalStats(
-      Tables.supplier(s, d), Tables.lineitem(s, d))),
-    "q26_json_extract" -> ((s, d) => FlowAnalytics.jsonExtract(Tables.events(s, d))),
-    "q27_range_join" -> ((s, d) => TrackAnalytics.rangeJoin(Tables.events(s, d))),
-    "q36_correlated_subquery" -> ((s, d) => RelationalOps.correlatedSubquery(
-      Tables.lineitem(s, d), Tables.part(s, d))),
-    "q37_streaks" -> ((s, d) => TrackAnalytics.activityStreaks(Tables.events(s, d))),
-    "q38_retention" -> ((s, d) => TrackAnalytics.retention(Tables.events(s, d))),
-    "q39_window_funnel" -> ((s, d) => TrackAnalytics.windowFunnel(Tables.events(s, d))),
-    // the funnel GENERALITY witness: same operator, 4 steps + a
-    // tighter 12h window, pinned by its own oracle row — proves the
-    // step chain is parametric, not a hardcoded 3-step shape
-    "q42_funnel_steps" -> ((s, d) => TrackAnalytics.windowFunnel(Tables.events(s, d),
-      Seq("view", "click", "signup", "purchase"), 43200000000L)),
-    "q43_period_delta" -> ((s, d) => TrackAnalytics.periodDelta(Tables.events(s, d))),
-    "q44_peak_concurrency" -> ((s, d) => TrackAnalytics.peakConcurrency(Tables.events(s, d))),
-    "q45_rolling_distinct" -> ((s, d) => TrackAnalytics.rollingDistinct(Tables.events(s, d))),
-    // windowDays=7 in the inventory so ApproxSpec's bound vs exact q45
-    // is the same configuration the driver executes
-    "q49_rolling_distinct_hll" -> ((s, d) =>
-      TrackAnalytics.rollingDistinctHll(Tables.events(s, d), windowDays = 7)),
-    "q46_robust_outliers" -> ((s, d) => RelationalOps.robustOutliers(Tables.orders(s, d))),
-    "q47_equi_depth" -> ((s, d) => RelationalOps.equiDepth(Tables.lineitem(s, d))),
-    "q50_table_stats" -> ((s, d) => RelationalOps.tableStats(Tables.lineitem(s, d))),
-    "q51_bloom_semi_join" -> ((s, d) => RelationalOps.bloomSemiJoin(
-      Tables.lineitem(s, d), Tables.orders(s, d))),
-    "q52_key_skew" -> ((s, d) => RelationalOps.keySkew(Tables.lineitem(s, d))),
-    "q48_price_band" -> ((s, d) => RelationalOps.priceBand(Tables.part(s, d))),
-    "q54_fuzzy_join" -> ((s, d) => RelationalOps.fuzzyJoin(Tables.part(s, d))),
-    "q55_spend_deciles" -> ((s, d) => RelationalOps.spendDeciles(Tables.orders(s, d))),
-    "q56_transition_matrix" -> ((s, d) => TrackAnalytics.transitionMatrix(Tables.events(s, d))),
-    "q57_modal_event" -> ((s, d) => TrackAnalytics.modalEventType(Tables.events(s, d))),
-    "q58_session_transitions" -> ((s, d) => TrackAnalytics.sessionTransitions(Tables.events(s, d))),
-    "q59_dwell_time" -> ((s, d) => TrackAnalytics.dwellTime(Tables.events(s, d))),
-    "q60_event_anomaly" -> ((s, d) => TrackAnalytics.eventAnomaly(Tables.events(s, d))),
-    "q61_hourly_profile" -> ((s, d) => TrackAnalytics.hourlyProfile(Tables.events(s, d))),
-    "q62_ohlc_downsample" -> ((s, d) => TrackAnalytics.ohlcDownsample(Tables.events(s, d))),
-    "q64_type_overlap" -> ((s, d) => TrackAnalytics.typeOverlap(Tables.events(s, d))),
-    "q66_bounce_rate" -> ((s, d) => TrackAnalytics.bounceRate(Tables.events(s, d))),
-    "q67_volume_autocorr" -> ((s, d) => TrackAnalytics.volumeAutocorr(Tables.events(s, d))),
-    "q68_dwell_percentiles" -> ((s, d) => TrackAnalytics.dwellPercentiles(Tables.events(s, d))),
-    "q69_ewma_volume" -> ((s, d) => TrackAnalytics.ewmaVolume(Tables.events(s, d))),
-    "q70_touch_attribution" -> ((s, d) => TrackAnalytics.touchAttribution(Tables.events(s, d))),
-    "q71_rfm_segments" -> ((s, d) => TrackAnalytics.rfmSegments(Tables.events(s, d))),
-    "q72_basket_affinity" -> ((s, d) => RelationalOps.basketAffinity(Tables.lineitem(s, d))),
-    "q73_dq_profile" -> ((s, d) => Quality.ordersProfile(Tables.orders(s, d))),
-    "q74_dq_constraints" -> ((s, d) => Quality.ordersLineitemChecks(
-      Tables.orders(s, d), Tables.lineitem(s, d))),
-    "q75_cohort_revenue" -> ((s, d) => RelationalOps.cohortRevenue(Tables.orders(s, d))),
-    "q76_survival_curve" -> ((s, d) => TrackAnalytics.survivalCurve(Tables.events(s, d))),
-    "q77_holt_trend" -> ((s, d) => TrackAnalytics.holtTrend(Tables.events(s, d))),
-    "q78_cusum_shift" -> ((s, d) => TrackAnalytics.cusumShift(Tables.events(s, d))),
-    // q64's sketch path: KMV estimates, rows-only (spec-bounded vs exact)
-    "q65_kmv_overlap" -> ((s, d) => TrackAnalytics.kmvOverlap(Tables.events(s, d))),
-    "q63_conversion_lag" -> ((s, d) => TrackAnalytics.conversionLag(Tables.events(s, d))),
-    "t31_percolate" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      TextStats.percolate(docs, TextStats.sampleQueries(docs))
-    }),
-    "q40_grouping_sets" -> ((s, d) => RelationalOps.groupingSets(Tables.orders(s, d))),
-    "q41_graph_rank" -> ((s, d) => TrackAnalytics.graphRank(Tables.events(s, d))),
-    "a10_range_search" -> ((s, d) => Ann.rangeSearch(Tables.embeddings(s, d))),
-    "m05_payload_dedup" -> ((s, d) => BinaryPipeline.payloadDedup(Tables.documents(s, d))),
-    "q30_asof_join" -> ((s, d) => TrackAnalytics.asofJoin(Tables.events(s, d))),
-    "q28_approx_distinct" -> ((s, d) => FlowAnalytics.approxDistinct(
-      Tables.orders(s, d), Tables.customer(s, d))),
+  /** One entry per implemented operator from SURVEY.md §2: every
+    * `TaskRunner.runners` operator under its default task params, except
+    * the `fixtures`, whose contract output is not the runner default. */
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    TaskRunner.runners.map { case (name, run) =>
+      name -> ((s: SparkSession, d: String) => run(s, d, Map.empty[String, String]))
+    } ++ fixtures
+
+  private def bound(name: String, params: (String, String)*): (SparkSession, String) => DataFrame =
+    (s, d) => TaskRunner.run(s, d, name, params.toMap)
+
+  /** Contract bindings that differ from their runner's default output:
+    * a pinned parameterization, fixture rows planted into the input
+    * (the word-salad testdata lacks the regime), or a driver-sortable
+    * serialization of a vector column. */
+  private[graft] val fixtures: Map[String, (SparkSession, String) => DataFrame] = Map(
     // a04/a07 pass the label-centroid table explicitly: it is the
     // SQL-expressible oracle twin. The function default (no centroid
     // table) is the unlabeled sample-trained k-means build with
     // ~sqrt(n) cells — the 100 TB path, spec-covered in AnnSpec.
-    "a04_ivf_knn" -> ((s, d) => {
-      val e = Tables.embeddings(s, d)
-      Ann.ivfKnn(e, centroids = Some(Ann.labelCentroids(e)))
-    }),
-    // a04's at-rest twin: sink_ann_index persists the corpus cells,
-    // ivfKnnIndexed probes only the queried cells' directories —
-    // result-identical to the live search under the same centroids.
-    "a15_ivf_probe_indexed" -> ((s, d) => {
-      val e = Tables.embeddings(s, d)
-      val tmp = scratchDir("graft_a15_")
-      Ann.writeAnnIndex(e.filter(e("vec_id") >= 10), Ann.labelCentroids(e), tmp)
-      Ann.ivfKnnIndexed(e.filter(e("vec_id") < 10), tmp)
-    }),
-    "a05_kmeans_cells" -> ((s, d) => Ann.kmeansAssign(Tables.embeddings(s, d))),
-    "t06_word_freq" -> ((s, d) => TextStats.wordFreq(Tables.documents(s, d))),
-    "m03_media_manifest" -> ((s, d) => BinaryPipeline.mediaManifest(Tables.documents(s, d))),
-    "t05_stopword_ratio" -> ((s, d) => TextStats.stopwordRatio(Tables.documents(s, d))),
-    "d01_exact_dedup" -> ((s, d) => Dedup.exactDedup(Tables.documents(s, d))),
+    "a04_ivf_knn" -> bound("a04_ivf_knn", "labelCells" -> "true"),
+    "a07_knn_join" -> bound("a07_knn_join", "labelCells" -> "true"),
+    // threshold 0.5 so the testdata's natural cos>=0.5 pairs (the d05
+    // regime) exercise within-cell drops; output is one verdict row
+    // per vector regardless
+    "d16_semantic_dedup" -> bound("d16_semantic_dedup", "threshold" -> "0.5"),
+    // contract binding serializes the vector column: the driver's
+    // pandas comparator cannot sort ndarray cells (r10 harness crash),
+    // so the inventory output carries json text while the typed
+    // Ann.cellSplit keeps array<float> for a04/a07 composition
+    "a14_cell_split" -> ((s, d) => TaskRunner.run(s, d, "a14_cell_split")
+      .withColumn("centroid", to_json(col("centroid")))),
+    // same vector-serialization contract as a14: typed API keeps the
+    // embeddings-table shape, the inventory output is driver-sortable
+    "t22_hash_embed" -> ((s, d) => TaskRunner.run(s, d, "t22_hash_embed")
+      .withColumn("embedding", to_json(col("embedding")))),
     // the provenance matrix: plant one positive per regime that the
     // natural word-salad data lacks (exact copies + prefix-subset docs;
     // Jaccard and semantic positives occur naturally at these thresholds)
@@ -189,28 +91,12 @@ object SparkEntry {
           .select((col("doc_id") + 4000000L).as("doc_id"), col("text")))
         .unionByName(docs.filter(col("doc_id") % 25 === 0)
           .select((col("doc_id") + 5000000L).as("doc_id"),
-            org.apache.spark.sql.functions.expr(
+            expr(
               "array_join(slice(split(text, ' '), 1, " +
                 "CAST(size(split(text, ' ')) * 9 div 10 AS INT)), ' ')").as("text")))
       Dedup.dedupSweep(planted, Tables.embeddings(s, d),
         semanticThreshold = 0.5, dfCap = Some(1000L))
     }),
-    "d02_ngram_jaccard" -> ((s, d) => Dedup.ngramJaccard(Tables.documents(s, d))),
-    // dfCap active (hot-shingle guard exercised) but non-binding at
-    // test SFs (max shingle DF is 25 at sf0.1), so the exact oracle
-    // still holds
-    "d03_minhash_lsh" -> ((s, d) => Dedup.minHashLsh(Tables.documents(s, d), dfCap = Some(1000L))),
-    "d04_simhash" -> ((s, d) => Dedup.simHash(Tables.documents(s, d))),
-    "d18_containment" -> ((s, d) => Dedup.containmentDedup(Tables.documents(s, d), dfCap = Some(1000L))),
-    "d19_containment_prefix" -> ((s, d) => Dedup.containmentPrefix(Tables.documents(s, d), dfCap = Some(1000L))),
-    "d22_containment_apply" -> ((s, d) => Dedup.containmentApply(Tables.documents(s, d), dfCap = Some(1000L))),
-    // incremental containment: src0 plays the new batch (d11 convention)
-    "d20_containment_against" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      Dedup.containmentAgainst(docs.filter(docs("source") === "src0"),
-        docs.filter(docs("source") =!= "src0"), dfCap = Some(1000L))
-    }),
-    "d05_embed_dedup" -> ((s, d) => Dedup.embedDedup(Tables.embeddings(s, d))),
     // d06 registered IN ITS LSH REGIME (threshold 0.75; < 0.7 delegates
     // to the exact join and is spec-pinned byte-identical). The testdata
     // has no natural pairs above cos 0.7, so the row unions an id-offset
@@ -222,215 +108,15 @@ object SparkEntry {
         e.select((col("vec_id") + 1000000L).as("vec_id"), col("embedding")))
       Dedup.embedDedupLsh(planted, threshold = 0.75)
     }),
-    "d07_dedup_clusters" -> ((s, d) => Dedup.dedupClusters(Tables.documents(s, d), dfCap = Some(1000L))),
-    "d08_dedup_apply" -> ((s, d) => Dedup.dedupApply(Tables.documents(s, d), dfCap = Some(1000L))),
-    "d09_decontaminate" -> ((s, d) => Dedup.decontaminate(Tables.documents(s, d))),
-    "d13_bloom_decontaminate" -> ((s, d) => Dedup.bloomDecontaminate(Tables.documents(s, d))),
-    "d10_source_overlap" -> ((s, d) => Dedup.sourceOverlap(
-      Tables.documents(s, d), dfCap = Some(1000L))),
-    // incremental shape: src0 plays the new batch, the rest the corpus
-    "d11_dedup_against" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      Dedup.dedupAgainst(docs.filter(docs("source") === "src0"),
-        docs.filter(docs("source") =!= "src0"), dfCap = Some(1000L))
-    }),
-    "d12_ingest_admit" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      Dedup.ingestAdmit(docs.filter(docs("source") === "src0"),
-        docs.filter(docs("source") =!= "src0"), dfCap = Some(1000L))
-    }),
-    // The AT-REST index probes — the operators a 100 TB deployment
-    // actually calls (build once, probe per batch). Each row builds the
-    // index in a fresh temp dir then probes it; result-identical to its
-    // live twin (d11/d12), which is what the shared oracle checks.
-    // d20's at-rest twin: the saved containment index (postings +
-    // dfs + sets), probed at |batch|-proportional cost — shares d20's
-    // oracle (result-identical by construction)
-    "d21_containment_probe_indexed" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val tmp = scratchDir("graft_d21_")
-      Dedup.writeContainmentIndex(docs.filter(docs("source") =!= "src0"), tmp)
-      Dedup.containmentAgainstIndex(docs.filter(docs("source") === "src0"), tmp)
-    }),
-    // the constant-bytes containment tier: sig-only index, estimated
-    // scores (rows-only — MinHash is not SQL-expressible)
-    "d23_containment_sig_estimate" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val tmp = scratchDir("graft_d23_")
-      Dedup.writeDedupSignatureIndex(docs.filter(docs("source") =!= "src0"), tmp)
-      Dedup.containmentAgainstSignatureIndex(docs.filter(docs("source") === "src0"), tmp)
-    }),
-    "d14_dedup_probe_indexed" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val tmp = scratchDir("graft_d14_")
-      Dedup.writeDedupIndex(docs.filter(docs("source") =!= "src0"), tmp)
-      Dedup.dedupAgainstIndex(docs.filter(docs("source") === "src0"), tmp)
-    }),
-    "d15_ingest_admit_indexed" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val tmp = scratchDir("graft_d15_")
-      Dedup.writeDedupIndex(docs.filter(docs("source") =!= "src0"), tmp)
-      Dedup.ingestAdmitIndexed(docs.filter(docs("source") === "src0"), tmp)
-    }),
-    "a07_knn_join" -> ((s, d) => {
-      val e = Tables.embeddings(s, d)
-      Ann.knnJoin(e, centroids = Some(Ann.labelCentroids(e)))
-    }),
-    "a11_recall_eval" -> ((s, d) => Ann.recallEval(Tables.embeddings(s, d))),
-    "a13_knn_classify" -> ((s, d) => Ann.knnClassify(Tables.embeddings(s, d))),
-    "a16_mmr_diversify" -> ((s, d) => Ann.mmrDiversify(Tables.embeddings(s, d))),
-    "a25_knn_filtered" -> ((s, d) => Ann.knnFiltered(Tables.embeddings(s, d))),
-    "a27_bq_knn" -> ((s, d) => Ann.bqKnn(Tables.embeddings(s, d))),
-    // filtered search at rest: saved index + attribute side table
-    // (rows-only: probe ≡ live a25 is the AnnSpec contract)
-    "a26_ivf_filtered_indexed" -> ((s, d) => {
-      val e = Tables.embeddings(s, d)
-      val tmp = scratchDir("graft_a26_")
-      Ann.writeAnnIndex(e.filter(e("vec_id") >= 10), Ann.labelCentroids(e), tmp)
-      Ann.ivfKnnIndexedFiltered(e.filter(e("vec_id") < 10), tmp,
-        e.select(col("vec_id"), col("label")))
-    }),
-    "a22_pca_reduce" -> ((s, d) => Ann.pcaReduce(Tables.embeddings(s, d))),
-    "a23_pca_knn" -> ((s, d) => Ann.pcaKnn(Tables.embeddings(s, d))),
-    // incremental shape: every 5th vector plays the new batch, the
-    // rest the already-indexed corpus (the d11 convention)
-    "a12_ivf_append" -> ((s, d) => {
-      val e = Tables.embeddings(s, d)
-      Ann.ivfAppend(e.filter(e("vec_id") % 5 =!= 0), e.filter(e("vec_id") % 5 === 0))
-    }),
-    // closes a12's loop: balanceFactor 1.2 so the natural occupancy
-    // skew of the sqrt(n) k-means build exercises the split path at
-    // test SFs (2.0 is the production default, matching a12's flag)
-    // contract binding serializes the vector column: the driver's
-    // pandas comparator cannot sort ndarray cells (r10 harness crash),
-    // so the inventory output carries json text while the typed
-    // Ann.cellSplit keeps array<float> for a04/a07 composition
-    "a14_cell_split" -> ((s, d) => Ann.cellSplit(Tables.embeddings(s, d),
-      balanceFactor = 1.2)
-      .withColumn("centroid", to_json(col("centroid")))),
-    "a08_pq_knn" -> ((s, d) => Ann.pqKnn(Tables.embeddings(s, d))),
-    "a17_sq8_knn" -> ((s, d) => Ann.sq8Knn(Tables.embeddings(s, d))),
-    "a09_ivf_pq" -> ((s, d) => Ann.ivfPqKnn(Tables.embeddings(s, d))),
-    "a18_ivf_sq8" -> ((s, d) => {
-      val e = Tables.embeddings(s, d)
-      Ann.ivfSq8Knn(e, centroids = Some(Ann.labelCentroids(e)))
-    }),
-    // a18's at-rest twin over the codes-only index (a15's shape at a
-    // quarter the bytes); rows-only — quantized sims are codec-native
-    "a24_ivf_pq_indexed" -> ((s, d) => {
-      val e = Tables.embeddings(s, d)
-      val tmp = scratchDir("graft_a24_")
-      val nQ = 10
-      Ann.writeAnnIndexPq(e.filter(e("vec_id") >= nQ), Ann.labelCentroids(e), tmp)
-      Ann.ivfPqKnnIndexed(e.filter(e("vec_id") < nQ), tmp)
-    }),
-    "a19_ivf_sq8_indexed" -> ((s, d) => {
-      val e = Tables.embeddings(s, d)
-      val tmp = scratchDir("graft_a19_")
-      val nQ = 10
-      Ann.writeAnnIndexSq8(e.filter(e("vec_id") >= nQ), Ann.labelCentroids(e), tmp)
-      Ann.ivfSq8KnnIndexed(e.filter(e("vec_id") < nQ), tmp)
-    }),
-    // codes-hot/floats-cold: the 8-byte sign-bit index shortlists,
-    // the float table is only fetched for the shortlist re-rank
-    "a28_ivf_bq_indexed" -> ((s, d) => {
-      val e = Tables.embeddings(s, d)
-      val tmp = scratchDir("graft_a28_")
-      val nQ = 10
-      Ann.writeAnnIndexBq(e.filter(e("vec_id") >= nQ), Ann.labelCentroids(e), tmp)
-      Ann.ivfBqKnnIndexed(e.filter(e("vec_id") < nQ), tmp, e)
-    }),
-    // hybrid retrieval: BM25 lexical run fused with a semantic run
-    // over the model-free hash embeddings (t22), rank-space RRF —
-    // rows-only (both legs are float-scored)
-    "a20_rrf_fusion" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val lex = TextStats.bm25Search(docs, TextStats.sampleQueries(docs))
-        .select(col("query_id"), col("doc_id"), col("rank"))
-      val emb = TextStats.hashEmbed(docs)
-      val qe = emb.filter(col("doc_id") % 97 === 0 && col("doc_id") < 97L * 32)
-        .select(col("doc_id").as("query_id"), col("embedding"))
-      val sem = Ann.knnFor(
-          emb.select(col("doc_id").as("vec_id"), col("embedding")), qe)
-        .select(col("query_id"), col("neighbor_id").as("doc_id"),
-          col("rn").as("rank"))
-      Ann.rrfFuse(Seq(lex, sem))
-    }),
-    // a20's AT-REST twin: both runs probe SAVED indexes — BM25 over
-    // sink_text_index, semantic over sink_ann_index built on the t22
-    // hash embeddings — so hybrid retrieval is |queries|-proportional
-    // at rest (the deployment shape); rows-only like a20
-    "a21_rrf_fusion_indexed" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val tmpT = scratchDir("graft_a21t_")
-      val tmpA = scratchDir("graft_a21a_")
-      TextStats.writeTextIndex(docs, tmpT)
-      val emb = TextStats.hashEmbed(docs)
-      val corpusVec = emb.select(col("doc_id").as("vec_id"), col("embedding"))
-      Ann.writeAnnIndex(corpusVec, Ann.kmeansCentroids(corpusVec), tmpA)
-      val qe = emb.filter(col("doc_id") % 97 === 0 && col("doc_id") < 97L * 32)
-        .select(col("doc_id").as("query_id"), col("embedding"))
-      Ann.rrfFuseIndexed(TextStats.sampleQueries(docs), qe, tmpT, tmpA)
-    }),
-    "t01_token_stats" -> ((s, d) => TextStats.tokenStats(Tables.documents(s, d))),
-    "t02_quality_score" -> ((s, d) => TextStats.qualityScore(Tables.documents(s, d))),
-    "t03_langid" -> ((s, d) => TextStats.langId(Tables.documents(s, d))),
-    "t04_fingerprint" -> ((s, d) => TextStats.fingerprint(Tables.documents(s, d))),
-    "t07_repetition" -> ((s, d) => TextStats.repetition(Tables.documents(s, d))),
-    "t08_pii_scrub" -> ((s, d) => TextStats.piiScrub(Tables.documents(s, d))),
-    "m04_modality_route" -> ((s, d) => BinaryPipeline.modalityRoute(Tables.documents(s, d))),
-    "a01_knn_brute" -> ((s, d) => Ann.knnBrute(Tables.embeddings(s, d))),
-    "a02_knn_lsh" -> ((s, d) => Ann.knnLsh(Tables.embeddings(s, d))),
-    "a03_centroid_assign" -> ((s, d) => Ann.centroidAssign(Tables.embeddings(s, d))),
-    "a06_outlier_score" -> ((s, d) => Ann.outlierScore(Tables.embeddings(s, d))),
-    "t09_corpus_stats" -> ((s, d) => TextStats.corpusStats(Tables.documents(s, d))),
-    "t10_seq_pack" -> ((s, d) => TextStats.seqPack(Tables.documents(s, d))),
-    "t11_span_dedup" -> ((s, d) => TextStats.spanDedup(Tables.documents(s, d))),
-    "t12_bpe_tokens" -> ((s, d) => TextStats.bpeTokens(Tables.documents(s, d))),
-    "t13_ngram_novelty" -> ((s, d) => TextStats.ngramNovelty(Tables.documents(s, d))),
-    "t14_term_salience" -> ((s, d) => TextStats.termSalience(Tables.documents(s, d))),
-    "t15_source_mix" -> ((s, d) => TextStats.sourceMix(Tables.documents(s, d))),
-    "t16_shard_assign" -> ((s, d) => TextStats.shardAssign(Tables.documents(s, d))),
-    "t17_span_scrub" -> ((s, d) => TextStats.spanScrub(Tables.documents(s, d))),
-    "t20_rolling_scrub" -> ((s, d) => TextStats.rollingScrub(Tables.documents(s, d))),
-    "t21_source_drift" -> ((s, d) => TextStats.sourceDrift(Tables.documents(s, d))),
-    // same vector-serialization contract as a14: typed API keeps the
-    // embeddings-table shape, the inventory output is driver-sortable
-    "t22_hash_embed" -> ((s, d) => TextStats.hashEmbed(Tables.documents(s, d))
-      .withColumn("embedding", to_json(col("embedding")))),
-    "t23_source_upsample" -> ((s, d) => TextStats.sourceUpsample(Tables.documents(s, d))),
-    "t24_unigram_surprisal" -> ((s, d) => TextStats.unigramSurprisal(Tables.documents(s, d))),
-    "t25_bigram_surprisal" -> ((s, d) => TextStats.bigramSurprisal(Tables.documents(s, d))),
-    "t26_frequent_terms" -> ((s, d) => TextStats.frequentTerms(Tables.documents(s, d))),
-    "t27_weighted_sample" -> ((s, d) => TextStats.weightedSample(Tables.documents(s, d))),
-    // BM25 keyword retrieval (rows-only: ln is transcendental). The
-    // query set derives from the corpus deterministically; t29 probes
-    // the SAVED inverted index and is spec-pinned result-identical
-    "t28_bm25_search" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      TextStats.bm25Search(docs, TextStats.sampleQueries(docs))
-    }),
-    "t29_bm25_probe_indexed" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val tmp = scratchDir("graft_t29_")
-      TextStats.writeTextIndex(docs, tmp)
-      TextStats.bm25SearchIndexed(TextStats.sampleQueries(docs), tmp)
-    }),
-    "t30_chunk_split" -> ((s, d) => TextStats.chunkSplit(Tables.documents(s, d))),
-    "t32_rake_keyphrases" -> ((s, d) => TextStats.rakeKeyphrases(Tables.documents(s, d))),
-    // rows-only: iterative float centrality (spec twin replays the
-    // sorted-fold IEEE sequence float-for-float)
-    "t33_textrank" -> ((s, d) => TextStats.textrankKeywords(Tables.documents(s, d))),
-    "t34_kwic" -> ((s, d) => TextStats.kwic(Tables.documents(s, d))),
     // single-line word-salad docs carry no natural boilerplate: wrap
     // every doc in a shared header/footer (the oracle wraps identically)
     "t36_boilerplate_scrub" -> ((s, d) => {
       val docs = Tables.documents(s, d)
       TextStats.boilerplateScrub(docs.select(col("doc_id"), col("source"),
-        org.apache.spark.sql.functions.concat(
-          org.apache.spark.sql.functions.lit("HEADER: ACME CRAWL\n"),
+        concat(
+          lit("HEADER: ACME CRAWL\n"),
           col("text"),
-          org.apache.spark.sql.functions.lit("\nfooter terms apply")).as("text")))
+          lit("\nfooter terms apply")).as("text")))
     }),
     // word-salad testdata has no natural code: plant snippet docs at
     // offset ids (the d06 convention; the oracle unions identically)
@@ -438,15 +124,9 @@ object SparkEntry {
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
       TextStats.codeDetect(docs.unionByName(docs.filter(col("doc_id") % 40 === 0)
         .select((col("doc_id") + 3000000L).as("doc_id"),
-          org.apache.spark.sql.functions
-            .lit("def main(args): { return os.path.join(a, b); } // x => y && z")
+          lit("def main(args): { return os.path.join(a, b); } // x => y && z")
             .as("text"))))
     }),
-    // threshold 0.5 so the testdata's natural cos>=0.5 pairs (the d05
-    // regime) exercise within-cell drops; output is one verdict row
-    // per vector regardless
-    "d16_semantic_dedup" -> ((s, d) => Dedup.semanticDedup(
-      Tables.embeddings(s, d), threshold = 0.5)),
     // every 5th vector plays the new batch (the a12/d11 convention),
     // plus id-offset copies of every 25th corpus vector (the d06
     // planting convention — testdata has no natural cross pairs at any
@@ -461,16 +141,6 @@ object SparkEntry {
           .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding")))
       Dedup.embedIngestAdmit(corpus, batch, threshold = 0.95)
     }),
-    "t18_quality_filter" -> ((s, d) => TextStats.qualityFilter(Tables.documents(s, d))),
-    "t19_cooccurrence" -> ((s, d) => TextStats.cooccurrence(Tables.documents(s, d))),
-    "m01_binary_meta" -> ((s, d) => BinaryPipeline.binaryMeta(Tables.documents(s, d))),
-    "m02_chunk_sample" -> ((s, d) => BinaryPipeline.chunkSample(Tables.documents(s, d))),
-    "m06_chunk_dedup" -> ((s, d) => BinaryPipeline.chunkDedup(Tables.documents(s, d))),
-    "m07_cdc_dedup" -> ((s, d) => BinaryPipeline.cdcDedup(Tables.documents(s, d))),
-    "m10_chunk_containment" -> ((s, d) => BinaryPipeline.chunkContainment(Tables.documents(s, d))),
-    "m08_feature_dedup" -> ((s, d) => BinaryPipeline.featureDedup(Tables.documents(s, d))),
-    // rows-only: Shannon entropy is transcendental (spec twin)
-    "m11_payload_entropy" -> ((s, d) => BinaryPipeline.payloadEntropy(Tables.documents(s, d))),
     // rows-only: the block-mean hash is a compiled native fn (spec
     // pins planted near-dup recall + integer-exact hash laws). The
     // word-salad testdata has no natural byte-level near-dups, so the
@@ -487,23 +157,6 @@ object SparkEntry {
     // so the planted edit/copy chains must collapse to their originals
     "m13_blockhash_clusters" -> ((s, d) =>
       BinaryPipeline.blockhashClusters(plantedBytePayloads(s, d))),
-    // seed the store, re-upload an edited slice (superseding those
-    // docs' recipes), then vacuum: the report must show reclaimed
-    // recipe rows and chunk bytes from the superseded versions
-    "m15_chunk_vacuum" -> ((s, d) => {
-      val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-      val tmp = scratchDir("graft_m15_")
-      BinaryPipeline.writeChunkStore(docs, tmp, batchId = Some(-1L))
-      BinaryPipeline.appendChunkStore(
-        docs.filter(col("doc_id") % 25 === 0)
-          .select(col("doc_id"),
-            org.apache.spark.sql.functions.concat(
-              org.apache.spark.sql.functions.lit("EDITED-REUPLOAD "),
-              col("text")).as("text")),
-        tmp, 0L)
-      BinaryPipeline.vacuumChunkStore(s, tmp)
-    }),
-    "m09_storage_savings" -> ((s, d) => BinaryPipeline.storageSavings(Tables.documents(s, d))),
     // the payload provenance matrix (d24's shape for bytes): the m12
     // plants cover the exact + perceptual/near regimes; a truncated
     // 70%-prefix slice of every 40th doc plants the lineage regime
@@ -512,7 +165,7 @@ object SparkEntry {
       val planted = plantedBytePayloads(s, d)
         .unionByName(docs.filter(col("doc_id") % 40 === 0)
           .select((col("doc_id") + 3000000L).as("doc_id"),
-            org.apache.spark.sql.functions.expr(
+            expr(
               "substring(text, 1, CAST(octet_length(text) * 7 div 10 AS INT))")
               .as("text")))
       BinaryPipeline.payloadSweep(planted)

@@ -15,9 +15,9 @@ import graft.ann.Ann
   * scheduler row like `{"topN": 5, "startTs": "2024-03-01"}` drives
   * the same compiled jar through arbitrary re-runs.
   *
-  * Queries without an entry in `runners` fall back to their
-  * default-parameter `SparkEntry.queries` form, so every inventory
-  * name is runnable here.
+  * `runners` is the one declaration of every inventory operator:
+  * `SparkEntry.queries` is each runner under an empty param map, bar
+  * the few `SparkEntry.fixtures` whose contract output differs.
   */
 object TaskRunner {
 
@@ -73,7 +73,9 @@ object TaskRunner {
       Tables.orders(s, d), Tables.customer(s, d), dbl(p, "rsd", 0.02))),
     "q29_percentile_approx" -> ((s, d, p) => RelationalOps.percentilesApprox(
       Tables.lineitem(s, d), i(p, "accuracy", 10000))),
-    // maxEvents mirrors the SparkEntry default cap; 0 disables it
+    // the default maxEvents cap bounds the per-entity array for the
+    // generic engine; non-binding at test SFs (max events/user is 99
+    // at sf0.1); 0 disables it
     "q08_car_track" -> ((s, d, p) => TrackAnalytics.carTrack(
       eventsIn(s, d, p), capI(p, "maxEvents", 1000))),
     "q09_funnel_step" -> ((s, d, p) => TrackAnalytics.funnelStep(eventsIn(s, d, p))),
@@ -88,6 +90,8 @@ object TaskRunner {
       eventsIn(s, d, p), l(p, "gapMs", 1800000L))),
     "q45_rolling_distinct" -> ((s, d, p) => TrackAnalytics.rollingDistinct(
       eventsIn(s, d, p), i(p, "windowDays", 7))),
+    // windowDays=7 (not the function's 90) so ApproxSpec's bound vs
+    // exact q45 is the same configuration the driver executes
     "q49_rolling_distinct_hll" -> ((s, d, p) => TrackAnalytics.rollingDistinctHll(
       eventsIn(s, d, p), i(p, "windowDays", 7), i(p, "lgConfigK", 12))),
     "q46_robust_outliers" -> ((s, d, p) => RelationalOps.robustOutliers(
@@ -150,9 +154,10 @@ object TaskRunner {
       capL(p, "dfCap", 1000L), i(p, "maxIters", 20))),
     "d02_ngram_jaccard" -> ((s, d, p) => Dedup.ngramJaccard(
       Tables.documents(s, d), dbl(p, "threshold", 0.8), optL(p, "dfCap"))),
-    // dfCap defaults to the SparkEntry parameterization (1000) so the
-    // param-driven path keeps the hot-shingle straggler guard unless a
-    // task explicitly overrides it; dfCap=0 disables the cap outright
+    // dfCap defaults to 1000 so the hot-shingle straggler guard is
+    // exercised unless a task explicitly overrides it (dfCap=0 disables
+    // the cap outright); non-binding at test SFs (max shingle DF is 25
+    // at sf0.1), so the exact oracle still holds
     "d03_minhash_lsh" -> ((s, d, p) => Dedup.minHashLsh(
       Tables.documents(s, d), dbl(p, "threshold", 0.8),
       i(p, "numHashes", 64), i(p, "bands", 16),
@@ -185,6 +190,8 @@ object TaskRunner {
         .getOrElse(i(p, "rerank", 100))
       Ann.bqKnn(e, nQ, k, rr)
     }),
+    // filtered search at rest: saved index + attribute side table
+    // (rows-only: probe ≡ live a25 is the AnnSpec contract)
     "a26_ivf_filtered_indexed" -> ((s, d, p) => {
       val e = Tables.embeddings(s, d)
       val tmp = SparkEntry.scratchDir("graft_a26p_")
@@ -247,12 +254,17 @@ object TaskRunner {
       i(p, "nQueries", 10), i(p, "k", 3))),
     "a13_knn_classify" -> ((s, d, p) => Ann.knnClassify(
       Tables.embeddings(s, d), i(p, "nQueries", 10), i(p, "k", 5))),
+    // incremental shape: every 5th vector plays the new batch, the
+    // rest the already-indexed corpus (the d11 convention)
     "a12_ivf_append" -> ((s, d, p) => {
       val e = Tables.embeddings(s, d)
       val m = i(p, "batchMod", 5)
       Ann.ivfAppend(e.filter(e("vec_id") % m =!= 0), e.filter(e("vec_id") % m === 0),
         cells = i(p, "cells", 0), balanceFactor = dbl(p, "balanceFactor", 2.0))
     }),
+    // closes a12's loop: balanceFactor 1.2 so the natural occupancy
+    // skew of the sqrt(n) k-means build exercises the split path at
+    // test SFs (2.0 is the production default, matching a12's flag)
     "a14_cell_split" -> ((s, d, p) => Ann.cellSplit(
       Tables.embeddings(s, d), cells = i(p, "cells", 0),
       balanceFactor = dbl(p, "balanceFactor", 1.2), iters = i(p, "iters", 3))),
@@ -276,6 +288,8 @@ object TaskRunner {
       Tables.documents(s, d), i(p, "spanTokens", 10))),
     "t13_ngram_novelty" -> ((s, d, p) => TextStats.ngramNovelty(
       Tables.documents(s, d), i(p, "n", 2))),
+    // incremental shape: batchSource plays the new batch, the rest the
+    // corpus
     "d11_dedup_against" -> ((s, d, p) => {
       val docs = Tables.documents(s, d)
       val src = str(p, "batchSource", "src0")
@@ -315,6 +329,9 @@ object TaskRunner {
     "t18_quality_filter" -> ((s, d, p) => TextStats.qualityFilter(
       Tables.documents(s, d), i(p, "minTokens", 20), i(p, "maxTokens", 2048),
       dbl(p, "minQuality", 0.6), dbl(p, "maxRepetition", 0.1))),
+    // BM25 keyword retrieval (rows-only: ln is transcendental). The
+    // query set derives from the corpus deterministically; t29 probes
+    // the SAVED inverted index and is spec-pinned result-identical
     "t28_bm25_search" -> ((s, d, p) => {
       val docs = Tables.documents(s, d)
       TextStats.bm25Search(docs,
@@ -324,6 +341,8 @@ object TaskRunner {
     }),
     "t32_rake_keyphrases" -> ((s, d, p) => TextStats.rakeKeyphrases(
       Tables.documents(s, d), topK = i(p, "topK", 3))),
+    // rows-only: iterative float centrality (spec twin replays the
+    // sorted-fold IEEE sequence float-for-float)
     "t33_textrank" -> ((s, d, p) => TextStats.textrankKeywords(
       Tables.documents(s, d), topK = i(p, "topK", 5),
       iterations = i(p, "iterations", 10), damping = dbl(p, "damping", 0.85))),
@@ -348,6 +367,7 @@ object TaskRunner {
       eventsIn(s, d, p), dbl(p, "k", 3.0))),
     "q63_conversion_lag" -> ((s, d, p) => TrackAnalytics.conversionLag(
       eventsIn(s, d, p), str(p, "fromType", "click"), str(p, "toType", "purchase"))),
+    // q64's sketch path: KMV estimates, rows-only (spec-bounded vs exact)
     "q65_kmv_overlap" -> ((s, d, p) => TrackAnalytics.kmvOverlap(
       eventsIn(s, d, p), i(p, "k", 256))),
     "q66_bounce_rate" -> ((s, d, p) => TrackAnalytics.bounceRate(
@@ -371,18 +391,18 @@ object TaskRunner {
       eventsIn(s, d, p),
       str(p, "steps", "view,click,purchase").split(",").map(_.trim).toSeq,
       l(p, "windowMicros", 86400000000L))),
-    // same operator as q39 under a different task binding — the
-    // 4-step/12h parameterization pinned by its own oracle row
+    // the funnel GENERALITY witness: same operator as q39 under a
+    // different task binding — the 4-step/12h parameterization pinned
+    // by its own oracle row proves the step chain is parametric, not a
+    // hardcoded 3-step shape
     "q42_funnel_steps" -> ((s, d, p) => TrackAnalytics.windowFunnel(
       eventsIn(s, d, p),
       str(p, "steps", "view,click,signup,purchase").split(",").map(_.trim).toSeq,
       l(p, "windowMicros", 43200000000L))),
     "q43_period_delta" -> ((s, d, p) => TrackAnalytics.periodDelta(eventsIn(s, d, p))),
-    // ----- full-inventory binding (the remaining ids; every
-    // SparkEntry.queries key resolves to a param runner — the
-    // TaskRunnerSpec sync guard pins 100% coverage). Events-driven
-    // analyses honor the task date range via eventsIn; fixed-shape
-    // reports bind their default tables.
+    // ----- the remaining inventory ids. Events-driven analyses honor
+    // the task date range via eventsIn; fixed-shape reports bind their
+    // default tables.
     "q01_flow_agg" -> ((s, d, _) => FlowAnalytics.flowAgg(Tables.lineitem(s, d))),
     "q03_speed_buckets" -> ((s, d, _) => FlowAnalytics.speedBuckets(Tables.lineitem(s, d))),
     "q05_star_join_flow" -> ((s, d, _) => FlowAnalytics.starJoinFlow(
@@ -481,6 +501,10 @@ object TaskRunner {
     "d01_exact_dedup" -> ((s, d, _) => Dedup.exactDedup(Tables.documents(s, d))),
     "d04_simhash" -> ((s, d, p) => Dedup.simHash(
       Tables.documents(s, d), i(p, "maxHamming", 3))),
+    // The AT-REST index probes — the operators a 100 TB deployment
+    // actually calls (build once, probe per batch). Each run builds the
+    // index in a fresh temp dir then probes it; result-identical to its
+    // live twin (d11/d12), which is what the shared oracle checks.
     "d14_dedup_probe_indexed" -> ((s, d, p) => {
       val docs = Tables.documents(s, d)
       val src = str(p, "batchSource", "src0")
@@ -505,6 +529,8 @@ object TaskRunner {
     "d19_containment_prefix" -> ((s, d, p) => Dedup.containmentPrefix(
       Tables.documents(s, d), dbl(p, "threshold", 0.8),
       i(p, "minShingles", 5), capL(p, "dfCap", 1000L))),
+    // incremental containment: batchSource plays the new batch (d11
+    // convention)
     "d20_containment_against" -> ((s, d, p) => {
       val docs = Tables.documents(s, d)
       val src = str(p, "batchSource", "src0")
@@ -512,6 +538,9 @@ object TaskRunner {
         docs.filter(docs("source") =!= src), dbl(p, "threshold", 0.8),
         i(p, "minShingles", 5), capL(p, "dfCap", 1000L))
     }),
+    // d20's at-rest twin: the saved containment index (postings +
+    // dfs + sets), probed at |batch|-proportional cost — shares d20's
+    // oracle (result-identical by construction)
     "d21_containment_probe_indexed" -> ((s, d, p) => {
       val docs = Tables.documents(s, d)
       val src = str(p, "batchSource", "src0")
@@ -543,6 +572,8 @@ object TaskRunner {
     "d22_containment_apply" -> ((s, d, p) => Dedup.containmentApply(
       Tables.documents(s, d), dbl(p, "threshold", 0.8),
       i(p, "minShingles", 5), capL(p, "dfCap", 1000L))),
+    // the constant-bytes containment tier: sig-only index, estimated
+    // scores (rows-only — MinHash is not SQL-expressible)
     "d23_containment_sig_estimate" -> ((s, d, p) => {
       val docs = Tables.documents(s, d)
       val src = str(p, "batchSource", "src0")
@@ -573,12 +604,16 @@ object TaskRunner {
     "m14_chunk_store" -> ((s, d, p) => graft.multimodal.BinaryPipeline.chunkStoreRoundtrip(
       Tables.documents(s, d), SparkEntry.scratchDir("graft_m14p_"),
       i(p, "minLen", 32), i(p, "maskBits", 6))),
+    // rows-only: Shannon entropy is transcendental (spec twin)
     "m11_payload_entropy" -> ((s, d, _) => graft.multimodal.BinaryPipeline.payloadEntropy(
       Tables.documents(s, d))),
     "m16_payload_sweep" -> ((s, d, p) => graft.multimodal.BinaryPipeline.payloadSweep(
       Tables.documents(s, d), dbl(p, "containThreshold", 0.8),
       i(p, "maxHamming", 3), i(p, "minShared", 2), i(p, "minChunks", 4),
       i(p, "minLen", 16), i(p, "maskBits", 5), l(p, "dfCap", 1000L))),
+    // seed the store, re-upload an edited slice (superseding those
+    // docs' recipes), then vacuum: the report must show reclaimed
+    // recipe rows and chunk bytes from the superseded versions
     "m15_chunk_vacuum" -> ((s, d, p) => {
       import graft.multimodal.BinaryPipeline
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
@@ -593,6 +628,9 @@ object TaskRunner {
       BinaryPipeline.vacuumChunkStore(s, tmp)
     }),
     "a03_centroid_assign" -> ((s, d, _) => Ann.centroidAssign(Tables.embeddings(s, d))),
+    // a04's at-rest twin: sink_ann_index persists the corpus cells,
+    // ivfKnnIndexed probes only the queried cells' directories —
+    // result-identical to the live search under the same centroids.
     "a15_ivf_probe_indexed" -> ((s, d, p) => {
       val e = Tables.embeddings(s, d)
       val nQ = i(p, "nQueries", 10)
@@ -612,6 +650,8 @@ object TaskRunner {
           Some(Ann.labelCentroids(e)) else None,
         cells = i(p, "cells", 0), dim = i(p, "dim", 64))
     }),
+    // a18's at-rest twin over the codes-only index (a15's shape at a
+    // quarter the bytes); rows-only — quantized sims are codec-native
     "a24_ivf_pq_indexed" -> ((s, d, p) => {
       val e = Tables.embeddings(s, d)
       val nQ = i(p, "nQueries", 10)
@@ -631,6 +671,8 @@ object TaskRunner {
       Ann.ivfSq8KnnIndexed(e.filter(e("vec_id") < nQ), tmp,
         i(p, "k", 3), i(p, "nprobe", 2))
     }),
+    // codes-hot/floats-cold: the 8-byte sign-bit index shortlists,
+    // the float table is only fetched for the shortlist re-rank
     "a28_ivf_bq_indexed" -> ((s, d, p) => {
       val e = Tables.embeddings(s, d)
       val nQ = i(p, "nQueries", 10); val k = i(p, "k", 3)
@@ -650,6 +692,9 @@ object TaskRunner {
       Ann.ivfBqKnnIndexed(e.filter(e("vec_id") < nQ), tmp, e,
         k, i(p, "nprobe", 2), rr)
     }),
+    // hybrid retrieval: BM25 lexical run fused with a semantic run
+    // over the model-free hash embeddings (t22), rank-space RRF —
+    // rows-only (both legs are float-scored)
     "a20_rrf_fusion" -> ((s, d, p) => {
       val docs = Tables.documents(s, d)
       val kRun = i(p, "kRun", 10)
@@ -668,6 +713,10 @@ object TaskRunner {
           col("rn").as("rank"))
       Ann.rrfFuse(Seq(lex, sem), i(p, "kRrf", 60), i(p, "topK", 10))
     }),
+    // a20's AT-REST twin: both runs probe SAVED indexes — BM25 over
+    // sink_text_index, semantic over sink_ann_index built on the t22
+    // hash embeddings — so hybrid retrieval is |queries|-proportional
+    // at rest (the deployment shape); rows-only like a20
     "a21_rrf_fusion_indexed" -> ((s, d, p) => {
       val docs = Tables.documents(s, d)
       val tmpT = SparkEntry.scratchDir("graft_a21tp_")
@@ -690,11 +739,10 @@ object TaskRunner {
   )
 
   /** Run any inventory query under a param set; unknown params are
-    * ignored, unlisted queries run with their defaults. */
+    * ignored, absent ones take their defaults. */
   def run(spark: SparkSession, dir: String, query: String,
           params: Map[String, String] = Map.empty): DataFrame =
     runners.get(query).map(_(spark, dir, params))
-      .orElse(SparkEntry.queries.get(query).map(_(spark, dir)))
       .getOrElse(throw new IllegalArgumentException(s"unknown query: $query"))
 
   /** Parse the reference's JSON task_parm shape into a flat param map

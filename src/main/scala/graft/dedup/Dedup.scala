@@ -28,19 +28,6 @@ object Dedup {
       .select("doc_id", "dup_cnt")
       .orderBy("doc_id")
 
-  /** Word n-gram shingle sets: lowercase, whitespace-tokenize, distinct
-    * 3-gram shingles. Shared by the Jaccard/MinHash operators. */
-  def withShingles(documents: DataFrame): DataFrame =
-    documents
-      .withColumn("toks", split(lower(col("text")), "\\s+"))
-      .filter(size(col("toks")) >= 3)
-      .withColumn("sh", array_distinct(transform(
-        sequence(lit(0), size(col("toks")) - 3),
-        i => concat_ws(" ",
-          element_at(col("toks"), i + 1),
-          element_at(col("toks"), i + 2),
-          element_at(col("toks"), i + 3)))))
-
   /** Hashed shingle sets: 64-bit chained-XXH64 of each word 3-gram,
     * never materializing shingle strings (collision odds
     * ~|shingles|^2 / 2^64 are negligible for counting). The hash loop

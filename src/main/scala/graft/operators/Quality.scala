@@ -28,12 +28,13 @@ object Quality {
     case _ => c.cast("string")
   }
 
-  /** q73_dq_profile — per-column profile of a table in ONE logical
-    * pass: row count, null count, exact distinct count, canonical
-    * min/max. The multi-column exact-distinct plans as Spark's single
-    * Expand + two-phase aggregate — one shuffle total whose width is
-    * (#cols + 1) × input, all partial-aggregated map-side; at 100 TB
-    * the same shape runs with approx_count_distinct (swap one
+  /** q73_dq_profile — per-column profile of a table: row count, null
+    * count, exact distinct count, canonical min/max. Two aggregation
+    * passes, crossJoined into one row: a grouping-free fold for the
+    * counts and min/max, and the multi-column exact-distinct aggregate,
+    * which plans as Spark's Expand + two-phase aggregate (its shuffle
+    * is (#cols + 1) × input wide, partial-aggregated map-side). At
+    * 100 TB the distinct pass swaps in approx_count_distinct (one
     * aggregate — the profile contract is schema-identical), but the
     * exact form is what an oracle can check. Output is #cols rows. */
   def dqProfile(df: DataFrame, cols: Seq[String], centsScale: Int = 2): DataFrame = {

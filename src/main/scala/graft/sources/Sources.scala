@@ -28,19 +28,6 @@ object Sources {
   def readJson(spark: SparkSession, path: String, schema: StructType): DataFrame =
     spark.read.schema(schema).json(path)
 
-  /** Whole-file binary source — raw media ingestion: each file becomes
-    * one row (path, length, content) feeding the multimodal pipeline;
-    * `pathGlobFilter` prunes by extension at listing time, before any
-    * bytes are read. Binary files don't split, so a 100 TB media lake
-    * should shard payloads into bounded-size objects — the decode
-    * fleet is per-file anyway (BinaryPipeline.decodeFeatures). */
-  def readBinaryFiles(spark: SparkSession, dir: String,
-                      glob: Option[String] = None): DataFrame = {
-    val r = spark.read.format("binaryFile")
-    glob.foreach(g => r.option("pathGlobFilter", g))
-    r.load(dir).select("path", "length", "content")
-  }
-
   /** JDBC read with predicate-based parallelism: `numPartitions` range
     * predicates on `partitionColumn` so every executor reads its own
     * slice (the reference reads its MySQL tables single-threaded). */

@@ -187,6 +187,20 @@ class TaskRunnerSpec extends SparkSpecBase {
     // without a runner can only run with compiled-in defaults
     val unbound = SparkEntry.queries.keySet -- TaskRunner.runners.keySet
     assert(unbound.isEmpty, s"${unbound.size} inventory ids have no param runner: $unbound")
+    assert(SparkEntry.fixtures.keySet.subsetOf(TaskRunner.runners.keySet),
+      s"fixtures with no runner: ${SparkEntry.fixtures.keySet -- TaskRunner.runners.keySet}")
+  }
+
+  test("every fixture name's runner builds and executes under default params") {
+    // the inventory runs these names through their fixture bindings,
+    // so only this spec exercises the runners' own default paths
+    SparkEntry.fixtures.keys.toSeq.sorted.foreach { name =>
+      try {
+        val df = TaskRunner.run(spark, d, name)
+        assert(df.columns.nonEmpty, name)
+        df.collect()
+      } finally graft.Caches.release()
+    }
   }
 
   test("unknown query names are refused") {
