@@ -1,63 +1,33 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    import Harness.{cpus, only, reps, sfDir}
     def loadavg(): String =
       scala.util.Try(new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get("/proc/loadavg"))).trim).getOrElse("")
     val loadStart = loadavg()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // AQE coalescing above cached plans (see GraftSession) — halves
-      // the per-iteration cost of the iterative operators
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // warm-up: absorb session init + parquet footer reads so per-query
-    // timings measure the operators, not first-query JVM spin-up
-    Tables.names.foreach { n =>
-      try {
-        (if (n == "events") Tables.events(spark, sfDir)
-         else Tables.load(spark, sfDir, n)).count()
-      } catch { case _: Throwable => () }
-    }
-    // dev knobs (unset in driver runs → full suite, single shot):
-    // SPARK_GRAFT_ONLY=csv of query keys; SPARK_GRAFT_REPS=N keeps the
-    // per-query MINIMUM across N runs (this host's CPU-steal noise is
-    // ~2x, so minima are the comparable number — PLANS.md)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "1").toInt
+    val selected = Harness.select()
+    val spark = Harness.session()
+    Harness.warmUp(spark, sfDir)
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-    // sorted key order: Map iteration order is arbitrary, and the
-    // driver's log capture can clip the head of the JSON line — with a
-    // deterministic order the clipped prefix is at least a known set
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (name, fn) =>
-        val times = (1 to reps).map { _ =>
-          val t0 = System.nanoTime()
-          // noop sink materializes every output column — count() would let
-          // Catalyst prune the computed columns right out of narrow queries
-          try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          catch { case e: Throwable =>
-            // a swallowed failure would read as a suspiciously FAST query;
-            // surface it so the timing line can't hide a broken operator
-            errors(name) = e.toString.replaceAll("[\\x00-\\x1f\"\\\\]", " ").take(120)
-          }
-          // per-rep release: each rep pays the full pipeline (honest
-          // timing) and no intermediate cache outlives its query
-          finally Caches.release()
-          (System.nanoTime() - t0) / 1e9
+    val results = selected.map { case (name, fn) =>
+      val times = (1 to reps).map { _ =>
+        val t0 = System.nanoTime()
+        // noop sink materializes every output column — count() would let
+        // Catalyst prune the computed columns right out of narrow queries
+        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        catch { case e: Throwable =>
+          // a swallowed failure would read as a suspiciously FAST query;
+          // surface it so the timing line can't hide a broken operator
+          errors(name) = e.toString.replaceAll("[\\x00-\\x1f\"\\\\]", " ").take(120)
         }
-        name -> times.min
+        // per-rep release: each rep pays the full pipeline (honest
+        // timing) and no intermediate cache outlives its query
+        finally Caches.release()
+        (System.nanoTime() - t0) / 1e9
       }
+      name -> times.min
+    }
     // 3-decimal timings: full-precision doubles made the line ~4 kB and
     // the driver's tail capture head-clipped it every round (a01–q09
     // timings lost). 1 ms resolution is far below host noise anyway.
@@ -75,19 +45,17 @@ object Bench {
     // a contaminated one-shot self-diagnosing (this VM's CPU steal has
     // historically swung untouched queries 2-9x — r20 verdict). Full
     // runs only, like BENCH_LOCAL.json: it describes the full-map run.
-    if (only.isEmpty)
-      try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_HOST.json"),
-        s"""{"loadavg_start":"$loadStart","loadavg_end":"${loadavg()}","reps":$reps,"cpus":"$cpus"}"""
-          .getBytes("UTF-8"))
-      catch { case _: Throwable => () }
+    def sidecar(file: String, text: String): Unit =
+      if (only.isEmpty)
+        try java.nio.file.Files.write(java.nio.file.Paths.get(file), text.getBytes("UTF-8"))
+        catch { case _: Throwable => () }
+    sidecar("BENCH_HOST.json",
+      s"""{"loadavg_start":"$loadStart","loadavg_end":"${loadavg()}","reps":$reps,"cpus":"$cpus"}""")
     // durable copy in the repo: even if the stdout line is clipped by
     // the log capture, the full per-query map survives for the judge.
     // Full-suite runs only — a SPARK_GRAFT_ONLY dev subset must not
     // clobber the committed full map.
-    if (only.isEmpty)
-      try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_LOCAL.json"),
-        line.getBytes("UTF-8"))
-      catch { case _: Throwable => () }
+    sidecar("BENCH_LOCAL.json", line)
     // Emission protocol, in recoverability order (diagnosed r16: sbt's
     // default LoggedOutput strategy clipped the multi-kB echoed line to
     // ~4 kB BEFORE the driver took its 2 kB tail — the captured window

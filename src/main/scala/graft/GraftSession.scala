@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Standard session factory for the graft engine.
+/** The engine's one session factory: the dev harness
+  * (`Harness.session`) and perfbench both run on it.
   *
   * Settings chosen for the 100 TB posture: AQE on (runtime coalescing +
   * skew-join splitting), broadcast threshold high enough that every dim

@@ -1,45 +1,48 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump `.explain("formatted")` for every declared query to
   * plans/<tag>/<query>_<suffix>.txt (SPARK_GRAFT_PLAN_TAG, default
-  * r21; SPARK_GRAFT_PLAN_SUFFIX, default "before";
-  * SPARK_GRAFT_ONLY=csv restricts the query set). Runs under the
-  * exact Bench session config so the dumped plans are the plans the
-  * bench executes. */
+  * r21; SPARK_GRAFT_PLAN_SUFFIX, default "before"; the harness knobs
+  * pick the scale, cores and query set). Runs under the Bench session
+  * so the dumped plans are the plans the bench executes.
+  *
+  * Dumps are diffable: run-specific tokens are made stable before
+  * writing (see `normalize`), so two dumps of the same plan are
+  * byte-equal. Known exceptions, whose plan text itself can vary run
+  * to run: q50_table_stats and q73_dq_profile (the Expand row order of
+  * their multi-column exact-distinct aggregates follows expression-id
+  * hashing) and m16_payload_sweep (its AQE plan around cached stages
+  * differs). */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val tag = sys.env.getOrElse("SPARK_GRAFT_PLAN_TAG", "r21")
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "before")
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val selected = Harness.select()
+    val spark = Harness.session()
     val outDir = java.nio.file.Paths.get(s"plans/$tag")
     java.nio.file.Files.createDirectories(outDir)
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-      .foreach { case (name, fn) =>
-        try {
-          val df = fn(spark, sfDir)
-          val txt = df.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
-          java.nio.file.Files.write(outDir.resolve(s"${name}_$suffix.txt"),
-            txt.getBytes("UTF-8"))
-          println(s"[plandump] $name ok")
-        } catch {
-          case e: Throwable => println(s"[plandump] $name FAILED: $e")
-        } finally Caches.release()
-      }
+    selected.foreach { case (name, fn) =>
+      try {
+        val df = fn(spark, Harness.sfDir)
+        val txt = normalize(df.queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode))
+        java.nio.file.Files.write(outDir.resolve(s"${name}_$suffix.txt"),
+          txt.getBytes("UTF-8"))
+        println(s"[plandump] $name ok")
+      } catch {
+        case e: Throwable => println(s"[plandump] $name FAILED: $e")
+      } finally Caches.release()
+    }
     spark.stop()
   }
+
+  /** Session counters (expression ids `#1234`, exchange `plan_id=56`)
+    * are renumbered in first-appearance order; RDD ids, lambda class
+    * names, object-hash suffixes and scratch-dir suffixes are masked. */
+  private[graft] def normalize(plan: String): String =
+    Seq("#", "plan_id=").foldLeft(plan) { (text, prefix) =>
+      val ids = scala.collection.mutable.HashMap[String, Int]()
+      s"$prefix(\\d+)".r.replaceAllIn(text, m => prefix + ids.getOrElseUpdate(m.group(1), ids.size))
+    }.replaceAll("Lambda\\$\\d+/0x[0-9a-f]+", "Lambda").replaceAll("@[0-9a-f]{5,}\\b", "@_")
+      .replaceAll("RDD\\[\\d+]", "RDD[_]").replaceAll("(/graft_\\w+?_)\\d+", "$1_")
 }

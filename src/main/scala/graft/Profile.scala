@@ -1,31 +1,17 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Dev-only phase profiler (SPARK_GRAFT_PROFILE=name): times the
-  * sub-steps of the composite queries under the exact Bench session so
-  * optimization targets the real cost, not a guess. Not part of the
-  * driver contract. */
+/** Dev-only phase profiler: times the sub-steps of a composite query
+  * under the Bench session so optimization targets the real cost, not
+  * a guess. SPARK_GRAFT_PROFILE=a21 (the default) splits a21 into its
+  * phases; any other query key is timed whole. Not part of the driver
+  * contract. */
 object Profile {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tables.names.foreach { n =>
-      try {
-        (if (n == "events") Tables.events(spark, sfDir)
-         else Tables.load(spark, sfDir, n)).count()
-      } catch { case _: Throwable => () }
-    }
+    import Harness.sfDir
+    val spark = Harness.session()
+    Harness.warmUp(spark, sfDir)
     def time[T](label: String)(body: => T): T = {
       val t0 = System.nanoTime()
       val r = body
@@ -33,8 +19,7 @@ object Profile {
       r
     }
     val which = sys.env.getOrElse("SPARK_GRAFT_PROFILE", "a21")
-    val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt
-    (1 to reps).foreach { rep =>
+    (1 to Harness.reps).foreach { rep =>
       println(s"--- rep $rep: $which ---")
       which match {
         case "a21" =>
@@ -72,62 +57,9 @@ object Profile {
               .write.format("noop").mode("overwrite").save()
           }
           time("count files") {
-            def cnt(p: String): Int = {
-              val d = new java.io.File(p)
-              if (d.isDirectory) Option(d.listFiles()).map(_.map(f => cnt(f.getPath)).sum).getOrElse(0)
-              else 1
-            }
+            def cnt(p: String): Long = scala.util.Using.resource(java.nio.file.Files.walk(
+              java.nio.file.Paths.get(p)))(_.filter(java.nio.file.Files.isRegularFile(_)).count())
             println(s"[profile]   text index files: ${cnt(tmpT)}  ann index files: ${cnt(tmpA)}")
-          }
-        case "bm25probe" =>
-          val docs = Tables.documents(spark, sfDir)
-          val tmpT = SparkEntry.scratchDir("graft_prof_t_")
-          time("writeTextIndex") {
-            graft.text.TextStats.writeTextIndex(docs, tmpT)
-          }
-          val queries = graft.text.TextStats.sampleQueries(docs)
-          time("  meta read") {
-            spark.read.parquet(tmpT + "/meta").collect()(0).getAs[Number](0).longValue
-          }
-          val nBuckets = 64L
-          val qt = graft.Caches.tracked(
-            queries.select("query_id", "term").distinct()
-              .withColumn("bkt", pmod(xxhash64(col("term")), lit(nBuckets)).cast("int")))
-          val bkts = time("  qt distinct collect") {
-            qt.select("bkt").distinct().collect().map(_.getInt(0))
-          }
-          time("  dfs read+agg") {
-            spark.read.parquet(tmpT + "/dfs").filter(col("bkt").isin(bkts: _*))
-              .groupBy("term").agg(sum("df").as("df")).count()
-          }
-          time("  postings read") {
-            spark.read.parquet(tmpT + "/postings").filter(col("bkt").isin(bkts: _*)).count()
-          }
-          time("  doclens read") {
-            spark.read.parquet(tmpT + "/doclens").count()
-          }
-          time("  full probe") {
-            graft.text.TextStats.bm25SearchIndexed(queries, tmpT)
-              .write.format("noop").mode("overwrite").save()
-          }
-          time("  full probe again") {
-            graft.text.TextStats.bm25SearchIndexed(queries, tmpT)
-              .write.format("noop").mode("overwrite").save()
-          }
-        case "d24" =>
-          val docs = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
-          val planted = docs
-            .unionByName(docs.filter(col("doc_id") % 50 === 0)
-              .select((col("doc_id") + 4000000L).as("doc_id"), col("text")))
-            .unionByName(docs.filter(col("doc_id") % 25 === 0)
-              .select((col("doc_id") + 5000000L).as("doc_id"),
-                expr("array_join(slice(split(text, ' '), 1, " +
-                  "CAST(size(split(text, ' ')) * 9 div 10 AS INT)), ' ')").as("text")))
-          val embeddings = Tables.embeddings(spark, sfDir)
-          time("d24 full") {
-            graft.dedup.Dedup.dedupSweep(planted, embeddings,
-              semanticThreshold = 0.5, dfCap = Some(1000L))
-              .write.format("noop").mode("overwrite").save()
           }
         case other =>
           // fall back: any registered query key

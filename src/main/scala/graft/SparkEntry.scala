@@ -14,12 +14,7 @@ object SparkEntry {
     * without cleanup every rep leaked a full index copy in /tmp. */
   private[graft] def scratchDir(prefix: String): String = {
     val p = java.nio.file.Files.createTempDirectory(prefix)
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(p.toFile)
-    }))
+    Runtime.getRuntime.addShutdownHook(new Thread(() => Harness.rm(p.toFile)))
     p.toString
   }
 

@@ -37,7 +37,7 @@ object Tables {
     *   - `ts`     TimestampType — microsecond timestamp for
     *     window/date functions
     * `spark.sql.legacy.parquet.nanosAsLong` stays in the session
-    * builders (GraftSession / Verify / Bench / specs) rather than being
+    * builders (GraftSession.create / specs) rather than being
     * set here as a loader side effect, which would silently change how
     * OTHER readers in the same session see nanos columns. */
   def events(s: SparkSession, d: String): DataFrame = {
@@ -48,7 +48,7 @@ object Tables {
     // instant-semantics vintages every downstream date/window function on
     // `ts` (day grains, sessionization windows) must agree with the DuckDB
     // oracle, which evaluates them naive-as-UTC. All internal builders
-    // (GraftSession/Verify/Bench/specs) pin UTC; this guards external ones.
+    // (GraftSession.create/specs) pin UTC; this guards external ones.
     require(s.conf.getOption("spark.sql.session.timeZone").contains("UTC"),
       "Tables.events needs spark.sql.session.timeZone=UTC in the session " +
         "builder: the events time contract (epoch math and date/window " +

@@ -44,10 +44,13 @@ class TaskRunnerSpec extends SparkSpecBase {
   }
 
   test("a04 cell params: labelCells=true reproduces the registered oracle twin") {
-    val labeled = TaskRunner.run(spark, d, "a04_ivf_knn",
-      Map("labelCells" -> "true")).collect().toSeq
-    val registered = SparkEntry.queries("a04_ivf_knn")(spark, d).collect().toSeq
-    assert(labeled == registered)
+    // probing all 10 label cells leaves no candidate out, so the IVF
+    // search must return exactly the brute-force twin's rows
+    val shape = Map("nQueries" -> "10", "k" -> "3")
+    val probedAll = TaskRunner.run(spark, d, "a04_ivf_knn",
+      shape ++ Map("labelCells" -> "true", "nprobe" -> "10")).collect().toSeq
+    val brute = TaskRunner.run(spark, d, "a01_knn_brute", shape).collect().toSeq
+    assert(brute.nonEmpty && probedAll == brute)
     // unlabeled default with pinned cells still returns k rows per query
     val kmeans = TaskRunner.run(spark, d, "a04_ivf_knn",
       Map("cells" -> "5")).collect()
