@@ -1,5 +1,9 @@
 package graft.sources
 
+import java.io.IOException
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
@@ -16,8 +20,64 @@ import org.apache.spark.sql.types.StructType
   */
 object Sources {
 
-  def readParquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+  private final case class SchemaKey(path: String, files: Seq[(String, Long, Long)],
+                                     conf: Seq[(String, String)])
+  private val parquetSchemas = new ConcurrentHashMap[SchemaKey, StructType]()
+
+  /** The engine's parquet reader: `spark.read.parquet(path)` with the
+    * schema inferred once per table version instead of once per call.
+    * Spark's parquet inference runs a one-task job to read a footer;
+    * here every call after the first reads with the memoized schema
+    * and runs no job until the plan executes.
+    *
+    * The memo is process-wide. Its key is
+    *   - the path;
+    *   - a validity token: the sorted (file, length, mtime) of the
+    *     path's recursive listing, so a rewrite, an append or a
+    *     deletion under the path misses;
+    *   - the session's explicitly set `spark.sql.parquet.*` and
+    *     `spark.sql.legacy.parquet.*` entries, which steer inference
+    *     (`nanosAsLong` decides whether a TIMESTAMP(NANOS) column
+    *     resolves at all).
+    * The one known stale hit: a rewrite that keeps every file name and
+    * length and lands within the filesystem's mtime granularity.
+    *
+    * Every call returns a fresh relation (`spark.read.schema(s)`), so
+    * each gets its own attribute ids: self-joins and `df("col")`
+    * references behave as with plain reads. The listing runs before
+    * inference, so a concurrent rewrite can only file a newer schema
+    * under an older token, which no later listing matches. A path
+    * that cannot be listed (missing, unreadable) falls through to the
+    * plain read, so callers see Spark's own exception. Entries are
+    * never evicted: one per (path, version, conf) a process reads. */
+  def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val listed = try Some(listing(spark, path)) catch { case _: IOException => None }
+    listed match {
+      case None => spark.read.parquet(path)
+      case Some(files) =>
+        val key = SchemaKey(path, files, spark.conf.getAll.toSeq.filter { case (k, _) =>
+          k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+        }.sorted)
+        // get, then infer outside any map lock, then putIfAbsent: the
+        // inference is a Spark job and must not block other paths
+        val schema = Option(parquetSchemas.get(key)).getOrElse {
+          val inferred = spark.read.parquet(path).schema
+          Option(parquetSchemas.putIfAbsent(key, inferred)).getOrElse(inferred)
+        }
+        spark.read.schema(schema).parquet(path)
+    }
+  }
+
+  private def listing(spark: SparkSession, path: String): Seq[(String, Long, Long)] = {
+    val p = new Path(path)
+    val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
+    val out = Seq.newBuilder[(String, Long, Long)]
+    while (it.hasNext) {
+      val f = it.next()
+      out += ((f.getPath.toString, f.getLen, f.getModificationTime))
+    }
+    out.result().sorted
+  }
 
   /** CSV with explicit schema — no inference pass. */
   def readCsv(spark: SparkSession, path: String, schema: StructType,

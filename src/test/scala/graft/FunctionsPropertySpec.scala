@@ -136,6 +136,44 @@ class FunctionsPropertySpec extends SparkSpecBase {
     }
   }
 
+  test("NeighborTopK: any split and merge order keeps the brute-force top-k under (key, id)") {
+    import graft.functions.TypedAggregators.NeighborTopK
+    type Row = (Double, Long, Double)
+    // the class's own ordering: Double.TotalOrdering on the key (NaN
+    // last, -0.0 before +0.0), then the id
+    val ord = Ordering.by[Row, (Double, Long)](r => (r._1, r._2))(
+      Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long))
+    // a small key pool forces duplicate keys (ties broken by id)
+    val pool = Seq(Double.NaN, -0.0, 0.0, 1.0, -1.0, 0.5,
+      Double.PositiveInfinity, Double.NegativeInfinity)
+    def key(): Double = if (rnd.nextInt(3) == 0) rnd.nextGaussian() else pool(rnd.nextInt(pool.size))
+    // NaN != NaN and -0.0 == 0.0 under ==: compare the exact bits
+    def bits(rs: Seq[Row]) = rs.map { case (k, id, p) =>
+      (java.lang.Double.doubleToRawLongBits(k), id, java.lang.Double.doubleToRawLongBits(p)) }
+    for (_ <- 1 to 400) {
+      val k = 1 + rnd.nextInt(8)
+      val agg = new NeighborTopK(k)
+      val n = rnd.nextInt(40)
+      val ids = rnd.shuffle((0 until n).map(_ => rnd.nextLong()).distinct)
+      val rows: Seq[Row] = ids.map(id => (key(), id, if (rnd.nextBoolean()) Double.NaN else rnd.nextDouble()))
+      // random split into partitions (some empty), each folded by
+      // reduce in a random row order
+      val nParts = 1 + rnd.nextInt(5)
+      val parts = rows.groupBy(_ => rnd.nextInt(nParts)).values.toSeq ++
+        Seq.fill(rnd.nextInt(2))(Seq.empty[Row])
+      var bufs = rnd.shuffle(parts.map(p => rnd.shuffle(p).foldLeft(agg.zero)(agg.reduce)))
+      // random merge order: join two random buffers until one is left
+      while (bufs.size > 1) {
+        val i = rnd.nextInt(bufs.size)
+        val j = (i + 1 + rnd.nextInt(bufs.size - 1)) % bufs.size
+        bufs = bufs.indices.filterNot(x => x == i || x == j).map(bufs) :+ agg.merge(bufs(i), bufs(j))
+      }
+      val got = agg.finish(bufs.headOption.getOrElse(agg.zero))
+      val expect = rows.sorted(ord).take(k)
+      assert(bits(got) == bits(expect), s"k=$k rows=$rows: $got != $expect")
+    }
+  }
+
   test("byte entropy: bounded to [0,8], permutation-invariant, monotone under uniformization") {
     import org.scalacheck.Prop.forAll
     import org.scalacheck.{Arbitrary, Gen, Test => PropTest}

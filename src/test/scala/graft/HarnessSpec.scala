@@ -1,8 +1,8 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
+import java.nio.file.{Files, Paths}
 
-class HarnessSpec extends AnyFunSuite {
+class HarnessSpec extends SparkSpecBase {
 
   test("query selection rejects unknown SPARK_GRAFT_ONLY keys and names them") {
     val err = intercept[IllegalArgumentException] {
@@ -12,6 +12,15 @@ class HarnessSpec extends AnyFunSuite {
     assert(Harness.select(Some(Set("q01_flow_agg"))).map(_._1) == Seq("q01_flow_agg"))
     val all = Harness.select(None).map(_._1)
     assert(all == SparkEntry.queries.keys.toSeq.sorted)
+  }
+
+  test("warmUp skips absent tables and propagates a table that fails to load") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_warm").toString
+    Seq((1L, 2L)).toDF("k", "v").write.parquet(s"$dir/lineitem.parquet")
+    Harness.warmUp(spark, dir) // nine of the ten tables absent
+    Files.write(Paths.get(s"$dir/region.parquet"), "not parquet".getBytes("UTF-8"))
+    intercept[Exception](Harness.warmUp(spark, dir))
   }
 
   test("PlanDump.normalize: same plan under other ids and hashes dumps byte-equal") {
