@@ -36,13 +36,16 @@ object PlanDump {
     spark.stop()
   }
 
-  /** Session counters (expression ids `#1234`, exchange `plan_id=56`)
-    * are renumbered in first-appearance order; RDD ids, lambda class
-    * names, object-hash suffixes and scratch-dir suffixes are masked. */
+  /** Session counters (expression ids `#1234`, exchange `plan_id=56`,
+    * lambda variables `x_64`, `y_65`) are renumbered in first-appearance
+    * order; RDD ids, lambda class names, object-hash suffixes and
+    * scratch-dir suffixes are masked. Lambda variables share one
+    * JVM-wide counter, so `x_N`, `y_N` and `z_N` share one renumbering
+    * and a subset dump matches the same plan in a full one. */
   private[graft] def normalize(plan: String): String =
-    Seq("#", "plan_id=").foldLeft(plan) { (text, prefix) =>
+    Seq("(#)(\\d+)", "(plan_id=)(\\d+)", "\\b([xyz]_)(\\d+)\\b").foldLeft(plan) { (text, pattern) =>
       val ids = scala.collection.mutable.HashMap[String, Int]()
-      s"$prefix(\\d+)".r.replaceAllIn(text, m => prefix + ids.getOrElseUpdate(m.group(1), ids.size))
+      pattern.r.replaceAllIn(text, m => m.group(1) + ids.getOrElseUpdate(m.group(2), ids.size))
     }.replaceAll("Lambda\\$\\d+/0x[0-9a-f]+", "Lambda").replaceAll("@[0-9a-f]{5,}\\b", "@_")
       .replaceAll("RDD\\[\\d+]", "RDD[_]").replaceAll("(/graft_\\w+?_)\\d+", "$1_")
 }

@@ -1,10 +1,17 @@
 package graft.ann
 
-import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{InterpretedOrdering, UnsafeProjection}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, StructField, StructType}
 import graft.Num.stableRound
-import graft.functions.GraftFunctions
+import graft.functions.{CosineSimilarity, GraftFunctions}
+import graft.sources.Sources
 
 /** Similarity search over embedding columns (SURVEY.md §2
   * "Similarity search").
@@ -188,10 +195,12 @@ object Ann {
                      textIndexPath: String, annIndexPath: String,
                      kRun: Int = 10, kRrf: Int = 60, topK: Int = 10,
                      nprobe: Int = 2): DataFrame = {
+    // the legs stay unsorted: rrfFuse repartitions by query_id, so a
+    // leg's own global sort would cost a sampling job and an exchange
     val lex = graft.text.TextStats
-      .bm25SearchIndexed(queryTerms, textIndexPath, topK = kRun)
+      .bm25SearchIndexedUnsorted(queryTerms, textIndexPath, topK = kRun)
       .select(col("query_id"), col("doc_id"), col("rank"))
-    val sem = ivfKnnIndexed(
+    val sem = ivfKnnIndexedUnsorted(
         queryVecs.select(col("query_id").as("vec_id"), col("embedding")),
         annIndexPath, k = kRun, nprobe = nprobe, excludeSelf = false)
       .select(col("query_id"), col("neighbor_id").as("doc_id"),
@@ -1861,7 +1870,7 @@ object Ann {
                      batchId: Option[Long] = None): Unit = {
     val spark = batch.sparkSession
     GraftFunctions.register(spark)
-    val cents = spark.read.parquet(indexPath + "/centroids")
+    val cents = Sources.readParquet(spark, indexPath + "/centroids")
     writeCells(assign(batch, cents)
       .select(col("vec_id"), col("embedding"), col("c_label")),
       indexPath + "/vectors", batchId, seeding = false)
@@ -1895,19 +1904,30 @@ object Ann {
     * (spec-pinned, along with the partition pruning itself): the
     * probe never touches corpus cells nobody probed — at 100 TB with
     * sqrt(n) cells and nprobe=2, that is ~2·|queries|/sqrt(n) of the
-    * corpus instead of all of it. */
+    * corpus instead of all of it.
+    *
+    * Serving path: the query batch is collected once and routed to
+    * its cells on the driver ([[routeToCells]]) against the centroid
+    * rows memoized on `centroids/`'s listing (appends never rewrite
+    * it), so the probe runs no assignment or probed-cell job before
+    * its one scan. The batch and its cell assignment are held on the
+    * driver and inlined in the plan: a probe batch is bounded by its
+    * caller (a15's query sample, perfbench's batches, one serving
+    * micro-batch). */
   def ivfKnnIndexed(queries: DataFrame, indexPath: String,
                     k: Int = 3, nprobe: Int = 2,
-                    excludeSelf: Boolean = true): DataFrame = {
+                    excludeSelf: Boolean = true): DataFrame =
+    ivfKnnIndexedUnsorted(queries, indexPath, k, nprobe, excludeSelf)
+      .orderBy("query_id", "rn")
+
+  /** [[ivfKnnIndexed]] without its final sort (a21 fuses it unsorted). */
+  private[graft] def ivfKnnIndexedUnsorted(queries: DataFrame, indexPath: String,
+                                           k: Int, nprobe: Int,
+                                           excludeSelf: Boolean): DataFrame = {
     val spark = queries.sparkSession
     GraftFunctions.register(spark)
-    val cents = spark.read.parquet(indexPath + "/centroids")
-    val q = graft.Caches.tracked(
-      assignN(queries, cents, nprobe)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-          col("c_label")))
-    val probed = q.select("c_label").distinct().collect().map(_.get(0))
-    val c = spark.read.parquet(indexPath + "/vectors")
+    val (q, probed) = routeToCells(queries, indexPath, nprobe)
+    val c = Sources.readParquet(spark, indexPath + "/vectors")
       .filter(col("c_label").isin(probed: _*))
       .select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"),
         col("c_label"))
@@ -1921,7 +1941,91 @@ object Ann {
     topKNeighbors(cand, k)
       .select(col("query_id"), col("neighbor_id"),
         stableRound(col("sim"), 4).as("cos_sim"), col("rn"))
-      .orderBy("query_id", "rn")
+  }
+
+  /** A saved index's centroid table held on the driver: the `c_label`
+    * field and, per cell, its label (as collected and in Catalyst form)
+    * and its centroid as `graft_cosine` reads it. */
+  private final case class CentroidRows(label: StructField,
+                                        cells: Array[(Any, Any, ArrayData)])
+
+  /** Per `centroids/` directory, valid while its listing is unchanged. */
+  private val centroidRows = new Sources.PathMemo[CentroidRows]
+
+  /** Column `i` of each row as the unsafe array a plan hands
+    * `graft_cosine` (a null element reads there, and so here, as 0.0f),
+    * or null for a null vector. */
+  private def kernelVectors(rows: Array[Row], schema: StructType, i: Int): Array[ArrayData] = {
+    require(schema(i).dataType match { case ArrayType(FloatType, _) => true; case _ => false },
+      s"graft_cosine reads float vectors; ${schema(i).name} is ${schema(i).dataType.simpleString}")
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(schema)
+    val toUnsafe = UnsafeProjection.create(schema)
+    rows.map { r =>
+      val u = toUnsafe(toCatalyst(r).asInstanceOf[InternalRow])
+      if (u.isNullAt(i)) null else u.getArray(i).copy()
+    }
+  }
+
+  /** Driver-side query routing for [[ivfKnnIndexed]]: collects the
+    * batch and assigns each query to its `nprobe` cells under
+    * `assignN`'s contract exactly — the same cosine kernel
+    * (`CosineSimilarity.of`, null for a null vector), NaN scored as
+    * -2.0 after negation, and Spark's own struct ordering over
+    * (negated sim, c_label, sim), so nulls come first, ±0.0 compare
+    * equal and ties go to the lower c_label. Each query keeps its best
+    * `nprobe` cells in a bounded heap; a cell whose negated sim is
+    * already above the heap's worst is dropped by one double compare.
+    * Returns the (query_id, qe, c_label) relation as a local relation,
+    * and the probed labels. */
+  private[graft] def routeToCells(queries: DataFrame, indexPath: String,
+                                  nprobe: Int): (DataFrame, Seq[Any]) = {
+    require(nprobe >= 0, s"nprobe must be >= 0, got $nprobe")
+    val spark = queries.sparkSession
+    val batch = queries.select(col("vec_id"), col("embedding"))
+    val path = indexPath + "/centroids"
+    def load(): CentroidRows = {
+      val df = Sources.readParquet(spark, path).select(col("c_label"), col("centroid"))
+      val rows = df.collect()
+      val vecs = kernelVectors(rows, df.schema, 1)
+      CentroidRows(df.schema("c_label"), rows.zip(vecs).map { case (r, v) =>
+        (r.get(0), CatalystTypeConverters.convertToCatalyst(r.get(0)), v)
+      })
+    }
+    val cents = centroidRows(spark, path)(load()).getOrElse(load())
+    val rows = batch.collect()
+    val vecs = kernelVectors(rows, batch.schema, 1)
+    val order = InterpretedOrdering.forSchema(
+      Seq(DoubleType, cents.label.dataType, DoubleType))
+    val routed = rows.toSeq.zip(vecs).flatMap { case (r, v) =>
+      // max-heap on `order` (its head is the worst kept cell); the
+      // fourth field, the cell's index, is outside the ordering
+      val picks = new java.util.PriorityQueue[InternalRow](nprobe max 1, order.reverse)
+      var j = 0
+      while (nprobe > 0 && j < cents.cells.length) {
+        val (_, key, c) = cents.cells(j)
+        val worst = if (picks.size < nprobe) null else picks.peek
+        if (v == null || c == null) {
+          val cand = InternalRow(null, key, null, j)
+          if (worst == null) picks.add(cand)
+          else if (order.lt(cand, worst)) { picks.poll(); picks.add(cand) }
+        } else {
+          val sim = CosineSimilarity.of(v, c)
+          val negsim = if (sim.isNaN) -2.0 else -sim
+          // nulls sort first, so a null-scored worst beats any score
+          if (worst == null) picks.add(InternalRow(negsim, key, sim, j))
+          else if (!worst.isNullAt(0) && negsim <= worst.getDouble(0)) {
+            val cand = InternalRow(negsim, key, sim, j)
+            if (order.lt(cand, worst)) { picks.poll(); picks.add(cand) }
+          }
+        }
+        j += 1
+      }
+      picks.asScala.toSeq.sortWith(order.lt).map(p => Row(r.get(0), r.get(1),
+        cents.cells(p.getInt(3))._1))
+    }
+    val schema = StructType(Seq(batch.schema("vec_id").copy(name = "query_id"),
+      batch.schema("embedding").copy(name = "qe"), cents.label))
+    (spark.createDataFrame(routed.asJava, schema), routed.map(_.get(2)).distinct)
   }
 
   /** sink_ann_index_sq8 — the CODES-ONLY saved index (`writeAnnIndex`

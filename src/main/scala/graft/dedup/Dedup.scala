@@ -277,14 +277,14 @@ object Dedup {
       case None => df
       case Some(id) => df.filter(col("batch_id") =!= id)
     }
-    val idxSig = excl(spark.read.parquet(indexPath + "/sig"))
+    val idxSig = excl(graft.sources.Sources.readParquet(spark, indexPath + "/sig"))
     val cand = batchSig.as("x")
       .join(idxSig.as("y").hint("shuffle_hash"),
         col("x.bi") === col("y.bi") && col("x.bh") === col("y.bh") &&
           sizeOkCols(threshold))
       .select(col("x.doc_id").as("new_doc"), col("y.doc_id").as("corpus_doc"))
       .distinct()
-    val idxSh = excl(spark.read.parquet(indexPath + "/shingles"))
+    val idxSh = excl(graft.sources.Sources.readParquet(spark, indexPath + "/shingles"))
     cand
       .join(batchSets.select(col("doc_id").as("new_doc"), col("sh").as("sh_a")), "new_doc")
       .join(idxSh.select(col("doc_id").as("corpus_doc"), col("sh").as("sh_b")), "corpus_doc")

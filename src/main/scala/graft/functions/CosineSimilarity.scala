@@ -25,20 +25,8 @@ case class CosineSimilarity(left: Expression, right: Expression)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "graft_cosine"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var dot = 0.0; var na = 0.0; var nb = 0.0
-    var i = 0
-    while (i < n) {
-      val xi = x.getFloat(i).toDouble
-      val yi = y.getFloat(i).toDouble
-      dot += xi * yi; na += xi * xi; nb += yi * yi
-      i += 1
-    }
-    dot / (math.sqrt(na) * math.sqrt(nb))
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    CosineSimilarity.of(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
@@ -61,6 +49,24 @@ case class CosineSimilarity(left: Expression, right: Expression)
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
+}
+
+object CosineSimilarity {
+  /** The interpreted kernel, also called on the driver by the at-rest
+    * probes' query routing, so a routed query scores its cells exactly
+    * as `graft_cosine` does in a plan; `doGenCode` emits the same loop. */
+  def of(x: ArrayData, y: ArrayData): Double = {
+    val n = math.min(x.numElements(), y.numElements())
+    var dot = 0.0; var na = 0.0; var nb = 0.0
+    var i = 0
+    while (i < n) {
+      val xi = x.getFloat(i).toDouble
+      val yi = y.getFloat(i).toDouble
+      dot += xi * yi; na += xi * xi; nb += yi * yi
+      i += 1
+    }
+    dot / (math.sqrt(na) * math.sqrt(nb))
+  }
 }
 
 /** SQL registration for graft's native expressions; idempotent. Also

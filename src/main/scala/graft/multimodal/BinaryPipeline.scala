@@ -596,7 +596,7 @@ object BinaryPipeline {
     // one generation read covers both relations: a vacuum publishing
     // mid-read can never hand this reader new chunks with old recipes
     val (chunksPath, recipesPath) = chunkStorePaths(spark, path)
-    val raw = spark.read.parquet(recipesPath)
+    val raw = graft.sources.Sources.readParquet(spark, recipesPath)
     val recipes =
       if (raw.columns.contains("batch_id")) {
         val latest = raw.groupBy("doc_id")
@@ -604,7 +604,7 @@ object BinaryPipeline {
         raw.join(latest, Seq("doc_id", "batch_id")).drop("batch_id")
       } else raw
     recipes
-      .join(spark.read.parquet(chunksPath).select("chunk_hash", "bytes"),
+      .join(graft.sources.Sources.readParquet(spark, chunksPath).select("chunk_hash", "bytes"),
         "chunk_hash")
       .groupBy("doc_id")
       .agg(expr("aggregate(array_sort(collect_list(struct(pos, bytes))), " +

@@ -3,6 +3,8 @@ package graft.sources
 import java.io.IOException
 import java.util.concurrent.ConcurrentHashMap
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
@@ -20,62 +22,98 @@ import org.apache.spark.sql.types.StructType
   */
 object Sources {
 
-  private final case class SchemaKey(path: String, files: Seq[(String, Long, Long)],
-                                     conf: Seq[(String, String)])
-  private val parquetSchemas = new ConcurrentHashMap[SchemaKey, StructType]()
+  /** A value derived from the parquet data under a path, kept per
+    * (path, session parquet conf) together with the validity token it
+    * was derived under: the sorted (file, length, mtime) of the path's
+    * recursive listing. A lookup whose listing differs recomputes and
+    * REPLACES the entry, so the memo holds one entry per (path, conf),
+    * however many versions of the path a process reads (an index
+    * appended to on every pass would otherwise add an entry per
+    * append).
+    *
+    * The listing is a recursive `FileSystem.listStatus` walk. Hadoop's
+    * `listFiles(p, true)` returns `LocatedFileStatus`es, whose
+    * constructor copies each file's permission; on the local
+    * filesystem without native Hadoop that forks a shell per file.
+    * On a 4-core Linux host that cost about 5.6 ms a file against
+    * 0.15 ms for its length, so a hit on a 69-file index directory
+    * took 527 ms, more than the footer job the memo saves.
+    * `listStatus` never reads permissions.
+    *
+    * The listing runs before `compute`, so a concurrent rewrite can
+    * only file a newer value under an older token, which no later
+    * listing matches. The one known stale hit: a rewrite that keeps
+    * every file name and length and lands within the filesystem's
+    * mtime granularity. */
+  private[graft] final class PathMemo[V] {
+    private val entries =
+      new ConcurrentHashMap[(String, Seq[(String, String)]), (Seq[(String, Long, Long)], V)]()
+
+    /** The value for `path`'s current version: memoized, or `compute`d
+      * (outside any map lock: it may run a Spark job) and filed in
+      * place of the path's previous entry. None when the path cannot
+      * be listed (missing, unreadable); its entries are then dropped,
+      * so a deleted index does not keep its last value alive. */
+    def apply(spark: SparkSession, path: String)(compute: => V): Option[V] = {
+      val token = try Some(listing(spark, path)) catch {
+        case _: IOException =>
+          entries.keySet.removeIf(_._1 == path)
+          None
+      }
+      token.map { files =>
+        val key = (path, spark.conf.getAll.toSeq.filter { case (k, _) =>
+          k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+        }.sorted)
+        Option(entries.get(key)).collect { case (t, v) if t == files => v }.getOrElse {
+          val v = compute
+          entries.put(key, (files, v))
+          v
+        }
+      }
+    }
+
+    /** The path of every entry, once per (path, conf). */
+    private[graft] def paths: Seq[String] = entries.keySet.asScala.toSeq.map(_._1)
+  }
+
+  private[graft] val parquetSchemas = new PathMemo[StructType]
 
   /** The engine's parquet reader: `spark.read.parquet(path)` with the
     * schema inferred once per table version instead of once per call.
     * Spark's parquet inference runs a one-task job to read a footer;
-    * here every call after the first reads with the memoized schema
-    * and runs no job until the plan executes.
+    * here every call after the first on the same files reads with the
+    * memoized schema and runs no job until the plan executes.
     *
-    * The memo is process-wide. Its key is
-    *   - the path;
-    *   - a validity token: the sorted (file, length, mtime) of the
-    *     path's recursive listing, so a rewrite, an append or a
-    *     deletion under the path misses;
-    *   - the session's explicitly set `spark.sql.parquet.*` and
-    *     `spark.sql.legacy.parquet.*` entries, which steer inference
-    *     (`nanosAsLong` decides whether a TIMESTAMP(NANOS) column
-    *     resolves at all).
-    * The one known stale hit: a rewrite that keeps every file name and
-    * length and lands within the filesystem's mtime granularity.
+    * The schema lives in a [[PathMemo]]: one entry per path and
+    * session parquet conf (the explicitly set `spark.sql.parquet.*`
+    * and `spark.sql.legacy.parquet.*` entries, which steer inference:
+    * `nanosAsLong` decides whether a TIMESTAMP(NANOS) column resolves
+    * at all), valid while the path's listing is unchanged. A rewrite,
+    * an append or a deletion under the path changes the listing, so
+    * only the first read after it pays the inference job. The listing
+    * itself costs a few milliseconds for the index directories the
+    * probes read (`listStatus`, see [[PathMemo]]).
     *
     * Every call returns a fresh relation (`spark.read.schema(s)`), so
     * each gets its own attribute ids: self-joins and `df("col")`
-    * references behave as with plain reads. The listing runs before
-    * inference, so a concurrent rewrite can only file a newer schema
-    * under an older token, which no later listing matches. A path
-    * that cannot be listed (missing, unreadable) falls through to the
-    * plain read, so callers see Spark's own exception. Entries are
-    * never evicted: one per (path, version, conf) a process reads. */
-  def readParquet(spark: SparkSession, path: String): DataFrame = {
-    val listed = try Some(listing(spark, path)) catch { case _: IOException => None }
-    listed match {
+    * references behave as with plain reads. A path that cannot be
+    * listed falls through to the plain read, so callers see Spark's
+    * own exception. */
+  def readParquet(spark: SparkSession, path: String): DataFrame =
+    parquetSchemas(spark, path)(spark.read.parquet(path).schema) match {
       case None => spark.read.parquet(path)
-      case Some(files) =>
-        val key = SchemaKey(path, files, spark.conf.getAll.toSeq.filter { case (k, _) =>
-          k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
-        }.sorted)
-        // get, then infer outside any map lock, then putIfAbsent: the
-        // inference is a Spark job and must not block other paths
-        val schema = Option(parquetSchemas.get(key)).getOrElse {
-          val inferred = spark.read.parquet(path).schema
-          Option(parquetSchemas.putIfAbsent(key, inferred)).getOrElse(inferred)
-        }
-        spark.read.schema(schema).parquet(path)
+      case Some(schema) => spark.read.schema(schema).parquet(path)
     }
-  }
 
   private def listing(spark: SparkSession, path: String): Seq[(String, Long, Long)] = {
-    val p = new Path(path)
-    val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val out = Seq.newBuilder[(String, Long, Long)]
-    while (it.hasNext) {
-      val f = it.next()
-      out += ((f.getPath.toString, f.getLen, f.getModificationTime))
+    def walk(p: Path): Unit = fs.listStatus(p).foreach { s =>
+      if (s.isDirectory) walk(s.getPath)
+      else out += ((s.getPath.toString, s.getLen, s.getModificationTime))
     }
+    walk(root)
     out.result().sorted
   }
 

@@ -1,10 +1,15 @@
 package graft.text
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.{Literal, Pmod, XxHash64}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.Num.stableRound
 import graft.Scans
+import graft.sources.Sources
 
 /** Text-analysis operators for LLM-training-data pipelines
   * (SURVEY.md §2 "Text analysis"). All are single-pass narrow
@@ -878,7 +883,11 @@ object TextStats {
     * is reproducible run to run regardless of aggregation order.
     * Ranking ties break by doc_id. */
   private def bm25Score(cand: DataFrame, stats: DataFrame, topK: Int,
-                        k1: Double, b: Double): DataFrame = {
+                        k1: Double, b: Double): DataFrame =
+    bm25ScoreUnsorted(cand, stats, topK, k1, b).orderBy("query_id", "rank")
+
+  private def bm25ScoreUnsorted(cand: DataFrame, stats: DataFrame, topK: Int,
+                                k1: Double, b: Double): DataFrame = {
     val contrib = cand.crossJoin(broadcast(stats))
       .withColumn("avgdl", col("sum_dl").cast("double") / col("n_docs"))
       .withColumn("idf", log(lit(1.0) +
@@ -906,7 +915,6 @@ object TextStats {
       .filter(col("rank") <= topK)
       .select(col("query_id"), col("rank"), col("doc_id"),
         col("n_hit_terms"), stableRound(col("score"), 4).as("score"))
-      .orderBy("query_id", "rank")
   }
 
   /** t28_bm25_search — BM25 top-k keyword retrieval over the corpus.
@@ -967,12 +975,10 @@ object TextStats {
     // error on an existing meta must propagate, or this batch's
     // postings/dfs would hash into wrong buckets and the probe's
     // bucket pruning would silently miss them
-    val effBuckets = batchId match {
-      case Some(_) if graft.Fs.exists(spark, path + "/meta") =>
-        spark.read.parquet(path + "/meta")
-          .collect()(0).getAs[Number](0).intValue
-      case _ => nBuckets // seeding call: no meta yet
-    }
+    val seeding = batchId.isEmpty || !graft.Fs.exists(spark, path + "/meta")
+    val effBuckets =
+      if (seeding) nBuckets
+      else bucketsOf(spark, path).toInt
     // batch appends are only well-formed onto a batch-seeded layout
     // (postings/batch_id=.../bkt=...); appending under a single-shot
     // postings/bkt=... root would mix partition schemes, which Spark's
@@ -995,28 +1001,32 @@ object TextStats {
     // the five relations are independent once tf/dls are cached —
     // issue the writes concurrently (graft.Par, the guide's overlap-
     // independent-jobs pattern) so each job back-fills the others'
-    // scheduling/commit tails instead of paying 5 full job latencies
-    val metaW = () => corpus.sparkSession.range(1)
-      .select(lit(effBuckets).as("n_buckets"))
-      .write.mode("overwrite").parquet(path + "/meta"): Unit
+    // scheduling/commit tails instead of paying 5 full job latencies.
+    // meta/ is written only when seeding: a batch append would write
+    // the same modulus again and invalidate every reader's memo of it
+    val metaW: Seq[() => Unit] =
+      if (!seeding) Nil
+      else Seq(() => corpus.sparkSession.range(1)
+        .select(lit(effBuckets).as("n_buckets"))
+        .write.mode("overwrite").parquet(path + "/meta"))
     batchId match {
       case None =>
-        graft.Par.jobs(metaW,
+        graft.Par.jobs(metaW ++ Seq(
           () => tf.select("bkt", "term", "doc_id", "tf")
             .write.mode("overwrite").partitionBy("bkt").parquet(path + "/postings"),
           () => dfs.write.mode("overwrite").partitionBy("bkt").parquet(path + "/dfs"),
           () => dls.write.mode("overwrite").parquet(path + "/doclens"),
-          () => stats.write.mode("overwrite").parquet(path + "/stats"))
+          () => stats.write.mode("overwrite").parquet(path + "/stats")): _*)
       case Some(id) =>
         def app(df: DataFrame, sub: String, parts: String*): Unit =
           df.withColumn("batch_id", lit(id))
             .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
             .partitionBy("batch_id" +: parts: _*).parquet(path + "/" + sub)
-        graft.Par.jobs(metaW,
+        graft.Par.jobs(metaW ++ Seq(
           () => app(tf.select("bkt", "term", "doc_id", "tf"), "postings", "bkt"),
           () => app(dfs, "dfs", "bkt"),
           () => app(dls, "doclens"),
-          () => app(stats, "stats"))
+          () => app(stats, "stats")): _*)
     }
   }
 
@@ -1025,31 +1035,74 @@ object TextStats {
     * corpus, with ZERO corpus text reads. The query terms' bucket set
     * (driver-bounded ≤ |query terms|) statically prunes the dfs and
     * postings directories; dfs/stats fold across append partitions
-    * with one sum; only candidate docs join `doclens/`. */
+    * with one sum; only candidate docs join `doclens/`.
+    *
+    * Serving path: the bucket modulus is memoized on `meta/`'s
+    * listing, and the (query_id, term) batch is collected once and
+    * routed on the driver: each term's bucket is the same Catalyst
+    * `Pmod(XxHash64(term), nBuckets)` the index was written with,
+    * evaluated on the driver; the matching dfs rows and the stats rows
+    * fold on the driver with exact long sums; the term list rides next
+    * to the bucket partition filter as a pushed scan filter. The batch
+    * is held on the driver and inlined in the plan: a probe batch is
+    * bounded by its caller. */
   def bm25SearchIndexed(queries: DataFrame, indexPath: String, topK: Int = 10,
-                        k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+                        k1: Double = 1.2, b: Double = 0.75): DataFrame =
+    bm25SearchIndexedUnsorted(queries, indexPath, topK, k1, b)
+      .orderBy("query_id", "rank")
+
+  /** [[bm25SearchIndexed]] without its final sort (a21 fuses it
+    * unsorted). A null term matches no index term, so it is dropped. */
+  private[graft] def bm25SearchIndexedUnsorted(queries: DataFrame, indexPath: String,
+                                               topK: Int = 10, k1: Double = 1.2,
+                                               b: Double = 0.75): DataFrame = {
     val spark = queries.sparkSession
-    val nBuckets = spark.read.parquet(indexPath + "/meta")
-      .collect()(0).getAs[Number](0).longValue
-    val qt = graft.Caches.tracked(
-      queries.select("query_id", "term").distinct()
-        .withColumn("bkt", pmod(xxhash64(col("term")), lit(nBuckets)).cast("int")))
+    val batch = queries.select("query_id", "term")
+    val nBuckets = bucketsOf(spark, indexPath)
+    val termType = batch.schema("term").dataType
+    val pairs = batch.collect().toSeq.filterNot(_.isNullAt(1)).distinct
+    val terms = pairs.map(_.get(1)).distinct
     // partition columns read back as INT (directory-value inference);
-    // the probe's literals are Ints too — a cast on the partition
+    // the bucket literals are Ints too — a cast on the partition
     // column would defeat the directory pruning this layout exists for
-    val bkts = qt.select("bkt").distinct().collect().map(_.getInt(0))
-    val dfs = spark.read.parquet(indexPath + "/dfs")
-      .filter(col("bkt").isin(bkts: _*))
-      .groupBy("term").agg(sum("df").as("df")) // fold append partitions
-    val qdf = dfs.join(broadcast(qt.select("query_id", "term")), Seq("term"))
-    val stats = spark.read.parquet(indexPath + "/stats")
-      .agg(sum("n_docs").as("n_docs"), sum("sum_dl").as("sum_dl"))
-    val cand = spark.read.parquet(indexPath + "/postings")
-      .filter(col("bkt").isin(bkts: _*))
+    val bkts = terms.map(t => Pmod(new XxHash64(Seq(Literal.create(t, termType))),
+      Literal(nBuckets)).eval().asInstanceOf[Long].toInt).distinct
+    val inBatch = col("bkt").isin(bkts: _*) && col("term").isin(terms: _*)
+    // exact long sums, null when nothing non-null is summed (SQL sum)
+    def fold(vs: Seq[Any]): java.lang.Long =
+      vs.filter(_ != null).map(_.asInstanceOf[Long]).reduceOption(_ + _)
+        .map(java.lang.Long.valueOf).orNull
+    val dfByTerm =
+      if (terms.isEmpty) Map.empty[Any, java.lang.Long]
+      else Sources.readParquet(spark, indexPath + "/dfs").filter(inBatch)
+        .select("term", "df").collect().toSeq
+        .groupBy(_.get(0)).map { case (t, rs) => t -> fold(rs.map(_.get(1))) }
+    val qdf = spark.createDataFrame(pairs.collect {
+      case r if dfByTerm.contains(r.get(1)) => Row(r.get(1), dfByTerm(r.get(1)), r.get(0))
+    }.asJava, StructType(Seq(batch.schema("term"), StructField("df", LongType),
+      batch.schema("query_id"))))
+    val st = Sources.readParquet(spark, indexPath + "/stats")
+      .select("n_docs", "sum_dl").collect().toSeq
+    val stats = spark.createDataFrame(
+      Seq(Row(fold(st.map(_.get(0))), fold(st.map(_.get(1))))).asJava,
+      StructType(Seq(StructField("n_docs", LongType), StructField("sum_dl", LongType))))
+    val cand = Sources.readParquet(spark, indexPath + "/postings")
+      .filter(inBatch)
       .join(broadcast(qdf), Seq("term"))
-      .join(spark.read.parquet(indexPath + "/doclens"), Seq("doc_id"))
+      .join(Sources.readParquet(spark, indexPath + "/doclens"), Seq("doc_id"))
       .select("query_id", "doc_id", "term", "tf", "df", "dl")
-    bm25Score(cand, stats, topK, k1, b)
+    bm25ScoreUnsorted(cand, stats, topK, k1, b)
+  }
+
+  /** The bucket modulus in a text index's `meta/`, memoized on
+    * `meta/`'s listing: it is written when the index is seeded and
+    * never by an append. */
+  private val metaBuckets = new Sources.PathMemo[Long]
+
+  private def bucketsOf(spark: org.apache.spark.sql.SparkSession, indexPath: String): Long = {
+    val path = indexPath + "/meta"
+    def read() = Sources.readParquet(spark, path).collect()(0).getAs[Number](0).longValue
+    metaBuckets(spark, path)(read()).getOrElse(read())
   }
 
   /** t31_percolate — reverse search (the percolator pattern):

@@ -954,4 +954,87 @@ class AnnSpec extends SparkSpecBase {
     }
     graft.Caches.release()
   }
+
+  /** `n` seeded 8-d vectors around five labelled axes. */
+  private def clustered(n: Int) = {
+    val r = new scala.util.Random(7)
+    (0 until n).map { i =>
+      (i.toLong, Array.tabulate(8)(d => (if (d == i % 5) 1f else 0f) + r.nextFloat() * 0.5f), i % 5)
+    }.toDF("vec_id", "embedding", "label")
+  }
+
+  test("ivfKnnIndexed: a 300-query batch routes on the driver and equals the live search") {
+    val emb = clustered(400)
+    val cents = Ann.labelCentroids(emb)
+    val nQ = 300
+    val dir = java.nio.file.Files.createTempDirectory("graft_ann_route").toString
+    Ann.writeAnnIndex(emb.filter(emb("vec_id") >= nQ), cents, dir)
+    val probe = Ann.ivfKnnIndexed(emb.filter(emb("vec_id") < nQ), dir)
+    // routed: no cached cell-assignment frame, the query side is local
+    assert(probe.queryExecution.withCachedData.collect {
+      case m: org.apache.spark.sql.execution.columnar.InMemoryRelation => m
+    }.isEmpty)
+    val live = Ann.ivfKnn(emb, nQueries = nQ, centroids = Some(cents)).collect().toSeq
+    assert(live.map(_.getLong(0)).distinct.size == nQ)
+    assert(probe.collect().toSeq == live)
+    // an empty batch returns no rows
+    assert(Ann.ivfKnnIndexed(emb.filter(emb("vec_id") < 0), dir).collect().isEmpty)
+  }
+
+  test("driver routing picks assignN's cells for NaN and null queries and equal-score centroids") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    // cells 3 and 1 share a centroid (equal scores for every query);
+    // cell 2 is orthogonal to query 10, which scores 0.0 against it and
+    // cell 4; the zero cell 5 scores NaN against every query (assignN
+    // ranks NaN first), and the zero and NaN queries score NaN against
+    // every cell; query 15 is null (a null score against every cell)
+    // and query 16 has a null element, which graft_cosine reads as 0
+    val cents = Seq(
+      (3, Array(1.0f, 0.0f, 0.0f)), (1, Array(1.0f, 0.0f, 0.0f)),
+      (2, Array(0.0f, 1.0f, 0.0f)), (4, Array(0.0f, 0.0f, 1.0f)),
+      (0, Array(-1.0f, 0.0f, 0.0f)), (5, Array(0.0f, 0.0f, 0.0f))).toDF("c_label", "centroid")
+    val corpus = Seq((100L, Array(0.5f, 0.5f, 0.0f))).toDF("vec_id", "embedding")
+    val dir = java.nio.file.Files.createTempDirectory("graft_ann_ties").toString
+    Ann.writeAnnIndex(corpus, cents, dir)
+    def f(xs: Any*): Seq[Any] = xs
+    val queries = spark.createDataFrame(
+      java.util.Arrays.asList(
+        Row(10L, f(1.0f, 0.0f, 0.0f)), Row(11L, f(0.0f, 0.0f, 0.0f)),
+        Row(12L, f(Float.NaN, 1.0f, 0.0f)), Row(13L, f(-0.0f, 0.0f, 2.0f)),
+        Row(14L, f(0.3f, 0.3f, 0.3f)), Row(15L, null), Row(16L, f(null, -1.0f, 0.0f))),
+      StructType(Seq(StructField("vec_id", LongType),
+        StructField("embedding", ArrayType(FloatType, containsNull = true)))))
+    val saved = graft.sources.Sources.readParquet(spark, dir + "/centroids")
+    for (nprobe <- 0 to 7) {
+      val expected = Ann.assignN(queries, saved, nprobe)
+        .select("vec_id", "c_label").collect().map(r => (r.getLong(0), r.getInt(1)))
+      val (routed, probed) = Ann.routeToCells(queries, dir, nprobe)
+      val got = routed.select("query_id", "c_label").collect()
+        .map(r => (r.getLong(0), r.getInt(1)))
+      assert(got.sorted.toSeq == expected.sorted.toSeq, s"nprobe=$nprobe")
+      assert(probed.toSet == got.map(_._2).toSet[Any], s"nprobe=$nprobe")
+    }
+  }
+
+  test("ivfKnnIndexed: a probe after appendAnnIndex sees the appended vectors") {
+    val emb = clustered(300)
+    val nQ = 5
+    val queries = emb.filter(emb("vec_id") < nQ)
+    val dir = java.nio.file.Files.createTempDirectory("graft_ann_reopen").toString
+    Ann.writeAnnIndex(emb.filter(emb("vec_id") >= nQ), Ann.labelCentroids(emb), dir,
+      batchId = Some(-1L))
+    // the first probe memoizes the centroid rows and the vectors' schema
+    val before = Ann.ivfKnnIndexed(queries, dir, k = 1).collect()
+    assert(before.forall(_.getLong(1) < 1000000L))
+    Ann.appendAnnIndex(
+      queries.select((queries("vec_id") + 1000000L).as("vec_id"), queries("embedding")),
+      dir, batchId = Some(0L))
+    val top = Ann.ivfKnnIndexed(queries, dir, k = 1).collect()
+      .map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
+    (0L until nQ).foreach { qid =>
+      assert(top(qid) == ((qid + 1000000L, 1.0)), s"query $qid: appended twin not retrieved")
+    }
+    graft.Caches.release()
+  }
 }

@@ -42,4 +42,15 @@ class HarnessSpec extends SparkSpecBase {
     assert(PlanDump.normalize("a#7 b#9 c#7") == "a#0 b#1 c#0")
     assert(PlanDump.normalize("a#1 b#2") != PlanDump.normalize("a#1 b#1"))
   }
+
+  test("PlanDump.normalize renumbers lambda variables in first-appearance order") {
+    // Spark names lambda variables from one JVM-wide counter, so the
+    // same plan built after other queries carries higher suffixes
+    def plan(x: Int) =
+      s"aggregate(xs#3, 0.0, lambdafunction((x_$x + y_${x + 1}), " +
+        s"lambdavariable(x_$x), lambdavariable(y_${x + 1})), max_7)"
+    assert(PlanDump.normalize(plan(1)) == PlanDump.normalize(plan(64)))
+    assert(PlanDump.normalize("x_64 y_65 x_64 max_12") == "x_0 y_1 x_0 max_12")
+    assert(PlanDump.normalize("x_1 x_2") != PlanDump.normalize("x_1 x_1"))
+  }
 }

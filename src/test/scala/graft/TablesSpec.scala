@@ -191,4 +191,20 @@ class TablesSpec extends SparkSpecBase {
     assert(plain.nonEmpty)
     assert(pairs(Tables.lineitem(spark, dir), Tables.lineitem(spark, dir)) == plain)
   }
+
+  test("schema memo: 20 appends leave one entry for the path; deleting the path drops it") {
+    val dir = tableDir(Seq((0L, 0L)))
+    val path = s"$dir/lineitem.parquet"
+    assert(Tables.lineitem(spark, dir).count() == 1)
+    (1L to 20L).foreach { i =>
+      Seq((i, i)).toDF("k", "v").write.mode("append").parquet(path)
+      assert(Tables.lineitem(spark, dir).count() == i + 1, s"append $i not seen")
+    }
+    assert(graft.sources.Sources.parquetSchemas.paths.count(_ == path) == 1)
+    assert(jobsRunBy(Tables.lineitem(spark, dir)) == 0, "the last version must still hit")
+    // a deleted path drops its entry when it is next read
+    Harness.rm(new java.io.File(path))
+    intercept[Exception](Tables.lineitem(spark, dir))
+    assert(!graft.sources.Sources.parquetSchemas.paths.contains(path))
+  }
 }

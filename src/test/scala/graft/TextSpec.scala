@@ -715,4 +715,71 @@ class TextSpec extends SparkSpecBase {
     assert(out(3L)._1 == 0 && out(3L)._2 == 1L && out(3L)._3 == "prose",
       s"got ${out(3L)}")
   }
+
+  /** `n` seeded 12-word documents over a 40-word vocabulary. */
+  private def corpus(n: Int) = {
+    import spark.implicits._
+    val r = new scala.util.Random(11)
+    (0 until n).map(i => (i.toLong, Seq.fill(12)(s"w${r.nextInt(40)}").mkString(" ")))
+      .toDF("doc_id", "text")
+  }
+
+  test("bm25SearchIndexed: a 300-row batch routes on the driver and equals the live search") {
+    import spark.implicits._
+    val docs = corpus(80)
+    val dir = java.nio.file.Files.createTempDirectory("graft_text_route").toString
+    TextStats.writeTextIndex(docs.filter($"doc_id" % 2 === 0), dir, batchId = Some(0L))
+    TextStats.writeTextIndex(docs.filter($"doc_id" % 2 =!= 0), dir, batchId = Some(1L))
+    graft.Caches.release()
+    // 100 queries of 3 terms over w0..w44: w40..w44 are in no document
+    val r = new scala.util.Random(5)
+    val rows = (0 until 300).map(i => (i / 3L, s"w${r.nextInt(45)}"))
+    val batch = rows.toDF("query_id", "term")
+    val probe = TextStats.bm25SearchIndexed(batch, dir, topK = 100000)
+    // routed: no cached query frame, the query side is local
+    assert(probe.queryExecution.withCachedData.collect {
+      case m: org.apache.spark.sql.execution.columnar.InMemoryRelation => m
+    }.isEmpty)
+    val got = probe.collect().toSeq
+    graft.Caches.release()
+    val live = TextStats.bm25Search(docs, batch, topK = 100000).collect().toSeq
+    graft.Caches.release()
+    assert(got.nonEmpty && got == live)
+    // a repeated row and a null term change nothing
+    val noisy = (rows.map { case (q, t) => (q, Option(t)) } ++
+      Seq((0L, Some(rows(0)._2)), (0L, None))).toDF("query_id", "term")
+    assert(TextStats.bm25SearchIndexed(noisy, dir, topK = 100000).collect().toSeq == got)
+    // an empty batch returns no rows
+    assert(TextStats.bm25SearchIndexed(batch.limit(0), dir).collect().isEmpty)
+  }
+
+  test("writeTextIndex: a batch append leaves meta/ untouched and a later probe sees the batch") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    val docs = corpus(80)
+    val dir = java.nio.file.Files.createTempDirectory("graft_text_meta").toString
+    def metaFiles = {
+      val s = java.nio.file.Files.walk(java.nio.file.Paths.get(dir, "meta"))
+      try s.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+        .map(f => f.toString -> java.nio.file.Files.getLastModifiedTime(f).toMillis).toSeq.sorted
+      finally s.close()
+    }
+    TextStats.writeTextIndex(docs.filter($"doc_id" % 2 === 0), dir, batchId = Some(0L))
+    graft.Caches.release()
+    val seeded = metaFiles
+    assert(seeded.nonEmpty)
+    val queries = TextStats.sampleQueries(docs, every = 4, maxQueries = 20)
+    // the first probe memoizes every relation's schema under the seed
+    val before = TextStats.bm25SearchIndexed(queries, dir, topK = 100000).collect().toSeq
+    graft.Caches.release()
+    Thread.sleep(1100) // past a coarse mtime granularity: a rewrite would show
+    TextStats.writeTextIndex(docs.filter($"doc_id" % 2 =!= 0), dir, batchId = Some(1L))
+    graft.Caches.release()
+    assert(metaFiles == seeded, "a batch append must not rewrite meta/")
+    val after = TextStats.bm25SearchIndexed(queries, dir, topK = 100000).collect().toSeq
+    graft.Caches.release()
+    val live = TextStats.bm25Search(docs, queries, topK = 100000).collect().toSeq
+    graft.Caches.release()
+    assert(after == live && before != live, "the probe after the append must see the batch")
+  }
 }
