@@ -96,7 +96,7 @@ object Ann {
   }
 
   /** a26_ivf_filtered_indexed — filtered search AT REST: the a15 probe
-    * (queries assign under saved centroids, only probed cell
+    * (queries routed to their cells on the driver, only probed cell
     * directories read) composed with an ATTRIBUTE SIDE TABLE — the
     * saved index stays attribute-free (vectors re-index when
     * embeddings change, attributes change on their own cadence; fusing
@@ -112,14 +112,9 @@ object Ann {
                             nprobe: Int = 2): DataFrame = {
     val spark = queries.sparkSession
     GraftFunctions.register(spark)
-    val cents = spark.read.parquet(indexPath + "/centroids")
-    val q = graft.Caches.tracked(
-      assignN(queries.select(col("vec_id"), col("embedding")), cents, nprobe)
-        .join(queries.select(col("vec_id"), col("label")), "vec_id")
-        .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-          col("label"), col("c_label")))
-    val probed = q.select("c_label").distinct().collect().map(_.get(0))
-    val c = spark.read.parquet(indexPath + "/vectors")
+    val (routed, probed) = routeToCells(queries, indexPath, nprobe)
+    val q = routed.join(queries.select(col("vec_id").as("query_id"), col("label")), "query_id")
+    val c = Sources.readParquet(spark, indexPath + "/vectors")
       .filter(col("c_label").isin(probed: _*))
       .select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"),
         col("c_label"))
@@ -1966,9 +1961,11 @@ object Ann {
     }
   }
 
-  /** Driver-side query routing for [[ivfKnnIndexed]]: collects the
-    * batch and assigns each query to its `nprobe` cells under
-    * `assignN`'s contract exactly — the same cosine kernel
+  /** Driver-side query routing for every at-rest IVF probe
+    * ([[ivfKnnIndexed]], [[ivfKnnIndexedFiltered]],
+    * [[ivfSq8KnnIndexed]], [[ivfBqKnnIndexed]], [[ivfPqKnnIndexed]]):
+    * collects the batch and assigns each query to its `nprobe` cells
+    * under `assignN`'s contract exactly — the same cosine kernel
     * (`CosineSimilarity.of`, null for a null vector), NaN scored as
     * -2.0 after negation, and Spark's own struct ordering over
     * (negated sim, c_label, sim), so nulls come first, ±0.0 compare
@@ -2028,6 +2025,11 @@ object Ann {
     (spark.createDataFrame(routed.asJava, schema), routed.map(_.get(2)).distinct)
   }
 
+  /** The one row a codes index saves in `meta/`: the SQ8 ranges
+    * (lo, scale) or the PQ codebook (codebook, m, ksub, sub_dim). */
+  private def metaRow(spark: org.apache.spark.sql.SparkSession, indexPath: String): Row =
+    Sources.readParquet(spark, indexPath + "/meta").collect()(0)
+
   /** sink_ann_index_sq8 — the CODES-ONLY saved index (`writeAnnIndex`
     * at a quarter the bytes): cells store each vector as dim BYTES of
     * SQ8 codes, never floats — at 1e9+ vectors this is the layout
@@ -2069,8 +2071,8 @@ object Ann {
                         batchId: Option[Long] = None): Unit = {
     val spark = batch.sparkSession
     GraftFunctions.register(spark)
-    val cents = spark.read.parquet(indexPath + "/centroids")
-    val m = spark.read.parquet(indexPath + "/meta").collect()(0)
+    val cents = Sources.readParquet(spark, indexPath + "/centroids")
+    val m = metaRow(spark, indexPath)
     val (encF, _) = GraftFunctions.registerSq8(spark,
       m.getSeq[Float](0).toArray, m.getSeq[Float](1).toArray)
     writeCells(assign(batch, cents)
@@ -2080,9 +2082,9 @@ object Ann {
   }
 
   /** a19_ivf_sq8_indexed — a18's search against the CODES-ONLY saved
-    * index: queries assign fresh under the saved centroids, the
-    * probed-label set prunes the codes read to those cell DIRECTORIES
-    * (the a15 pin), and scoring is `Sq8Cosine` over dim-byte postings
+    * index: queries are routed to their cells on the driver
+    * ([[routeToCells]]), the probed-label set prunes the codes read
+    * to those cell DIRECTORIES (the a15 pin), and scoring is `Sq8Cosine` over dim-byte postings
     * dequantized with the saved ranges. Top-k comes from the
     * quantized similarity directly — no float re-rank exists at rest,
     * by design (see [[writeAnnIndexSq8]]); the spec bounds the codec
@@ -2091,16 +2093,11 @@ object Ann {
                        k: Int = 3, nprobe: Int = 2): DataFrame = {
     val spark = queries.sparkSession
     GraftFunctions.register(spark)
-    val cents = spark.read.parquet(indexPath + "/centroids")
-    val m = spark.read.parquet(indexPath + "/meta").collect()(0)
+    val m = metaRow(spark, indexPath)
     val (_, simF) = GraftFunctions.registerSq8(spark,
       m.getSeq[Float](0).toArray, m.getSeq[Float](1).toArray)
-    val q = graft.Caches.tracked(
-      assignN(queries, cents, nprobe)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-          col("c_label")))
-    val probed = q.select("c_label").distinct().collect().map(_.get(0))
-    val c = spark.read.parquet(indexPath + "/codes")
+    val (q, probed) = routeToCells(queries, indexPath, nprobe)
+    val c = Sources.readParquet(spark, indexPath + "/codes")
       .filter(col("c_label").isin(probed: _*))
       .select(col("vec_id").as("neighbor_id"), col("codes"), col("c_label"))
     val w = Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id"))
@@ -2153,7 +2150,7 @@ object Ann {
                        batchId: Option[Long] = None): Unit = {
     val spark = batch.sparkSession
     GraftFunctions.register(spark)
-    val cents = spark.read.parquet(indexPath + "/centroids")
+    val cents = Sources.readParquet(spark, indexPath + "/centroids")
     writeCells(assign(batch, cents)
       .select(col("vec_id"), expr("graft_signbits(embedding)").as("codes"),
         col("c_label")),
@@ -2161,10 +2158,10 @@ object Ann {
   }
 
   /** a28_ivf_bq_indexed — search against the saved sign-bit index in
-    * the codes-hot/floats-cold shape: queries assign fresh under the
-    * saved centroids, the probed-label set prunes the codes read to
-    * those cell DIRECTORIES (the a15 pin), the XOR+POPCNT Hamming
-    * scan shortlists `rerank` per query (ties to the smaller id —
+    * the codes-hot/floats-cold shape: queries are routed to their
+    * cells on the driver ([[routeToCells]]), the probed-label set
+    * prunes the codes read to those cell DIRECTORIES (the a15 pin),
+    * the XOR+POPCNT Hamming scan shortlists `rerank` per query (ties to the smaller id —
     * integer distances tie often, determinism needs the break), and
     * ONLY the shortlist joins `floatSource` for the exact cosine
     * re-rank — at 100 TB the floats never scan, they're fetched at
@@ -2181,15 +2178,11 @@ object Ann {
                       rerank: Int = 100): DataFrame = {
     val spark = queries.sparkSession
     GraftFunctions.register(spark)
-    val cents = spark.read.parquet(indexPath + "/centroids")
     val qRows = queries.select(col("vec_id"), col("embedding")).orderBy("vec_id")
       .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-    val q = graft.Caches.tracked(
-      assignN(queries, cents, nprobe)
-        .select(col("vec_id").as("query_id"),
-          expr("graft_signbits(embedding)").as("qcode"), col("c_label")))
-    val probed = q.select("c_label").distinct().collect().map(_.get(0))
-    val c = spark.read.parquet(indexPath + "/codes")
+    val (routed, probed) = routeToCells(queries, indexPath, nprobe)
+    val q = routed.select(col("query_id"), expr("graft_signbits(qe)").as("qcode"), col("c_label"))
+    val c = Sources.readParquet(spark, indexPath + "/codes")
       .filter(col("c_label").isin(probed: _*))
       .select(col("vec_id").as("neighbor_id"), col("codes"), col("c_label"))
     val wHam = Window.partitionBy("query_id")
@@ -2253,8 +2246,8 @@ object Ann {
                        batchId: Option[Long] = None): Unit = {
     val spark = batch.sparkSession
     GraftFunctions.register(spark)
-    val cents = spark.read.parquet(indexPath + "/centroids")
-    val meta = spark.read.parquet(indexPath + "/meta").collect()(0)
+    val cents = Sources.readParquet(spark, indexPath + "/centroids")
+    val meta = metaRow(spark, indexPath)
     val fname = GraftFunctions.registerPqEncode(spark,
       meta.getSeq[Float](0).toArray, meta.getInt(1), meta.getInt(2), meta.getInt(3))
     writeCells(assign(batch, cents)
@@ -2264,9 +2257,9 @@ object Ann {
   }
 
   /** a24_ivf_pq_indexed — a09's search against the CODES-ONLY saved
-    * PQ index: queries assign fresh under the saved centroids, the
-    * probed-label set prunes the codes read to those cell DIRECTORIES
-    * (the a15 pin), each surviving code row explodes to its m
+    * PQ index: queries are routed to their cells on the driver
+    * ([[routeToCells]]), the probed-label set prunes the codes read
+    * to those cell DIRECTORIES (the a15 pin), each surviving code row explodes to its m
     * (sub, cid) pairs and joins the broadcast ADC table built from
     * the query floats and the SAVED codebook — the pqKnn cellPairs
     * shape with the posting list coming off disk. Top-k comes from
@@ -2278,14 +2271,11 @@ object Ann {
     val spark = queries.sparkSession
     GraftFunctions.register(spark)
     import spark.implicits._
-    val cents = spark.read.parquet(indexPath + "/centroids")
-    val meta = spark.read.parquet(indexPath + "/meta").collect()(0)
+    val meta = metaRow(spark, indexPath)
     val codebook = meta.getSeq[Float](0).toArray
     val (m, ksub, subDim) = (meta.getInt(1), meta.getInt(2), meta.getInt(3))
-    val q = graft.Caches.tracked(
-      assignN(queries, cents, nprobe)
-        .select(col("vec_id").as("query_id"), col("c_label")))
-    val probed = q.select("c_label").distinct().collect().map(_.get(0))
+    val (routed, probed) = routeToCells(queries, indexPath, nprobe)
+    val q = routed.select("query_id", "c_label")
     val qv = queries.select(col("vec_id"), col("embedding")).orderBy("vec_id")
       .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
     // ADC tables: |queries| x m x ksub rows — tiny, broadcast (the a08 build)
@@ -2305,7 +2295,7 @@ object Ann {
       (qid, sub, cid, pdot, ndot, math.sqrt(v.map(x => x.toDouble * x).sum))
     }
     val tablesDf = tables.toDF("query_id", "sub", "cid", "pdot", "ndot", "qnorm")
-    val cands = spark.read.parquet(indexPath + "/codes")
+    val cands = Sources.readParquet(spark, indexPath + "/codes")
       .filter(col("c_label").isin(probed: _*))
       .select(col("vec_id").as("neighbor_id"), col("c_label"),
         posexplode(col("codes")).as(Seq("sub", "cid")))

@@ -340,7 +340,7 @@ object Dedup {
     val spark = newDocs.sparkSession
     val (batchSets, batchSig) = batchPipeline(newDocs, numHashes, bands)
     val batchSigT = graft.Caches.tracked(batchSig)
-    val idxSig = spark.read.parquet(indexPath + "/sig")
+    val idxSig = graft.sources.Sources.readParquet(spark, indexPath + "/sig")
     val cand = batchSigT.as("x")
       .join(idxSig.as("y").hint("shuffle_hash"),
         col("x.bi") === col("y.bi") && col("x.bh") === col("y.bh") &&
@@ -349,7 +349,7 @@ object Dedup {
       .distinct()
     val batchMsig = batchSets.select(col("doc_id").as("new_doc"),
       expr(s"graft_minhash_bands(sh, $numHashes, $numHashes)").as("sig_a"))
-    val idxMsig = spark.read.parquet(indexPath + "/minsig")
+    val idxMsig = graft.sources.Sources.readParquet(spark, indexPath + "/minsig")
       .select(col("doc_id").as("corpus_doc"), col("msig").as("sig_b"))
     cand
       .join(batchMsig, "new_doc")
@@ -395,7 +395,7 @@ object Dedup {
     val spark = newDocs.sparkSession
     val (batchSets, batchSig) = batchPipeline(newDocs, numHashes, bands)
     val batchSigT = graft.Caches.tracked(batchSig)
-    val idxSig = spark.read.parquet(indexPath + "/sig")
+    val idxSig = graft.sources.Sources.readParquet(spark, indexPath + "/sig")
     // NO sizeOk prefilter: size mismatch is exactly the containment
     // regime (the d18 rationale); the band equality itself encodes
     // the minJaccard candidate contract
@@ -407,7 +407,7 @@ object Dedup {
       .distinct()
     val batchMsig = batchSets.select(col("doc_id").as("new_doc"),
       expr(s"graft_minhash_bands(sh, $numHashes, $numHashes)").as("sig_a"))
-    val idxMsig = spark.read.parquet(indexPath + "/minsig")
+    val idxMsig = graft.sources.Sources.readParquet(spark, indexPath + "/minsig")
       .select(col("doc_id").as("corpus_doc"), col("msig").as("sig_b"))
     val j = col("est_jaccard")
     cand
@@ -1889,7 +1889,7 @@ object Dedup {
     }
     val (bsets, cand) =
       containmentProbeCandidates(newDocs, indexPath, threshold, excludeBatchId)
-    val sets = excl(spark.read.parquet(indexPath + "/sets"))
+    val sets = excl(graft.sources.Sources.readParquet(spark, indexPath + "/sets"))
     cand
       .join(bsets.select(col("doc_id"), col("sh").as("sh_a")), "doc_id")
       .join(sets.select(col("doc_id").as("corpus_doc"), col("sh").as("sh_b")), "corpus_doc")

@@ -5,6 +5,12 @@ import graft.ann.Ann
 class AnnSpec extends SparkSpecBase {
   import spark.implicits._
 
+  /** The cached frames `df`'s plan reads. */
+  private def cachedFrames(df: org.apache.spark.sql.DataFrame) =
+    df.queryExecution.withCachedData.collect {
+      case m: org.apache.spark.sql.execution.columnar.InMemoryRelation => m
+    }
+
   // 8 vectors in 4-d: ids 0-1 are queries; 2-3 near query 0, 4-5 near
   // query 1, 6-7 orthogonal noise
   private def vecs = Seq(
@@ -241,6 +247,8 @@ class AnnSpec extends SparkSpecBase {
     Ann.writeAnnIndexSq8(emb.filter(emb("vec_id") >= nQ), cents, dir)
     val queries = emb.filter(emb("vec_id") < nQ)
     val probeDf = Ann.ivfSq8KnnIndexed(queries, dir)
+    // routed on the driver: no cached query frame
+    assert(cachedFrames(probeDf).isEmpty)
     val probe = probeDf.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // codec distortion is near-lossless: neighbor sets agree with the
     // float IVF search under the same centroids
@@ -280,6 +288,8 @@ class AnnSpec extends SparkSpecBase {
       "BQ index must not persist trained state — there is none")
     val queries = emb.filter(emb("vec_id") < nQ)
     val probeDf = Ann.ivfBqKnnIndexed(queries, dir, emb)
+    // routed on the driver: no cached query frame
+    assert(cachedFrames(probeDf).isEmpty)
     val probe = probeDf.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // the exact float re-rank over the Hamming shortlist keeps
     // agreement with the float IVF search under the same centroids
@@ -319,6 +329,8 @@ class AnnSpec extends SparkSpecBase {
     Ann.writeAnnIndexPq(emb.filter(emb("vec_id") >= nQ), cents, dir)
     val queries = emb.filter(emb("vec_id") < nQ)
     val probeDf = Ann.ivfPqKnnIndexed(queries, dir)
+    // routed on the driver: no cached query frame
+    assert(cachedFrames(probeDf).isEmpty)
     val probe = probeDf.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // the ADC-only a08 distortion regime: agreement with the float IVF
     // search under the same centroids stays in the PQ class bound
@@ -947,6 +959,7 @@ class AnnSpec extends SparkSpecBase {
     // selective probing: every neighbor still carries the query's label
     val sel = Ann.ivfKnnIndexedFiltered(emb.filter(emb("vec_id") < 10), dir,
       attrs, k = 3, nprobe = 1)
+    assert(cachedFrames(sel).isEmpty, "routed on the driver: no cached query frame")
     val trueLabel = emb.collect().map(r => r.getLong(0) -> r.getInt(2)).toMap
     sel.collect().foreach { r =>
       assert(trueLabel(r.getLong(2)) == r.getInt(1),
@@ -971,9 +984,7 @@ class AnnSpec extends SparkSpecBase {
     Ann.writeAnnIndex(emb.filter(emb("vec_id") >= nQ), cents, dir)
     val probe = Ann.ivfKnnIndexed(emb.filter(emb("vec_id") < nQ), dir)
     // routed: no cached cell-assignment frame, the query side is local
-    assert(probe.queryExecution.withCachedData.collect {
-      case m: org.apache.spark.sql.execution.columnar.InMemoryRelation => m
-    }.isEmpty)
+    assert(cachedFrames(probe).isEmpty)
     val live = Ann.ivfKnn(emb, nQueries = nQ, centroids = Some(cents)).collect().toSeq
     assert(live.map(_.getLong(0)).distinct.size == nQ)
     assert(probe.collect().toSeq == live)
@@ -1034,6 +1045,35 @@ class AnnSpec extends SparkSpecBase {
       .map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
     (0L until nQ).foreach { qid =>
       assert(top(qid) == ((qid + 1000000L, 1.0)), s"query $qid: appended twin not retrieved")
+    }
+    graft.Caches.release()
+  }
+
+  test("ivfSq8KnnIndexed: a probe after re-seeding the path decodes with the new meta/ and centroids/") {
+    import org.apache.spark.sql.functions.expr
+    val first = clustered(200)
+    val nQ = 5
+    val queries = first.filter(first("vec_id") < nQ)
+    val dir = java.nio.file.Files.createTempDirectory("graft_sq8_reseed").toString
+    Ann.writeAnnIndexSq8(first.filter(first("vec_id") >= nQ), Ann.labelCentroids(first), dir,
+      dim = 8)
+    // the first probe reads centroids/, meta/ and codes/ through the memos
+    assert(Ann.ivfSq8KnnIndexed(queries, dir).collect().forall(_.getLong(1) < 1000000L))
+    // the second corpus spans [-2, 4) per dimension instead of [0, 1.5)
+    // and holds copies of the queries; decoded under the first ranges
+    // a copy would read as (copy + 2) / 4, far from its query
+    val second = first.filter(first("vec_id") >= nQ)
+      .select(first("vec_id"), expr("transform(embedding, x -> CAST(x * 4 - 2 AS FLOAT))").as("embedding"),
+        first("label"))
+      .unionByName(queries.select((queries("vec_id") + 1000000L).as("vec_id"),
+        queries("embedding"), queries("label")))
+    Ann.writeAnnIndexSq8(second, Ann.labelCentroids(second), dir, dim = 8)
+    val top = Ann.ivfSq8KnnIndexed(queries, dir).collect()
+      .filter(_.getInt(3) == 1).map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
+    for (qid <- 0L until nQ.toLong) {
+      val (nid, sim) = top(qid)
+      assert(nid == qid + 1000000L && sim >= 0.99,
+        s"query $qid: re-seeded copy not top-1 (got $nid at $sim)")
     }
     graft.Caches.release()
   }

@@ -3,7 +3,11 @@
 parquet dumps + oracle_sql.json, run each oracle in DuckDB against the
 same test tables, compare schema + sorted values exactly.
 
-Usage: python3 tools/local_verify.py [sfdir] [outdir]
+With a third argument, a parent Verify dump directory, every query
+dumped in both directories (the no-oracle ones too) is also compared
+with the parent's rows under the same exact rules; any drift is a FAIL.
+
+Usage: python3 tools/local_verify.py [sfdir] [outdir] [parentdir]
 (run `sbt "runMain graft.Verify <sfdir> <outdir>"` first)
 """
 import sys, json, glob, os
@@ -12,11 +16,53 @@ import pandas as pd
 
 sfdir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 outdir = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
+parentdir = sys.argv[3] if len(sys.argv) > 3 else None
 
 con = duckdb.connect()
 for t in ["region","nation","customer","supplier","part","orders",
           "lineitem","events","documents","embeddings"]:
     con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sfdir}/{t}.parquet')")
+
+
+def dump(d, name):
+    return con.sql(f"SELECT * FROM read_parquet('{d}/{name}/*.parquet')").df()
+
+
+def dumped(d):
+    return {os.path.basename(p.rstrip('/')) for p in glob.glob(f"{d}/*/")}
+
+
+def mismatch(got, want, labels=("spark", "duck")):
+    """The first difference between two frames under the gate's rules
+    (same columns, same dtype kinds, same sorted values exactly), or
+    None when they are equal."""
+    gl, wl = labels
+    gc, wc = sorted(got.columns), sorted(want.columns)
+    if gc != wc:
+        return f"columns {gl}={gc} {wl}={wc}"
+    # the driver's hash is dtype-sensitive: an uncast DuckDB HUGEINT /
+    # DECIMAL aggregate surfaces as float64 against Spark's int64 and
+    # fails the gate even when values are equal (r10 t21)
+    kinds = [f"{c}: {gl}={got[c].dtype} {wl}={want[c].dtype}"
+             for c in gc if got[c].dtype.kind != want[c].dtype.kind]
+    if kinds:
+        return f"dtype kind mismatch {kinds}"
+    s = got[gc].sort_values(gc).reset_index(drop=True)
+    d = want[wc].sort_values(wc).reset_index(drop=True)
+    if len(s) != len(d):
+        return f"rows {gl}={len(s)} {wl}={len(d)}"
+    # exact value compare (driver hashes values; emulate with exact match)
+    for c in gc:
+        a, b = s[c], d[c]
+        if a.dtype.kind == 'f' or b.dtype.kind == 'f':
+            neq = ~((a.isna() & b.isna()) | (a == b))
+        else:
+            neq = ~((a.isna() & b.isna()) | (a.astype(object) == b.astype(object)))
+        if neq.any():
+            i = neq.idxmax()
+            return f"col {c} row {i}: {gl}={a[i]!r} {wl}={b[i]!r}"
+    return None
+
 
 oracle = json.load(open(f"{outdir}/oracle_sql.json"))
 # Verify.scala's failure manifest: any query that threw is a hard FAIL
@@ -44,57 +90,31 @@ for name, sql in sorted(oracle.items()):
     if not os.path.isdir(pdir):
         print(f"FAIL {name}: no spark output dir"); fail += 1; continue
     try:
-        spark_df = con.sql(f"SELECT * FROM read_parquet('{pdir}/*.parquet')").df()
+        spark_df = dump(outdir, name)
         duck_df = con.sql(sql).df()
     except Exception as e:
         print(f"FAIL {name}: {e}"); fail += 1; continue
-    sc, dc = sorted(spark_df.columns), sorted(duck_df.columns)
-    if sc != dc:
-        print(f"FAIL {name}: columns spark={sc} duck={dc}"); fail += 1; continue
-    # the driver's hash is dtype-sensitive: an uncast DuckDB HUGEINT /
-    # DECIMAL aggregate surfaces as float64 against Spark's int64 and
-    # fails the gate even when values are equal (r10 t21). Catch both
-    # the declared-type leak and any dtype-kind divergence here.
+    # the declared-type leak, caught before the dtype-kind check
     rel = con.sql(sql)
     leaks = [f"{c}:{t}" for c, t in zip(rel.columns, map(str, rel.types))
              if "HUGEINT" in str(t).upper() or "DECIMAL" in str(t).upper()]
     if leaks:
         print(f"FAIL {name}: oracle emits HUGEINT/DECIMAL (cast to BIGINT/DOUBLE): {leaks}")
         fail += 1; continue
-    kind_mismatch = [f"{c}: spark={spark_df[c].dtype} duck={duck_df[c].dtype}"
-                     for c in sc if spark_df[c].dtype.kind != duck_df[c].dtype.kind]
-    if kind_mismatch:
-        print(f"FAIL {name}: dtype kind mismatch {kind_mismatch}"); fail += 1; continue
-    s = spark_df[sc].sort_values(sc).reset_index(drop=True)
-    d = duck_df[dc].sort_values(dc).reset_index(drop=True)
-    if len(s) != len(d):
-        print(f"FAIL {name}: rows spark={len(s)} duck={len(d)}"); fail += 1; continue
-    # exact value compare (driver hashes values; emulate with exact match)
     try:
-        mismatch = None
-        for c in sc:
-            a, b = s[c], d[c]
-            if a.dtype.kind == 'f' or b.dtype.kind == 'f':
-                neq = ~((a.isna() & b.isna()) | (a == b))
-            else:
-                neq = ~((a.isna() & b.isna()) | (a.astype(object) == b.astype(object)))
-            if neq.any():
-                i = neq.idxmax()
-                mismatch = f"col {c} row {i}: spark={a[i]!r} duck={b[i]!r}"
-                break
-        if mismatch:
-            print(f"FAIL {name}: {mismatch}"); fail += 1
-        else:
-            print(f"OK   {name} ({len(s)} rows)"); ok += 1
+        m = mismatch(spark_df, duck_df)
     except Exception as e:
-        print(f"FAIL {name}: compare error {e}"); fail += 1
+        m = f"compare error {e}"
+    if m:
+        print(f"FAIL {name}: {m}"); fail += 1
+    else:
+        print(f"OK   {name} ({len(spark_df)} rows)"); ok += 1
 
 # queries without oracle: rows-only
-for pdir in sorted(glob.glob(f"{outdir}/*/")):
-    name = os.path.basename(pdir.rstrip('/'))
+for name in sorted(dumped(outdir)):
     if name in oracle: continue
     try:
-        df = con.sql(f"SELECT * FROM read_parquet('{pdir}/*.parquet')").df()
+        df = dump(outdir, name)
         n = len(df)
         # the driver sorts rows-only outputs too — reproduce its crash
         # on unhashable (ndarray) cells so it can't ship again (r10 a14/t22)
@@ -103,11 +123,27 @@ for pdir in sorted(glob.glob(f"{outdir}/*/")):
     except Exception as e:
         print(f"ROWS {name}: read/sort error {e}"); fail += 1
 
+# parent compare: every query dumped in both directories, oracle or not
+if parentdir:
+    ours, theirs = dumped(outdir), dumped(parentdir)
+    same = 0
+    for name in sorted(ours & theirs):
+        try:
+            m = mismatch(dump(outdir, name), dump(parentdir, name), ("new", "parent"))
+        except Exception as e:
+            m = f"compare error {e}"
+        if m:
+            print(f"FAIL {name}: differs from parent: {m}"); fail += 1
+        else:
+            print(f"SAME {name}"); same += 1
+    print(f"parent: {same}/{len(ours & theirs)} dumps equal; "
+          f"only new: {sorted(ours - theirs)}; only parent: {sorted(theirs - ours)}")
+
 fail += len(errs)
 # enforce the manifest, don't just print it: a reused outdir with stale
 # dirs (or dumps missing without an errors.json entry) must fail the gate
 if man:
-    actual_dirs = len(glob.glob(f"{outdir}/*/"))
+    actual_dirs = len(dumped(outdir))
     if actual_dirs != man['dumped']:
         print(f"FAIL manifest: dumped={man['dumped']} but {actual_dirs} output dirs found")
         fail += 1
