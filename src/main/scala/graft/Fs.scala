@@ -22,10 +22,7 @@ object Fs {
   }
 
   /** True when `path` is a directory with at least one child directory
-    * whose name starts with `prefix` (e.g. a `batch_id=` partition) —
-    * the cheap layout sniff that tells a batch-append apart from a
-    * single-shot layout before partition discovery rejects the mix.
-    */
+    * whose name starts with `prefix` (e.g. a `batch_id=` partition). */
   def hasChildDir(spark: SparkSession, path: String, prefix: String): Boolean = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -112,7 +112,7 @@ object Ann {
                             nprobe: Int = 2): DataFrame = {
     val spark = queries.sparkSession
     GraftFunctions.register(spark)
-    val (routed, probed) = routeToCells(queries, indexPath, nprobe)
+    val (routed, probed, _) = routeToCells(queries, indexPath, nprobe)
     val q = routed.join(queries.select(col("vec_id").as("query_id"), col("label")), "query_id")
     val c = Sources.readParquet(spark, indexPath + "/vectors")
       .filter(col("c_label").isin(probed: _*))
@@ -1811,45 +1811,9 @@ object Ann {
     // written file) — overlap them (graft.Par)
     graft.Par.jobs(
       () => centroids.write.mode("overwrite").parquet(path + "/centroids"),
-      () => writeCells(assign(corpus, centroids)
+      () => Sources.writeBatch(assign(corpus, centroids)
         .select(col("vec_id"), col("embedding"), col("c_label")),
-        path + "/vectors", batchId, seeding = true))
-  }
-
-  /** Shared cell-directory writer for the saved ANN indexes. Two
-    * layouts, never mixed (partition discovery would reject the mix —
-    * the writeTextIndex lesson): single-shot `cells/c_label=...`
-    * (batchId = None; appends are plain parquet appends), or
-    * batch-rooted `cells/batch_id=.../c_label=...` (batchId = Some —
-    * the STREAMING ingest layout: every write is a dynamic partition
-    * overwrite of its own trigger's partitions, so a replayed trigger
-    * lands exactly once). Seeding a batch-rooted index uses
-    * batchId = Some(-1); the probes prune on c_label either way
-    * (second-level directories prune the same as first-level). */
-  private def writeCells(cells: DataFrame, dir: String, batchId: Option[Long],
-                         seeding: Boolean): Unit = {
-    val spark = cells.sparkSession
-    if (!seeding && graft.Fs.exists(spark, dir)) {
-      val batchRooted = graft.Fs.hasChildDir(spark, dir, "batch_id=")
-      if (batchId.isDefined && !batchRooted)
-        throw new IllegalArgumentException(
-          s"$dir was seeded without batchId (single-shot layout); seed " +
-            "with batchId = Some(...) to support batch appends")
-      if (batchId.isEmpty && batchRooted)
-        throw new IllegalArgumentException(
-          s"$dir is batch-rooted; append with batchId = Some(...)")
-    }
-    batchId match {
-      case None =>
-        cells.write.mode(if (seeding) "overwrite" else "append")
-          .partitionBy("c_label").parquet(dir)
-      case Some(id) =>
-        // seeding replaces the whole directory (static overwrite);
-        // appends overwrite only their own trigger's partitions
-        val w = cells.withColumn("batch_id", lit(id)).write.mode("overwrite")
-        (if (seeding) w else w.option("partitionOverwriteMode", "dynamic"))
-          .partitionBy("batch_id", "c_label").parquet(dir)
-    }
+        path + "/vectors", batchId, seeding = true, "c_label"))
   }
 
   /** Append a batch to a saved ANN index WITHOUT retraining (a12's
@@ -1866,9 +1830,9 @@ object Ann {
     val spark = batch.sparkSession
     GraftFunctions.register(spark)
     val cents = Sources.readParquet(spark, indexPath + "/centroids")
-    writeCells(assign(batch, cents)
+    Sources.writeBatch(assign(batch, cents)
       .select(col("vec_id"), col("embedding"), col("c_label")),
-      indexPath + "/vectors", batchId, seeding = false)
+      indexPath + "/vectors", batchId, seeding = false, "c_label")
   }
 
   /** Per-cell occupancy + needs_split over a SAVED index — a12's
@@ -1921,7 +1885,7 @@ object Ann {
                                            excludeSelf: Boolean): DataFrame = {
     val spark = queries.sparkSession
     GraftFunctions.register(spark)
-    val (q, probed) = routeToCells(queries, indexPath, nprobe)
+    val (q, probed, _) = routeToCells(queries, indexPath, nprobe)
     val c = Sources.readParquet(spark, indexPath + "/vectors")
       .filter(col("c_label").isin(probed: _*))
       .select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"),
@@ -1973,9 +1937,10 @@ object Ann {
     * `nprobe` cells in a bounded heap; a cell whose negated sim is
     * already above the heap's worst is dropped by one double compare.
     * Returns the (query_id, qe, c_label) relation as a local relation,
-    * and the probed labels. */
+    * the probed labels, and the (vec_id, embedding) rows it collected
+    * (a24 and a28 need the query vectors on the driver too). */
   private[graft] def routeToCells(queries: DataFrame, indexPath: String,
-                                  nprobe: Int): (DataFrame, Seq[Any]) = {
+                                  nprobe: Int): (DataFrame, Seq[Any], Array[Row]) = {
     require(nprobe >= 0, s"nprobe must be >= 0, got $nprobe")
     val spark = queries.sparkSession
     val batch = queries.select(col("vec_id"), col("embedding"))
@@ -2022,8 +1987,12 @@ object Ann {
     }
     val schema = StructType(Seq(batch.schema("vec_id").copy(name = "query_id"),
       batch.schema("embedding").copy(name = "qe"), cents.label))
-    (spark.createDataFrame(routed.asJava, schema), routed.map(_.get(2)).distinct)
+    (spark.createDataFrame(routed.asJava, schema), routed.map(_.get(2)).distinct, rows)
   }
+
+  /** Routed query rows as (vec_id, float vector), in vec_id order. */
+  private def queryVectors(rows: Array[Row]): Array[(Long, Array[Float])] =
+    rows.map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).sortBy(_._1)
 
   /** The one row a codes index saves in `meta/`: the SQ8 ranges
     * (lo, scale) or the PQ codebook (codebook, m, ksub, sub_dim). */
@@ -2054,9 +2023,9 @@ object Ann {
       () => centroids.write.mode("overwrite").parquet(path + "/centroids"),
       () => Seq((lo.toSeq, scale.toSeq)).toDF("lo", "scale")
         .write.mode("overwrite").parquet(path + "/meta"),
-      () => writeCells(assign(corpus, centroids)
+      () => Sources.writeBatch(assign(corpus, centroids)
         .select(col("vec_id"), expr(s"$encF(embedding)").as("codes"), col("c_label")),
-        path + "/codes", batchId, seeding = true))
+        path + "/codes", batchId, seeding = true, "c_label"))
     GraftFunctions.dropFunction(spark, encF)
   }
 
@@ -2075,9 +2044,9 @@ object Ann {
     val m = metaRow(spark, indexPath)
     val (encF, _) = GraftFunctions.registerSq8(spark,
       m.getSeq[Float](0).toArray, m.getSeq[Float](1).toArray)
-    writeCells(assign(batch, cents)
+    Sources.writeBatch(assign(batch, cents)
       .select(col("vec_id"), expr(s"$encF(embedding)").as("codes"), col("c_label")),
-      indexPath + "/codes", batchId, seeding = false)
+      indexPath + "/codes", batchId, seeding = false, "c_label")
     GraftFunctions.dropFunction(spark, encF)
   }
 
@@ -2096,7 +2065,7 @@ object Ann {
     val m = metaRow(spark, indexPath)
     val (_, simF) = GraftFunctions.registerSq8(spark,
       m.getSeq[Float](0).toArray, m.getSeq[Float](1).toArray)
-    val (q, probed) = routeToCells(queries, indexPath, nprobe)
+    val (q, probed, _) = routeToCells(queries, indexPath, nprobe)
     val c = Sources.readParquet(spark, indexPath + "/codes")
       .filter(col("c_label").isin(probed: _*))
       .select(col("vec_id").as("neighbor_id"), col("codes"), col("c_label"))
@@ -2116,7 +2085,7 @@ object Ann {
   /** sink_ann_index_bq — the SIGN-BIT saved index, the hottest tier
     * of the at-rest quantization matrix (floats a15 → SQ8 a19 → PQ
     * a24 → BQ here, 8 bytes/vector at dim 64): cells store (vec_id,
-    * ceil(dim/8)-byte sign codes) under the [[writeCells]]
+    * ceil(dim/8)-byte sign codes) under the [[Sources.writeBatch]]
     * layout/replay protocol. NO meta/ directory at all — the codec
     * is data-independent (bit i = sign of x_i), so there are no
     * trained ranges/codebooks to version, appends can never drift
@@ -2135,26 +2104,26 @@ object Ann {
     // independent relations — overlap the writes (graft.Par)
     graft.Par.jobs(
       () => centroids.write.mode("overwrite").parquet(path + "/centroids"),
-      () => writeCells(assign(corpus, centroids)
+      () => Sources.writeBatch(assign(corpus, centroids)
         .select(col("vec_id"), expr("graft_signbits(embedding)").as("codes"),
           col("c_label")),
-        path + "/codes", batchId, seeding = true))
+        path + "/codes", batchId, seeding = true, "c_label"))
   }
 
   /** Append a batch to a saved BQ index: assign under the SAVED
     * centroids; the encode needs nothing saved (data-independent
     * codec), so this is the only index family whose appends carry
     * zero drift risk by construction. Replay-idempotent with
-    * `batchId` (the writeCells contract). */
+    * `batchId` ([[Sources.writeBatch]]). */
   def appendAnnIndexBq(batch: DataFrame, indexPath: String,
                        batchId: Option[Long] = None): Unit = {
     val spark = batch.sparkSession
     GraftFunctions.register(spark)
     val cents = Sources.readParquet(spark, indexPath + "/centroids")
-    writeCells(assign(batch, cents)
+    Sources.writeBatch(assign(batch, cents)
       .select(col("vec_id"), expr("graft_signbits(embedding)").as("codes"),
         col("c_label")),
-      indexPath + "/codes", batchId, seeding = false)
+      indexPath + "/codes", batchId, seeding = false, "c_label")
   }
 
   /** a28_ivf_bq_indexed — search against the saved sign-bit index in
@@ -2178,9 +2147,7 @@ object Ann {
                       rerank: Int = 100): DataFrame = {
     val spark = queries.sparkSession
     GraftFunctions.register(spark)
-    val qRows = queries.select(col("vec_id"), col("embedding")).orderBy("vec_id")
-      .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-    val (routed, probed) = routeToCells(queries, indexPath, nprobe)
+    val (routed, probed, rows) = routeToCells(queries, indexPath, nprobe)
     val q = routed.select(col("query_id"), expr("graft_signbits(qe)").as("qcode"), col("c_label"))
     val c = Sources.readParquet(spark, indexPath + "/codes")
       .filter(col("c_label").isin(probed: _*))
@@ -2193,14 +2160,14 @@ object Ann {
       .withColumn("arn", row_number().over(wHam))
       .filter(col("arn") <= rerank)
       .select("query_id", "neighbor_id")
-    exactRerank(floatSource, shortlist, qRows, k)
+    exactRerank(floatSource, shortlist, queryVectors(rows), k)
   }
 
   /** sink_ann_index_pq — the M-CODES saved index, the cold tier below
     * SQ8 (m=8 code ids per vector vs 64 SQ8 bytes vs 256 float bytes;
     * with ksub ≤ 256 each code carries one byte of information, a 32×
     * residency cut vs floats): cells store (vec_id, codes array<int>)
-    * under the [[writeCells]] layout/replay protocol, and the
+    * under the [[Sources.writeBatch]] layout/replay protocol, and the
     * codebook — trained with a08's deterministic sample recipe —
     * persists in `meta/`, because the probe must decode with the
     * sink's EXACT codebook (the SQ8-ranges / containment-modulus
@@ -2232,16 +2199,17 @@ object Ann {
       () => Seq((codebook.toSeq, m, ksub, subDim))
         .toDF("codebook", "m", "ksub", "sub_dim")
         .write.mode("overwrite").parquet(path + "/meta"),
-      () => writeCells(assign(corpus, centroids)
+      () => Sources.writeBatch(assign(corpus, centroids)
         .select(col("vec_id"), expr(s"$fname(embedding)").as("codes"), col("c_label")),
-        path + "/codes", batchId, seeding = true))
+        path + "/codes", batchId, seeding = true, "c_label"))
     GraftFunctions.dropFunction(spark, fname)
   }
 
   /** Append a batch to a saved PQ index: assign under the SAVED
     * centroids, encode under the SAVED codebook (both read back from
-    * the index), land under the writeCells layout — replay-idempotent
-    * with `batchId`, the appendAnnIndexSq8 contract verbatim. */
+    * the index), land under the [[Sources.writeBatch]] layout —
+    * replay-idempotent with `batchId`, the appendAnnIndexSq8 contract
+    * verbatim. */
   def appendAnnIndexPq(batch: DataFrame, indexPath: String,
                        batchId: Option[Long] = None): Unit = {
     val spark = batch.sparkSession
@@ -2250,9 +2218,9 @@ object Ann {
     val meta = metaRow(spark, indexPath)
     val fname = GraftFunctions.registerPqEncode(spark,
       meta.getSeq[Float](0).toArray, meta.getInt(1), meta.getInt(2), meta.getInt(3))
-    writeCells(assign(batch, cents)
+    Sources.writeBatch(assign(batch, cents)
       .select(col("vec_id"), expr(s"$fname(embedding)").as("codes"), col("c_label")),
-      indexPath + "/codes", batchId, seeding = false)
+      indexPath + "/codes", batchId, seeding = false, "c_label")
     GraftFunctions.dropFunction(spark, fname)
   }
 
@@ -2274,13 +2242,11 @@ object Ann {
     val meta = metaRow(spark, indexPath)
     val codebook = meta.getSeq[Float](0).toArray
     val (m, ksub, subDim) = (meta.getInt(1), meta.getInt(2), meta.getInt(3))
-    val (routed, probed) = routeToCells(queries, indexPath, nprobe)
+    val (routed, probed, rows) = routeToCells(queries, indexPath, nprobe)
     val q = routed.select("query_id", "c_label")
-    val qv = queries.select(col("vec_id"), col("embedding")).orderBy("vec_id")
-      .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
     // ADC tables: |queries| x m x ksub rows — tiny, broadcast (the a08 build)
     val tables = for {
-      (qid, v) <- qv.toSeq
+      (qid, v) <- queryVectors(rows).toSeq
       sub <- 0 until m
       cid <- 0 until ksub
     } yield {

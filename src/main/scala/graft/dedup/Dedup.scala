@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Num.stableRound
+import graft.sources.Sources
 
 /** Deduplication operators for LLM-training-data pipelines (beyond the
   * reference's surface; SURVEY.md §2 "Deduplication").
@@ -210,29 +211,25 @@ object Dedup {
     * DF instead). */
   def writeDedupIndex(corpus: DataFrame, path: String,
                       numHashes: Int = 64, bands: Int = 16,
-                      batchId: Option[Long] = None): Unit = {
+                      batchId: Option[Long] = None): Unit =
+    landDedupIndex(corpus, path, numHashes, bands, batchId, seeding = true)
+
+  /** The shingle/signature derivation of [[writeDedupIndex]] and
+    * [[appendDedupIndex]], landed under the [[Sources.writeBatch]]
+    * protocol. A seed writes the two relations concurrently (graft.Par;
+    * the block-level cache lock keeps `sets` computed once). */
+  private def landDedupIndex(docs: DataFrame, path: String, numHashes: Int,
+                             bands: Int, batchId: Option[Long],
+                             seeding: Boolean): Unit = {
     val sets = graft.Caches.tracked(
-      withShingleHashes(corpus).select(col("doc_id"), col("sh")))
+      withShingleHashes(docs).select(col("doc_id"), col("sh")))
     val sig = sets.select(col("doc_id"), size(col("sh")).as("nsh"),
       posexplode(expr(s"graft_minhash_bands(sh, $numHashes, $bands)"))
         .as(Seq("bi", "bh")))
-    // the two relations are independent once `sets` is cached — write
-    // them concurrently (graft.Par, the overlap-independent-jobs
-    // pattern; the block-level cache lock keeps `sets` computed once)
-    batchId match {
-      case None =>
-        graft.Par.jobs(
-          () => sets.write.mode("overwrite").parquet(path + "/shingles"),
-          () => sig.write.mode("overwrite").partitionBy("bi").parquet(path + "/sig"))
-      case Some(id) =>
-        // batch_id-partitioned layout: the streaming/nightly loop's
-        // replay-safe shape (appendDedupIndex overwrites per batch)
-        graft.Par.jobs(
-          () => sets.withColumn("batch_id", lit(id))
-            .write.mode("overwrite").partitionBy("batch_id").parquet(path + "/shingles"),
-          () => sig.withColumn("batch_id", lit(id))
-            .write.mode("overwrite").partitionBy("batch_id", "bi").parquet(path + "/sig"))
-    }
+    val writes = Seq(
+      () => Sources.writeBatch(sets, path + "/shingles", batchId, seeding),
+      () => Sources.writeBatch(sig, path + "/sig", batchId, seeding, "bi"))
+    if (seeding) graft.Par.jobs(writes: _*) else writes.foreach(_())
   }
 
   /** d11 against the SAVED index: byte-identical output to
@@ -270,21 +267,14 @@ object Dedup {
                               indexPath: String, threshold: Double,
                               excludeBatchId: Option[Long] = None): DataFrame = {
     val spark = batchSets.sparkSession
-    // self-exclusion (batch_id-partitioned indexes only): a replayed
-    // batch must judge against the same snapshot as its first attempt,
-    // so its own prior partitions are pruned out (the s14 recipe)
-    def excl(df: DataFrame) = excludeBatchId match {
-      case None => df
-      case Some(id) => df.filter(col("batch_id") =!= id)
-    }
-    val idxSig = excl(graft.sources.Sources.readParquet(spark, indexPath + "/sig"))
+    val idxSig = Sources.readBatches(spark, indexPath + "/sig", excludeBatchId)
     val cand = batchSig.as("x")
       .join(idxSig.as("y").hint("shuffle_hash"),
         col("x.bi") === col("y.bi") && col("x.bh") === col("y.bh") &&
           sizeOkCols(threshold))
       .select(col("x.doc_id").as("new_doc"), col("y.doc_id").as("corpus_doc"))
       .distinct()
-    val idxSh = excl(graft.sources.Sources.readParquet(spark, indexPath + "/shingles"))
+    val idxSh = Sources.readBatches(spark, indexPath + "/shingles", excludeBatchId)
     cand
       .join(batchSets.select(col("doc_id").as("new_doc"), col("sh").as("sh_a")), "new_doc")
       .join(idxSh.select(col("doc_id").as("corpus_doc"), col("sh").as("sh_b")), "corpus_doc")
@@ -340,7 +330,7 @@ object Dedup {
     val spark = newDocs.sparkSession
     val (batchSets, batchSig) = batchPipeline(newDocs, numHashes, bands)
     val batchSigT = graft.Caches.tracked(batchSig)
-    val idxSig = graft.sources.Sources.readParquet(spark, indexPath + "/sig")
+    val idxSig = Sources.readParquet(spark, indexPath + "/sig")
     val cand = batchSigT.as("x")
       .join(idxSig.as("y").hint("shuffle_hash"),
         col("x.bi") === col("y.bi") && col("x.bh") === col("y.bh") &&
@@ -349,7 +339,7 @@ object Dedup {
       .distinct()
     val batchMsig = batchSets.select(col("doc_id").as("new_doc"),
       expr(s"graft_minhash_bands(sh, $numHashes, $numHashes)").as("sig_a"))
-    val idxMsig = graft.sources.Sources.readParquet(spark, indexPath + "/minsig")
+    val idxMsig = Sources.readParquet(spark, indexPath + "/minsig")
       .select(col("doc_id").as("corpus_doc"), col("msig").as("sig_b"))
     cand
       .join(batchMsig, "new_doc")
@@ -395,7 +385,7 @@ object Dedup {
     val spark = newDocs.sparkSession
     val (batchSets, batchSig) = batchPipeline(newDocs, numHashes, bands)
     val batchSigT = graft.Caches.tracked(batchSig)
-    val idxSig = graft.sources.Sources.readParquet(spark, indexPath + "/sig")
+    val idxSig = Sources.readParquet(spark, indexPath + "/sig")
     // NO sizeOk prefilter: size mismatch is exactly the containment
     // regime (the d18 rationale); the band equality itself encodes
     // the minJaccard candidate contract
@@ -407,7 +397,7 @@ object Dedup {
       .distinct()
     val batchMsig = batchSets.select(col("doc_id").as("new_doc"),
       expr(s"graft_minhash_bands(sh, $numHashes, $numHashes)").as("sig_a"))
-    val idxMsig = graft.sources.Sources.readParquet(spark, indexPath + "/minsig")
+    val idxMsig = Sources.readParquet(spark, indexPath + "/minsig")
       .select(col("doc_id").as("corpus_doc"), col("msig").as("sig_b"))
     val j = col("est_jaccard")
     cand
@@ -430,34 +420,14 @@ object Dedup {
   /** APPEND a batch (its admitted docs) to a saved dedup index — the
     * write that closes the incremental loop: tomorrow's admission
     * probes today's admissions without any rebuild. Same derivation
-    * as [[writeDedupIndex]], parquet append on both tables; band
-    * partitioning keeps appends directory-local. Idempotence is the
-    * caller's batch protocol (s14's batch_id overwrite pattern for
-    * streaming; a nightly job appends each batch once). */
+    * as [[writeDedupIndex]], appended to both tables; band
+    * partitioning keeps appends directory-local. With `batchId` the
+    * append is replay-idempotent ([[Sources.writeBatch]]); without
+    * one, a nightly job appends each batch once. */
   def appendDedupIndex(admitted: DataFrame, path: String,
                        numHashes: Int = 64, bands: Int = 16,
-                       batchId: Option[Long] = None): Unit = {
-    val sets = graft.Caches.tracked(
-      withShingleHashes(admitted).select(col("doc_id"), col("sh")))
-    val sig = sets.select(col("doc_id"), size(col("sh")).as("nsh"),
-      posexplode(expr(s"graft_minhash_bands(sh, $numHashes, $bands)"))
-        .as(Seq("bi", "bh")))
-    batchId match {
-      case None =>
-        sets.write.mode("append").parquet(path + "/shingles")
-        sig.write.mode("append").partitionBy("bi").parquet(path + "/sig")
-      case Some(id) =>
-        // replay-safe append on a batch_id-partitioned index: dynamic
-        // partition overwrite rewrites ONLY this batch's partitions,
-        // so a crashed-then-replayed batch lands exactly once
-        sets.withColumn("batch_id", lit(id))
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(path + "/shingles")
-        sig.withColumn("batch_id", lit(id))
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id", "bi").parquet(path + "/sig")
-    }
-  }
+                       batchId: Option[Long] = None): Unit =
+    landDedupIndex(admitted, path, numHashes, bands, batchId, seeding = false)
 
   /** d12's admission verdict against the SAVED index: corpus_dup via
     * [[indexCrossPairs]] (zero corpus text reads), batch_dup via the
@@ -1560,13 +1530,11 @@ object Dedup {
     // error on an existing meta must propagate (falling back to the
     // caller's default would scatter this batch across wrong buckets
     // with no error — the writeTextIndex lesson, applied here too)
-    val effBuckets = batchId match {
-      case Some(_) if graft.Fs.exists(corpus.sparkSession, path + "/meta") =>
-        containmentIndexBuckets(corpus.sparkSession, path).toInt
-      case _ => nBuckets // seeding call: no meta yet
-    }
     val spark = corpus.sparkSession
-    val isAppend = batchId.isDefined && graft.Fs.exists(spark, path + "/meta")
+    val seeding = batchId.isEmpty || !graft.Fs.exists(spark, path + "/meta")
+    val effBuckets =
+      if (seeding) nBuckets
+      else containmentIndexBuckets(spark, path).toInt
     // order/postings are co-versioned under the snapshot-pointer
     // protocol once a refreeze has run ([[graft.sources.Snapshots]]):
     // a SEED clears any previous life's generations (it rewrites the
@@ -1575,20 +1543,9 @@ object Dedup {
     // ranks live in the same order its readers resolve
     val rootP = new org.apache.hadoop.fs.Path(path)
     val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!isAppend) graft.sources.Snapshots.clear(fs, rootP)
+    if (seeding) graft.sources.Snapshots.clear(fs, rootP)
     val (_, Seq(orderPath, postingsPath)) =
       graft.sources.Snapshots.resolve(fs, rootP, Seq("order", "postings"))
-    // batch appends need a batch-seeded layout (postings/batch_id=...);
-    // mixing with a single-shot postings/bkt=... root is rejected by
-    // partition discovery at probe time — refuse loudly at write time
-    batchId.foreach { _ =>
-      if (graft.Fs.exists(spark, postingsPath.toString) &&
-          !graft.Fs.hasChildDir(spark, postingsPath.toString, "batch_id="))
-        throw new IllegalArgumentException(
-          s"writeContainmentIndex: $path was seeded without batchId " +
-            "(single-shot layout); seed with batchId = Some(...) to " +
-            "support appends")
-    }
     val sets = graft.Caches.tracked(withShingleHashes(corpus)
       .select(col("doc_id"), col("sh"), size(col("sh")).cast("long").as("nsh")))
     val bare = sets.select(col("doc_id"), col("nsh"), explode(col("sh")).as("sh_h"))
@@ -1598,7 +1555,7 @@ object Dedup {
     // order would break the one-consistent-order requirement of the
     // positional bound. Append-side reads prune to the batch's own
     // bucket set (only its shingles need odf).
-    val (odf, ordW) = if (isAppend) {
+    val (odf, ordW) = if (!seeding) {
       val bkts = bare.select("bkt").distinct().collect().map(_.getInt(0))
       (spark.read.parquet(orderPath.toString)
         .filter(col("bkt").isin(bkts.toSeq: _*)).select("sh_h", "odf"), None)
@@ -1623,25 +1580,16 @@ object Dedup {
     // every reader refuse a pre-frozen-order index loudly.
     // meta/, sets/ and postings/ are independent once the order is
     // settled (postings rank against the CACHED ord frame, not the
-    // written file) — overlap the writes (graft.Par)
-    val metaW = () => spark.range(1).select(lit(effBuckets).as("n_buckets"),
+    // written file) — overlap the writes (graft.Par). meta/ is written
+    // only when seeding: an append would rewrite the same modulus, and
+    // a probe reading meta/ during that rewrite would find it missing
+    val metaW = if (!seeding) None else Some(() => spark.range(1)
+      .select(lit(effBuckets).as("n_buckets"),
         lit(ContainmentLayoutVersion).as("layout_version"))
-      .write.mode("overwrite").parquet(path + "/meta"): Unit
-    batchId match {
-      case None =>
-        graft.Par.jobs(ordW.toSeq :+ metaW :+
-          (() => sets.write.mode("overwrite").parquet(path + "/sets"): Unit) :+
-          (() => post.write.mode("overwrite").partitionBy("bkt")
-            .parquet(postingsPath.toString): Unit): _*)
-      case Some(id) =>
-        graft.Par.jobs(ordW.toSeq :+ metaW :+
-          (() => sets.withColumn("batch_id", lit(id))
-            .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id").parquet(path + "/sets"): Unit) :+
-          (() => post.withColumn("batch_id", lit(id))
-            .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id", "bkt").parquet(postingsPath.toString): Unit): _*)
-    }
+      .write.mode("overwrite").parquet(path + "/meta"): Unit)
+    graft.Par.jobs(ordW.toSeq ++ metaW :+
+      (() => Sources.writeBatch(sets, path + "/sets", batchId, seeding)) :+
+      (() => Sources.writeBatch(post, postingsPath.toString, batchId, seeding, "bkt")): _*)
   }
 
   /** Maintenance verb for ORDER decay — optimizeIndex's sibling for
@@ -1824,10 +1772,6 @@ object Dedup {
       newDocs: DataFrame, indexPath: String, threshold: Double,
       excludeBatchId: Option[Long] = None): (DataFrame, DataFrame) = {
     val spark = newDocs.sparkSession
-    def excl(df: DataFrame) = excludeBatchId match {
-      case None => df
-      case Some(id) => df.filter(col("batch_id") =!= id)
-    }
     val bsets = graft.Caches.tracked(
       withShingleHashes(newDocs).select(col("doc_id"), col("sh")))
     // order and postings resolve from ONE snapshot-generation read
@@ -1846,7 +1790,7 @@ object Dedup {
     // (directory-value inference), so the probe's bucket literals are
     // Ints too — a cast on the partition column would defeat the
     // pruning this layout exists for.
-    val postingsRaw = excl(spark.read.parquet(postingsPath.toString))
+    val postingsRaw = Sources.readBatches(spark, postingsPath.toString, excludeBatchId)
     val nBuckets = containmentIndexBuckets(spark, indexPath)
     val be = graft.Caches.tracked(
       bsets.select(col("doc_id"), size(col("sh")).cast("long").as("nsh"),
@@ -1883,13 +1827,9 @@ object Dedup {
     require(threshold > 0 && threshold <= 1.0,
       s"containmentAgainstIndex: threshold must be in (0,1], got $threshold")
     val spark = newDocs.sparkSession
-    def excl(df: DataFrame) = excludeBatchId match {
-      case None => df
-      case Some(id) => df.filter(col("batch_id") =!= id)
-    }
     val (bsets, cand) =
       containmentProbeCandidates(newDocs, indexPath, threshold, excludeBatchId)
-    val sets = excl(graft.sources.Sources.readParquet(spark, indexPath + "/sets"))
+    val sets = Sources.readBatches(spark, indexPath + "/sets", excludeBatchId)
     cand
       .join(bsets.select(col("doc_id"), col("sh").as("sh_a")), "doc_id")
       .join(sets.select(col("doc_id").as("corpus_doc"), col("sh").as("sh_b")), "corpus_doc")

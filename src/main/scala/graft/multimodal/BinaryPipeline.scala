@@ -3,6 +3,7 @@ package graft.multimodal
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.sources.Sources
 
 /** Multimodal-column plumbing (SURVEY.md §2 "Multimodal"): media
   * payloads ride as opaque `binary` columns with typed metadata
@@ -511,30 +512,21 @@ object BinaryPipeline {
     val chunks = exploded.groupBy("chunk_hash").agg(min(col("chunk")).as("bytes"))
     // the two relations read the same checkpointed chunking pass and
     // are otherwise independent — overlap the writes (graft.Par)
-    batchId match {
-      case None =>
-        graft.Par.jobs(
-          () => recipes.write.mode("overwrite").parquet(path + "/recipes"),
-          () => chunks.write.mode("overwrite").parquet(path + "/chunks"))
-      case Some(id) => // batch-rooted seed: appendChunkStore's layout
-        graft.Par.jobs(
-          () => recipes.withColumn("batch_id", lit(id)).write.mode("overwrite")
-            .partitionBy("batch_id").parquet(path + "/recipes"),
-          () => chunks.withColumn("batch_id", lit(id)).write.mode("overwrite")
-            .partitionBy("batch_id").parquet(path + "/chunks"))
-    }
+    graft.Par.jobs(
+      () => Sources.writeBatch(recipes, path + "/recipes", batchId, seeding = true),
+      () => Sources.writeBatch(chunks, path + "/chunks", batchId, seeding = true))
   }
 
   /** Append a batch of payloads to an existing chunk store, the
     * streaming-ingest half of the store lifecycle (s37): recipes land
-    * as a dynamic overwrite of the batch's own `batch_id` partitions
-    * (the shared replay protocol — a re-fired trigger overwrites
-    * itself), and chunk bytes append ONLY for hashes the store
-    * doesn't already hold (one anti-join against the store's hash
-    * column — never its bytes), which makes the chunk side both
-    * batch-proportional AND replay-idempotent: a replayed batch's
-    * hashes already exist, so zero chunk rows re-land. The store must
-    * be batch-seeded (`writeChunkStore(..., batchId = Some(-1))`). */
+    * under the [[Sources.writeBatch]] replay protocol (a re-fired
+    * trigger overwrites itself), and chunk bytes append ONLY for
+    * hashes the store doesn't already hold (one anti-join against
+    * the store's hash column — never its bytes), which makes the
+    * chunk side both batch-proportional AND replay-idempotent: a
+    * replayed batch's hashes already exist, so zero chunk rows
+    * re-land. The store must be batch-seeded
+    * (`writeChunkStore(..., batchId = Some(-1))`). */
   def appendChunkStore(batch: DataFrame, path: String, batchId: Long,
                        minLen: Int = 32, maskBits: Int = 6): Unit = {
     val spark = batch.sparkSession
@@ -547,14 +539,11 @@ object BinaryPipeline {
     val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val (_, Seq(chunksPath, recipesPath)) =
       graft.sources.Snapshots.resolve(fs, rootP, Seq("chunks", "recipes"))
-    require(graft.Fs.hasChildDir(spark, recipesPath.toString, "batch_id="),
-      s"$path was seeded without batchId (single-shot layout); seed with " +
-        "batchId = Some(...) to support batch appends")
+    require(graft.Fs.exists(spark, recipesPath.toString),
+      s"$path holds no chunk store; seed it with writeChunkStore(batchId = Some(...))")
     val exploded = chunkExplode(batch, minLen, maskBits).localCheckpoint(true)
-    exploded.select(col("doc_id"), col("pos"), col("chunk_hash"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(recipesPath.toString)
+    Sources.writeBatch(exploded.select(col("doc_id"), col("pos"), col("chunk_hash")),
+      recipesPath.toString, Some(batchId), seeding = false)
     val existing = spark.read.parquet(chunksPath.toString).select("chunk_hash")
     exploded.groupBy("chunk_hash").agg(min(col("chunk")).as("bytes"))
       .join(existing, Seq("chunk_hash"), "left_anti")
@@ -596,7 +585,7 @@ object BinaryPipeline {
     // one generation read covers both relations: a vacuum publishing
     // mid-read can never hand this reader new chunks with old recipes
     val (chunksPath, recipesPath) = chunkStorePaths(spark, path)
-    val raw = graft.sources.Sources.readParquet(spark, recipesPath)
+    val raw = Sources.readParquet(spark, recipesPath)
     val recipes =
       if (raw.columns.contains("batch_id")) {
         val latest = raw.groupBy("doc_id")
@@ -604,7 +593,7 @@ object BinaryPipeline {
         raw.join(latest, Seq("doc_id", "batch_id")).drop("batch_id")
       } else raw
     recipes
-      .join(graft.sources.Sources.readParquet(spark, chunksPath).select("chunk_hash", "bytes"),
+      .join(Sources.readParquet(spark, chunksPath).select("chunk_hash", "bytes"),
         "chunk_hash")
       .groupBy("doc_id")
       .agg(expr("aggregate(array_sort(collect_list(struct(pos, bytes))), " +

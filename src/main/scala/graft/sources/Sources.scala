@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.StructType
 
 /** Source/sink surface (SURVEY.md §2): the reference reads MySQL/Hive
@@ -104,6 +104,69 @@ object Sources {
       case None => spark.read.parquet(path)
       case Some(schema) => spark.read.schema(schema).parquet(path)
     }
+
+  /** The one batch-partition protocol of the at-rest indexes and the
+    * streaming sinks. A relation under `dir` takes one of two layouts:
+    *
+    *  - single-shot (`batchId` = None): `dir/<partitionBy>=.../`. A seed
+    *    overwrites the directory; an append is a parquet append.
+    *  - batch-rooted (`batchId` = Some): `dir/batch_id=<id>/<partitionBy>=.../`,
+    *    the streaming ingest layout. A seed is a static overwrite of the
+    *    whole directory (seed with a sentinel id such as -1); an append
+    *    is a dynamic overwrite of its own `batch_id` partitions, so a
+    *    replayed trigger lands exactly once. Replay is safe, re-ingestion
+    *    is not: a row appended under two ids is held twice.
+    *
+    * Probes prune on the inner partition columns either way (a
+    * second-level directory prunes like a first-level one), and a
+    * replaying probe reads through [[readBatches]].
+    *
+    * The two layouts never mix: Spark's partition discovery rejects the
+    * mix at read time, long after the write that caused it. So an append
+    * whose layout differs from the one on disk is refused here, before
+    * anything is written. A directory holding no data (absent, or only
+    * `_SUCCESS`, which an empty first trigger leaves) takes either. */
+  private[graft] def writeBatch(df: DataFrame, dir: String, batchId: Option[Long],
+                                seeding: Boolean, partitionBy: String*): Unit = {
+    if (!seeding) {
+      val root = new Path(dir)
+      val fs = root.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+      val data =
+        if (!fs.exists(root)) Seq.empty
+        else fs.listStatus(root).toSeq.filterNot { s =>
+          val n = s.getPath.getName
+          n.startsWith("_") || n.startsWith(".")
+        }
+      val batchRooted =
+        data.exists(s => s.isDirectory && s.getPath.getName.startsWith("batch_id="))
+      if (batchId.isDefined && data.nonEmpty && !batchRooted)
+        throw new IllegalArgumentException(
+          s"$dir was seeded without batchId (single-shot layout); seed " +
+            "with batchId = Some(...) to support batch appends")
+      if (batchId.isEmpty && batchRooted)
+        throw new IllegalArgumentException(
+          s"$dir is batch-rooted; append with batchId = Some(...)")
+    }
+    batchId match {
+      case None =>
+        df.write.mode(if (seeding) "overwrite" else "append")
+          .partitionBy(partitionBy: _*).parquet(dir)
+      case Some(id) =>
+        val w = df.withColumn("batch_id", lit(id)).write.mode("overwrite")
+        (if (seeding) w else w.option("partitionOverwriteMode", "dynamic"))
+          .partitionBy("batch_id" +: partitionBy: _*).parquet(dir)
+    }
+  }
+
+  /** [[readParquet]] without the replaying batch's `batch_id`
+    * partitions when one is given: a replayed trigger must judge
+    * against the snapshot its first attempt saw, so its own earlier
+    * landings are left out. */
+  private[graft] def readBatches(spark: SparkSession, path: String,
+                                 excludeBatchId: Option[Long]): DataFrame = {
+    val df = readParquet(spark, path)
+    excludeBatchId.fold(df)(id => df.filter(col("batch_id") =!= id))
+  }
 
   private def listing(spark: SparkSession, path: String): Seq[(String, Long, Long)] = {
     val root = new Path(path)

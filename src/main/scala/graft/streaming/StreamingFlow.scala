@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.sources.Sources
 
 /** Structured Streaming surface (SURVEY.md §2 "Streaming"): the
   * real-time half of the reference (TrafficTeach's Spark Streaming
@@ -357,21 +358,17 @@ object StreamingFlow {
       // (this batch's prior admissions, if any landed) is excluded;
       // without this the replay sees its own docs in the corpus and
       // flips their verdicts to corpus_dup
-      val corpus = spark.read.parquet(corpusPath)
-        .filter(col("batch_id") =!= batchId)
+      val corpus = Sources.readBatches(spark, corpusPath, Some(batchId))
         .select("doc_id", "text")
       val verdicts = graft.Caches.scoped {
         graft.dedup.Dedup
           .ingestAdmit(docs, corpus, threshold, dfCap = dfCap)
           .localCheckpoint(true)
       }
-      verdicts.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(verdictPath)
-      docs.join(verdicts.filter(col("admitted")).select("doc_id"), "doc_id")
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(corpusPath)
+      Sources.writeBatch(verdicts, verdictPath, Some(batchId), seeding = false)
+      Sources.writeBatch(
+        docs.join(verdicts.filter(col("admitted")).select("doc_id"), "doc_id"),
+        corpusPath, Some(batchId), seeding = false)
     }
 
   /** s18_stream_ingest_admit_indexed — s14's admission loop on the
@@ -414,9 +411,7 @@ object StreamingFlow {
             excludeBatchId = Some(batchId))
           .localCheckpoint(true)
       }
-      verdicts.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(verdictPath)
+      Sources.writeBatch(verdicts, verdictPath, Some(batchId), seeding = false)
       val admitted = docs.join(
         verdicts.filter(col("admitted")).select("doc_id"), "doc_id")
       graft.Caches.scoped {
@@ -744,21 +739,17 @@ object StreamingFlow {
     (batch, batchId) => {
       val spark = batch.sparkSession
       val docs = batch.select("doc_id", "text").localCheckpoint(true)
-      val corpus = spark.read.parquet(corpusPath)
-        .filter(col("batch_id") =!= batchId) // s14's replay-safety rule
+      val corpus = Sources.readBatches(spark, corpusPath, Some(batchId)) // s14's replay rule
         .select("doc_id", "text")
       val verdicts = graft.Caches.scoped {
         containmentVerdictFrame(docs, graft.dedup.Dedup
           .containmentAgainst(docs, corpus, threshold, minShingles, dfCap))
           .localCheckpoint(true)
       }
-      verdicts.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(verdictPath)
-      docs.join(verdicts.filter(col("verdict") === "admitted").select("doc_id"), "doc_id")
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(corpusPath)
+      Sources.writeBatch(verdicts, verdictPath, Some(batchId), seeding = false)
+      Sources.writeBatch(
+        docs.join(verdicts.filter(col("verdict") === "admitted").select("doc_id"), "doc_id"),
+        corpusPath, Some(batchId), seeding = false)
     }
 
   /** s24_stream_containment_admit_indexed — s23's admission loop on
@@ -811,9 +802,7 @@ object StreamingFlow {
             excludeBatchId = Some(batchId)))
           .localCheckpoint(true)
       }
-      verdicts.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(verdictPath)
+      Sources.writeBatch(verdicts, verdictPath, Some(batchId), seeding = false)
       val admitted = docs.join(
         verdicts.filter(col("verdict") === "admitted").select("doc_id"), "doc_id")
       graft.Caches.scoped {
@@ -882,14 +871,21 @@ object StreamingFlow {
 
   private[graft] def ewmaBatch(statePath: String, resultPath: String,
                                horizon: Int): (DataFrame, Long) => Unit =
+    dailyStateBatch(statePath, resultPath, "event_type")(
+      graft.operators.TrackAnalytics.ewmaFromDaily(_, horizon))
+
+  /** The s32/s38/s39 trigger step: land the batch's event counts per
+    * (`keys`, day) as its own `batch_id` partitions of `statePath`,
+    * re-sum the whole state to the daily grain, and land `derive` of it
+    * under the same batch id in `resultPath` (scoped caches: the
+    * derivation's frames are released once the result is written). */
+  private def dailyStateBatch(statePath: String, resultPath: String, keys: String*)(
+      derive: DataFrame => DataFrame): (DataFrame, Long) => Unit =
     (batch, batchId) => {
-      import graft.operators.TrackAnalytics
       val spark = batch.sparkSession
-      batch.groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(count(lit(1)).as("n_events"))
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(statePath)
+      val grain = keys.map(col) :+ to_date(col("ts")).as("day")
+      Sources.writeBatch(batch.groupBy(grain: _*).agg(count(lit(1)).as("n_events")),
+        statePath, Some(batchId), seeding = false)
       // An EMPTY first trigger lands a state dir holding only _SUCCESS
       // (zero batch_id partitions) — reading it fails schema inference
       // and the checkpointed replay crash-loops. Skip the derivation
@@ -897,11 +893,10 @@ object StreamingFlow {
       // idempotently (same guard, same no-op).
       if (graft.Fs.hasChildDir(spark, statePath, "batch_id=")) {
         val daily = spark.read.parquet(statePath)
-          .groupBy("event_type", "day").agg(sum("n_events").as("n_events"))
-        TrackAnalytics.ewmaFromDaily(daily, horizon)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(resultPath)
+          .groupBy((keys :+ "day").map(col): _*).agg(sum("n_events").as("n_events"))
+        graft.Caches.scoped {
+          Sources.writeBatch(derive(daily), resultPath, Some(batchId), seeding = false)
+        }
       }
     }
 
@@ -927,23 +922,7 @@ object StreamingFlow {
 
   private[graft] def holtBatch(statePath: String, resultPath: String
                               ): (DataFrame, Long) => Unit =
-    (batch, batchId) => {
-      val spark = batch.sparkSession
-      batch.groupBy(to_date(col("ts")).as("day"))
-        .agg(count(lit(1)).as("n_events"))
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(statePath)
-      // empty-first-trigger guard — see ewmaBatch
-      if (graft.Fs.hasChildDir(spark, statePath, "batch_id=")) {
-        val daily = spark.read.parquet(statePath)
-          .groupBy("day").agg(sum("n_events").as("n_events"))
-        graft.operators.TrackAnalytics.holtFromDaily(daily)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(resultPath)
-      }
-    }
+    dailyStateBatch(statePath, resultPath)(graft.operators.TrackAnalytics.holtFromDaily)
 
   /** s39_stream_cusum — q78's streaming twin on the s32/s38 state
     * recipe: replay-exact day-grain counts per trigger, the CUSUM
@@ -963,25 +942,8 @@ object StreamingFlow {
 
   private[graft] def cusumBatch(statePath: String, resultPath: String,
                                 hSigma: Double): (DataFrame, Long) => Unit =
-    (batch, batchId) => {
-      val spark = batch.sparkSession
-      batch.groupBy(to_date(col("ts")).as("day"))
-        .agg(count(lit(1)).as("n_events"))
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(statePath)
-      // empty-first-trigger guard — see ewmaBatch
-      if (graft.Fs.hasChildDir(spark, statePath, "batch_id=")) {
-        val daily = spark.read.parquet(statePath)
-          .groupBy("day").agg(sum("n_events").as("n_events"))
-        graft.Caches.scoped {
-          graft.operators.TrackAnalytics.cusumFromDaily(daily, hSigma)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id").parquet(resultPath)
-        }
-      }
-    }
+    dailyStateBatch(statePath, resultPath)(
+      graft.operators.TrackAnalytics.cusumFromDaily(_, hSigma))
 
   def streamAudienceOverlap(eventStream: DataFrame, statePath: String,
                             resultPath: String, checkpoint: String,
@@ -1016,10 +978,8 @@ object StreamingFlow {
         .groupBy("event_type").agg(kmv(col("h")).as("sk"))
         .localCheckpoint(true)
       merged.write.mode("overwrite").parquet(statePath)
-      TrackAnalytics.kmvPairs(merged, k)
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(resultPath)
+      Sources.writeBatch(TrackAnalytics.kmvPairs(merged, k),
+        resultPath, Some(batchId), seeding = false)
     }
 
   /** s27_stream_percolate — live reverse search (the percolator /
@@ -1049,9 +1009,7 @@ object StreamingFlow {
         graft.text.TextStats.percolate(docs, queries, minFrac)
           .localCheckpoint(true)
       }
-      matches.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(resultPath)
+      Sources.writeBatch(matches, resultPath, Some(batchId), seeding = false)
     }
 
   /** s26_stream_text_index_ingest — the CORPUS side of the live
@@ -1163,11 +1121,9 @@ object StreamingFlow {
             s"annIndexIngestBatch: unknown codec '$other' (float|sq8|bq)")
         }
       }
-      graft.ann.Ann.annIndexGrowthStats(spark, indexPath, balanceFactor,
-          cellsDir = if (codec == "float") "vectors" else "codes")
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(statsPath)
+      Sources.writeBatch(graft.ann.Ann.annIndexGrowthStats(spark, indexPath, balanceFactor,
+          cellsDir = if (codec == "float") "vectors" else "codes"),
+        statsPath, Some(batchId), seeding = false)
     }
 
   private[graft] def bm25IndexedBatch(indexPath: String, resultPath: String,
@@ -1178,9 +1134,7 @@ object StreamingFlow {
         graft.text.TextStats.bm25SearchIndexed(queries, indexPath, topK)
           .localCheckpoint(true)
       }
-      pages.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(resultPath)
+      Sources.writeBatch(pages, resultPath, Some(batchId), seeding = false)
     }
 
   /** s40_stream_ann_serve — live vector search over the saved ANN
@@ -1217,9 +1171,7 @@ object StreamingFlow {
         graft.ann.Ann.ivfKnnIndexed(queries, indexPath, k, nprobe)
           .localCheckpoint(true)
       }
-      pages.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(resultPath)
+      Sources.writeBatch(pages, resultPath, Some(batchId), seeding = false)
     }
 
   /** s41_stream_hybrid_serve — the a21 hybrid composition, live: each
@@ -1257,9 +1209,7 @@ object StreamingFlow {
           textIndexPath, annIndexPath, kRun, kRrf, topK, nprobe)
           .localCheckpoint(true)
       }
-      pages.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(resultPath)
+      Sources.writeBatch(pages, resultPath, Some(batchId), seeding = false)
     }
 
   case class TransEv(userId: Long, tsMs: Long, eventId: Long, eventType: String)

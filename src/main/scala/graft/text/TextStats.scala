@@ -958,15 +958,14 @@ object TextStats {
     * document frequency, same pruning), `doclens/` (doc_id, dl) and
     * `stats/` (n_docs, sum_dl), plus `meta/` (the bucket modulus — a
     * probe must hash with the sink's exact modulus). Appends
-    * (batchId) land as dynamic partitions; per-batch partial dfs and
-    * stats fold with one sum at probe time, so append order can never
-    * change a score. CONTRACT: appended doc batches must be DISJOINT
-    * in doc_id — a re-ingested doc would double-count its df/dl and
-    * fan out the doclens join (the admission loops s26/s14 guarantee
-    * this by construction; replays overwrite their own batch_id
-    * partition, which is why replay is safe but re-ingestion is not).
-    * Appends require a batch-seeded index (seed with batchId =
-    * Some(...)); appending onto a single-shot layout is refused. */
+    * (batchId) land under the [[Sources.writeBatch]] protocol;
+    * per-batch partial dfs and stats fold with one sum at probe
+    * time, so append order can never change a score. CONTRACT:
+    * appended doc batches must be DISJOINT in doc_id — a re-ingested
+    * doc would double-count its df/dl and fan out the doclens join
+    * (the admission loops s26/s14 guarantee this by construction).
+    * Without batchId every call seeds; with one, only a path without
+    * `meta/` seeds. */
   def writeTextIndex(corpus: DataFrame, path: String, nBuckets: Int = 64,
                      batchId: Option[Long] = None): Unit = {
     val spark = corpus.sparkSession
@@ -979,18 +978,6 @@ object TextStats {
     val effBuckets =
       if (seeding) nBuckets
       else bucketsOf(spark, path).toInt
-    // batch appends are only well-formed onto a batch-seeded layout
-    // (postings/batch_id=.../bkt=...); appending under a single-shot
-    // postings/bkt=... root would mix partition schemes, which Spark's
-    // partition discovery rejects at probe time — refuse loudly here
-    batchId.foreach { _ =>
-      if (graft.Fs.exists(spark, path + "/postings") &&
-          !graft.Fs.hasChildDir(spark, path + "/postings", "batch_id="))
-        throw new IllegalArgumentException(
-          s"writeTextIndex: $path was seeded without batchId (single-shot " +
-            "layout); batch appends need a batch-seeded index — seed with " +
-            "writeTextIndex(batchId = Some(...)) to support appends")
-    }
     val tf = graft.Caches.tracked(
       termsOf(corpus).groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
         .withColumn("bkt",
@@ -1009,25 +996,13 @@ object TextStats {
       else Seq(() => corpus.sparkSession.range(1)
         .select(lit(effBuckets).as("n_buckets"))
         .write.mode("overwrite").parquet(path + "/meta"))
-    batchId match {
-      case None =>
-        graft.Par.jobs(metaW ++ Seq(
-          () => tf.select("bkt", "term", "doc_id", "tf")
-            .write.mode("overwrite").partitionBy("bkt").parquet(path + "/postings"),
-          () => dfs.write.mode("overwrite").partitionBy("bkt").parquet(path + "/dfs"),
-          () => dls.write.mode("overwrite").parquet(path + "/doclens"),
-          () => stats.write.mode("overwrite").parquet(path + "/stats")): _*)
-      case Some(id) =>
-        def app(df: DataFrame, sub: String, parts: String*): Unit =
-          df.withColumn("batch_id", lit(id))
-            .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id" +: parts: _*).parquet(path + "/" + sub)
-        graft.Par.jobs(metaW ++ Seq(
-          () => app(tf.select("bkt", "term", "doc_id", "tf"), "postings", "bkt"),
-          () => app(dfs, "dfs", "bkt"),
-          () => app(dls, "doclens"),
-          () => app(stats, "stats")): _*)
-    }
+    def land(df: DataFrame, sub: String, parts: String*): () => Unit =
+      () => Sources.writeBatch(df, path + "/" + sub, batchId, seeding, parts: _*)
+    graft.Par.jobs(metaW ++ Seq(
+      land(tf.select("bkt", "term", "doc_id", "tf"), "postings", "bkt"),
+      land(dfs, "dfs", "bkt"),
+      land(dls, "doclens"),
+      land(stats, "stats")): _*)
   }
 
   /** t29_bm25_probe_indexed — t28 against the SAVED index:

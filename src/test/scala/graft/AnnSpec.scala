@@ -1020,7 +1020,7 @@ class AnnSpec extends SparkSpecBase {
     for (nprobe <- 0 to 7) {
       val expected = Ann.assignN(queries, saved, nprobe)
         .select("vec_id", "c_label").collect().map(r => (r.getLong(0), r.getInt(1)))
-      val (routed, probed) = Ann.routeToCells(queries, dir, nprobe)
+      val (routed, probed, _) = Ann.routeToCells(queries, dir, nprobe)
       val got = routed.select("query_id", "c_label").collect()
         .map(r => (r.getLong(0), r.getInt(1)))
       assert(got.sorted.toSeq == expected.sorted.toSeq, s"nprobe=$nprobe")
@@ -1075,6 +1075,23 @@ class AnnSpec extends SparkSpecBase {
       assert(nid == qid + 1000000L && sim >= 0.99,
         s"query $qid: re-seeded copy not top-1 (got $nid at $sim)")
     }
+    graft.Caches.release()
+  }
+
+  test("a24 and a28 collect their query batch once: routing hands back the rows") {
+    val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
+    val cents = Ann.labelCentroids(emb)
+    val queries = emb.filter(emb("vec_id") < 10)
+    val pq = java.nio.file.Files.createTempDirectory("graft_pq_jobs").toString
+    val bq = java.nio.file.Files.createTempDirectory("graft_bq_jobs").toString
+    Ann.writeAnnIndexPq(emb.filter(emb("vec_id") >= 10), cents, pq)
+    Ann.writeAnnIndexBq(emb.filter(emb("vec_id") >= 10), cents, bq)
+    // the first calls memoize the centroid rows and the codes' schemas
+    Ann.ivfPqKnnIndexed(queries, pq)
+    Ann.ivfBqKnnIndexed(queries, bq, emb)
+    // a28: the batch collect; a24: the meta/ row and the batch collect
+    assert(jobsRunBy(Ann.ivfBqKnnIndexed(queries, bq, emb)) == 1)
+    assert(jobsRunBy(Ann.ivfPqKnnIndexed(queries, pq)) == 2)
     graft.Caches.release()
   }
 }

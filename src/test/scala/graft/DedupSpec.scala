@@ -1019,4 +1019,25 @@ class DedupSpec extends SparkSpecBase {
     assert(out(9L) == ((false, false, false, true, "semantic")), s"got ${out(9L)}")
     graft.Caches.release()
   }
+
+  test("writeContainmentIndex: a batch append leaves meta/ files and mtimes untouched") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_cont_meta").toString
+    val big = "the quick brown fox jumps over alpha beta gamma delta epsilon zeta"
+    Dedup.writeContainmentIndex(docs(
+      10L -> "a seed document with its own vocabulary words inside",
+      11L -> "another seed document carrying different words around"), dir, batchId = Some(-1L))
+    graft.Caches.release()
+    val seeded = filesUnder(s"$dir/meta")
+    assert(seeded.nonEmpty)
+    Thread.sleep(1100) // past a coarse mtime granularity: a rewrite would show
+    Dedup.writeContainmentIndex(docs(12L -> big), dir, batchId = Some(0L))
+    graft.Caches.release()
+    assert(filesUnder(s"$dir/meta") == seeded, "a batch append must not rewrite meta/")
+    // the probe after the append reads the seed's modulus and finds the batch
+    val out = Dedup.containmentAgainstIndex(
+      docs(0L -> "the quick brown fox jumps over alpha beta gamma delta"), dir)
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(out.toSeq == Seq((0L, 12L)), s"got ${out.toSeq}")
+    graft.Caches.release()
+  }
 }

@@ -1541,24 +1541,73 @@ class StreamingSpec extends SparkSpecBase {
     } finally q.stop()
   }
 
-  test("ANN index layout guard: batch append onto a single-shot layout is refused") {
+  test("batch layout guard over every index family: refusals write nothing") {
     import graft.ann.Ann
-    val dir = java.nio.file.Files.createTempDirectory("graft_s30g").toString
-    val cents = Seq((0, Array(1.0f, 0f, 0f, 0f))).toDF("c_label", "centroid")
-    val seed = Seq((0L, Array(1.0f, 0f, 0f, 0f))).toDF("vec_id", "embedding")
-    Ann.writeAnnIndex(seed, cents, s"$dir/idx") // single-shot layout
-    val e = intercept[IllegalArgumentException] {
-      Ann.appendAnnIndex(Seq((1L, Array(1.0f, 0f, 0f, 0f)))
-        .toDF("vec_id", "embedding"), s"$dir/idx", batchId = Some(0L))
+    import graft.dedup.Dedup
+    import graft.multimodal.BinaryPipeline
+    import graft.text.TextStats
+    val cents = Seq((0, Array(1.0f, 0f, 0f, 0f)), (1, Array(0f, 1.0f, 0f, 0f)))
+      .toDF("c_label", "centroid")
+    val vecs = Seq((0L, Array(1.0f, 0.1f, 0f, 0f)), (1L, Array(0.1f, 1.0f, 0f, 0f)),
+      (2L, Array(0.9f, 0f, 0.2f, 0f)), (3L, Array(0f, 0.8f, 0f, 0.3f))).toDF("vec_id", "embedding")
+    val moreVecs = Seq((10L, Array(1.0f, 0f, 0f, 0.1f))).toDF("vec_id", "embedding")
+    val texts = Seq((1L, "the quick brown fox jumps over the lazy dog once more"),
+      (2L, "a stream of words arrives at the index on every trigger")).toDF("doc_id", "text")
+    val moreTexts = Seq((3L, "fresh documents land under their own batch partition today"))
+      .toDF("doc_id", "text")
+    // one batch-capable family: its seed and append (by batch id), whether
+    // it has a plain append (elsewhere a batchId-less call is a seed), and
+    // the relation whose layout is checked with its inner partition column
+    case class Family(name: String, seed: (String, Option[Long]) => Unit,
+                      append: (String, Option[Long]) => Unit, plainAppend: Boolean,
+                      relation: String, inner: Option[String])
+    val families = Seq(
+      Family("ann float", (p, b) => Ann.writeAnnIndex(vecs, cents, p, batchId = b),
+        (p, b) => Ann.appendAnnIndex(moreVecs, p, batchId = b), true, "vectors", Some("c_label")),
+      Family("ann sq8", (p, b) => Ann.writeAnnIndexSq8(vecs, cents, p, dim = 4, batchId = b),
+        (p, b) => Ann.appendAnnIndexSq8(moreVecs, p, batchId = b), true, "codes", Some("c_label")),
+      Family("ann bq", (p, b) => Ann.writeAnnIndexBq(vecs, cents, p, batchId = b),
+        (p, b) => Ann.appendAnnIndexBq(moreVecs, p, batchId = b), true, "codes", Some("c_label")),
+      Family("ann pq",
+        (p, b) => Ann.writeAnnIndexPq(vecs, cents, p, m = 2, ksub = 2, dim = 4, batchId = b),
+        (p, b) => Ann.appendAnnIndexPq(moreVecs, p, batchId = b), true, "codes", Some("c_label")),
+      Family("text", (p, b) => TextStats.writeTextIndex(texts, p, batchId = b),
+        (p, b) => TextStats.writeTextIndex(moreTexts, p, batchId = b), false, "postings", Some("bkt")),
+      Family("dedup", (p, b) => Dedup.writeDedupIndex(texts, p, batchId = b),
+        (p, b) => Dedup.appendDedupIndex(moreTexts, p, batchId = b), true, "sig", Some("bi")),
+      Family("containment", (p, b) => Dedup.writeContainmentIndex(texts, p, batchId = b),
+        (p, b) => Dedup.writeContainmentIndex(moreTexts, p, batchId = b), false, "postings",
+        Some("bkt")),
+      Family("chunk store", (p, b) => BinaryPipeline.writeChunkStore(texts, p, batchId = b),
+        (p, b) => BinaryPipeline.appendChunkStore(moreTexts, p, b.get), false, "recipes", None))
+    def visible(d: java.io.File) =
+      d.listFiles().toSeq.filterNot(f => f.getName.startsWith("_") || f.getName.startsWith("."))
+    families.foreach { f =>
+      val root = java.nio.file.Files.createTempDirectory("graft_layout").toString
+      def refused(path: String, batchId: Option[Long], message: String): Unit = {
+        val before = filesUnder(path)
+        val e = intercept[IllegalArgumentException](f.append(path, batchId))
+        assert(e.getMessage.contains(message), s"${f.name}: ${e.getMessage}")
+        assert(filesUnder(path) == before, s"${f.name}: a refused append wrote files")
+        graft.Caches.release()
+      }
+      f.seed(s"$root/single", None)
+      refused(s"$root/single", Some(0L), "single-shot layout")
+      f.seed(s"$root/batched", Some(-1L))
+      if (f.plainAppend) refused(s"$root/batched", None, "batch-rooted")
+      f.append(s"$root/batched", Some(0L))
+      graft.Caches.release()
+      val batches = visible(new java.io.File(s"$root/batched/${f.relation}"))
+      assert(batches.map(_.getName).sorted == Seq("batch_id=-1", "batch_id=0"),
+        s"${f.name}: ${batches.map(_.getName)}")
+      batches.foreach { b =>
+        val kids = visible(b)
+        assert(kids.nonEmpty && kids.forall(k => f.inner match {
+          case Some(c) => k.isDirectory && k.getName.startsWith(s"$c=")
+          case None => k.isFile && k.getName.endsWith(".parquet")
+        }), s"${f.name}: ${b.getName} holds ${kids.map(_.getName)}")
+      }
     }
-    assert(e.getMessage.contains("single-shot layout"))
-    // and the reverse: a plain append onto a batch-rooted layout
-    Ann.writeAnnIndex(seed, cents, s"$dir/idx2", batchId = Some(-1L))
-    val e2 = intercept[IllegalArgumentException] {
-      Ann.appendAnnIndex(Seq((1L, Array(1.0f, 0f, 0f, 0f)))
-        .toDF("vec_id", "embedding"), s"$dir/idx2")
-    }
-    assert(e2.getMessage.contains("batch-rooted"))
   }
 
   test("s33 streaming DQ gate: verdicts equal batch rowGate on the same rows; stateless replay-safe") {

@@ -2,20 +2,15 @@ package graft
 
 import java.nio.file.Files
 import java.time.{Instant, LocalDateTime, ZoneOffset}
-import java.util.concurrent.ConcurrentLinkedQueue
 
-import scala.jdk.CollectionConverters._
 import scala.util.Try
 
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.parquet.schema.MessageTypeParser
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types.{LongType, TimestampType}
-import org.scalatest.concurrent.Eventually._
-import org.scalatest.time.SpanSugar._
 
 /** Loader-contract pins for the driver-generated tables — above all the
   * events `ts` column, which has shipped in three parquet vintages
@@ -32,30 +27,6 @@ import org.scalatest.time.SpanSugar._
   * parquet conf flip or a missing path never yields a stale answer. */
 class TablesSpec extends SparkSpecBase {
   import spark.implicits._
-
-  /** Spark jobs started by `body`: counted by job group, after a marker
-    * job in a second group has reached the listener (the bus delivers
-    * in order, so every earlier job start has arrived by then). */
-  private def jobsRunBy(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"tables-spec-${java.util.UUID.randomUUID()}"
-    val marker = s"$group-marker"
-    val seen = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .foreach(seen.add)
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "TablesSpec")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(marker, "TablesSpec marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      eventually(timeout(30.seconds)) { assert(seen.contains(marker)) }
-      seen.asScala.count(_ == group)
-    } finally sc.removeSparkListener(listener)
-  }
 
   private def tableDir(rows: Seq[(Long, Long)]): String = {
     val root = Files.createTempDirectory("graft_memo").toString
