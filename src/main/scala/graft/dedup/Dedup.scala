@@ -1,6 +1,6 @@
 package graft.dedup
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Num.stableRound
@@ -56,19 +56,123 @@ object Dedup {
     * broadcast-anti-joins away; the DF count itself is one extra
     * partial-agg pass over (sh_h, count). Jaccard is then defined over
     * the capped shingle universe — d02 and d03 stay exactly equal
-    * under the same cap. */
-  private[graft] def cappedShingleSets(documents: DataFrame,
-                                       dfCap: Option[Long]): DataFrame = {
-    val sets = withShingleHashes(documents).select(col("doc_id"), col("sh"))
+    * under the same cap. `carried` columns (d11/d12's side tag) ride
+    * along as extra keys: (doc_id, carried…, sh). */
+  private[graft] def cappedShingleSets(documents: DataFrame, dfCap: Option[Long],
+                                       carried: String*): DataFrame = {
+    val keys = col("doc_id") +: carried.map(col)
+    val sets = withShingleHashes(documents).select(keys :+ col("sh"): _*)
     dfCap match {
       case None => sets
       case Some(p) =>
-        val e = sets.select(col("doc_id"), explode(col("sh")).as("sh_h"))
+        val e = sets.select(keys :+ explode(col("sh")).as("sh_h"): _*)
         val hot = e.groupBy("sh_h").agg(count(lit(1)).as("df"))
           .filter(col("df") > p).select("sh_h")
         e.join(broadcast(hot), Seq("sh_h"), "left_anti")
-          .groupBy("doc_id").agg(collect_list(col("sh_h")).as("sh"))
+          .groupBy(keys: _*).agg(collect_list(col("sh_h")).as("sh"))
     }
+  }
+
+  // ------------------------------------------------------------------
+  // The near-dup candidate-and-verify core: d02/d03/d07/d10, live
+  // d11/d12, at-rest d14/d15 and the signature index.
+  // ------------------------------------------------------------------
+
+  /** The exact-safe Jaccard size prefilter over two set sizes:
+    * J(a,b) ≥ t implies min(na,nb)/max(na,nb) ≥ t, so a pair failing
+    * either side cannot qualify. The +0.5 margin makes the fp
+    * comparison safe on integer sizes — it never prunes a qualifying
+    * pair. */
+  private[graft] def sizeOk(na: Column, nb: Column, threshold: Double): Column =
+    na * threshold <= nb + 0.5 && nb * threshold <= na + 0.5
+
+  /** All permutation minima folded into `bands` chained band hashes,
+    * one compiled loop per doc over its `sh` column (bands = numHashes
+    * keeps the raw components). */
+  private def minHashes(numHashes: Int, bands: Int): Column =
+    expr(s"graft_minhash_bands(sh, $numHashes, $bands)")
+
+  /** Band signatures of a (doc_id, carried…, sh) relation:
+    * (doc_id, carried…, nsh, bi, bh), one row per band. No explode of
+    * shingles, no shuffle, no per-agg-column Janino compile (the
+    * earlier 64-min-agg-column formulation paid ~2 s of codegen and
+    * shuffled every shingle row into agg buffers). */
+  private def bandSigs(sets: DataFrame, numHashes: Int, bands: Int,
+                       carried: String*): DataFrame =
+    sets.select((col("doc_id") +: carried.map(col)) ++ Seq(size(col("sh")).as("nsh"),
+      posexplode(minHashes(numHashes, bands)).as(Seq("bi", "bh"))): _*)
+
+  /** Band-bucket candidate pairs: the shuffle-hash join of two band
+    * signature relations on (bi, bh), deduplicated. The self-pair form
+    * (`y` = None) pairs `x` with itself once per unordered pair and
+    * emits (doc_a, doc_b) with doc_a < doc_b; the cross form emits
+    * (new_doc, corpus_doc) and never pairs a side with itself.
+    * `sizeOkAt` applies [[sizeOk]] inside the join, ahead of the
+    * verify; `withSizes` carries both set sizes out as (na, nb). */
+  private def bandPairs(x: DataFrame, y: Option[DataFrame], sizeOkAt: Option[Double],
+                        withSizes: Boolean = false): DataFrame = {
+    val (l, r) = if (y.isEmpty) ("doc_a", "doc_b") else ("new_doc", "corpus_doc")
+    val on = Seq(Some(col("x.bi") === col("y.bi") && col("x.bh") === col("y.bh")),
+      Option.when(y.isEmpty)(col("x.doc_id") < col("y.doc_id")),
+      sizeOkAt.map(sizeOk(col("x.nsh"), col("y.nsh"), _))).flatten.reduce(_ && _)
+    val out =
+      if (withSizes) Seq(col("x.doc_id").as(l), col("x.nsh").as("na"),
+        col("y.doc_id").as(r), col("y.nsh").as("nb"))
+      else Seq(col("x.doc_id").as(l), col("y.doc_id").as(r))
+    x.as("x").join(y.getOrElse(x).as("y").hint("shuffle_hash"), on)
+      .select(out: _*).distinct()
+  }
+
+  /** Exact-Jaccard verify of (leftCol, rightCol) candidates: the left
+    * id reads its set from `left`, the right id from `right` (both
+    * (doc_id, sh)), and pairs at J ≥ threshold come out as
+    * (leftCol, rightCol, jaccard). */
+  private def verifyPairs(cand: DataFrame, left: DataFrame, right: DataFrame,
+                          threshold: Double, leftCol: String, rightCol: String): DataFrame =
+    cand
+      .join(left.select(col("doc_id").as(leftCol), col("sh").as("sh_a")), leftCol)
+      .join(right.select(col("doc_id").as(rightCol), col("sh").as("sh_b")), rightCol)
+      .withColumn("shared", size(array_intersect(col("sh_a"), col("sh_b"))))
+      .withColumn("jaccard",
+        col("shared") / (size(col("sh_a")) + size(col("sh_b")) - col("shared")))
+      .filter(col("jaccard") >= threshold)
+      .select(col(leftCol), col(rightCol), stableRound(col("jaccard"), 4).as("jaccard"))
+
+  /** Verified (doc_a < doc_b) pairs within one side: band candidates
+    * from `sig`, sets from `sets`. */
+  private def verifiedSelfPairs(sets: DataFrame, sig: DataFrame,
+                                threshold: Double): DataFrame =
+    verifyPairs(bandPairs(sig, None, Some(threshold)), sets, sets, threshold,
+      "doc_a", "doc_b")
+
+  /** Verified (new_doc, corpus_doc) pairs across two sides: each id is
+    * verified against its OWN side's set, so a doc_id present on both
+    * sides is one pair, not four. */
+  private def verifiedCrossPairs(newSets: DataFrame, newSig: DataFrame,
+                                 corpusSets: DataFrame, corpusSig: DataFrame,
+                                 threshold: Double): DataFrame =
+    verifyPairs(bandPairs(newSig, Some(corpusSig), Some(threshold)), newSets, corpusSets,
+      threshold, "new_doc", "corpus_doc")
+
+  /** One verdict per batch doc, d12's precedence: `corpus_dup` (in a
+    * (new_doc, corpus_doc) pair), then `batch_dup` (the later id of a
+    * (doc_a < doc_b) batch pair — first occurrence kept), else
+    * `admitted`. */
+  private def admissionVerdict(newDocs: DataFrame, corpusPairs: DataFrame,
+                               batchPairs: DataFrame): DataFrame = {
+    val corpusDup = corpusPairs.select(col("new_doc").as("doc_id")).distinct()
+      .withColumn("cd", lit(true))
+    val batchDup = batchPairs.select(col("doc_b").as("doc_id")).distinct()
+      .withColumn("bd", lit(true))
+    newDocs.select("doc_id")
+      .join(corpusDup, Seq("doc_id"), "left")
+      .join(batchDup, Seq("doc_id"), "left")
+      .withColumn("reason",
+        when(col("cd"), "corpus_dup")
+          .when(col("bd"), "batch_dup")
+          .otherwise("admitted"))
+      .select(col("doc_id"), (col("reason") === "admitted").as("admitted"), col("reason"))
+      .orderBy("doc_id")
   }
 
   /** d02_ngram_jaccard — exact all-pairs near-dup detection: explode
@@ -79,12 +183,6 @@ object Dedup {
                    dfCap: Option[Long] = None): DataFrame = {
     val e = cappedShingleSets(documents, dfCap)
       .select(col("doc_id"), size(col("sh")).as("nsh"), explode(col("sh")).as("sh_h"))
-    // exact-safe size prefilter: j >= t implies min(na,nb)/max(na,nb)
-    // >= t, so prune mismatched-size pairs INSIDE the join, before the
-    // pair-count shuffle (+0.5 margin makes the fp comparison safe on
-    // integer sizes — never prunes a qualifying pair)
-    val sizeOk = col("a.nsh") * threshold <= col("b.nsh") + 0.5 &&
-      col("b.nsh") * threshold <= col("a.nsh") + 0.5
     // shuffle_hash hint: the post-explode estimate is the pre-explode
     // scan bytes, so the planner broadcasts millions of exploded
     // shingle rows — a single-threaded driver-side hash build that
@@ -93,7 +191,10 @@ object Dedup {
     // planner lands on the same shuffle join by itself)
     val pairs = e.as("a")
       .join(e.as("b").hint("shuffle_hash"),
-        col("a.sh_h") === col("b.sh_h") && col("a.doc_id") < col("b.doc_id") && sizeOk)
+        // sizeOk INSIDE the join: mismatched sizes drop before the
+        // pair-count shuffle
+        col("a.sh_h") === col("b.sh_h") && col("a.doc_id") < col("b.doc_id") &&
+          sizeOk(col("a.nsh"), col("b.nsh"), threshold))
       .groupBy(
         col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
         col("a.nsh").as("na"), col("b.nsh").as("nb"))
@@ -137,34 +238,9 @@ object Dedup {
     // pass is structurally shared, not left to plan canonicalization.
     val shingled = preShingled.getOrElse(
       graft.Caches.tracked(cappedShingleSets(documents, dfCap)))
-    // signature build: one narrow graft_minhash_bands call per doc —
-    // all permutation minima and band hashes in a single compiled
-    // loop. No explode, no shuffle, no per-agg-column Janino compile
-    // (the previous 64-min-agg-column formulation paid ~2 s of codegen
-    // compile and shuffled every shingle row into agg buffers).
-    val sig = shingled
-      .select(col("doc_id"), size(col("sh")).as("nsh"),
-        posexplode(expr(s"graft_minhash_bands(sh, $numHashes, $bands)"))
-          .as(Seq("bi", "bh")))
-    // same exact-safe size prefilter as d02: prunes the (numerous)
-    // low-jaccard band collisions before the array_intersect verify
-    val sizeOk = col("x.nsh") * threshold <= col("y.nsh") + 0.5 &&
-      col("y.nsh") * threshold <= col("x.nsh") + 0.5
-    val cand = sig.as("x")
-      .join(sig.as("y").hint("shuffle_hash"),
-        col("x.bi") === col("y.bi") && col("x.bh") === col("y.bh") &&
-          col("x.doc_id") < col("y.doc_id") && sizeOk)
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-      .distinct()
-    val sets = shingled.select(col("doc_id"), col("sh"))
-    cand
-      .join(sets.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), "doc_a")
-      .join(sets.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), "doc_b")
-      .withColumn("shared", size(array_intersect(col("sh_a"), col("sh_b"))))
-      .withColumn("jaccard",
-        col("shared") / (size(col("sh_a")) + size(col("sh_b")) - col("shared")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("doc_a"), col("doc_b"), stableRound(col("jaccard"), 4).as("jaccard"))
+    // sizeOk prunes the (numerous) low-jaccard band collisions before
+    // the array_intersect verify
+    verifiedSelfPairs(shingled, bandSigs(shingled, numHashes, bands), threshold)
   }
 
   /** d11_dedup_against — INCREMENTAL near-dup: verified pairs between
@@ -221,11 +297,8 @@ object Dedup {
   private def landDedupIndex(docs: DataFrame, path: String, numHashes: Int,
                              bands: Int, batchId: Option[Long],
                              seeding: Boolean): Unit = {
-    val sets = graft.Caches.tracked(
-      withShingleHashes(docs).select(col("doc_id"), col("sh")))
-    val sig = sets.select(col("doc_id"), size(col("sh")).as("nsh"),
-      posexplode(expr(s"graft_minhash_bands(sh, $numHashes, $bands)"))
-        .as(Seq("bi", "bh")))
+    val sets = graft.Caches.tracked(cappedShingleSets(docs, None))
+    val sig = bandSigs(sets, numHashes, bands)
     val writes = Seq(
       () => Sources.writeBatch(sets, path + "/shingles", batchId, seeding),
       () => Sources.writeBatch(sig, path + "/sig", batchId, seeding, "bi"))
@@ -242,22 +315,11 @@ object Dedup {
   def dedupAgainstIndex(newDocs: DataFrame, indexPath: String,
                         threshold: Double = 0.8, numHashes: Int = 64,
                         bands: Int = 16): DataFrame = {
-    val (batchSets, batchSig) = batchPipeline(newDocs, numHashes, bands)
-    indexCrossPairs(batchSets, batchSig, indexPath, threshold)
+    // the fresh batch half: tracked shingle sets + band signatures,
+    // the |batch|-proportional cost every index consumer pays
+    val batchSets = graft.Caches.tracked(cappedShingleSets(newDocs, None))
+    indexCrossPairs(batchSets, bandSigs(batchSets, numHashes, bands), indexPath, threshold)
       .orderBy("new_doc", "corpus_doc")
-  }
-
-  /** The fresh batch half of the index probe: tracked shingle sets +
-    * band signatures, the |batch|-proportional cost every index
-    * consumer pays. */
-  private def batchPipeline(newDocs: DataFrame, numHashes: Int,
-                            bands: Int): (DataFrame, DataFrame) = {
-    val batchSets = graft.Caches.tracked(
-      withShingleHashes(newDocs).select(col("doc_id"), col("sh")))
-    val batchSig = batchSets.select(col("doc_id"), size(col("sh")).as("nsh"),
-      posexplode(expr(s"graft_minhash_bands(sh, ${numHashes}, ${bands})"))
-        .as(Seq("bi", "bh")))
-    (batchSets, batchSig)
   }
 
   /** Verified batch×index pairs (unsorted): band candidates against
@@ -267,23 +329,9 @@ object Dedup {
                               indexPath: String, threshold: Double,
                               excludeBatchId: Option[Long] = None): DataFrame = {
     val spark = batchSets.sparkSession
-    val idxSig = Sources.readBatches(spark, indexPath + "/sig", excludeBatchId)
-    val cand = batchSig.as("x")
-      .join(idxSig.as("y").hint("shuffle_hash"),
-        col("x.bi") === col("y.bi") && col("x.bh") === col("y.bh") &&
-          sizeOkCols(threshold))
-      .select(col("x.doc_id").as("new_doc"), col("y.doc_id").as("corpus_doc"))
-      .distinct()
-    val idxSh = Sources.readBatches(spark, indexPath + "/shingles", excludeBatchId)
-    cand
-      .join(batchSets.select(col("doc_id").as("new_doc"), col("sh").as("sh_a")), "new_doc")
-      .join(idxSh.select(col("doc_id").as("corpus_doc"), col("sh").as("sh_b")), "corpus_doc")
-      .withColumn("shared", size(array_intersect(col("sh_a"), col("sh_b"))))
-      .withColumn("jaccard",
-        col("shared") / (size(col("sh_a")) + size(col("sh_b")) - col("shared")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("new_doc"), col("corpus_doc"),
-        stableRound(col("jaccard"), 4).as("jaccard"))
+    verifiedCrossPairs(batchSets, batchSig,
+      Sources.readBatches(spark, indexPath + "/shingles", excludeBatchId),
+      Sources.readBatches(spark, indexPath + "/sig", excludeBatchId), threshold)
   }
 
   /** SIGNATURE-ONLY dedup index — the storage trade the full index
@@ -308,8 +356,7 @@ object Dedup {
     // minima, so they are not derivable from the stored components.)
     val signed = graft.Caches.tracked(
       withShingleHashes(corpus).select(col("doc_id"), size(col("sh")).as("nsh"),
-        expr(s"graft_minhash_bands(sh, $numHashes, $numHashes)").as("msig"),
-        expr(s"graft_minhash_bands(sh, $numHashes, $bands)").as("bsig")))
+        minHashes(numHashes, numHashes).as("msig"), minHashes(numHashes, bands).as("bsig")))
     // independent relations off the one cached build — overlap the
     // writes (graft.Par)
     graft.Par.jobs(
@@ -327,18 +374,27 @@ object Dedup {
   def dedupAgainstSignatureIndex(newDocs: DataFrame, indexPath: String,
                                  threshold: Double = 0.8, numHashes: Int = 64,
                                  bands: Int = 16): DataFrame = {
+    estimatedPairs(newDocs, indexPath, numHashes, bands, Some(threshold))
+      .filter(col("est_jaccard") >= threshold)
+      .select(col("new_doc"), col("corpus_doc"),
+        stableRound(col("est_jaccard"), 4).as("est_jaccard"))
+      .orderBy("new_doc", "corpus_doc")
+  }
+
+  /** Signature-index candidates (new_doc, corpus_doc[, na, nb]) scored
+    * by MinHash component agreement as `est_jaccard`: the batch is
+    * shingled and signed fresh, the corpus side reads `sig/` and
+    * `minsig/`. */
+  private def estimatedPairs(newDocs: DataFrame, indexPath: String, numHashes: Int,
+                             bands: Int, sizeOkAt: Option[Double],
+                             withSizes: Boolean = false): DataFrame = {
     val spark = newDocs.sparkSession
-    val (batchSets, batchSig) = batchPipeline(newDocs, numHashes, bands)
-    val batchSigT = graft.Caches.tracked(batchSig)
-    val idxSig = Sources.readParquet(spark, indexPath + "/sig")
-    val cand = batchSigT.as("x")
-      .join(idxSig.as("y").hint("shuffle_hash"),
-        col("x.bi") === col("y.bi") && col("x.bh") === col("y.bh") &&
-          sizeOkCols(threshold))
-      .select(col("x.doc_id").as("new_doc"), col("y.doc_id").as("corpus_doc"))
-      .distinct()
+    val batchSets = graft.Caches.tracked(cappedShingleSets(newDocs, None))
+    val batchSig = graft.Caches.tracked(bandSigs(batchSets, numHashes, bands))
+    val cand = bandPairs(batchSig, Some(Sources.readParquet(spark, indexPath + "/sig")),
+      sizeOkAt, withSizes)
     val batchMsig = batchSets.select(col("doc_id").as("new_doc"),
-      expr(s"graft_minhash_bands(sh, $numHashes, $numHashes)").as("sig_a"))
+      minHashes(numHashes, numHashes).as("sig_a"))
     val idxMsig = Sources.readParquet(spark, indexPath + "/minsig")
       .select(col("doc_id").as("corpus_doc"), col("msig").as("sig_b"))
     cand
@@ -347,10 +403,6 @@ object Dedup {
       .withColumn("est_jaccard",
         expr(s"aggregate(zip_with(sig_a, sig_b, (a, b) -> IF(a = b, 1, 0)), 0, (acc, v) -> acc + v)")
           .cast("double") / numHashes)
-      .filter(col("est_jaccard") >= threshold)
-      .select(col("new_doc"), col("corpus_doc"),
-        stableRound(col("est_jaccard"), 4).as("est_jaccard"))
-      .orderBy("new_doc", "corpus_doc")
   }
 
   /** d23_containment_sig_estimate — containment EVIDENCE from the
@@ -382,30 +434,11 @@ object Dedup {
                                        bands: Int = 16): DataFrame = {
     require(threshold > 0 && threshold <= 1.0,
       s"containmentAgainstSignatureIndex: threshold in (0,1], got $threshold")
-    val spark = newDocs.sparkSession
-    val (batchSets, batchSig) = batchPipeline(newDocs, numHashes, bands)
-    val batchSigT = graft.Caches.tracked(batchSig)
-    val idxSig = Sources.readParquet(spark, indexPath + "/sig")
     // NO sizeOk prefilter: size mismatch is exactly the containment
     // regime (the d18 rationale); the band equality itself encodes
     // the minJaccard candidate contract
-    val cand = batchSigT.as("x")
-      .join(idxSig.as("y").hint("shuffle_hash"),
-        col("x.bi") === col("y.bi") && col("x.bh") === col("y.bh"))
-      .select(col("x.doc_id").as("new_doc"), col("x.nsh").as("na"),
-        col("y.doc_id").as("corpus_doc"), col("y.nsh").as("nb"))
-      .distinct()
-    val batchMsig = batchSets.select(col("doc_id").as("new_doc"),
-      expr(s"graft_minhash_bands(sh, $numHashes, $numHashes)").as("sig_a"))
-    val idxMsig = Sources.readParquet(spark, indexPath + "/minsig")
-      .select(col("doc_id").as("corpus_doc"), col("msig").as("sig_b"))
     val j = col("est_jaccard")
-    cand
-      .join(batchMsig, "new_doc")
-      .join(idxMsig, "corpus_doc")
-      .withColumn("est_jaccard",
-        expr(s"aggregate(zip_with(sig_a, sig_b, (a, b) -> IF(a = b, 1, 0)), 0, (acc, v) -> acc + v)")
-          .cast("double") / numHashes)
+    estimatedPairs(newDocs, indexPath, numHashes, bands, None, withSizes = true)
       .withColumn("est_containment",
         least(lit(1.0), j * (col("na") + col("nb")).cast("double")
           / ((lit(1.0) + j) * col("na").cast("double"))))
@@ -440,30 +473,11 @@ object Dedup {
                          threshold: Double = 0.8, numHashes: Int = 64,
                          bands: Int = 16,
                          excludeBatchId: Option[Long] = None): DataFrame = {
-    val (batchSets, batchSig0) = batchPipeline(newDocs, numHashes, bands)
-    val batchSig = graft.Caches.tracked(batchSig0)
-    val corpusDup = indexCrossPairs(batchSets, batchSig, indexPath, threshold,
-        excludeBatchId)
-      .select(col("new_doc").as("doc_id")).distinct()
-      .withColumn("cd", lit(true))
-    val candBB = batchSig.as("x")
-      .join(batchSig.as("y").hint("shuffle_hash"),
-        col("x.bi") === col("y.bi") && col("x.bh") === col("y.bh") &&
-          col("x.doc_id") < col("y.doc_id") && sizeOkCols(threshold))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-      .distinct()
-    val batchDup = verifyPairs(batchSets, candBB, threshold, "doc_a", "doc_b")
-      .select(col("doc_b").as("doc_id")).distinct()
-      .withColumn("bd", lit(true))
-    newDocs.select("doc_id")
-      .join(corpusDup, Seq("doc_id"), "left")
-      .join(batchDup, Seq("doc_id"), "left")
-      .withColumn("reason",
-        when(col("cd"), "corpus_dup")
-          .when(col("bd"), "batch_dup")
-          .otherwise("admitted"))
-      .select(col("doc_id"), (col("reason") === "admitted").as("admitted"), col("reason"))
-      .orderBy("doc_id")
+    val batchSets = graft.Caches.tracked(cappedShingleSets(newDocs, None))
+    val batchSig = graft.Caches.tracked(bandSigs(batchSets, numHashes, bands))
+    admissionVerdict(newDocs,
+      indexCrossPairs(batchSets, batchSig, indexPath, threshold, excludeBatchId),
+      verifiedSelfPairs(batchSets, batchSig, threshold))
   }
 
   /** The shared batch∪corpus derivation behind d11 and d12: side-
@@ -476,68 +490,15 @@ object Dedup {
                              dfCap: Option[Long]): (DataFrame, DataFrame) = {
     val union = newDocs.select("doc_id", "text").withColumn("is_new", lit(true))
       .unionByName(corpus.select("doc_id", "text").withColumn("is_new", lit(false)))
-    val sets = withShingleHashes(union).select(col("doc_id"), col("is_new"), col("sh"))
-    val shingled = graft.Caches.tracked(dfCap match {
-      case None => sets
-      case Some(p) =>
-        // the cappedShingleSets logic with the tag carried through
-        val e = sets.select(col("doc_id"), col("is_new"), explode(col("sh")).as("sh_h"))
-        val hot = e.groupBy("sh_h").agg(count(lit(1)).as("df"))
-          .filter(col("df") > p).select("sh_h")
-        e.join(broadcast(hot), Seq("sh_h"), "left_anti")
-          .groupBy("doc_id", "is_new").agg(collect_list(col("sh_h")).as("sh"))
-    })
-    val sig = shingled
-      .select(col("doc_id"), col("is_new"), size(col("sh")).as("nsh"),
-        posexplode(expr(s"graft_minhash_bands(sh, $numHashes, $bands)"))
-          .as(Seq("bi", "bh")))
-    (shingled, sig)
+    val shingled = graft.Caches.tracked(cappedShingleSets(union, dfCap, "is_new"))
+    (shingled, bandSigs(shingled, numHashes, bands, "is_new"))
   }
-
-  /** The d02/d03 exact-safe size prefilter over two `sig` aliases. */
-  private def sizeOkCols(threshold: Double) =
-    col("x.nsh") * threshold <= col("y.nsh") + 0.5 &&
-      col("y.nsh") * threshold <= col("x.nsh") + 0.5
-
-  /** Exact-verified band join of two candidate relations against the
-    * shared tagged shingle sets. `cand` must carry (doc_a', doc_b')
-    * named by `leftCol`/`rightCol`. */
-  private def verifyPairs(shingled: DataFrame, cand: DataFrame, threshold: Double,
-                          leftCol: String, rightCol: String): DataFrame =
-    cand
-      .join(shingled.select(col("doc_id").as(leftCol), col("sh").as("sh_a")), leftCol)
-      .join(shingled.select(col("doc_id").as(rightCol), col("sh").as("sh_b")), rightCol)
-      .withColumn("shared", size(array_intersect(col("sh_a"), col("sh_b"))))
-      .withColumn("jaccard",
-        col("shared") / (size(col("sh_a")) + size(col("sh_b")) - col("shared")))
-      .filter(col("jaccard") >= threshold)
-      .select(col(leftCol), col(rightCol), stableRound(col("jaccard"), 4).as("jaccard"))
 
   /** Verified batch×corpus pairs (the d11 asymmetric leg), unsorted. */
   private def crossSidePairs(shingled: DataFrame, sig: DataFrame,
-                             threshold: Double): DataFrame = {
-    val cand = sig.filter(col("is_new")).as("x")
-      .join(sig.filter(!col("is_new")).as("y").hint("shuffle_hash"),
-        col("x.bi") === col("y.bi") && col("x.bh") === col("y.bh") && sizeOkCols(threshold))
-      .select(col("x.doc_id").as("new_doc"), col("y.doc_id").as("corpus_doc"))
-      .distinct()
-    verifyPairs(shingled, cand, threshold, "new_doc", "corpus_doc")
-  }
-
-  /** Verified batch×batch pairs (doc_a < doc_b) over the SAME tagged
-    * relations — the admission's second leg without a second shingle
-    * pass. */
-  private def newSidePairs(shingled: DataFrame, sig: DataFrame,
-                           threshold: Double): DataFrame = {
-    val sigNew = sig.filter(col("is_new"))
-    val cand = sigNew.as("x")
-      .join(sigNew.as("y").hint("shuffle_hash"),
-        col("x.bi") === col("y.bi") && col("x.bh") === col("y.bh") &&
-          col("x.doc_id") < col("y.doc_id") && sizeOkCols(threshold))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-      .distinct()
-    verifyPairs(shingled.filter(col("is_new")), cand, threshold, "doc_a", "doc_b")
-  }
+                             threshold: Double): DataFrame =
+    verifiedCrossPairs(shingled.filter(col("is_new")), sig.filter(col("is_new")),
+      shingled.filter(!col("is_new")), sig.filter(!col("is_new")), threshold)
 
   /** d12_ingest_admit — the ADMISSION step that closes d11's
     * incremental loop (report → decide, the d07→d08 pattern for
@@ -562,22 +523,10 @@ object Dedup {
                   numHashes: Int = 64, bands: Int = 16,
                   dfCap: Option[Long] = None): DataFrame = {
     val (shingled, sig) = taggedPipeline(newDocs, corpus, numHashes, bands, dfCap)
-    val corpusDup = crossSidePairs(shingled, sig, threshold)
-      .select(col("new_doc").as("doc_id")).distinct()
-      .withColumn("cd", lit(true))
-    // doc_a < doc_b in the pair output: the later id is the duplicate
-    val batchDup = newSidePairs(shingled, sig, threshold)
-      .select(col("doc_b").as("doc_id")).distinct()
-      .withColumn("bd", lit(true))
-    newDocs.select("doc_id")
-      .join(corpusDup, Seq("doc_id"), "left")
-      .join(batchDup, Seq("doc_id"), "left")
-      .withColumn("reason",
-        when(col("cd"), "corpus_dup")
-          .when(col("bd"), "batch_dup")
-          .otherwise("admitted"))
-      .select(col("doc_id"), (col("reason") === "admitted").as("admitted"), col("reason"))
-      .orderBy("doc_id")
+    // the batch×batch leg reads the SAME tagged relations — no second
+    // shingle pass
+    admissionVerdict(newDocs, crossSidePairs(shingled, sig, threshold),
+      verifiedSelfPairs(shingled.filter(col("is_new")), sig.filter(col("is_new")), threshold))
   }
 
   /** d07_dedup_clusters — the dedup DECISION step: connected
@@ -1300,44 +1249,94 @@ object Dedup {
       .orderBy("doc_id", "in_doc")
   }
 
+  // ------------------------------------------------------------------
+  // The containment core: d19–d22's prefix bound, PPJoin filters and
+  // exact verify.
+  // ------------------------------------------------------------------
+
+  /** Shared shingles C(a→b) ≥ t needs: ⌈t·|Sa|⌉. The 1e-9 nudge under
+    * the ceil absorbs IEEE error in t·|Sa| (t·n landing a hair above
+    * an integer) toward the PERMISSIVE side: a one-smaller bound and a
+    * one-larger prefix cost candidates, never recall. */
+  private[graft] def need(nsh: Column, threshold: Double): Column =
+    ceil(lit(threshold) * nsh - lit(1e-9))
+
+  /** The prefix length ⌊(1−t)·|Sa|⌋+1 = |Sa| − need + 1. Recall
+    * argument (the SSJoin/PPJoin prefix principle, directional form):
+    * C(a→b) ≥ t means a has at most |Sa| − need shingles OUTSIDE Sb,
+    * so among any |Sa| − need + 1 of a's shingles at least one is
+    * shared with b — probing with only that many of a's shingles, in
+    * any total order, cannot miss a qualifying pair. Rarest-first
+    * order makes the probed buckets the smallest. */
+  private[graft] def prefixLen(nsh: Column, threshold: Double): Column =
+    nsh - need(nsh, threshold) + 1
+
+  /** The two PPJoin filters on a prefix-probe join row of a (size
+    * `pNsh`, this shingle's rank `pRk`) against a posting of b (`qNsh`,
+    * `qRk`), both recall-exact, so rows failing them drop per-row
+    * ahead of the pair-level distinct:
+    *   - SIZE: shared ≥ need and shared ≤ |Sb|, so |Sb| < need cannot
+    *     qualify.
+    *   - POSITIONAL: let s* be the FIRST common shingle of (a,b) in the
+    *     shared rank order. For a qualifying pair s* lies in a's prefix
+    *     (were it outside, a's whole prefix would be non-shared and
+    *     shared ≤ need − 1). Every common shingle ranks ≥ rk_a(s*) in a
+    *     and ≥ rk_b(s*) in b, so shared ≤ 1 + min(|Sa| − rk_a(s*),
+    *     |Sb| − rk_b(s*)); the s* row therefore passes whenever the
+    *     pair qualifies. Exact only when both ranks come from ONE total
+    *     order.
+    * On the saturated-vocabulary regime (every shingle's df grows with
+    * the corpus, so the bare prefix filter degenerates toward the full
+    * inverted-index join) the two filters cut d19's wall 8.7× and
+    * d22's 6.6× at the 100k-doc tier, at a fixed ~2-stage latency cost
+    * visible only at toy scale. */
+  private def ppjoinBounds(pNsh: Column, pRk: Column, qNsh: Column, qRk: Column,
+                           threshold: Double): Column = {
+    val n = need(pNsh, threshold)
+    qNsh >= n && least(pNsh - pRk, qNsh - qRk) >= n - lit(1)
+  }
+
+  /** Exact containment verify of (doc_id, `rightCol`) candidates: doc_id
+    * reads its set from `left`, the container from `right` (both
+    * (doc_id, sh)); adds nsh = |Sa|, n_in = |Sb| when `containerSize`,
+    * and shared = |Sa ∩ Sb|. */
+  private def containmentVerify(cand: DataFrame, left: DataFrame, right: DataFrame,
+                                rightCol: String, containerSize: Boolean = false): DataFrame = {
+    val joined = cand
+      .join(left.select(col("doc_id"), col("sh").as("sh_a")), "doc_id")
+      .join(right.select(col("doc_id").as(rightCol), col("sh").as("sh_b")), rightCol)
+      .withColumn("nsh", size(col("sh_a")).cast("long"))
+    (if (containerSize) joined.withColumn("n_in", size(col("sh_b")).cast("long")) else joined)
+      .withColumn("shared", size(array_intersect(col("sh_a"), col("sh_b"))).cast("long"))
+  }
+
+  /** C(a→b) ≥ t over a verified row, docs under `minShingles` excluded
+    * (tiny shingle sets make containment vacuous). */
+  private def containedAt(threshold: Double, minShingles: Int): Column =
+    col("nsh") >= minShingles && col("shared") / col("nsh") >= threshold
+
+  /** The directional containment report over verified candidates:
+    * (leftOut, rightCol, shared, nsh, containment) at C ≥ t. */
+  private def containmentReport(cand: DataFrame, left: DataFrame, right: DataFrame,
+                                leftOut: String, rightCol: String, threshold: Double,
+                                minShingles: Int): DataFrame =
+    containmentVerify(cand, left, right, rightCol)
+      .filter(containedAt(threshold, minShingles))
+      .select(col("doc_id").as(leftOut), col(rightCol), col("shared"), col("nsh"),
+        stableRound(col("shared") / col("nsh"), 4).as("containment"))
+
   /** Candidate (contained, container) pairs under prefix filtering —
-    * the shared core of d19, factored out so the spec can pin the
-    * pruning itself. Recall argument (the SSJoin/PPJoin prefix
-    * principle, directional form): C(a→b) ≥ t means a has at most
-    * ⌊(1−t)·|Sa|⌋ shingles OUTSIDE Sb, so among any ⌊(1−t)·|Sa|⌋+1 of
-    * a's shingles at least one is shared with b — probing the join
-    * with only that many of a's RAREST shingles (global-df order,
-    * hash tie-break) cannot miss a qualifying pair. The 1e-9 nudge
-    * under the ceil absorbs IEEE error in t·|Sa| toward the
-    * PERMISSIVE side (a one-larger prefix costs candidates, never
-    * recall).
-    *
-    * Two further PPJoin filters prune candidates BEFORE the distinct
-    * + verify stage, both recall-exact:
-    *   - SIZE: C(a→b) ≥ t needs shared ≥ ⌈t·|Sa|⌉ and shared ≤ |Sb|,
-    *     so any b with |Sb| < ⌈t·|Sa|⌉ cannot qualify.
-    *   - POSITIONAL: let s* be the FIRST common shingle of (a,b) in
-    *     the global (df, sh_h) order. For a qualifying pair s* lies in
-    *     a's prefix (were it outside, a's whole prefix would be
-    *     non-shared and shared ≤ ⌈t·|Sa|⌉ − 1). Every common shingle
-    *     ranks ≥ rk_a(s*) in a and ≥ rk_b(s*) in b, so
-    *     shared ≤ 1 + min(|Sa| − rk_a(s*), |Sb| − rk_b(s*)); the s*
-    *     join row therefore passes `bound ≥ ⌈t·|Sa|⌉` whenever the
-    *     pair qualifies, and rows that fail it are safe to drop
-    *     per-row ahead of the pair-level distinct. Probe-side ranks
-    *     ride the SAME (df, rk) windows the prefix side already
-    *     computes — two extra exchanges of the exploded set, trivial
-    *     next to the candidate volume they prune. On the
-    *     saturated-vocabulary regime (every shingle's df grows with
-    *     the corpus, so the bare prefix filter degenerates toward the
-    *     full inverted-index join) the two filters cut d19's wall
-    *     8.7× and d22's 6.6× at the 100k-doc tier, at a fixed
-    *     ~2-stage latency cost visible only at toy scale. */
+    * the shared core of d19 and d22, factored out so the spec can pin
+    * the pruning itself: each doc probes its [[prefixLen]] RAREST
+    * shingles (global-df order, hash tie-break), and the join applies
+    * [[ppjoinBounds]] per row. Probe-side ranks ride the SAME (df, rk)
+    * windows the prefix side already computes — two extra exchanges of
+    * the exploded set, trivial next to the candidate volume they
+    * prune. */
   private[graft] def containmentPrefixCandidates(
       shingled: DataFrame, threshold: Double): DataFrame = {
     val e = shingled.select(col("doc_id"),
       size(col("sh")).cast("long").as("nsh"), explode(col("sh")).as("sh_h"))
-    val prefixLen = col("nsh") - ceil(lit(threshold) * col("nsh") - lit(1e-9)) + 1
     // df attaches via a count window, not a join against the grouped
     // df table: the post-explode size estimate under-states that table
     // so badly the planner would broadcast it at any SF (the d02
@@ -1356,13 +1355,11 @@ object Dedup {
       .withColumn("rk", row_number().over(
         Window.partitionBy("doc_id").orderBy(col("df"), col("sh_h"))))
       .select(col("doc_id"), col("nsh"), col("sh_h"), col("rk")))
-    val prefix = ranked.filter(col("rk") <= prefixLen)
-    val need = ceil(lit(threshold) * col("a.nsh") - lit(1e-9))
+    val prefix = ranked.filter(col("rk") <= prefixLen(col("nsh"), threshold))
     prefix.as("a")
       .join(ranked.as("b").hint("shuffle_hash"),
         col("a.sh_h") === col("b.sh_h") && col("a.doc_id") =!= col("b.doc_id") &&
-          col("b.nsh") >= need &&
-          least(col("a.nsh") - col("a.rk"), col("b.nsh") - col("b.rk")) >= need - lit(1))
+          ppjoinBounds(col("a.nsh"), col("a.rk"), col("b.nsh"), col("b.rk"), threshold))
       .select(col("a.doc_id").as("doc_id"), col("b.doc_id").as("in_doc"))
       .distinct()
   }
@@ -1387,16 +1384,8 @@ object Dedup {
     require(threshold > 0 && threshold <= 1.0,
       s"containmentPrefix: threshold must be in (0,1], got $threshold")
     val shingled = graft.Caches.tracked(cappedShingleSets(documents, dfCap))
-    val sets = shingled.select(col("doc_id"), col("sh"))
-    containmentPrefixCandidates(shingled, threshold)
-      .join(sets.select(col("doc_id"), col("sh").as("sh_a")), "doc_id")
-      .join(sets.select(col("doc_id").as("in_doc"), col("sh").as("sh_b")), "in_doc")
-      .withColumn("nsh", size(col("sh_a")).cast("long"))
-      .withColumn("shared", size(array_intersect(col("sh_a"), col("sh_b"))).cast("long"))
-      .filter(col("nsh") >= minShingles &&
-        col("shared") / col("nsh") >= threshold)
-      .select(col("doc_id"), col("in_doc"), col("shared"), col("nsh"),
-        stableRound(col("shared") / col("nsh"), 4).as("containment"))
+    containmentReport(containmentPrefixCandidates(shingled, threshold), shingled,
+        shingled, "doc_id", "in_doc", threshold, minShingles)
       .orderBy("doc_id", "in_doc")
   }
 
@@ -1433,32 +1422,22 @@ object Dedup {
         size(col("sh")).cast("long").as("nsh"), explode(col("sh")).as("sh_h"))
     val withDf = e.withColumn("cdf",
       sum(when(col("is_new"), 0L).otherwise(1L)).over(Window.partitionBy("sh_h")))
-    val prefixLen = col("nsh") - ceil(lit(threshold) * col("nsh") - lit(1e-9)) + 1
     val prefix = withDf.filter(col("is_new"))
       .withColumn("rk", row_number().over(
         Window.partitionBy("doc_id").orderBy(col("cdf"), col("sh_h"))))
-      .filter(col("rk") <= prefixLen)
+      .filter(col("rk") <= prefixLen(col("nsh"), threshold))
       .select(col("doc_id"), col("nsh"), col("sh_h"))
-    // size filter (the containmentPrefixCandidates argument): a corpus
-    // doc smaller than ⌈t·|Sa|⌉ cannot contain a — prune per-row ahead
-    // of the pair distinct; recall-exact
+    // the SIZE filter of ppjoinBounds: a corpus doc smaller than need
+    // cannot contain a — prune per-row ahead of the pair distinct
     val cand = prefix
       .join(withDf.filter(!col("is_new"))
         .select(col("doc_id").as("corpus_doc"), col("nsh").as("n_corp"), col("sh_h"))
         .hint("shuffle_hash"),
         Seq("sh_h"))
-      .filter(col("n_corp") >= ceil(lit(threshold) * col("nsh") - lit(1e-9)))
+      .filter(col("n_corp") >= need(col("nsh"), threshold))
       .select(col("doc_id"), col("corpus_doc")).distinct()
-    val sets = shingled.select(col("doc_id"), col("sh"))
-    cand
-      .join(sets.select(col("doc_id"), col("sh").as("sh_a")), "doc_id")
-      .join(sets.select(col("doc_id").as("corpus_doc"), col("sh").as("sh_b")), "corpus_doc")
-      .withColumn("nsh", size(col("sh_a")).cast("long"))
-      .withColumn("shared", size(array_intersect(col("sh_a"), col("sh_b"))).cast("long"))
-      .filter(col("nsh") >= minShingles &&
-        col("shared") / col("nsh") >= threshold)
-      .select(col("doc_id").as("new_doc"), col("corpus_doc"), col("shared"), col("nsh"),
-        stableRound(col("shared") / col("nsh"), 4).as("containment"))
+    containmentReport(cand, shingled, shingled, "new_doc", "corpus_doc",
+        threshold, minShingles)
       .orderBy("new_doc", "corpus_doc")
   }
 
@@ -1506,7 +1485,7 @@ object Dedup {
     * mix with the frozen-order reader). */
   private def containmentIndexBuckets(spark: org.apache.spark.sql.SparkSession,
                                       path: String): Long = {
-    val m = spark.read.parquet(path + "/meta")
+    val m = Sources.readParquet(spark, path + "/meta")
     if (!m.columns.contains("layout_version"))
       throw new IllegalArgumentException(
         s"$path: containment index predates the frozen-order layout " +
@@ -1557,7 +1536,7 @@ object Dedup {
     // bucket set (only its shingles need odf).
     val (odf, ordW) = if (!seeding) {
       val bkts = bare.select("bkt").distinct().collect().map(_.getInt(0))
-      (spark.read.parquet(orderPath.toString)
+      (Sources.readParquet(spark, orderPath.toString)
         .filter(col("bkt").isin(bkts.toSeq: _*)).select("sh_h", "odf"), None)
     } else {
       val ord = graft.Caches.tracked(
@@ -1772,8 +1751,7 @@ object Dedup {
       newDocs: DataFrame, indexPath: String, threshold: Double,
       excludeBatchId: Option[Long] = None): (DataFrame, DataFrame) = {
     val spark = newDocs.sparkSession
-    val bsets = graft.Caches.tracked(
-      withShingleHashes(newDocs).select(col("doc_id"), col("sh")))
+    val bsets = graft.Caches.tracked(cappedShingleSets(newDocs, None))
     // order and postings resolve from ONE snapshot-generation read
     // ([[graft.sources.Snapshots]]): the PPJoin positional bound is
     // recall-exact only when probe ranks and posting ranks share one
@@ -1797,25 +1775,21 @@ object Dedup {
           explode(col("sh")).as("sh_h"))
         .withColumn("bkt", pmod(col("sh_h"), lit(nBuckets)).cast("int")))
     val bkts = be.select("bkt").distinct().collect().map(_.getInt(0))
-    val odf = spark.read.parquet(orderPath.toString)
+    val odf = Sources.readParquet(spark, orderPath.toString)
       .filter(col("bkt").isin(bkts: _*)).select("sh_h", "odf")
-    val prefixLen = col("nsh") - ceil(lit(threshold) * col("nsh") - lit(1e-9)) + 1
     val prefix = be.join(odf, Seq("sh_h"), "left_outer")
       .withColumn("odf", coalesce(col("odf"), lit(0L)))
       .withColumn("rk", row_number().over(
         Window.partitionBy("doc_id").orderBy(col("odf"), col("sh_h"))).cast("long"))
-      .filter(col("rk") <= prefixLen)
+      .filter(col("rk") <= prefixLen(col("nsh"), threshold))
       .select(col("doc_id"), col("nsh"), col("rk"), col("sh_h"))
-    val need = ceil(lit(threshold) * col("p.nsh") - lit(1e-9))
     val cand = prefix.as("p")
       .join(postingsRaw.filter(col("bkt").isin(bkts: _*))
         .select(col("sh_h"), col("doc_id").as("corpus_doc"),
           col("nsh").as("n_corp"), col("rk").as("crk"))
         .as("q").hint("shuffle_hash"),
         col("p.sh_h") === col("q.sh_h") &&
-          col("q.n_corp") >= need &&
-          least(col("p.nsh") - col("p.rk"),
-            col("q.n_corp") - col("q.crk")) >= need - lit(1))
+          ppjoinBounds(col("p.nsh"), col("p.rk"), col("q.n_corp"), col("q.crk"), threshold))
       .select(col("p.doc_id").as("doc_id"), col("q.corpus_doc").as("corpus_doc"))
       .distinct()
     (bsets, cand)
@@ -1829,16 +1803,9 @@ object Dedup {
     val spark = newDocs.sparkSession
     val (bsets, cand) =
       containmentProbeCandidates(newDocs, indexPath, threshold, excludeBatchId)
-    val sets = Sources.readBatches(spark, indexPath + "/sets", excludeBatchId)
-    cand
-      .join(bsets.select(col("doc_id"), col("sh").as("sh_a")), "doc_id")
-      .join(sets.select(col("doc_id").as("corpus_doc"), col("sh").as("sh_b")), "corpus_doc")
-      .withColumn("nsh", size(col("sh_a")).cast("long"))
-      .withColumn("shared", size(array_intersect(col("sh_a"), col("sh_b"))).cast("long"))
-      .filter(col("nsh") >= minShingles &&
-        col("shared") / col("nsh") >= threshold)
-      .select(col("doc_id").as("new_doc"), col("corpus_doc"), col("shared"), col("nsh"),
-        stableRound(col("shared") / col("nsh"), 4).as("containment"))
+    containmentReport(cand, bsets,
+        Sources.readBatches(spark, indexPath + "/sets", excludeBatchId),
+        "new_doc", "corpus_doc", threshold, minShingles)
       .orderBy("new_doc", "corpus_doc")
   }
 
@@ -1868,16 +1835,9 @@ object Dedup {
     // preShingled: the d24 shared-scan seam (see minHashPairs).
     val shingled = preShingled.getOrElse(
       graft.Caches.tracked(cappedShingleSets(documents, dfCap)))
-    val sets = shingled.select(col("doc_id"), col("sh"))
-    val dirs = containmentPrefixCandidates(shingled, threshold)
-      .join(sets.select(col("doc_id"), col("sh").as("sh_a")), "doc_id")
-      .join(sets.select(col("doc_id").as("in_doc"), col("sh").as("sh_b")), "in_doc")
-      .withColumn("nsh", size(col("sh_a")).cast("long"))
-      .withColumn("n_in", size(col("sh_b")).cast("long"))
-      .withColumn("shared", size(array_intersect(col("sh_a"), col("sh_b"))).cast("long"))
-    val drops = dirs
-      .filter(col("nsh") >= minShingles &&
-        col("shared") / col("nsh") >= threshold &&
+    val drops = containmentVerify(containmentPrefixCandidates(shingled, threshold),
+        shingled, shingled, "in_doc", containerSize = true)
+      .filter(containedAt(threshold, minShingles) &&
         (col("n_in") > col("nsh") ||
           (col("n_in") === col("nsh") && col("in_doc") < col("doc_id"))))
       .groupBy("doc_id")

@@ -17,6 +17,17 @@ import graft.sources.Sources
   */
 object StreamingFlow {
 
+  /** Run `step` on every micro-batch of `stream` (append mode, state
+    * in `checkpoint`): the one sink shape every foreachBatch entry
+    * point below starts. */
+  private def eachBatch(stream: DataFrame, checkpoint: String)(
+      step: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
+    stream.writeStream
+      .option("checkpointLocation", checkpoint)
+      .outputMode("append")
+      .foreachBatch(step)
+      .start()
+
   /** s01_stream_congestion — event-time tumbling window aggregation
     * with a 2h watermark (late data beyond that is dropped and the
     * window state evicted). Batch twin: q20_time_window. */
@@ -332,11 +343,7 @@ object StreamingFlow {
   def streamIngestAdmit(stream: DataFrame, corpusPath: String, verdictPath: String,
                         checkpoint: String, threshold: Double = 0.8,
                         dfCap: Option[Long] = None): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch(ingestAdmitBatch(corpusPath, verdictPath, threshold, dfCap))
-      .start()
+    eachBatch(stream, checkpoint)(ingestAdmitBatch(corpusPath, verdictPath, threshold, dfCap))
 
   /** The per-trigger admission step behind [[streamIngestAdmit]].
     * Verdicts are eagerly localCheckpoint'ed before any write: the
@@ -390,11 +397,7 @@ object StreamingFlow {
                                verdictPath: String, checkpoint: String,
                                threshold: Double = 0.8
                               ): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch(ingestAdmitIndexedBatch(indexPath, verdictPath, threshold))
-      .start()
+    eachBatch(stream, checkpoint)(ingestAdmitIndexedBatch(indexPath, verdictPath, threshold))
 
   /** The per-trigger step behind [[streamIngestAdmitIndexed]] —
     * s14's ingestAdmitBatch with the index in place of the corpus
@@ -650,11 +653,7 @@ object StreamingFlow {
   def streamChunkIngest(docStream: DataFrame, storePath: String,
                         checkpoint: String, minLen: Int = 32,
                         maskBits: Int = 6): org.apache.spark.sql.streaming.StreamingQuery =
-    docStream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch(chunkIngestBatch(storePath, minLen, maskBits))
-      .start()
+    eachBatch(docStream, checkpoint)(chunkIngestBatch(storePath, minLen, maskBits))
 
   private[graft] def chunkIngestBatch(storePath: String, minLen: Int,
                                       maskBits: Int): (DataFrame, Long) => Unit =
@@ -706,12 +705,8 @@ object StreamingFlow {
                              verdictPath: String, checkpoint: String,
                              threshold: Double = 0.8, minShingles: Int = 5,
                              dfCap: Option[Long] = None): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch(containmentAdmitBatch(corpusPath, verdictPath,
+    eachBatch(stream, checkpoint)(containmentAdmitBatch(corpusPath, verdictPath,
         threshold, minShingles, dfCap))
-      .start()
 
   /** One verdict row per batch doc from a (new_doc, corpus_doc, …,
     * containment) hit relation: contained with best evidence (highest
@@ -783,12 +778,8 @@ object StreamingFlow {
                                     threshold: Double = 0.8, minShingles: Int = 5,
                                     refreezePolicy: Option[graft.dedup.Dedup.RefreezePolicy] = None
                                    ): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch(containmentAdmitIndexedBatch(indexPath, verdictPath,
+    eachBatch(stream, checkpoint)(containmentAdmitIndexedBatch(indexPath, verdictPath,
         threshold, minShingles, refreezePolicy))
-      .start()
 
   private[graft] def containmentAdmitIndexedBatch(indexPath: String, verdictPath: String,
                                                   threshold: Double, minShingles: Int,
@@ -832,11 +823,7 @@ object StreamingFlow {
   def streamBm25Indexed(queryStream: DataFrame, indexPath: String,
                         resultPath: String, checkpoint: String, topK: Int = 10
                        ): org.apache.spark.sql.streaming.StreamingQuery =
-    queryStream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch(bm25IndexedBatch(indexPath, resultPath, topK))
-      .start()
+    eachBatch(queryStream, checkpoint)(bm25IndexedBatch(indexPath, resultPath, topK))
 
   /** s29_stream_audience_overlap — live cross-type audience overlap
     * (q64/q65's streaming form): a persisted per-type KMV sketch
@@ -863,11 +850,7 @@ object StreamingFlow {
   def streamEwma(eventStream: DataFrame, statePath: String,
                  resultPath: String, checkpoint: String, horizon: Int = 16
                 ): org.apache.spark.sql.streaming.StreamingQuery =
-    eventStream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch(ewmaBatch(statePath, resultPath, horizon))
-      .start()
+    eachBatch(eventStream, checkpoint)(ewmaBatch(statePath, resultPath, horizon))
 
   private[graft] def ewmaBatch(statePath: String, resultPath: String,
                                horizon: Int): (DataFrame, Long) => Unit =
@@ -914,11 +897,7 @@ object StreamingFlow {
   def streamHolt(eventStream: DataFrame, statePath: String,
                  resultPath: String, checkpoint: String
                 ): org.apache.spark.sql.streaming.StreamingQuery =
-    eventStream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch(holtBatch(statePath, resultPath))
-      .start()
+    eachBatch(eventStream, checkpoint)(holtBatch(statePath, resultPath))
 
   private[graft] def holtBatch(statePath: String, resultPath: String
                               ): (DataFrame, Long) => Unit =
@@ -934,11 +913,7 @@ object StreamingFlow {
                   resultPath: String, checkpoint: String,
                   hSigma: Double = 5.0
                  ): org.apache.spark.sql.streaming.StreamingQuery =
-    eventStream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch(cusumBatch(statePath, resultPath, hSigma))
-      .start()
+    eachBatch(eventStream, checkpoint)(cusumBatch(statePath, resultPath, hSigma))
 
   private[graft] def cusumBatch(statePath: String, resultPath: String,
                                 hSigma: Double): (DataFrame, Long) => Unit =
@@ -949,11 +924,7 @@ object StreamingFlow {
                             resultPath: String, checkpoint: String,
                             k: Int = 256
                            ): org.apache.spark.sql.streaming.StreamingQuery =
-    eventStream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch(audienceOverlapBatch(statePath, resultPath, k))
-      .start()
+    eachBatch(eventStream, checkpoint)(audienceOverlapBatch(statePath, resultPath, k))
 
   private[graft] def audienceOverlapBatch(statePath: String, resultPath: String,
                                           k: Int): (DataFrame, Long) => Unit =
@@ -995,11 +966,7 @@ object StreamingFlow {
                       resultPath: String, checkpoint: String,
                       minFrac: Double = 1.0
                      ): org.apache.spark.sql.streaming.StreamingQuery =
-    docStream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch(percolateBatch(queries, resultPath, minFrac))
-      .start()
+    eachBatch(docStream, checkpoint)(percolateBatch(queries, resultPath, minFrac))
 
   private[graft] def percolateBatch(queries: DataFrame, resultPath: String,
                                     minFrac: Double): (DataFrame, Long) => Unit =
@@ -1024,11 +991,7 @@ object StreamingFlow {
   def streamTextIndexIngest(docStream: DataFrame, indexPath: String,
                             checkpoint: String
                            ): org.apache.spark.sql.streaming.StreamingQuery =
-    docStream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch(textIndexIngestBatch(indexPath))
-      .start()
+    eachBatch(docStream, checkpoint)(textIndexIngestBatch(indexPath))
 
   private[graft] def textIndexIngestBatch(indexPath: String
                                          ): (DataFrame, Long) => Unit =
@@ -1058,12 +1021,8 @@ object StreamingFlow {
                            statsPath: String, checkpoint: String,
                            balanceFactor: Double = 2.0
                           ): org.apache.spark.sql.streaming.StreamingQuery =
-    vecStream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch(annIndexIngestBatch(indexPath, statsPath, balanceFactor,
+    eachBatch(vecStream, checkpoint)(annIndexIngestBatch(indexPath, statsPath, balanceFactor,
         codec = "float"))
-      .start()
 
   /** s31_stream_ann_index_ingest_sq8 — s30 over the CODES-ONLY index
     * (`sink_ann_index_sq8`): each trigger's vectors assign under the
@@ -1076,12 +1035,8 @@ object StreamingFlow {
                               statsPath: String, checkpoint: String,
                               balanceFactor: Double = 2.0
                              ): org.apache.spark.sql.streaming.StreamingQuery =
-    vecStream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch(annIndexIngestBatch(indexPath, statsPath, balanceFactor,
+    eachBatch(vecStream, checkpoint)(annIndexIngestBatch(indexPath, statsPath, balanceFactor,
         codec = "sq8"))
-      .start()
 
   /** s36_stream_ann_index_ingest_bq — s30 over the SIGN-BIT index
     * (`sink_ann_index_bq`): the streaming tier where replay safety is
@@ -1096,12 +1051,8 @@ object StreamingFlow {
                              statsPath: String, checkpoint: String,
                              balanceFactor: Double = 2.0
                             ): org.apache.spark.sql.streaming.StreamingQuery =
-    vecStream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch(annIndexIngestBatch(indexPath, statsPath, balanceFactor,
+    eachBatch(vecStream, checkpoint)(annIndexIngestBatch(indexPath, statsPath, balanceFactor,
         codec = "bq"))
-      .start()
 
   private[graft] def annIndexIngestBatch(indexPath: String, statsPath: String,
                                          balanceFactor: Double, codec: String
@@ -1155,11 +1106,7 @@ object StreamingFlow {
                      resultPath: String, checkpoint: String,
                      k: Int = 3, nprobe: Int = 2
                     ): org.apache.spark.sql.streaming.StreamingQuery =
-    queryStream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch(annServeBatch(indexPath, resultPath, k, nprobe))
-      .start()
+    eachBatch(queryStream, checkpoint)(annServeBatch(indexPath, resultPath, k, nprobe))
 
   private[graft] def annServeBatch(indexPath: String, resultPath: String,
                                    k: Int, nprobe: Int): (DataFrame, Long) => Unit =
@@ -1189,12 +1136,8 @@ object StreamingFlow {
                         checkpoint: String, kRun: Int = 10, kRrf: Int = 60,
                         topK: Int = 10, nprobe: Int = 2
                        ): org.apache.spark.sql.streaming.StreamingQuery =
-    queryStream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch(hybridServeBatch(textIndexPath, annIndexPath, resultPath,
+    eachBatch(queryStream, checkpoint)(hybridServeBatch(textIndexPath, annIndexPath, resultPath,
         kRun, kRrf, topK, nprobe))
-      .start()
 
   private[graft] def hybridServeBatch(textIndexPath: String, annIndexPath: String,
                                       resultPath: String, kRun: Int, kRrf: Int,
@@ -1292,17 +1235,11 @@ object StreamingFlow {
                     valueCol: String, checkpoint: String
                    ): org.apache.spark.sql.streaming.StreamingQuery = {
     import org.apache.spark.sql.types.{StringType, StructField, StructType}
-    spark.readStream
+    eachBatch(spark.readStream
       .schema(StructType(Seq(StructField("value", StringType))))
-      .text(s"$sourcePath/_graft_log")
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (_: DataFrame, _: Long) =>
-        graft.sources.AggView.refresh(
-          spark, sourcePath, viewPath, sourceKeys, groupCols, valueCol)
-        ()
-      }
-      .start()
+      .text(s"$sourcePath/_graft_log"), checkpoint) { (_, _) =>
+      graft.sources.AggView.refresh(
+        spark, sourcePath, viewPath, sourceKeys, groupCols, valueCol)
+    }
   }
 }

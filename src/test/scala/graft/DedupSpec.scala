@@ -1040,4 +1040,87 @@ class DedupSpec extends SparkSpecBase {
     assert(out.toSeq == Seq((0L, 12L)), s"got ${out.toSeq}")
     graft.Caches.release()
   }
+
+  test("a doc_id on both sides verifies against each side's own text: live d11/d12 equal their at-rest twins") {
+    // doc 5 is a re-crawl: the batch copy edits the last three words of
+    // the corpus copy, J = 17/23 ≈ 0.74, under the 0.8 threshold. Its
+    // band signatures still collide, so the (5, 5) candidate forms and
+    // only the verify can reject it.
+    val words = (1 to 22).map(i => s"w$i")
+    val crawled = words.mkString(" ")
+    val recrawl = (words.take(19) ++ Seq("x1", "x2", "x3")).mkString(" ")
+    val near = "the quick brown fox jumps over the lazy dog again and again today"
+    val batch = docs(1L -> near, 5L -> recrawl)
+    val corpus = docs(5L -> crawled, 11L -> (near + " ok"))
+    val dir = java.nio.file.Files.createTempDirectory("graft_dedup_twin").toString
+    Dedup.writeDedupIndex(corpus, dir, numHashes = 128, bands = 64)
+    val live = Dedup.dedupAgainst(batch, corpus, numHashes = 128, bands = 64).collect().toSeq
+    val atRest = Dedup.dedupAgainstIndex(batch, dir, numHashes = 128, bands = 64).collect().toSeq
+    assert(live.map(r => (r.getLong(0), r.getLong(1))) == Seq((1L, 11L)), s"got $live")
+    assert(live == atRest)
+    val admit = Dedup.ingestAdmit(batch, corpus, numHashes = 128, bands = 64).collect().toSeq
+    val admitAtRest = Dedup.ingestAdmitIndexed(batch, dir, numHashes = 128, bands = 64)
+      .collect().toSeq
+    assert(admit.map(r => r.getLong(0) -> r.getString(2)) ==
+      Seq(1L -> "corpus_dup", 5L -> "admitted"), s"got $admit")
+    assert(admit == admitAtRest)
+    graft.Caches.release()
+  }
+
+  test("a warmed containmentAgainstIndex call reads meta/ and order/ through the schema memo") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_cont_jobs").toString
+    Dedup.writeContainmentIndex(docs(
+      10L -> "a b c d e f g h i j k l",
+      11L -> "other words entirely distinct here now and then"), dir)
+    val batch = docs(0L -> "a b c d e f g h")
+    Dedup.containmentAgainstIndex(batch, dir).collect()
+    // left: the meta/ row collect and the probe's bucket-set collect
+    // (a shuffle job and a result job); no footer-inference job
+    assert(jobsRunBy(Dedup.containmentAgainstIndex(batch, dir)) == 3)
+    graft.Caches.release()
+  }
+
+  test("shared bounds: sizeOk never prunes a qualifying Jaccard pair; need and prefixLen keep the prefix principle") {
+    // the real helper Columns, evaluated by Spark on seeded (na, nb,
+    // shared) rows per threshold. Edge thresholds are ratios t = k/n
+    // whose product with na = n·m lands within an ulp of the integer
+    // k·m (not on it); there shared = k·m qualifies exactly at the
+    // boundary, for Jaccard (nb = shared) and for containment
+    import org.apache.spark.sql.functions.col
+    val rnd = new scala.util.Random(20261020L)
+    val edges = Iterator.continually {
+      val n = 2 + rnd.nextInt(400)
+      val k = 1 + rnd.nextInt(n - 1)
+      val t = k.toDouble / n
+      val ms = (1 to 60).filter(m => (n.toLong * m).toDouble * t != (k.toLong * m).toDouble)
+      t -> ms.flatMap { m =>
+        val (a, b) = (n.toLong * m, k.toLong * m)
+        Seq((a, b, b), (b, a, b), (a, a + rnd.nextInt(100), b))
+      }
+    }.filter(_._2.nonEmpty).take(30).toSeq
+    val randoms = (Seq(0.8, 0.9, 1.0) ++ Seq.fill(7)(0.05 + 0.95 * rnd.nextDouble())).map { t =>
+      t -> Seq.fill(60) {
+        val na = 1 + rnd.nextInt(5000)
+        val nb = 1 + rnd.nextInt(5000)
+        (na.toLong, nb.toLong, rnd.nextInt(math.min(na, nb) + 1).toLong)
+      }
+    }
+    (edges ++ randoms).foreach { case (t, rows) =>
+      rows.toDF("na", "nb", "shared")
+        .select(col("na"), col("nb"), col("shared"),
+          Dedup.sizeOk(col("na"), col("nb"), t).as("ok"),
+          Dedup.need(col("na"), t).cast("long").as("need"),
+          Dedup.prefixLen(col("na"), t).cast("long").as("plen"))
+        .collect().foreach { r =>
+          val (na, nb, shared) = (r.getLong(0), r.getLong(1), r.getLong(2))
+          val ctx = s"t=$t na=$na nb=$nb shared=$shared"
+          if (shared.toDouble / (na + nb - shared) >= t)
+            assert(r.getBoolean(3), s"sizeOk pruned a qualifying pair: $ctx")
+          if (shared.toDouble / na >= t) {
+            assert(shared >= r.getLong(4), s"need above shared: $ctx need=${r.getLong(4)}")
+            assert(r.getLong(5) >= na - shared + 1, s"prefix too short: $ctx plen=${r.getLong(5)}")
+          }
+        }
+    }
+  }
 }
