@@ -2,7 +2,7 @@ package graft.ann
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{InterpretedOrdering, UnsafeProjection}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -25,22 +25,259 @@ import graft.sources.Sources
   */
 object Ann {
 
+  // ------------------------------------------------------------------
+  // The retrieval core: the ranking tails and their sort keys, the
+  // approximate shortlist, query batches, training samples, the PQ
+  // ADC table, mean vectors and the cell-index reads and writes that
+  // the live and at-rest variants share.
+  // ------------------------------------------------------------------
+
+  /** Sort keys of a NaN and a null similarity in the negated-score
+    * order (sim DESC is key ASC) that [[topKNeighbors]] and
+    * [[assignN]] rank by. Cosine ∈ [−1, 1], so every real key lies in
+    * [−1, 1]: `NaNKey` sorts ahead of all of them, where a descending
+    * window puts NaN, and `NullKey` after all of them
+    * (desc_nulls_last). Both rest on that bound alone. */
+  private val NaNKey = -2.0
+  private val NullKey = 2.0
+
+  /** The window ranking tail: the top `k` rows per query of a scored
+    * candidate frame (query_id, neighbor_id, sim, …) by sim DESC (NaN
+    * first, nulls last), ties to the smaller neighbor_id. Emits
+    * query_id, the `carried` columns, neighbor_id, sim rounded to 4
+    * places as `score`, and rn = 1..k, sorted by (query_id, rn). */
+  private[graft] def windowTopK(scored: DataFrame, k: Int, carried: Seq[String] = Nil,
+                                score: String = "cos_sim"): DataFrame = {
+    val w = Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id"))
+    scored
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= k)
+      .select(Seq(col("query_id")) ++ carried.map(col) ++ Seq(col("neighbor_id"),
+        stableRound(col("sim"), 4).as(score), col("rn")): _*)
+      .orderBy("query_id", "rn")
+  }
+
+  /** MAP-SIDE bounded top-k per query — the aggregate-fold form of
+    * `row_number() OVER (PARTITION BY query_id ORDER BY sim DESC,
+    * neighbor_id) <= k` (the retrieval family's ranking tail). The
+    * window formulation sorts the FULL candidate product twice (a
+    * partial WindowGroupLimit still sorts each map partition before
+    * pruning, and the reduce side re-sorts after the exchange); the
+    * mergeable NeighborTopK fold keeps ≤ k rows per (query, map
+    * partition) in the partial aggregate, so nothing candidate-sized
+    * is ever sorted and the exchange carries k·|queries| rows per
+    * partition instead of the product (guide §2.3/§2.4).
+    *
+    * Ordering contract — the window's EXACTLY: sim DESC with NaN first
+    * ([[NaNKey]]), nulls LAST ([[NullKey]]), ties by neighbor_id ASC.
+    * `+ 0.0` normalizes a -0.0 key to +0.0 so the fold compares ±0.0
+    * equal exactly like SQL ordering does (negating sim maps ±0.0 sims
+    * onto ∓0.0 keys). The raw sim rides the non-compared payload slot,
+    * so the emitted value is bit-identical to the window path's.
+    *
+    * Input: (query_id, neighbor_id, sim double) — extra columns are
+    * dropped. Output: (query_id, neighbor_id, sim, rn int), rn = 1..k
+    * densely in ranking order. */
+  private[graft] def topKNeighbors(cand: DataFrame, k: Int): DataFrame = {
+    import org.apache.spark.sql.Encoders
+    val agg = udaf(new graft.functions.TypedAggregators.NeighborTopK(k),
+      Encoders.tuple(Encoders.scalaDouble, Encoders.scalaLong, Encoders.scalaDouble))
+    cand
+      .select(col("query_id"), col("neighbor_id"), col("sim"))
+      .withColumn("__key",
+        coalesce(nanvl(-col("sim"), lit(NaNKey)), lit(NullKey)) + lit(0.0))
+      .groupBy("query_id")
+      .agg(agg(col("__key"), col("neighbor_id"),
+        coalesce(col("sim"), lit(0.0))).as("__top"))
+      .select(col("query_id"), posexplode(col("__top")).as(Seq("__pos", "__t")))
+      .select(col("query_id"),
+        col("__t._2").as("neighbor_id"),
+        // a NullKey key can only come from the null-sim coalesce branch
+        when(col("__t._1") === NullKey, lit(null).cast("double"))
+          .otherwise(col("__t._3")).as("sim"),
+        (col("__pos") + 1).cast("int").as("rn"))
+  }
+
+  /** The fold ranking tail: [[topKNeighbors]] emitted as
+    * [[windowTopK]] emits it (query_id, neighbor_id, cos_sim, rn),
+    * unsorted. */
+  private[graft] def foldTopK(cand: DataFrame, k: Int): DataFrame =
+    topKNeighbors(cand, k)
+      .select(col("query_id"), col("neighbor_id"),
+        stableRound(col("sim"), 4).as("cos_sim"), col("rn"))
+
+  /** The approximate shortlist every re-ranked variant feeds
+    * [[exactRerank]]: the `rerank` best candidates per query under
+    * `order` (an approximate score's direction), ties to the smaller
+    * neighbor_id, as (query_id, neighbor_id) — plus their rank `arn`
+    * when `withRank`. */
+  private def shortlist(scored: DataFrame, order: Column, rerank: Int,
+                        withRank: Boolean = false): DataFrame = {
+    val w = Window.partitionBy("query_id").orderBy(order, col("neighbor_id"))
+    scored
+      .withColumn("arn", row_number().over(w))
+      .filter(col("arn") <= rerank)
+      .select((Seq("query_id", "neighbor_id") ++ (if (withRank) Seq("arn") else Nil))
+        .map(col): _*)
+  }
+
+  /** The query prefix (vec_id < nQueries) as (query_id, qe, `carried`…)
+    * and the rest of the corpus as (neighbor_id, ce, `carried`…). */
+  private def splitQueries(vectors: DataFrame, nQueries: Int,
+                           carried: String*): (DataFrame, DataFrame) =
+    (vectors.filter(col("vec_id") < nQueries)
+      .select(Seq(col("vec_id").as("query_id"), col("embedding").as("qe")) ++
+        carried.map(col): _*),
+     vectors.filter(col("vec_id") >= nQueries)
+      .select(Seq(col("vec_id").as("neighbor_id"), col("embedding").as("ce")) ++
+        carried.map(col): _*))
+
+  /** The query prefix collected to the driver as (vec_id, vector), in
+    * vec_id order. */
+  private def collectQueries(embeddings: DataFrame,
+                             nQueries: Int): Array[(Long, Array[Float])] =
+    queryVectors(embeddings.filter(col("vec_id") < nQueries)
+      .select(col("vec_id"), col("embedding")).orderBy("vec_id").collect())
+
+  /** Collected query vectors as a local (query_id, qe) relation. */
+  private def queryFrame(spark: SparkSession,
+                         queries: Array[(Long, Array[Float])]): DataFrame = {
+    import spark.implicits._
+    queries.toSeq.toDF("query_id", "qe")
+  }
+
+  /** The deterministic training sample: the first `n` (vec_id,
+    * embedding) rows in scrambled-id order. TakeOrdered: map-side
+    * top-n per partition, never a full sort. */
+  private def trainingSample(embeddings: DataFrame, n: Int): DataFrame =
+    embeddings.select(col("vec_id"), col("embedding"))
+      .orderBy(xxhash64(col("vec_id")), col("vec_id")).limit(n)
+
+  /** A PQ trainer's sample vectors, checked to cover `ksub` distinct
+    * seeds; `op` names the caller in the messages. */
+  private def pqSample(embeddings: DataFrame, n: Int, ksub: Int,
+                       op: String): Array[Array[Float]] = {
+    val sample = trainingSample(embeddings, n).collect().map(_.getSeq[Float](1).toArray)
+    require(sample.nonEmpty, s"$op: embeddings table is empty — nothing to train on")
+    require(sample.length >= ksub,
+      s"$op: training sample (${sample.length}) must cover ksub=$ksub distinct seeds — " +
+        "duplicate seeds would leave permanently empty codebook cells")
+    sample
+  }
+
+  /** Cosine of two driver-side vectors, accumulated in index order in
+    * double, for the driver-side trainers. (mmrDiversify keeps its own:
+    * it scores a zero-norm vector 0.0.) */
+  private def cosine(a: Array[Double], b: Array[Double]): Double = {
+    var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
+    while (i < a.length) { dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
+    dot / (math.sqrt(na) * math.sqrt(nb))
+  }
+
+  /** A PQ codec: the codebook (m × ksub centroids of subDim floats). */
+  private final case class PqCodec(codebook: Array[Float], m: Int, ksub: Int, subDim: Int)
+
+  /** Per-query PQ ADC rows (query_id, sub, cid, pdot, ndot, qnorm): the
+    * query's partial dot with each codebook centroid, that centroid's
+    * squared norm and the query norm — |queries|·m·ksub rows, built on
+    * the driver and broadcast by the caller. */
+  private def adcTable(spark: SparkSession, queries: Array[(Long, Array[Float])],
+                       pq: PqCodec): DataFrame = {
+    import spark.implicits._
+    val PqCodec(codebook, m, ksub, subDim) = pq
+    (for {
+      (qid, qv) <- queries.toSeq
+      qnorm = math.sqrt(qv.map(x => x.toDouble * x).sum)
+      sub <- 0 until m
+      cid <- 0 until ksub
+    } yield {
+      val base = (sub * ksub + cid) * subDim
+      var pdot = 0.0; var ndot = 0.0
+      var d = 0
+      while (d < subDim) {
+        pdot += qv(sub * subDim + d).toDouble * codebook(base + d)
+        ndot += codebook(base + d).toDouble * codebook(base + d)
+        d += 1
+      }
+      (qid, sub, cid, pdot, ndot, qnorm)
+    }).toDF("query_id", "sub", "cid", "pdot", "ndot", "qnorm")
+  }
+
+  /** The elementwise mean `embedding` per `keys` group as float vector
+    * `out`: posexplode, one mean per (keys, pos), reassembled in pos
+    * order — two narrow groupBys. With `counted`, also the group's
+    * member count `n`. */
+  private def meanVectors(vectors: DataFrame, keys: Seq[String], out: String,
+                          counted: Boolean = false): DataFrame = {
+    val n = if (counted) Seq(count(lit(1)).as("n")) else Nil
+    vectors
+      .select(keys.map(col) :+ posexplode(col("embedding")).as(Seq("pos", "x")): _*)
+      .groupBy((keys :+ "pos").map(col): _*).agg(avg("x").as("cx"), n: _*)
+      .groupBy(keys.map(col): _*)
+      .agg(transform(array_sort(collect_list(struct(col("pos"), col("cx")))),
+        s => s.getField("cx").cast("float")).as(out),
+        (if (counted) Seq(max("n").as("n")) else Nil): _*)
+  }
+
+  /** Lands `vectors` in their cells of the index at `path`: assigned
+    * under `centroids`, as (vec_id, `code`, c_label) partitioned by
+    * c_label under `dir`, through the batch protocol
+    * ([[Sources.writeBatch]]). */
+  private def landCells(vectors: DataFrame, centroids: DataFrame, path: String, dir: String,
+                        code: Column, batchId: Option[Long], seeding: Boolean): Unit =
+    Sources.writeBatch(assign(vectors, centroids).select(col("vec_id"), code, col("c_label")),
+      s"$path/$dir", batchId, seeding, "c_label")
+
+  /** Seeds a cell index: `centroids/`, the codec's `meta/` row when it
+    * has one, and the cells. The writes are independent once the codec
+    * is trained (the assignment consumes the in-memory centroid frame,
+    * not the written file), so they overlap (graft.Par). */
+  private def seedCells(corpus: DataFrame, centroids: DataFrame, path: String, dir: String,
+                        code: Column, batchId: Option[Long],
+                        meta: Option[DataFrame] = None): Unit =
+    graft.Par.jobs(
+      Seq[() => Unit](() => centroids.write.mode("overwrite").parquet(path + "/centroids")) ++
+        meta.map(df => () => df.write.mode("overwrite").parquet(path + "/meta")) :+
+        (() => landCells(corpus, centroids, path, dir, code, batchId, seeding = true)): _*)
+
+  /** Appends a batch to a cell index under its SAVED centroids. */
+  private def appendCells(batch: DataFrame, indexPath: String, dir: String, code: Column,
+                          batchId: Option[Long]): Unit =
+    landCells(batch, Sources.readParquet(batch.sparkSession, indexPath + "/centroids"),
+      indexPath, dir, code, batchId, seeding = false)
+
+  /** The probed cells of a saved index: `dir` read through the schema
+    * memo and pruned to the `probed` cell directories, as (vec_id AS
+    * neighbor_id, `payload`…). */
+  private def probedCells(spark: SparkSession, indexPath: String, dir: String,
+                          probed: Seq[Any], payload: Column*): DataFrame =
+    Sources.readParquet(spark, s"$indexPath/$dir")
+      .filter(col("c_label").isin(probed: _*))
+      .select(col("vec_id").as("neighbor_id") +: payload: _*)
+
+  /** The one row a codes index saves in `meta/`. */
+  private def metaRow(spark: SparkSession, indexPath: String): Row =
+    Sources.readParquet(spark, indexPath + "/meta").collect()(0)
+
+  /** The saved SQ8 ranges, bound as per-call (encode, cosine)
+    * functions; callers drop both once their plans are built. */
+  private def savedSq8(spark: SparkSession, indexPath: String): (String, String) = {
+    val m = metaRow(spark, indexPath)
+    GraftFunctions.registerSq8(spark, m.getSeq[Float](0).toArray, m.getSeq[Float](1).toArray)
+  }
+
+  /** The saved PQ codec. */
+  private def savedPq(spark: SparkSession, indexPath: String): PqCodec = {
+    val m = metaRow(spark, indexPath)
+    PqCodec(m.getSeq[Float](0).toArray, m.getInt(1), m.getInt(2), m.getInt(3))
+  }
+
   /** a01_knn_brute — exact top-k cosine neighbours for each query
     * vector (vec_id < nQueries) among the rest. */
   def knnBrute(embeddings: DataFrame, nQueries: Int = 10, k: Int = 3): DataFrame = {
     GraftFunctions.register(embeddings.sparkSession)
-    val q = embeddings.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-    val c = embeddings.filter(col("vec_id") >= nQueries)
-      .select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"))
-    val w = Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id"))
-    broadcast(q).crossJoin(c)
-      .withColumn("sim", expr("graft_cosine(qe, ce)"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("neighbor_id"),
-        stableRound(col("sim"), 4).as("cos_sim"), col("rn"))
-      .orderBy("query_id", "rn")
+    val (q, c) = splitQueries(embeddings, nQueries)
+    windowTopK(broadcast(q).crossJoin(c).withColumn("sim", expr("graft_cosine(qe, ce)")), k)
   }
 
   /** a01's shape with an EXPLICIT query relation — `queries` is
@@ -52,14 +289,7 @@ object Ann {
     GraftFunctions.register(corpus.sparkSession)
     val q = queries.select(col("query_id"), col("embedding").as("qe"))
     val c = corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"))
-    val w = Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id"))
-    broadcast(q).crossJoin(c)
-      .withColumn("sim", expr("graft_cosine(qe, ce)"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("neighbor_id"),
-        stableRound(col("sim"), 4).as("cos_sim"), col("rn"))
-      .orderBy("query_id", "rn")
+    windowTopK(broadcast(q).crossJoin(c).withColumn("sim", expr("graft_cosine(qe, ce)")), k)
   }
 
   /** a25_knn_filtered — attribute-filtered exact kNN, the vector-DB
@@ -79,20 +309,9 @@ object Ann {
     * oracle with the label equi-join. */
   def knnFiltered(embeddings: DataFrame, nQueries: Int = 10, k: Int = 3): DataFrame = {
     GraftFunctions.register(embeddings.sparkSession)
-    val q = embeddings.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        col("label"))
-    val c = embeddings.filter(col("vec_id") >= nQueries)
-      .select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"),
-        col("label"))
-    val w = Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id"))
-    broadcast(q).join(c, "label")
-      .withColumn("sim", expr("graft_cosine(qe, ce)"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("label"), col("neighbor_id"),
-        stableRound(col("sim"), 4).as("cos_sim"), col("rn"))
-      .orderBy("query_id", "rn")
+    val (q, c) = splitQueries(embeddings, nQueries, "label")
+    windowTopK(broadcast(q).join(c, "label").withColumn("sim", expr("graft_cosine(qe, ce)")),
+      k, carried = Seq("label"))
   }
 
   /** a26_ivf_filtered_indexed — filtered search AT REST: the a15 probe
@@ -114,22 +333,14 @@ object Ann {
     GraftFunctions.register(spark)
     val (routed, probed, _) = routeToCells(queries, indexPath, nprobe)
     val q = routed.join(queries.select(col("vec_id").as("query_id"), col("label")), "query_id")
-    val c = Sources.readParquet(spark, indexPath + "/vectors")
-      .filter(col("c_label").isin(probed: _*))
-      .select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"),
-        col("c_label"))
+    val c = probedCells(spark, indexPath, "vectors", probed,
+        col("embedding").as("ce"), col("c_label"))
       .join(attrs.select(col("vec_id").as("neighbor_id"),
         col("label").as("n_label")), "neighbor_id")
-    val w = Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id"))
-    q.join(c, "c_label")
+    windowTopK(q.join(c, "c_label")
       .filter(col("label") === col("n_label") &&
         col("query_id") =!= col("neighbor_id"))
-      .withColumn("sim", expr("graft_cosine(qe, ce)"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("label"), col("neighbor_id"),
-        stableRound(col("sim"), 4).as("cos_sim"), col("rn"))
-      .orderBy("query_id", "rn")
+      .withColumn("sim", expr("graft_cosine(qe, ce)")), k, carried = Seq("label"))
   }
 
   /** a20_rrf_fusion — hybrid retrieval by Reciprocal Rank Fusion
@@ -214,10 +425,7 @@ object Ann {
     * is exact. */
   def rangeSearch(embeddings: DataFrame, nQueries: Int = 10, tau: Double = 0.3): DataFrame = {
     GraftFunctions.register(embeddings.sparkSession)
-    val q = embeddings.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-    val c = embeddings.filter(col("vec_id") >= nQueries)
-      .select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"))
+    val (q, c) = splitQueries(embeddings, nQueries)
     broadcast(q).crossJoin(c)
       .withColumn("sim", expr("graft_cosine(qe, ce)"))
       .filter(col("sim") >= tau)
@@ -245,21 +453,11 @@ object Ann {
         posexplode(expr(
           s"graft_hyperplane_buckets(embedding, 42L, $tables, $planesPerTable, $dim)"))
           .as(Seq("bt", "bb")))
-    val q = withB.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"), col("bt"), col("bb"))
-    val c = withB.filter(col("vec_id") >= nQueries)
-      .select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"), col("bt"), col("bb"))
+    val (q, c) = splitQueries(withB, nQueries, "bt", "bb")
     val cand = q.join(c, Seq("bt", "bb"))
       .select(col("query_id"), col("qe"), col("neighbor_id"), col("ce"))
       .dropDuplicates("query_id", "neighbor_id")
-    val w = Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id"))
-    cand
-      .withColumn("sim", expr("graft_cosine(qe, ce)"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("neighbor_id"),
-        stableRound(col("sim"), 4).as("cos_sim"), col("rn"))
-      .orderBy("query_id", "rn")
+    windowTopK(cand.withColumn("sim", expr("graft_cosine(qe, ce)")), k)
   }
 
   /** Per-label centroids: elementwise mean via posexplode + two narrow
@@ -268,12 +466,7 @@ object Ann {
     * cardinality, so it does NOT scale cells with the corpus — the
     * unlabeled production build is [[kmeansCentroids]]. */
   def labelCentroids(embeddings: DataFrame): DataFrame =
-    embeddings
-      .select(col("label"), posexplode(col("embedding")).as(Seq("pos", "x")))
-      .groupBy("label", "pos").agg(avg("x").as("cx"))
-      .groupBy("label")
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("cx")))),
-        s => s.getField("cx").cast("float")).as("centroid"))
+    meanVectors(embeddings, Seq("label"), "centroid")
       .select(col("label").as("c_label"), col("centroid"))
 
   /** Top-`nprobe` nearest-centroid assignment by cosine (broadcast
@@ -290,16 +483,15 @@ object Ann {
     // shuffled and sorted every (vector, centroid) pair by vec_id,
     // a full corpus-sized exchange on every index build/assign pass).
     // Ordering contract is the window's exactly: sim DESC with NaN
-    // first (nanvl maps NaN below any real negated cosine; cosine is
-    // in [-1, 1]), ties by c_label ASC; `sim` is kept — callers
-    // select their own columns, and outlierScore needs the winning
-    // centroid's score.
+    // first (nanvl maps NaN to NaNKey), ties by c_label ASC; `sim` is
+    // kept — callers select their own columns, and outlierScore needs
+    // the winning centroid's score.
     val centArr = centroids
       .agg(collect_list(struct(col("c_label"), col("centroid"))).as("__cents"))
     val scored = transform(col("__cents"), c => {
       val sim = call_function("graft_cosine", col("embedding"),
         c.getField("centroid"))
-      struct(nanvl(-sim, lit(-2.0)).as("negsim"),
+      struct(nanvl(-sim, lit(NaNKey)).as("negsim"),
         c.getField("c_label").as("c_label"), sim.as("sim"))
     })
     val crossed = vectors.crossJoin(broadcast(centArr))
@@ -326,49 +518,6 @@ object Ann {
   /** Nearest-centroid (single-cell) assignment. */
   private[graft] def assign(vectors: DataFrame, centroids: DataFrame): DataFrame =
     assignN(vectors, centroids, 1)
-
-  /** MAP-SIDE bounded top-k per query — the aggregate-fold form of
-    * `row_number() OVER (PARTITION BY query_id ORDER BY sim DESC,
-    * neighbor_id) <= k` (the retrieval family's ranking tail). The
-    * window formulation sorts the FULL candidate product twice (a
-    * partial WindowGroupLimit still sorts each map partition before
-    * pruning, and the reduce side re-sorts after the exchange); the
-    * mergeable NeighborTopK fold keeps ≤ k rows per (query, map
-    * partition) in the partial aggregate, so nothing candidate-sized
-    * is ever sorted and the exchange carries k·|queries| rows per
-    * partition instead of the product (guide §2.3/§2.4).
-    *
-    * Ordering contract — the window's EXACTLY: sim DESC with NaN first
-    * (`nanvl(-sim, -2.0)`; cosine ∈ [-1,1] so -2 sorts below every
-    * real negated key), nulls LAST (`coalesce(..., 2.0)`, matching
-    * desc_nulls_last), ties by neighbor_id ASC. `+ 0.0` normalizes a
-    * -0.0 key to +0.0 so the fold compares ±0.0 equal exactly like
-    * SQL ordering does (negating sim maps ±0.0 sims onto ∓0.0 keys).
-    * The raw sim rides the non-compared payload slot, so the emitted
-    * value is bit-identical to the window path's.
-    *
-    * Input: (query_id, neighbor_id, sim double) — extra columns are
-    * dropped. Output: (query_id, neighbor_id, sim, rn int), rn = 1..k
-    * densely in ranking order. */
-  private[graft] def topKNeighbors(cand: DataFrame, k: Int): DataFrame = {
-    import org.apache.spark.sql.Encoders
-    val agg = udaf(new graft.functions.TypedAggregators.NeighborTopK(k),
-      Encoders.tuple(Encoders.scalaDouble, Encoders.scalaLong, Encoders.scalaDouble))
-    cand
-      .select(col("query_id"), col("neighbor_id"), col("sim"))
-      .withColumn("__key",
-        coalesce(nanvl(-col("sim"), lit(-2.0)), lit(2.0)) + lit(0.0))
-      .groupBy("query_id")
-      .agg(agg(col("__key"), col("neighbor_id"),
-        coalesce(col("sim"), lit(0.0))).as("__top"))
-      .select(col("query_id"), posexplode(col("__top")).as(Seq("__pos", "__t")))
-      .select(col("query_id"),
-        col("__t._2").as("neighbor_id"),
-        // a 2.0 key can only come from the null-sim coalesce branch
-        when(col("__t._1") === 2.0, lit(null).cast("double"))
-          .otherwise(col("__t._3")).as("sim"),
-        (col("__pos") + 1).cast("int").as("rn"))
-  }
 
   /** a03_centroid_assign — IVF-style coarse quantization: build one
     * centroid per label, then assign every vector to its nearest
@@ -434,19 +583,11 @@ object Ann {
     val spark = embeddings.sparkSession
     GraftFunctions.register(spark)
     import spark.implicits._
-    // TakeOrdered: map-side top-m per partition, never a full sort
-    val sample: Array[(Long, Array[Double])] = embeddings
-      .select(col("vec_id"), col("embedding"))
-      .orderBy(xxhash64(col("vec_id")), col("vec_id")).limit(trainSample)
+    val sample: Array[(Long, Array[Double])] = trainingSample(embeddings, trainSample)
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).map(_.toDouble).toArray))
     require(sample.nonEmpty, "kmeansCentroids: embeddings table is empty — nothing to train on")
     val kEff = math.min(k, sample.length)
-    def cos(a: Array[Double], b: Array[Double]): Double = {
-      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < a.length) { dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
-      dot / (math.sqrt(na) * math.sqrt(nb))
-    }
     val dim = sample.head._2.length
     // seeds = the kEff scrambled-first vectors (the sample is already in
     // scrambled order), re-labeled 1..kEff in vec_id order
@@ -459,7 +600,7 @@ object Ann {
       sample.foreach { case (_, v) =>
         var best = 0; var bestSim = Double.NegativeInfinity
         centroids.foreach { case (lbl, c) =>
-          val s = cos(v, c)
+          val s = cosine(v, c)
           if (s > bestSim) { bestSim = s; best = lbl } // ascending labels: ties keep the smallest
         }
         var i = 0
@@ -495,8 +636,7 @@ object Ann {
     def collected(df: DataFrame): DataFrame =
       df.collect().map(r => (r.getInt(0), r.getSeq[Float](1).toArray)).toSeq
         .toDF("c_label", "centroid")
-    val seeds = embeddings.select(col("vec_id"), col("embedding"))
-      .orderBy(xxhash64(col("vec_id")), col("vec_id")).limit(k)
+    val seeds = trainingSample(embeddings, k)
       .select(
         row_number().over(Window.orderBy("vec_id")).as("c_label"),
         col("embedding").as("centroid"))
@@ -507,12 +647,7 @@ object Ann {
       .toDF("c_label", "centroid")
     for (_ <- 1 to iters) {
       val assigned = assign(embeddings.select(col("vec_id"), col("embedding")), cents)
-      cents = collected(assigned
-        .select(col("c_label"), posexplode(col("embedding")).as(Seq("pos", "x")))
-        .groupBy("c_label", "pos").agg(avg("x").as("cx"))
-        .groupBy("c_label")
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("cx")))),
-          s => s.getField("cx").cast("float")).as("centroid")))
+      cents = collected(meanVectors(assigned, Seq("c_label"), "centroid"))
     }
     cents
   }
@@ -566,11 +701,7 @@ object Ann {
       .select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"), col("c_label"))
     // bounded aggregate fold instead of the rank window: the probed
     // cells' candidate volume never sorts or shuffles (topKNeighbors)
-    val cand = q.join(c, "c_label")
-      .withColumn("sim", expr("graft_cosine(qe, ce)"))
-    topKNeighbors(cand, k)
-      .select(col("query_id"), col("neighbor_id"),
-        stableRound(col("sim"), 4).as("cos_sim"), col("rn"))
+    foldTopK(q.join(c, "c_label").withColumn("sim", expr("graft_cosine(qe, ce)")), k)
       .orderBy("query_id", "rn")
   }
 
@@ -635,48 +766,19 @@ object Ann {
     val subDim = dim / m
     val spark = embeddings.sparkSession
     GraftFunctions.register(spark)
-    import spark.implicits._
-    val sample: Array[Array[Float]] = embeddings
-      .select(col("vec_id"), col("embedding"))
-      .orderBy(xxhash64(col("vec_id")), col("vec_id")).limit(trainSample)
-      .collect().map(_.getSeq[Float](1).toArray)
-    require(sample.nonEmpty, "pqKnn: embeddings table is empty — nothing to train on")
-    require(sample.length >= ksub,
-      s"pqKnn: training sample (${sample.length}) must cover ksub=$ksub distinct seeds — " +
-        "duplicate seeds would leave permanently empty codebook cells")
-    val codebook = trainPqCodebook(sample, m, ksub, subDim, iters)
+    val pq = PqCodec(trainPqCodebook(pqSample(embeddings, trainSample, ksub, "pqKnn"),
+      m, ksub, subDim, iters), m, ksub, subDim)
     // the trained codebook can't transit SQL text (Column-from-
     // Expression constructors are sql-private), so bind it through a
     // per-call registry entry: the builder closure captures the
     // codebook, analysis is EAGER at DataFrame creation, and the
     // temporary name is dropped before returning — nothing leaks
-    val fname = GraftFunctions.registerPqEncode(spark, codebook, m, ksub, subDim)
+    val fname = GraftFunctions.registerPqEncode(spark, pq.codebook, m, ksub, subDim)
     val cands = embeddings.filter(col("vec_id") >= nQueries)
       .select(col("vec_id").as("neighbor_id"),
         posexplode(expr(s"$fname(embedding)")).as(Seq("sub", "cid")))
-    // ADC tables: nQueries x m x ksub rows of (partial dot, centroid
-    // norm term, query norm) — tiny, broadcast
-    val queries = embeddings.filter(col("vec_id") < nQueries)
-      .select(col("vec_id"), col("embedding")).orderBy("vec_id")
-      .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-    val tables = for {
-      (qid, qv) <- queries.toSeq
-      sub <- 0 until m
-      cid <- 0 until ksub
-    } yield {
-      val base = (sub * ksub + cid) * subDim
-      var pdot = 0.0; var ndot = 0.0
-      var d = 0
-      while (d < subDim) {
-        pdot += qv(sub * subDim + d).toDouble * codebook(base + d)
-        ndot += codebook(base + d).toDouble * codebook(base + d)
-        d += 1
-      }
-      val qnorm = math.sqrt(qv.map(x => x.toDouble * x).sum)
-      (qid, sub, cid, pdot, ndot, qnorm)
-    }
-    val tablesDf = tables.toDF("query_id", "sub", "cid", "pdot", "ndot", "qnorm")
-    val wApprox = Window.partitionBy("query_id").orderBy(col("approx").desc, col("neighbor_id"))
+    val queries = collectQueries(embeddings, nQueries)
+    val tablesDf = adcTable(spark, queries, pq)
     // IVF-PQ seam: with a (query_id, neighbor_id) candidate table the
     // ADC scan touches only those pairs — the posting-list shape of a
     // cell-restricted index — instead of the full query x corpus product
@@ -685,14 +787,12 @@ object Ann {
       case Some(cp) => cands.join(cp, "neighbor_id")
         .join(broadcast(tablesDf), Seq("query_id", "sub", "cid"))
     }
-    val shortlist = scored
+    val approx = scored
       .groupBy("query_id", "neighbor_id")
       .agg((sum(col("pdot")) / (max(col("qnorm")) * sqrt(sum(col("ndot"))))).as("approx"))
-      .withColumn("arn", row_number().over(wApprox))
-      .filter(col("arn") <= rerank)
-      .select("query_id", "neighbor_id")
     // exact re-rank of the PQ shortlist only
-    val out = exactRerank(embeddings, shortlist, queries, k)
+    val out = exactRerank(embeddings, shortlist(approx, col("approx").desc, rerank),
+      queries, k)
     GraftFunctions.dropFunction(spark, fname) // every dependent plan is already analyzed
     out
   }
@@ -701,22 +801,12 @@ object Ann {
     * shortlist, top-k per query — the final pass every approximate
     * index variant shares. */
   private def exactRerank(embeddings: DataFrame, shortlist: DataFrame,
-                          queries: Array[(Long, Array[Float])], k: Int): DataFrame = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    val qDf = queries.toSeq.map { case (qid, qv) => (qid, qv) }.toDF("query_id", "qe")
-    val w = Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id"))
-    shortlist
-      .join(broadcast(qDf), "query_id")
+                          queries: Array[(Long, Array[Float])], k: Int): DataFrame =
+    windowTopK(shortlist
+      .join(broadcast(queryFrame(embeddings.sparkSession, queries)), "query_id")
       .join(embeddings.select(col("vec_id").as("neighbor_id"), col("embedding").as("ce")),
         "neighbor_id")
-      .withColumn("sim", expr("graft_cosine(qe, ce)"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("neighbor_id"),
-        stableRound(col("sim"), 4).as("cos_sim"), col("rn"))
-      .orderBy("query_id", "rn")
-  }
+      .withColumn("sim", expr("graft_cosine(qe, ce)")), k)
 
   /** a17_sq8_knn — 8-bit scalar-quantization ANN (the FAISS SQ8
     * codec), completing the quantization family between brute floats
@@ -760,24 +850,14 @@ object Ann {
     GraftFunctions.register(spark)
     val (lo, scale) = trainSq8Ranges(embeddings, dim)
     val (encF, simF) = GraftFunctions.registerSq8(spark, lo, scale)
-    val queries = embeddings.filter(col("vec_id") < nQueries)
-      .select(col("vec_id"), col("embedding")).orderBy("vec_id")
-      .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-    val spark2 = spark
-    import spark2.implicits._
-    val qDf = queries.toSeq.map { case (qid, qv) => (qid, qv) }.toDF("query_id", "qe")
+    val queries = collectQueries(embeddings, nQueries)
     val cands = embeddings.filter(col("vec_id") >= nQueries)
       .select(col("vec_id").as("neighbor_id"), expr(s"$encF(embedding)").as("codes"))
-    val wApprox = Window.partitionBy("query_id")
-      .orderBy(col("approx").desc, col("neighbor_id"))
-    val shortlist = broadcast(qDf).crossJoin(cands)
+    val approx = broadcast(queryFrame(spark, queries)).crossJoin(cands)
       .withColumn("approx", expr(s"$simF(qe, codes)"))
-      .withColumn("arn", row_number().over(wApprox))
-      .filter(col("arn") <= rerank)
-      .select("query_id", "neighbor_id")
-    val out = exactRerank(embeddings, shortlist, queries, k)
-    GraftFunctions.dropFunction(spark, encF) // dependent plans already analyzed
-    GraftFunctions.dropFunction(spark, simF)
+    val out = exactRerank(embeddings, shortlist(approx, col("approx").desc, rerank),
+      queries, k)
+    Seq(encF, simF).foreach(GraftFunctions.dropFunction(spark, _)) // plans already analyzed
     out
   }
 
@@ -817,25 +897,22 @@ object Ann {
     * shortlist and recall@3 on real embeddings. */
   def bqKnn(embeddings: DataFrame, nQueries: Int = 10, k: Int = 3,
             rerank: Int = 100): DataFrame = {
-    val spark = embeddings.sparkSession
-    GraftFunctions.register(spark)
-    val queries = embeddings.filter(col("vec_id") < nQueries)
-      .select(col("vec_id"), col("embedding")).orderBy("vec_id")
-      .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-    val spark2 = spark
-    import spark2.implicits._
-    val qDf = queries.toSeq.map { case (qid, qv) => (qid, qv) }.toDF("query_id", "qe")
+    GraftFunctions.register(embeddings.sparkSession)
+    val queries = collectQueries(embeddings, nQueries)
+    exactRerank(embeddings,
+      shortlist(bqHamming(embeddings, nQueries, queries), col("ham").asc, rerank), queries, k)
+  }
+
+  /** The brute sign-bit scan of a27 and its recall curve: every
+    * (query, corpus vector) pair with its code Hamming distance `ham`. */
+  private def bqHamming(embeddings: DataFrame, nQueries: Int,
+                        queries: Array[(Long, Array[Float])]): DataFrame = {
+    val qDf = queryFrame(embeddings.sparkSession, queries)
       .withColumn("qcode", expr("graft_signbits(qe)"))
     val cands = embeddings.filter(col("vec_id") >= nQueries)
       .select(col("vec_id").as("neighbor_id"), expr("graft_signbits(embedding)").as("code"))
-    val wApprox = Window.partitionBy("query_id")
-      .orderBy(col("ham").asc, col("neighbor_id"))
-    val shortlist = broadcast(qDf).crossJoin(cands)
+    broadcast(qDf).crossJoin(cands)
       .withColumn("ham", expr("graft_hamming(qcode, code)"))
-      .withColumn("arn", row_number().over(wApprox))
-      .filter(col("arn") <= rerank)
-      .select("query_id", "neighbor_id")
-    exactRerank(embeddings, shortlist, queries, k)
   }
 
   /** a18_ivf_sq8 — IVF cells over SQ8 codes (the FAISS
@@ -860,24 +937,17 @@ object Ann {
     val cents = resolveCentroids(embeddings, centroids, cells)
     val (lo, scale) = trainSq8Ranges(embeddings, dim)
     val (encF, simF) = GraftFunctions.registerSq8(spark, lo, scale)
-    val queries = embeddings.filter(col("vec_id") < nQueries)
-      .select(col("vec_id"), col("embedding")).orderBy("vec_id")
-      .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
+    val queries = collectQueries(embeddings, nQueries)
     val q = assignN(embeddings.filter(col("vec_id") < nQueries), cents, nprobe)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"), col("c_label"))
     val c = assign(embeddings.filter(col("vec_id") >= nQueries), cents)
       .select(col("vec_id").as("neighbor_id"),
         expr(s"$encF(embedding)").as("codes"), col("c_label"))
-    val wApprox = Window.partitionBy("query_id")
-      .orderBy(col("approx").desc, col("neighbor_id"))
-    val shortlist = q.join(c, "c_label")
+    val approx = q.join(c, "c_label")
       .withColumn("approx", expr(s"$simF(qe, codes)"))
-      .withColumn("arn", row_number().over(wApprox))
-      .filter(col("arn") <= rerank)
-      .select("query_id", "neighbor_id")
-    val out = exactRerank(embeddings, shortlist, queries, k)
-    GraftFunctions.dropFunction(spark, encF) // dependent plans already analyzed
-    GraftFunctions.dropFunction(spark, simF)
+    val out = exactRerank(embeddings, shortlist(approx, col("approx").desc, rerank),
+      queries, k)
+    Seq(encF, simF).foreach(GraftFunctions.dropFunction(spark, _)) // plans already analyzed
     out
   }
 
@@ -941,24 +1011,14 @@ object Ann {
     val cents = resolveCentroids(embeddings, None, cells)
     val centsArr: Array[(Int, Array[Float])] = cents.collect()
       .map(r => (r.getInt(0), r.getSeq[Float](1).toArray)).sortBy(_._1)
-    def cos(a: Array[Float], b: Array[Float]): Double = {
-      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < a.length) {
-        dot += a(i).toDouble * b(i); na += a(i).toDouble * a(i); nb += b(i).toDouble * b(i)
-        i += 1
-      }
-      dot / (math.sqrt(na) * math.sqrt(nb))
+    val centsD = centsArr.map { case (lbl, c) => (lbl, c.map(_.toDouble)) }
+    def nearestCell(v: Array[Float]): Int = {
+      val vd = v.map(_.toDouble)
+      centsD.maxBy { case (lbl, c) => (cosine(vd, c), -lbl) }._1
     }
-    def nearestCell(v: Array[Float]): Int =
-      centsArr.maxBy { case (lbl, c) => (cos(v, c), -lbl) }._1
     // residual training sample: same deterministic scramble as a08,
     // residual = v - centroid(nearest cell), driver-side
-    val sample: Array[Array[Float]] = embeddings
-      .select(col("vec_id"), col("embedding"))
-      .orderBy(xxhash64(col("vec_id")), col("vec_id")).limit(trainSample)
-      .collect().map(_.getSeq[Float](1).toArray)
-    require(sample.length >= ksub,
-      s"ivfPqKnnResidual: training sample (${sample.length}) must cover ksub=$ksub seeds")
+    val sample = pqSample(embeddings, trainSample, ksub, "ivfPqKnnResidual")
     val centById = centsArr.toMap
     val residuals = sample.map { v =>
       val c = centById(nearestCell(v))
@@ -976,9 +1036,7 @@ object Ann {
         posexplode(expr(
           s"$fname(zip_with(embedding, centroid, (a, b) -> a - b))"))
           .as(Seq("sub", "cid")))
-    val queries = embeddings.filter(col("vec_id") < nQueries)
-      .select(col("vec_id"), col("embedding")).orderBy("vec_id")
-      .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
+    val queries = collectQueries(embeddings, nQueries)
     // ADC tables (driver-built, broadcast)
     def subDot(a: Array[Float], base: Int, sub: Int): Double = {
       var s = 0.0; var d = 0
@@ -1011,8 +1069,7 @@ object Ann {
     }).toDF("query_id", "cell", "qcdot", "qnorm", "cnorm2")
     val cellPairs = qa.join(cands.select(col("neighbor_id"), col("cell")).distinct(), "cell")
       .select("query_id", "neighbor_id", "cell").distinct()
-    val wApprox = Window.partitionBy("query_id").orderBy(col("approx").desc, col("neighbor_id"))
-    val shortlist = cands
+    val approx = cands
       .join(cellPairs, Seq("neighbor_id", "cell"))
       .join(broadcast(qAdc), Seq("query_id", "sub", "cid"))
       .join(broadcast(cellAdc), Seq("cell", "sub", "cid"))
@@ -1023,10 +1080,8 @@ object Ann {
       .withColumn("approx",
         (col("qcdot") + col("spdot")) /
           (col("qnorm") * sqrt(col("cnorm2") + lit(2.0) * col("scdot") + col("srnorm"))))
-      .withColumn("arn", row_number().over(wApprox))
-      .filter(col("arn") <= rerank)
-      .select("query_id", "neighbor_id")
-    val out = exactRerank(embeddings, shortlist, queries, k)
+    val out = exactRerank(embeddings, shortlist(approx, col("approx").desc, rerank),
+      queries, k)
     GraftFunctions.dropFunction(spark, fname)
     out
   }
@@ -1231,14 +1286,11 @@ object Ann {
              pcaK: Int = 8, rerank: Int = 50): DataFrame = {
     GraftFunctions.register(embeddings.sparkSession)
     val model = pcaTrain(embeddings.select(col("vec_id"), col("embedding")), pcaK)
-    val shortlist = knnBrute(
+    val reduced = knnBrute(
       pcaProject(embeddings, pcaK, Some(model))
         .withColumnRenamed("reduced", "embedding"), nQueries, rerank)
       .select("query_id", "neighbor_id")
-    val queries = embeddings.filter(col("vec_id") < nQueries)
-      .select(col("vec_id"), col("embedding")).orderBy("vec_id")
-      .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-    exactRerank(embeddings, shortlist, queries, k)
+    exactRerank(embeddings, reduced, collectQueries(embeddings, nQueries), k)
   }
 
   def recallEval(embeddings: DataFrame, variant: String = "lsh",
@@ -1295,22 +1347,9 @@ object Ann {
     val exact = graft.Caches.tracked(
       knnBrute(embeddings, nQueries, k).select("query_id", "neighbor_id"))
     val nExact = exact.count().toDouble
-    val queries = embeddings.filter(col("vec_id") < nQueries)
-      .select(col("vec_id"), col("embedding")).orderBy("vec_id")
-      .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-    val qDf = queries.toSeq.map { case (qid, qv) => (qid, qv) }.toDF("query_id", "qe")
-      .withColumn("qcode", expr("graft_signbits(qe)"))
-    val cands = embeddings.filter(col("vec_id") >= nQueries)
-      .select(col("vec_id").as("neighbor_id"),
-        expr("graft_signbits(embedding)").as("code"))
-    val wApprox = Window.partitionBy("query_id")
-      .orderBy(col("ham").asc, col("neighbor_id"))
-    val shortAll = graft.Caches.tracked(
-      broadcast(qDf).crossJoin(cands)
-        .withColumn("ham", expr("graft_hamming(qcode, code)"))
-        .withColumn("arn", row_number().over(wApprox))
-        .filter(col("arn") <= depths.max)
-        .select("query_id", "neighbor_id", "arn"))
+    val queries = collectQueries(embeddings, nQueries)
+    val shortAll = graft.Caches.tracked(shortlist(bqHamming(embeddings, nQueries, queries),
+      col("ham").asc, depths.max, withRank = true))
     val rows = depths.distinct.sorted.map { dep =>
       val approx = exactRerank(embeddings,
         shortAll.filter(col("arn") <= dep).select("query_id", "neighbor_id"),
@@ -1417,7 +1456,7 @@ object Ann {
                              indexPath: String, targetRecall: Double,
                              k: Int): Option[(Int, Long)] =
     if (!graft.Fs.exists(spark, indexPath + "/calibration")) None
-    else spark.read.parquet(indexPath + "/calibration")
+    else Sources.readParquet(spark, indexPath + "/calibration")
       .filter(col("target_recall") === targetRecall && col("k") === k)
       .select("rerank", "n_vectors").collect().headOption
       .map(r => (r.getInt(0), r.getLong(1)))
@@ -1606,12 +1645,9 @@ object Ann {
     // cell-joined candidate product (Σ|cell|·nprobe rows — the op's
     // dominant volume) is never sorted, and only k rows per (query,
     // map partition) reach the exchange. See [[topKNeighbors]].
-    val cand = q.join(c, "c_label")
+    foldTopK(q.join(c, "c_label")
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("sim", expr("graft_cosine(qe, ce)"))
-    topKNeighbors(cand, k)
-      .select(col("query_id"), col("neighbor_id"),
-        stableRound(col("sim"), 4).as("cos_sim"), col("rn"))
+      .withColumn("sim", expr("graft_cosine(qe, ce)")), k)
       .orderBy("query_id", "rn")
   }
 
@@ -1759,14 +1795,7 @@ object Ann {
           .collect().map(r => (r.getInt(0), r.getInt(1), r.getSeq[Float](2).toArray, 0L))
       for (_ <- 1 to iters) {
         val subsDf = subs.toSeq.map(t => (t._1, t._2, t._3)).toDF("cell", "sub", "scent")
-        subs = assignSubs(subsDf)
-          .select(col("cell"), col("sub"), posexplode(col("embedding")).as(Seq("pos", "x")))
-          .groupBy("cell", "sub", "pos")
-          .agg(avg("x").as("cx"), count(lit(1)).as("n"))
-          .groupBy("cell", "sub")
-          .agg(transform(array_sort(collect_list(struct(col("pos"), col("cx")))),
-            s => s.getField("cx").cast("float")).as("scent"),
-            max("n").as("n"))
+        subs = meanVectors(assignSubs(subsDf), Seq("cell", "sub"), "scent", counted = true)
           .collect().map(r =>
             (r.getInt(0), r.getInt(1), r.getSeq[Float](2).toArray, r.getLong(3)))
       }
@@ -1806,14 +1835,7 @@ object Ann {
   def writeAnnIndex(corpus: DataFrame, centroids: DataFrame, path: String,
                     batchId: Option[Long] = None): Unit = {
     GraftFunctions.register(corpus.sparkSession)
-    // centroids/ and vectors/ are independent writes (the cell
-    // assignment consumes the in-memory centroid frame, not the
-    // written file) — overlap them (graft.Par)
-    graft.Par.jobs(
-      () => centroids.write.mode("overwrite").parquet(path + "/centroids"),
-      () => Sources.writeBatch(assign(corpus, centroids)
-        .select(col("vec_id"), col("embedding"), col("c_label")),
-        path + "/vectors", batchId, seeding = true, "c_label"))
+    seedCells(corpus, centroids, path, "vectors", col("embedding"), batchId)
   }
 
   /** Append a batch to a saved ANN index WITHOUT retraining (a12's
@@ -1827,12 +1849,8 @@ object Ann {
     * replay-idempotent — and requires a batch-seeded index. */
   def appendAnnIndex(batch: DataFrame, indexPath: String,
                      batchId: Option[Long] = None): Unit = {
-    val spark = batch.sparkSession
-    GraftFunctions.register(spark)
-    val cents = Sources.readParquet(spark, indexPath + "/centroids")
-    Sources.writeBatch(assign(batch, cents)
-      .select(col("vec_id"), col("embedding"), col("c_label")),
-      indexPath + "/vectors", batchId, seeding = false, "c_label")
+    GraftFunctions.register(batch.sparkSession)
+    appendCells(batch, indexPath, "vectors", col("embedding"), batchId)
   }
 
   /** Per-cell occupancy + needs_split over a SAVED index — a12's
@@ -1886,10 +1904,8 @@ object Ann {
     val spark = queries.sparkSession
     GraftFunctions.register(spark)
     val (q, probed, _) = routeToCells(queries, indexPath, nprobe)
-    val c = Sources.readParquet(spark, indexPath + "/vectors")
-      .filter(col("c_label").isin(probed: _*))
-      .select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"),
-        col("c_label"))
+    val c = probedCells(spark, indexPath, "vectors", probed,
+      col("embedding").as("ce"), col("c_label"))
     val cand = q.join(c, "c_label")
       // excludeSelf=false is the knnFor convention (a20/a21: query docs
       // ARE corpus docs, the self-hit is the rank-1 anchor both runs
@@ -1897,9 +1913,7 @@ object Ann {
       .filter(!lit(excludeSelf) || col("query_id") =!= col("neighbor_id"))
       .withColumn("sim", expr("graft_cosine(qe, ce)"))
     // bounded aggregate fold instead of the rank window (topKNeighbors)
-    topKNeighbors(cand, k)
-      .select(col("query_id"), col("neighbor_id"),
-        stableRound(col("sim"), 4).as("cos_sim"), col("rn"))
+    foldTopK(cand, k)
   }
 
   /** A saved index's centroid table held on the driver: the `c_label`
@@ -1931,7 +1945,7 @@ object Ann {
     * collects the batch and assigns each query to its `nprobe` cells
     * under `assignN`'s contract exactly — the same cosine kernel
     * (`CosineSimilarity.of`, null for a null vector), NaN scored as
-    * -2.0 after negation, and Spark's own struct ordering over
+    * [[NaNKey]] after negation, and Spark's own struct ordering over
     * (negated sim, c_label, sim), so nulls come first, ±0.0 compare
     * equal and ties go to the lower c_label. Each query keeps its best
     * `nprobe` cells in a bounded heap; a cell whose negated sim is
@@ -1972,7 +1986,7 @@ object Ann {
           else if (order.lt(cand, worst)) { picks.poll(); picks.add(cand) }
         } else {
           val sim = CosineSimilarity.of(v, c)
-          val negsim = if (sim.isNaN) -2.0 else -sim
+          val negsim = if (sim.isNaN) NaNKey else -sim
           // nulls sort first, so a null-scored worst beats any score
           if (worst == null) picks.add(InternalRow(negsim, key, sim, j))
           else if (!worst.isNullAt(0) && negsim <= worst.getDouble(0)) {
@@ -1994,11 +2008,6 @@ object Ann {
   private def queryVectors(rows: Array[Row]): Array[(Long, Array[Float])] =
     rows.map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).sortBy(_._1)
 
-  /** The one row a codes index saves in `meta/`: the SQ8 ranges
-    * (lo, scale) or the PQ codebook (codebook, m, ksub, sub_dim). */
-  private def metaRow(spark: org.apache.spark.sql.SparkSession, indexPath: String): Row =
-    Sources.readParquet(spark, indexPath + "/meta").collect()(0)
-
   /** sink_ann_index_sq8 — the CODES-ONLY saved index (`writeAnnIndex`
     * at a quarter the bytes): cells store each vector as dim BYTES of
     * SQ8 codes, never floats — at 1e9+ vectors this is the layout
@@ -2016,17 +2025,10 @@ object Ann {
     GraftFunctions.register(spark)
     import spark.implicits._
     val (lo, scale) = trainSq8Ranges(corpus, dim)
-    val (encF, _) = GraftFunctions.registerSq8(spark, lo, scale)
-    // centroids/, meta/ and codes/ are independent once the ranges are
-    // trained — overlap the three writes (graft.Par)
-    graft.Par.jobs(
-      () => centroids.write.mode("overwrite").parquet(path + "/centroids"),
-      () => Seq((lo.toSeq, scale.toSeq)).toDF("lo", "scale")
-        .write.mode("overwrite").parquet(path + "/meta"),
-      () => Sources.writeBatch(assign(corpus, centroids)
-        .select(col("vec_id"), expr(s"$encF(embedding)").as("codes"), col("c_label")),
-        path + "/codes", batchId, seeding = true, "c_label"))
-    GraftFunctions.dropFunction(spark, encF)
+    val (encF, simF) = GraftFunctions.registerSq8(spark, lo, scale)
+    seedCells(corpus, centroids, path, "codes", expr(s"$encF(embedding)").as("codes"), batchId,
+      meta = Some(Seq((lo.toSeq, scale.toSeq)).toDF("lo", "scale")))
+    Seq(encF, simF).foreach(GraftFunctions.dropFunction(spark, _))
   }
 
   /** Append a batch to a saved SQ8 index: assign under the SAVED
@@ -2040,14 +2042,9 @@ object Ann {
                         batchId: Option[Long] = None): Unit = {
     val spark = batch.sparkSession
     GraftFunctions.register(spark)
-    val cents = Sources.readParquet(spark, indexPath + "/centroids")
-    val m = metaRow(spark, indexPath)
-    val (encF, _) = GraftFunctions.registerSq8(spark,
-      m.getSeq[Float](0).toArray, m.getSeq[Float](1).toArray)
-    Sources.writeBatch(assign(batch, cents)
-      .select(col("vec_id"), expr(s"$encF(embedding)").as("codes"), col("c_label")),
-      indexPath + "/codes", batchId, seeding = false, "c_label")
-    GraftFunctions.dropFunction(spark, encF)
+    val (encF, simF) = savedSq8(spark, indexPath)
+    appendCells(batch, indexPath, "codes", expr(s"$encF(embedding)").as("codes"), batchId)
+    Seq(encF, simF).foreach(GraftFunctions.dropFunction(spark, _))
   }
 
   /** a19_ivf_sq8_indexed — a18's search against the CODES-ONLY saved
@@ -2062,23 +2059,13 @@ object Ann {
                        k: Int = 3, nprobe: Int = 2): DataFrame = {
     val spark = queries.sparkSession
     GraftFunctions.register(spark)
-    val m = metaRow(spark, indexPath)
-    val (_, simF) = GraftFunctions.registerSq8(spark,
-      m.getSeq[Float](0).toArray, m.getSeq[Float](1).toArray)
+    val (encF, simF) = savedSq8(spark, indexPath)
     val (q, probed, _) = routeToCells(queries, indexPath, nprobe)
-    val c = Sources.readParquet(spark, indexPath + "/codes")
-      .filter(col("c_label").isin(probed: _*))
-      .select(col("vec_id").as("neighbor_id"), col("codes"), col("c_label"))
-    val w = Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id"))
-    val out = q.join(c, "c_label")
+    val c = probedCells(spark, indexPath, "codes", probed, col("codes"), col("c_label"))
+    val out = windowTopK(q.join(c, "c_label")
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("sim", expr(s"$simF(qe, codes)"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("neighbor_id"),
-        stableRound(col("sim"), 4).as("cos_sim"), col("rn"))
-      .orderBy("query_id", "rn")
-    GraftFunctions.dropFunction(spark, simF) // dependent plans already analyzed
+      .withColumn("sim", expr(s"$simF(qe, codes)")), k)
+    Seq(encF, simF).foreach(GraftFunctions.dropFunction(spark, _)) // plans already analyzed
     out
   }
 
@@ -2099,15 +2086,9 @@ object Ann {
     * instead of pretending 1-bit codes alone can rank a top-3. */
   def writeAnnIndexBq(corpus: DataFrame, centroids: DataFrame, path: String,
                       batchId: Option[Long] = None): Unit = {
-    val spark = corpus.sparkSession
-    GraftFunctions.register(spark)
-    // independent relations — overlap the writes (graft.Par)
-    graft.Par.jobs(
-      () => centroids.write.mode("overwrite").parquet(path + "/centroids"),
-      () => Sources.writeBatch(assign(corpus, centroids)
-        .select(col("vec_id"), expr("graft_signbits(embedding)").as("codes"),
-          col("c_label")),
-        path + "/codes", batchId, seeding = true, "c_label"))
+    GraftFunctions.register(corpus.sparkSession)
+    seedCells(corpus, centroids, path, "codes", expr("graft_signbits(embedding)").as("codes"),
+      batchId)
   }
 
   /** Append a batch to a saved BQ index: assign under the SAVED
@@ -2117,13 +2098,9 @@ object Ann {
     * `batchId` ([[Sources.writeBatch]]). */
   def appendAnnIndexBq(batch: DataFrame, indexPath: String,
                        batchId: Option[Long] = None): Unit = {
-    val spark = batch.sparkSession
-    GraftFunctions.register(spark)
-    val cents = Sources.readParquet(spark, indexPath + "/centroids")
-    Sources.writeBatch(assign(batch, cents)
-      .select(col("vec_id"), expr("graft_signbits(embedding)").as("codes"),
-        col("c_label")),
-      indexPath + "/codes", batchId, seeding = false, "c_label")
+    GraftFunctions.register(batch.sparkSession)
+    appendCells(batch, indexPath, "codes", expr("graft_signbits(embedding)").as("codes"),
+      batchId)
   }
 
   /** a28_ivf_bq_indexed — search against the saved sign-bit index in
@@ -2149,18 +2126,11 @@ object Ann {
     GraftFunctions.register(spark)
     val (routed, probed, rows) = routeToCells(queries, indexPath, nprobe)
     val q = routed.select(col("query_id"), expr("graft_signbits(qe)").as("qcode"), col("c_label"))
-    val c = Sources.readParquet(spark, indexPath + "/codes")
-      .filter(col("c_label").isin(probed: _*))
-      .select(col("vec_id").as("neighbor_id"), col("codes"), col("c_label"))
-    val wHam = Window.partitionBy("query_id")
-      .orderBy(col("ham").asc, col("neighbor_id"))
-    val shortlist = q.join(c, "c_label")
+    val c = probedCells(spark, indexPath, "codes", probed, col("codes"), col("c_label"))
+    val ham = q.join(c, "c_label")
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("ham", expr("graft_hamming(qcode, codes)"))
-      .withColumn("arn", row_number().over(wHam))
-      .filter(col("arn") <= rerank)
-      .select("query_id", "neighbor_id")
-    exactRerank(floatSource, shortlist, queryVectors(rows), k)
+    exactRerank(floatSource, shortlist(ham, col("ham").asc, rerank), queryVectors(rows), k)
   }
 
   /** sink_ann_index_pq — the M-CODES saved index, the cold tier below
@@ -2184,24 +2154,11 @@ object Ann {
     val spark = corpus.sparkSession
     GraftFunctions.register(spark)
     import spark.implicits._
-    val sample: Array[Array[Float]] = corpus
-      .select(col("vec_id"), col("embedding"))
-      .orderBy(xxhash64(col("vec_id")), col("vec_id")).limit(trainSample)
-      .collect().map(_.getSeq[Float](1).toArray)
-    require(sample.length >= ksub,
-      s"writeAnnIndexPq: training sample (${sample.length}) must cover ksub=$ksub seeds")
-    val codebook = trainPqCodebook(sample, m, ksub, subDim, iters)
+    val codebook = trainPqCodebook(pqSample(corpus, trainSample, ksub, "writeAnnIndexPq"),
+      m, ksub, subDim, iters)
     val fname = GraftFunctions.registerPqEncode(spark, codebook, m, ksub, subDim)
-    // centroids/, meta/ and codes/ are independent once the codebook
-    // is trained — overlap the three writes (graft.Par)
-    graft.Par.jobs(
-      () => centroids.write.mode("overwrite").parquet(path + "/centroids"),
-      () => Seq((codebook.toSeq, m, ksub, subDim))
-        .toDF("codebook", "m", "ksub", "sub_dim")
-        .write.mode("overwrite").parquet(path + "/meta"),
-      () => Sources.writeBatch(assign(corpus, centroids)
-        .select(col("vec_id"), expr(s"$fname(embedding)").as("codes"), col("c_label")),
-        path + "/codes", batchId, seeding = true, "c_label"))
+    seedCells(corpus, centroids, path, "codes", expr(s"$fname(embedding)").as("codes"), batchId,
+      meta = Some(Seq((codebook.toSeq, m, ksub, subDim)).toDF("codebook", "m", "ksub", "sub_dim")))
     GraftFunctions.dropFunction(spark, fname)
   }
 
@@ -2214,13 +2171,9 @@ object Ann {
                        batchId: Option[Long] = None): Unit = {
     val spark = batch.sparkSession
     GraftFunctions.register(spark)
-    val cents = Sources.readParquet(spark, indexPath + "/centroids")
-    val meta = metaRow(spark, indexPath)
-    val fname = GraftFunctions.registerPqEncode(spark,
-      meta.getSeq[Float](0).toArray, meta.getInt(1), meta.getInt(2), meta.getInt(3))
-    Sources.writeBatch(assign(batch, cents)
-      .select(col("vec_id"), expr(s"$fname(embedding)").as("codes"), col("c_label")),
-      indexPath + "/codes", batchId, seeding = false, "c_label")
+    val pq = savedPq(spark, indexPath)
+    val fname = GraftFunctions.registerPqEncode(spark, pq.codebook, pq.m, pq.ksub, pq.subDim)
+    appendCells(batch, indexPath, "codes", expr(s"$fname(embedding)").as("codes"), batchId)
     GraftFunctions.dropFunction(spark, fname)
   }
 
@@ -2238,43 +2191,18 @@ object Ann {
                       k: Int = 3, nprobe: Int = 2): DataFrame = {
     val spark = queries.sparkSession
     GraftFunctions.register(spark)
-    import spark.implicits._
-    val meta = metaRow(spark, indexPath)
-    val codebook = meta.getSeq[Float](0).toArray
-    val (m, ksub, subDim) = (meta.getInt(1), meta.getInt(2), meta.getInt(3))
+    val pq = savedPq(spark, indexPath)
     val (routed, probed, rows) = routeToCells(queries, indexPath, nprobe)
     val q = routed.select("query_id", "c_label")
     // ADC tables: |queries| x m x ksub rows — tiny, broadcast (the a08 build)
-    val tables = for {
-      (qid, v) <- queryVectors(rows).toSeq
-      sub <- 0 until m
-      cid <- 0 until ksub
-    } yield {
-      val base = (sub * ksub + cid) * subDim
-      var pdot = 0.0; var ndot = 0.0
-      var d = 0
-      while (d < subDim) {
-        pdot += v(sub * subDim + d).toDouble * codebook(base + d)
-        ndot += codebook(base + d).toDouble * codebook(base + d)
-        d += 1
-      }
-      (qid, sub, cid, pdot, ndot, math.sqrt(v.map(x => x.toDouble * x).sum))
-    }
-    val tablesDf = tables.toDF("query_id", "sub", "cid", "pdot", "ndot", "qnorm")
-    val cands = Sources.readParquet(spark, indexPath + "/codes")
-      .filter(col("c_label").isin(probed: _*))
-      .select(col("vec_id").as("neighbor_id"), col("c_label"),
-        posexplode(col("codes")).as(Seq("sub", "cid")))
-    val w = Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id"))
-    q.join(cands, "c_label")
+    val tablesDf = adcTable(spark, queryVectors(rows), pq)
+    val cands = probedCells(spark, indexPath, "codes", probed, col("c_label"),
+      posexplode(col("codes")).as(Seq("sub", "cid")))
+    windowTopK(q.join(cands, "c_label")
       .filter(col("query_id") =!= col("neighbor_id"))
       .join(broadcast(tablesDf), Seq("query_id", "sub", "cid"))
       .groupBy("query_id", "neighbor_id")
-      .agg((sum(col("pdot")) / (max(col("qnorm")) * sqrt(sum(col("ndot"))))).as("sim"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("neighbor_id"),
-        stableRound(col("sim"), 4).as("adc_sim"), col("rn"))
-      .orderBy("query_id", "rn")
+      .agg((sum(col("pdot")) / (max(col("qnorm")) * sqrt(sum(col("ndot"))))).as("sim")),
+      k, score = "adc_sim")
   }
 }

@@ -480,17 +480,26 @@ object Dedup {
       verifiedSelfPairs(batchSets, batchSig, threshold))
   }
 
-  /** The shared batch∪corpus derivation behind d11 and d12: side-
-    * tagged shingle sets (ONE tracked cache — membership never needs
-    * an id-set join, so the split is free at any batch size) and the
-    * band-signature relation over them. Built once per call chain so
-    * the admission's two legs never re-shingle the batch. */
+  /** Batch∪corpus shingle sets tagged by side (`is_new`) inside the
+    * union — ONE tracked cache; membership never needs an id-set join,
+    * so the split is free at any batch size, and a doc_id on both sides
+    * stays two docs, each verified against its own side's text. The
+    * batch∪corpus input of d11, d12 and d20. */
+  private def taggedSets(newDocs: DataFrame, corpus: DataFrame,
+                         dfCap: Option[Long]): DataFrame =
+    graft.Caches.tracked(cappedShingleSets(
+      newDocs.select("doc_id", "text").withColumn("is_new", lit(true))
+        .unionByName(corpus.select("doc_id", "text").withColumn("is_new", lit(false))),
+      dfCap, "is_new"))
+
+  /** The shared batch∪corpus derivation behind d11 and d12: the
+    * [[taggedSets]] and the band-signature relation over them. Built
+    * once per call chain so the admission's two legs never re-shingle
+    * the batch. */
   private def taggedPipeline(newDocs: DataFrame, corpus: DataFrame,
                              numHashes: Int, bands: Int,
                              dfCap: Option[Long]): (DataFrame, DataFrame) = {
-    val union = newDocs.select("doc_id", "text").withColumn("is_new", lit(true))
-      .unionByName(corpus.select("doc_id", "text").withColumn("is_new", lit(false)))
-    val shingled = graft.Caches.tracked(cappedShingleSets(union, dfCap, "is_new"))
+    val shingled = taggedSets(newDocs, corpus, dfCap)
     (shingled, bandSigs(shingled, numHashes, bands, "is_new"))
   }
 
@@ -1413,12 +1422,9 @@ object Dedup {
                          dfCap: Option[Long] = None): DataFrame = {
     require(threshold > 0 && threshold <= 1.0,
       s"containmentAgainst: threshold must be in (0,1], got $threshold")
-    val union = newDocs.select("doc_id", "text")
-      .unionByName(corpus.select("doc_id", "text"))
-    val shingled = graft.Caches.tracked(cappedShingleSets(union, dfCap))
-    val newIds = broadcast(newDocs.select(col("doc_id"), lit(true).as("is_new")))
-    val e = shingled.join(newIds, Seq("doc_id"), "left_outer")
-      .select(col("doc_id"), coalesce(col("is_new"), lit(false)).as("is_new"),
+    val shingled = taggedSets(newDocs, corpus, dfCap)
+    val e = shingled
+      .select(col("doc_id"), col("is_new"),
         size(col("sh")).cast("long").as("nsh"), explode(col("sh")).as("sh_h"))
     val withDf = e.withColumn("cdf",
       sum(when(col("is_new"), 0L).otherwise(1L)).over(Window.partitionBy("sh_h")))
@@ -1436,8 +1442,8 @@ object Dedup {
         Seq("sh_h"))
       .filter(col("n_corp") >= need(col("nsh"), threshold))
       .select(col("doc_id"), col("corpus_doc")).distinct()
-    containmentReport(cand, shingled, shingled, "new_doc", "corpus_doc",
-        threshold, minShingles)
+    containmentReport(cand, shingled.filter(col("is_new")), shingled.filter(!col("is_new")),
+        "new_doc", "corpus_doc", threshold, minShingles)
       .orderBy("new_doc", "corpus_doc")
   }
 

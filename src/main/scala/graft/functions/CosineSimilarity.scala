@@ -23,7 +23,7 @@ case class CosineSimilarity(left: Expression, right: Expression)
   // (AbstractDataType/ExpectsInputTypes are private[sql], so no
   // declarative type contract here)
   override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_cosine"
+  override def prettyName: String = CosineSimilarity.sqlName
 
   override def nullSafeEval(a: Any, b: Any): Any =
     CosineSimilarity.of(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
@@ -52,6 +52,9 @@ case class CosineSimilarity(left: Expression, right: Expression)
 }
 
 object CosineSimilarity {
+  /** The SQL name, registered by [[GraftFunctions]]. */
+  private[functions] val sqlName = "graft_cosine"
+
   /** The interpreted kernel, also called on the driver by the at-rest
     * probes' query routing, so a routed query scores its cells exactly
     * as `graft_cosine` does in a plan; `doGenCode` emits the same loop. */
@@ -73,192 +76,95 @@ object CosineSimilarity {
   * usable as `.config("spark.sql.extensions", "graft.functions.GraftExtensions")`
   * via the companion extensions class. */
 object GraftFunctions {
-  /** Builds HyperplaneBuckets from SQL: the scalar args must be
-    * literals (they parameterize plane generation, not row data). */
-  private[functions] def hyperplaneBuilder(children: Seq[Expression]): Expression = {
-    def intArg(i: Int): Int = children(i).eval().asInstanceOf[Number].intValue()
-    def longArg(i: Int): Long = children(i).eval().asInstanceOf[Number].longValue()
-    HyperplaneBuckets(children.head, longArg(1), intArg(2), intArg(3), intArg(4))
-  }
+  private def intArg(e: Expression): Int = e.eval().asInstanceOf[Number].intValue()
+  private def longArg(e: Expression): Long = e.eval().asInstanceOf[Number].longValue()
+
+  private def fn(name: String, cls: Class[_])(build: Seq[Expression] => Expression) =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build)
+
+  /** Every fixed graft function as (name, info, builder): [[register]]
+    * and [[GraftExtensions]] both install exactly this table. Scalar
+    * arguments must be literals (they parameterize the expression, not
+    * row data). */
+  private[functions] val fixed = Seq(
+    fn(CosineSimilarity.sqlName, classOf[CosineSimilarity])(c => CosineSimilarity(c.head, c(1))),
+    fn("graft_hyperplane_buckets", classOf[HyperplaneBuckets])(c =>
+      HyperplaneBuckets(c.head, longArg(c(1)), intArg(c(2)), intArg(c(3)), intArg(c(4)))),
+    fn("graft_shingle_hashes", classOf[ShingleHashes])(c => ShingleHashes(c.head, intArg(c(1)))),
+    fn("graft_span_hashes", classOf[ShingleHashes])(c =>
+      ShingleHashes(c.head, intArg(c(1)), intArg(c(1)))),
+    fn("graft_span_pos_hashes", classOf[ShingleHashes])(c =>
+      ShingleHashes(c.head, intArg(c(1)), intArg(c(1)), dedup = false)),
+    fn("graft_rolling_span_hashes", classOf[ShingleHashes])(c =>
+      ShingleHashes(c.head, intArg(c(1)), 1, dedup = false)),
+    fn("graft_minhash_bands", classOf[MinHashBands])(c =>
+      MinHashBands(c.head, intArg(c(1)), intArg(c(2)))),
+    fn("graft_simhash", classOf[SimHash64])(c => SimHash64(c.head)),
+    fn("graft_hash_embed", classOf[HashEmbed])(c =>
+      HashEmbed(c.head, intArg(c(1)), longArg(c(2)))),
+    fn("graft_cdc_hashes", classOf[CdcChunkHashes])(c =>
+      CdcChunkHashes(c.head, intArg(c(1)), intArg(c(2)))),
+    fn("graft_byte_entropy", classOf[ByteEntropy])(c => ByteEntropy(c.head)),
+    fn("graft_blockhash", classOf[BlockMeanHash])(c => BlockMeanHash(c.head)),
+    fn("graft_cdc_bounds", classOf[CdcChunkBounds])(c =>
+      CdcChunkBounds(c.head, intArg(c(1)), intArg(c(2)))),
+    fn("graft_signbits", classOf[SignBits])(c => SignBits(c.head)),
+    fn("graft_hamming", classOf[HammingDistance])(c => HammingDistance(c.head, c(1))))
 
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     // idempotent: re-registering logs a replace warning per call
-    if (!reg.functionExists(FunctionIdentifier("graft_cosine")))
-      reg.registerFunction(
-        FunctionIdentifier("graft_cosine"),
-        new ExpressionInfo(classOf[CosineSimilarity].getName, "graft_cosine"),
-        (children: Seq[Expression]) => CosineSimilarity(children.head, children(1)))
-    if (!reg.functionExists(FunctionIdentifier("graft_hyperplane_buckets")))
-      reg.registerFunction(
-        FunctionIdentifier("graft_hyperplane_buckets"),
-        new ExpressionInfo(classOf[HyperplaneBuckets].getName, "graft_hyperplane_buckets"),
-        hyperplaneBuilder _)
-    if (!reg.functionExists(FunctionIdentifier("graft_shingle_hashes")))
-      reg.registerFunction(
-        FunctionIdentifier("graft_shingle_hashes"),
-        new ExpressionInfo(classOf[ShingleHashes].getName, "graft_shingle_hashes"),
-        (children: Seq[Expression]) => ShingleHashes(children.head,
-          children(1).eval().asInstanceOf[Number].intValue()))
-    if (!reg.functionExists(FunctionIdentifier("graft_span_hashes")))
-      reg.registerFunction(
-        FunctionIdentifier("graft_span_hashes"),
-        new ExpressionInfo(classOf[ShingleHashes].getName, "graft_span_hashes"),
-        (children: Seq[Expression]) => {
-          val n = children(1).eval().asInstanceOf[Number].intValue()
-          ShingleHashes(children.head, n, n)
-        })
-    if (!reg.functionExists(FunctionIdentifier("graft_span_pos_hashes")))
-      reg.registerFunction(
-        FunctionIdentifier("graft_span_pos_hashes"),
-        new ExpressionInfo(classOf[ShingleHashes].getName, "graft_span_pos_hashes"),
-        (children: Seq[Expression]) => {
-          val n = children(1).eval().asInstanceOf[Number].intValue()
-          ShingleHashes(children.head, n, n, dedup = false)
-        })
-    if (!reg.functionExists(FunctionIdentifier("graft_rolling_span_hashes")))
-      reg.registerFunction(
-        FunctionIdentifier("graft_rolling_span_hashes"),
-        new ExpressionInfo(classOf[ShingleHashes].getName, "graft_rolling_span_hashes"),
-        (children: Seq[Expression]) => {
-          val n = children(1).eval().asInstanceOf[Number].intValue()
-          ShingleHashes(children.head, n, 1, dedup = false)
-        })
-    if (!reg.functionExists(FunctionIdentifier("graft_minhash_bands")))
-      reg.registerFunction(
-        FunctionIdentifier("graft_minhash_bands"),
-        new ExpressionInfo(classOf[MinHashBands].getName, "graft_minhash_bands"),
-        (children: Seq[Expression]) => MinHashBands(children.head,
-          children(1).eval().asInstanceOf[Number].intValue(),
-          children(2).eval().asInstanceOf[Number].intValue()))
-    if (!reg.functionExists(FunctionIdentifier("graft_simhash")))
-      reg.registerFunction(
-        FunctionIdentifier("graft_simhash"),
-        new ExpressionInfo(classOf[SimHash64].getName, "graft_simhash"),
-        (children: Seq[Expression]) => SimHash64(children.head))
-    if (!reg.functionExists(FunctionIdentifier("graft_hash_embed")))
-      reg.registerFunction(
-        FunctionIdentifier("graft_hash_embed"),
-        new ExpressionInfo(classOf[HashEmbed].getName, "graft_hash_embed"),
-        (children: Seq[Expression]) => HashEmbed(children.head,
-          children(1).eval().asInstanceOf[Number].intValue(),
-          children(2).eval().asInstanceOf[Number].longValue()))
-    if (!reg.functionExists(FunctionIdentifier("graft_cdc_hashes")))
-      reg.registerFunction(
-        FunctionIdentifier("graft_cdc_hashes"),
-        new ExpressionInfo(classOf[CdcChunkHashes].getName, "graft_cdc_hashes"),
-        (children: Seq[Expression]) => CdcChunkHashes(children.head,
-          children(1).eval().asInstanceOf[Number].intValue(),
-          children(2).eval().asInstanceOf[Number].intValue()))
-    if (!reg.functionExists(FunctionIdentifier("graft_byte_entropy")))
-      reg.registerFunction(
-        FunctionIdentifier("graft_byte_entropy"),
-        new ExpressionInfo(classOf[ByteEntropy].getName, "graft_byte_entropy"),
-        (children: Seq[Expression]) => ByteEntropy(children.head))
-    if (!reg.functionExists(FunctionIdentifier("graft_blockhash")))
-      reg.registerFunction(
-        FunctionIdentifier("graft_blockhash"),
-        new ExpressionInfo(classOf[BlockMeanHash].getName, "graft_blockhash"),
-        (children: Seq[Expression]) => BlockMeanHash(children.head))
-    if (!reg.functionExists(FunctionIdentifier("graft_cdc_bounds")))
-      reg.registerFunction(
-        FunctionIdentifier("graft_cdc_bounds"),
-        new ExpressionInfo(classOf[CdcChunkBounds].getName, "graft_cdc_bounds"),
-        (children: Seq[Expression]) => CdcChunkBounds(children.head,
-          children(1).eval().asInstanceOf[Number].intValue(),
-          children(2).eval().asInstanceOf[Number].intValue()))
-    if (!reg.functionExists(FunctionIdentifier("graft_signbits")))
-      reg.registerFunction(
-        FunctionIdentifier("graft_signbits"),
-        new ExpressionInfo(classOf[SignBits].getName, "graft_signbits"),
-        (children: Seq[Expression]) => SignBits(children.head))
-    if (!reg.functionExists(FunctionIdentifier("graft_hamming")))
-      reg.registerFunction(
-        FunctionIdentifier("graft_hamming"),
-        new ExpressionInfo(classOf[HammingDistance].getName, "graft_hamming"),
-        (children: Seq[Expression]) => HammingDistance(children.head, children(1)))
+    fixed.foreach { case (id, info, build) =>
+      if (!reg.functionExists(id)) reg.registerFunction(id, info, build)
+    }
   }
 
-  private val pqSeq = new java.util.concurrent.atomic.AtomicLong()
-  private val bloomSeq = new java.util.concurrent.atomic.AtomicLong()
+  private val perCall = new java.util.concurrent.atomic.AtomicLong()
 
-  /** Bind a BUILT Bloom filter (serialized bytes) under a unique
-    * per-call function name, [[registerPqEncode]]-style: the bitset
-    * rides in the builder closure, never in SQL text. Callers drop the
-    * name once their plans are analyzed. Returns the name of a
-    * one-argument function over array<bigint> counting might-contain
-    * hits. */
-  def registerBloomHitCount(spark: SparkSession, bloomBytes: Array[Byte]): String = {
-    val fname = s"graft_bloom_hit_count_${bloomSeq.incrementAndGet()}"
+  /** Binds `build` under `name` plus a unique per-call suffix: trained
+    * state (a codebook, ranges, a filter's bits) rides in the builder
+    * closure, never in SQL text. Analysis is eager at DataFrame
+    * creation, so callers drop the name via [[dropFunction]] once their
+    * plans are built. Returns the bound name. */
+  private def bindPerCall(spark: SparkSession, name: String, cls: Class[_])(
+      build: Seq[Expression] => Expression): String = {
+    val fname = s"${name}_${perCall.incrementAndGet()}"
     spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(fname),
-      new ExpressionInfo(classOf[BloomHitCount].getName, fname),
-      (children: Seq[Expression]) => BloomHitCount(children.head, bloomBytes))
+      FunctionIdentifier(fname), new ExpressionInfo(cls.getName, fname), build)
     fname
   }
+
+  /** Binds a BUILT Bloom filter (serialized bytes): a one-argument
+    * function over array<bigint> counting might-contain hits. */
+  def registerBloomHitCount(spark: SparkSession, bloomBytes: Array[Byte]): String =
+    bindPerCall(spark, "graft_bloom_hit_count", classOf[BloomHitCount])(c =>
+      BloomHitCount(c.head, bloomBytes))
 
   /** Same binding for the scalar boolean probe over one bigint key. */
-  def registerBloomContains(spark: SparkSession, bloomBytes: Array[Byte]): String = {
-    val fname = s"graft_bloom_contains_${bloomSeq.incrementAndGet()}"
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(fname),
-      new ExpressionInfo(classOf[BloomMightContain].getName, fname),
-      (children: Seq[Expression]) => BloomMightContain(children.head, bloomBytes))
-    fname
-  }
+  def registerBloomContains(spark: SparkSession, bloomBytes: Array[Byte]): String =
+    bindPerCall(spark, "graft_bloom_contains", classOf[BloomMightContain])(c =>
+      BloomMightContain(c.head, bloomBytes))
 
-  private val sq8Seq = new java.util.concurrent.atomic.AtomicLong()
-
-  /** Bind TRAINED SQ8 (lo, scale) arrays under unique per-call
-    * function names, [[registerPqEncode]]-style: returns the names of
-    * the encode (array<float> → binary) and asymmetric-cosine
-    * (array<float>, binary → double) functions. Callers drop both
-    * once their plans are analyzed. */
+  /** Binds TRAINED SQ8 (lo, scale) arrays: returns the names of the
+    * encode (array<float> → binary) and asymmetric-cosine
+    * (array<float>, binary → double) functions. Callers drop both. */
   def registerSq8(spark: SparkSession, lo: Array[Float],
-                  scale: Array[Float]): (String, String) = {
-    val n = sq8Seq.incrementAndGet()
-    val enc = s"graft_sq8_encode_$n"
-    val sim = s"graft_sq8_cosine_$n"
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(enc),
-      new ExpressionInfo(classOf[Sq8Encode].getName, enc),
-      (children: Seq[Expression]) => Sq8Encode(children.head, lo, scale))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(sim),
-      new ExpressionInfo(classOf[Sq8Cosine].getName, sim),
-      (children: Seq[Expression]) => Sq8Cosine(children.head, children(1), lo, scale))
-    (enc, sim)
-  }
+                  scale: Array[Float]): (String, String) =
+    (bindPerCall(spark, "graft_sq8_encode", classOf[Sq8Encode])(c => Sq8Encode(c.head, lo, scale)),
+      bindPerCall(spark, "graft_sq8_cosine", classOf[Sq8Cosine])(c =>
+        Sq8Cosine(c.head, c(1), lo, scale)))
 
-  private val pcaSeq = new java.util.concurrent.atomic.AtomicLong()
-
-  /** Bind a TRAINED PCA basis (mean + k×dim row-major components)
-    * under a unique per-call function name — the [[registerSq8]]
-    * protocol: analysis is eager at DataFrame creation, so callers
-    * drop the name via [[dropFunction]] once their plans are built. */
+  /** Binds a TRAINED PCA basis (mean + k×dim row-major components). */
   def registerPcaProject(spark: SparkSession, mean: Array[Float],
-                         components: Array[Float], k: Int): String = {
-    val fname = s"graft_pca_project_${pcaSeq.incrementAndGet()}"
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(fname),
-      new ExpressionInfo(classOf[PcaProject].getName, fname),
-      (children: Seq[Expression]) => PcaProject(children.head, mean, components, k))
-    fname
-  }
+                         components: Array[Float], k: Int): String =
+    bindPerCall(spark, "graft_pca_project", classOf[PcaProject])(c =>
+      PcaProject(c.head, mean, components, k))
 
-  /** Bind a TRAINED PQ codebook under a unique per-call function name
-    * (data can't ride in SQL text; the builder closure carries it).
-    * Analysis is eager at DataFrame creation, so callers drop the name
-    * via [[dropFunction]] as soon as their plans are built. */
+  /** Binds a TRAINED PQ codebook. */
   def registerPqEncode(spark: SparkSession, codebook: Array[Float],
-                       m: Int, ksub: Int, subDim: Int): String = {
-    val fname = s"graft_pq_encode_${pqSeq.incrementAndGet()}"
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(fname),
-      new ExpressionInfo(classOf[PqEncode].getName, fname),
-      (children: Seq[Expression]) => PqEncode(children.head, codebook, m, ksub, subDim))
-    fname
-  }
+                       m: Int, ksub: Int, subDim: Int): String =
+    bindPerCall(spark, "graft_pq_encode", classOf[PqEncode])(c =>
+      PqEncode(c.head, codebook, m, ksub, subDim))
 
   def dropFunction(spark: SparkSession, fname: String): Unit =
     spark.sessionState.functionRegistry.dropFunction(FunctionIdentifier(fname))
@@ -269,84 +175,6 @@ object GraftFunctions {
   * spark.sql.extensions conf) — the deployment path where operators
   * run through plain `spark.sql` without calling GraftFunctions. */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    ext.injectFunction(
-      (FunctionIdentifier("graft_cosine"),
-        new ExpressionInfo(classOf[CosineSimilarity].getName, "graft_cosine"),
-        (children: Seq[Expression]) => CosineSimilarity(children.head, children(1))))
-    ext.injectFunction(
-      (FunctionIdentifier("graft_hyperplane_buckets"),
-        new ExpressionInfo(classOf[HyperplaneBuckets].getName, "graft_hyperplane_buckets"),
-        GraftFunctions.hyperplaneBuilder _))
-    ext.injectFunction(
-      (FunctionIdentifier("graft_shingle_hashes"),
-        new ExpressionInfo(classOf[ShingleHashes].getName, "graft_shingle_hashes"),
-        (children: Seq[Expression]) => ShingleHashes(children.head,
-          children(1).eval().asInstanceOf[Number].intValue())))
-    ext.injectFunction(
-      (FunctionIdentifier("graft_span_hashes"),
-        new ExpressionInfo(classOf[ShingleHashes].getName, "graft_span_hashes"),
-        (children: Seq[Expression]) => {
-          val n = children(1).eval().asInstanceOf[Number].intValue()
-          ShingleHashes(children.head, n, n)
-        }))
-    ext.injectFunction(
-      (FunctionIdentifier("graft_span_pos_hashes"),
-        new ExpressionInfo(classOf[ShingleHashes].getName, "graft_span_pos_hashes"),
-        (children: Seq[Expression]) => {
-          val n = children(1).eval().asInstanceOf[Number].intValue()
-          ShingleHashes(children.head, n, n, dedup = false)
-        }))
-    ext.injectFunction(
-      (FunctionIdentifier("graft_rolling_span_hashes"),
-        new ExpressionInfo(classOf[ShingleHashes].getName, "graft_rolling_span_hashes"),
-        (children: Seq[Expression]) => {
-          val n = children(1).eval().asInstanceOf[Number].intValue()
-          ShingleHashes(children.head, n, 1, dedup = false)
-        }))
-    ext.injectFunction(
-      (FunctionIdentifier("graft_minhash_bands"),
-        new ExpressionInfo(classOf[MinHashBands].getName, "graft_minhash_bands"),
-        (children: Seq[Expression]) => MinHashBands(children.head,
-          children(1).eval().asInstanceOf[Number].intValue(),
-          children(2).eval().asInstanceOf[Number].intValue())))
-    ext.injectFunction(
-      (FunctionIdentifier("graft_simhash"),
-        new ExpressionInfo(classOf[SimHash64].getName, "graft_simhash"),
-        (children: Seq[Expression]) => SimHash64(children.head)))
-    ext.injectFunction(
-      (FunctionIdentifier("graft_hash_embed"),
-        new ExpressionInfo(classOf[HashEmbed].getName, "graft_hash_embed"),
-        (children: Seq[Expression]) => HashEmbed(children.head,
-          children(1).eval().asInstanceOf[Number].intValue(),
-          children(2).eval().asInstanceOf[Number].longValue())))
-    ext.injectFunction(
-      (FunctionIdentifier("graft_cdc_hashes"),
-        new ExpressionInfo(classOf[CdcChunkHashes].getName, "graft_cdc_hashes"),
-        (children: Seq[Expression]) => CdcChunkHashes(children.head,
-          children(1).eval().asInstanceOf[Number].intValue(),
-          children(2).eval().asInstanceOf[Number].intValue())))
-    ext.injectFunction(
-      (FunctionIdentifier("graft_byte_entropy"),
-        new ExpressionInfo(classOf[ByteEntropy].getName, "graft_byte_entropy"),
-        (children: Seq[Expression]) => ByteEntropy(children.head)))
-    ext.injectFunction(
-      (FunctionIdentifier("graft_blockhash"),
-        new ExpressionInfo(classOf[BlockMeanHash].getName, "graft_blockhash"),
-        (children: Seq[Expression]) => BlockMeanHash(children.head)))
-    ext.injectFunction(
-      (FunctionIdentifier("graft_cdc_bounds"),
-        new ExpressionInfo(classOf[CdcChunkBounds].getName, "graft_cdc_bounds"),
-        (children: Seq[Expression]) => CdcChunkBounds(children.head,
-          children(1).eval().asInstanceOf[Number].intValue(),
-          children(2).eval().asInstanceOf[Number].intValue())))
-    ext.injectFunction(
-      (FunctionIdentifier("graft_signbits"),
-        new ExpressionInfo(classOf[SignBits].getName, "graft_signbits"),
-        (children: Seq[Expression]) => SignBits(children.head)))
-    ext.injectFunction(
-      (FunctionIdentifier("graft_hamming"),
-        new ExpressionInfo(classOf[HammingDistance].getName, "graft_hamming"),
-        (children: Seq[Expression]) => HammingDistance(children.head, children(1))))
-  }
+  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
+    GraftFunctions.fixed.foreach(ext.injectFunction)
 }

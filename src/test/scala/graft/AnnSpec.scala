@@ -1094,4 +1094,45 @@ class AnnSpec extends SparkSpecBase {
     assert(jobsRunBy(Ann.ivfPqKnnIndexed(queries, pq)) == 2)
     graft.Caches.release()
   }
+
+  test("ranking contract: the window tail and the fold tail rank NaN, null, ±0.0 and ties identically") {
+    val nan = Double.NaN
+    // query 0: NaN, null, ±0.0 and tied sims under distinct ids;
+    // queries 1–3 hold fewer rows than the larger k
+    val cand = Seq[(Long, Long, Option[Double])](
+      (0L, 10L, Some(0.5)), (0L, 11L, Some(nan)), (0L, 12L, None), (0L, 13L, Some(0.5)),
+      (0L, 14L, Some(-0.0)), (0L, 15L, Some(0.0)), (0L, 16L, Some(-0.0)), (0L, 17L, Some(-1.0)),
+      (0L, 18L, Some(nan)), (0L, 19L, None), (0L, 9L, Some(0.0)), (0L, 8L, Some(1.0)),
+      (1L, 21L, None), (1L, 20L, Some(nan)),
+      (2L, 30L, Some(0.25)),
+      (3L, 41L, Some(-0.0)), (3L, 40L, Some(0.0)), (3L, 42L, Some(0.12345678))
+    ).toDF("query_id", "neighbor_id", "sim")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq.map(r =>
+      (r.getLong(0), r.getLong(1),
+        if (r.isNullAt(2)) None else Some(java.lang.Double.doubleToLongBits(r.getDouble(2))),
+        r.getInt(3)))
+    for (k <- Seq(1, 2, 5, 20)) {
+      val window = rows(Ann.windowTopK(cand, k))
+      val fold = rows(Ann.foldTopK(cand, k).orderBy("query_id", "rn"))
+      assert(window == fold, s"k=$k: window $window != fold $fold")
+    }
+    // the contract itself: NaN first, then sim DESC with ±0.0 equal,
+    // ties to the smaller id, nulls last
+    assert(rows(Ann.windowTopK(cand, 20)).filter(_._1 == 0L).map(_._2) ==
+      Seq(11L, 18L, 8L, 10L, 13L, 9L, 14L, 15L, 16L, 17L, 12L, 19L))
+  }
+
+  test("a warmed calibratedBqRerank reads calibration/ through the schema memo; a recalibration is seen") {
+    val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
+    val dir = java.nio.file.Files.createTempDirectory("graft_bq_cal_jobs").toString
+    // a one-rung ladder calibrates to that rung whatever the recall
+    assert(Ann.calibrateAnnIndexBq(dir, emb, 0.8, depths = Seq(25)) == 25)
+    assert(Ann.calibratedBqRerank(spark, dir, 0.8).contains(25)) // memoizes the schema
+    // left: the sidecar row's collect; no footer-inference job
+    assert(jobsRunBy(Ann.calibratedBqRerank(spark, dir, 0.8)) == 1)
+    assert(Ann.calibrateAnnIndexBq(dir, emb, 0.8, depths = Seq(50)) == 50)
+    assert(Ann.calibratedBqRerank(spark, dir, 0.8).contains(50),
+      "the next call must read the recalibrated depth")
+    graft.Caches.release()
+  }
 }

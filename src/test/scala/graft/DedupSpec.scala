@@ -1067,6 +1067,40 @@ class DedupSpec extends SparkSpecBase {
     graft.Caches.release()
   }
 
+  test("a doc_id on both sides verifies against each side's own text: live d20 and s23 equal their at-rest twins") {
+    // doc 5 is in the batch and, longer, in the corpus; batch doc 1
+    // repeats batch doc 5's text. Both batch docs are contained in the
+    // corpus copy of 5, which must serve as a container although its id
+    // is also a batch id
+    val sub = "a b c d e f g h"
+    val batch = docs(5L -> sub, 1L -> sub)
+    val corpus = docs(5L -> "a b c d e f g h i j k l",
+      12L -> "other words entirely distinct here now and then")
+    val dir = java.nio.file.Files.createTempDirectory("graft_cont_twin").toString
+    Dedup.writeContainmentIndex(corpus, s"$dir/idx")
+    val live = Dedup.containmentAgainst(batch, corpus).collect().toSeq
+    val atRest = Dedup.containmentAgainstIndex(batch, s"$dir/idx").collect().toSeq
+    assert(live.map(r => (r.getLong(0), r.getLong(1), r.getDouble(4))) ==
+      Seq((1L, 5L, 1.0), (5L, 5L, 1.0)), s"got $live")
+    assert(live == atRest)
+    graft.Caches.release()
+    // s23's batch step against its indexed twin (s24's), one trigger
+    import org.apache.spark.sql.functions.{col, lit}
+    corpus.withColumn("batch_id", lit(-1L)).write.partitionBy("batch_id").parquet(s"$dir/corpus")
+    Dedup.writeContainmentIndex(corpus, s"$dir/sidx", batchId = Some(-1L))
+    graft.streaming.StreamingFlow.containmentAdmitBatch(s"$dir/corpus", s"$dir/v", 0.8, 5,
+      None)(batch, 0L)
+    graft.streaming.StreamingFlow.containmentAdmitIndexedBatch(s"$dir/sidx", s"$dir/vi", 0.8,
+      5)(batch, 0L)
+    def verdicts(path: String) = spark.read.parquet(path).filter(col("batch_id") === 0)
+      .select("doc_id", "verdict", "evidence_id", "containment")
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getDouble(3))).toSet
+    assert(verdicts(s"$dir/v") == Set((1L, "contained", 5L, 1.0), (5L, "contained", 5L, 1.0)),
+      s"got ${verdicts(s"$dir/v")}")
+    assert(verdicts(s"$dir/v") == verdicts(s"$dir/vi"))
+    graft.Caches.release()
+  }
+
   test("a warmed containmentAgainstIndex call reads meta/ and order/ through the schema memo") {
     val dir = java.nio.file.Files.createTempDirectory("graft_cont_jobs").toString
     Dedup.writeContainmentIndex(docs(

@@ -59,4 +59,34 @@ class ExtensionsSpec extends AnyFunSuite {
       old.foreach(SparkSession.setActiveSession)
     }
   }
+
+  test("every function register adds to a plain session resolves in a SQL-only extensions session") {
+    val old = SparkSession.getDefaultSession
+    SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
+    // a fresh session state: builtin functions only
+    val plain = SparkSession.builder()
+      .master("local[2]")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate().newSession()
+    SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
+    val s2 = SparkSession.builder()
+      .master("local[2]")
+      .config("spark.ui.enabled", "false")
+      .withExtensions(new graft.functions.GraftExtensions)
+      .getOrCreate()
+    try {
+      val before = plain.sessionState.functionRegistry.listFunction().toSet
+      graft.functions.GraftFunctions.register(plain)
+      val added = plain.sessionState.functionRegistry.listFunction().toSet -- before
+      assert(added.size == 15, s"got ${added.map(_.funcName).toSeq.sorted}")
+      val missing = added.filterNot(f => s2.sessionState.functionRegistry.functionExists(f))
+      assert(missing.isEmpty, s"not injected: ${missing.map(_.funcName)}")
+      // and each resolves through SQL itself, not only in the registry
+      added.foreach(f => assert(s2.catalog.functionExists(f.funcName), f.funcName))
+    } finally {
+      SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
+      old.foreach(SparkSession.setDefaultSession)
+      old.foreach(SparkSession.setActiveSession)
+    }
+  }
 }
