@@ -470,11 +470,11 @@ object TaskRunner {
         Tables.orders(s, d), Tables.lineitem(s, d))
     }),
     "q75_cohort_revenue" -> ((s, d, _) => RelationalOps.cohortRevenue(Tables.orders(s, d))),
-    "q77_holt_trend" -> ((s, d, _) => TrackAnalytics.holtTrend(Tables.events(s, d))),
+    "q77_holt_trend" -> ((s, d, p) => TrackAnalytics.holtTrend(eventsIn(s, d, p))),
     "q78_cusum_shift" -> ((s, d, p) => TrackAnalytics.cusumShift(
-      Tables.events(s, d), dbl(p, "hSigma", 5.0))),
+      eventsIn(s, d, p), dbl(p, "hSigma", 5.0))),
     "q76_survival_curve" -> ((s, d, p) => TrackAnalytics.survivalCurve(
-      Tables.events(s, d), str(p, "fromType", "click"), str(p, "toType", "purchase"))),
+      eventsIn(s, d, p), str(p, "fromType", "click"), str(p, "toType", "purchase"))),
     "t01_token_stats" -> ((s, d, _) => TextStats.tokenStats(Tables.documents(s, d))),
     "t02_quality_score" -> ((s, d, _) => TextStats.qualityScore(Tables.documents(s, d))),
     "t03_langid" -> ((s, d, _) => TextStats.langId(Tables.documents(s, d))),

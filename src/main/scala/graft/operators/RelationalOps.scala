@@ -479,22 +479,10 @@ object RelationalOps {
     * parquet once. */
   def robustOutliers(orders: DataFrame, k: Double = 3.0,
                      exact: Boolean = true, accuracy: Int = 10000): DataFrame = {
-    // exact medians ride the distributed counts machinery (q21's
-    // exactGroupPercentiles) — no holistic per-group buffer; the
-    // sketch path keeps the mergeable approx aggregate
-    def medianOf(df: DataFrame, c: String, as: String): DataFrame =
-      if (exact)
-        exactGroupPercentiles(df, "grp", c, Seq(0.5))
-          .select(col("grp"), col("__p0").as(as))
-      else df.groupBy("grp")
-        .agg(expr(s"percentile_approx($c, 0.5, $accuracy)").cast("double").as(as))
     val vals = graft.Caches.tracked(
       orders.select(col("o_orderpriority").as("grp"), col("o_totalprice").as("x")))
-    val med = medianOf(vals, "x", "med")
-    val devs = graft.Caches.tracked(
-      vals.join(broadcast(med), "grp")
-        .withColumn("adev", abs(col("x") - col("med"))))
-    val mad = medianOf(devs, "adev", "mad")
+    val (devs, mad) = medianMad(vals, Some("grp"), "x", keep = graft.Caches.tracked,
+      approxAccuracy = if (exact) None else Some(accuracy))
     devs.join(broadcast(mad), "grp")
       .groupBy("grp")
       .agg(
@@ -507,6 +495,34 @@ object RelationalOps {
         graft.Num.stableRound(col("mad_raw"), 2).as("mad"),
         col("n_outliers"))
       .orderBy("o_orderpriority")
+  }
+
+  /** The median-and-MAD derivation behind q46, q60 and q78: `med` is
+    * the p50 of `valueCol`, attached beside every value row with
+    * `adev` = |value − med|, and `mad` is the p50 of adev — per `group`,
+    * or over all rows when `group` is None (the one-row stats then
+    * attach by a broadcast cross join). Both p50s are exact picks of
+    * the distributed exactGroupPercentiles (no holistic per-group
+    * buffer) unless `approxAccuracy` swaps in q46's mergeable
+    * percentile_approx sketch. `keep` wraps the deviation frame: a
+    * caller that reads it twice passes Caches.tracked. Returns (devs,
+    * mad): the value rows with med and adev, and the mad per group. */
+  private[graft] def medianMad(vals: DataFrame, group: Option[String], valueCol: String,
+                               keep: DataFrame => DataFrame = identity,
+                               approxAccuracy: Option[Int] = None): (DataFrame, DataFrame) = {
+    val keys = group.toSeq.map(col)
+    def p50(df: DataFrame, c: String, as: String): DataFrame = approxAccuracy match {
+      case None =>
+        val g = group.getOrElse("__g")
+        exactGroupPercentiles(if (group.isEmpty) df.withColumn(g, lit("all")) else df,
+          g, c, Seq(0.5)).select(keys :+ col("__p0").as(as): _*)
+      case Some(acc) => df.groupBy(keys: _*)
+        .agg(expr(s"percentile_approx($c, 0.5, $acc)").cast("double").as(as))
+    }
+    val med = p50(vals, valueCol, "med")
+    val withMed = group.fold(vals.crossJoin(broadcast(med)))(g => vals.join(broadcast(med), g))
+    val devs = keep(withMed.withColumn("adev", abs(col(valueCol) - col("med"))))
+    (devs, p50(devs, "adev", "mad"))
   }
 
   /** q50_table_stats — ANALYZE-style column statistics in ONE pass:
@@ -736,13 +752,10 @@ object RelationalOps {
     * "do 10% of customers carry 50% of revenue" report that sits next
     * to q52's key-skew diagnosis.
     *
-    * The global spend rank is a HIERARCHICAL prefix sum (t16's
-    * formulation), never one global window: customer cents bucket
-    * into ≤1024 value ranges (one min/max aggregation sizes the
-    * width), per-bucket counts roll into running offsets over the
-    * ≤1024-row bucket table, and each customer ranks only within its
-    * bucket — at 10⁹ customers the only unpartitioned window still
-    * runs over ≤1024 rows. Ties break on custkey so the rank (and
+    * The global spend rank is `exactRank`'s HIERARCHICAL prefix sum
+    * (t16's formulation), never one global window: customer cents
+    * bucket into ≤1024 value ranges and each customer ranks only
+    * within its bucket. Ties break on custkey so the rank (and
     * therefore the tier cut) is deterministic in both engines. Money
     * follows the cents-exact protocol: BIGINT sums, one IEEE division
     * per output cell. */
@@ -754,21 +767,8 @@ object RelationalOps {
       .select(col("o_custkey"),
         round(col("o_totalprice") * 100).cast("long").as("cents"))
       .groupBy("o_custkey").agg(sum("cents").as("cents")))
-    val mm = cust.agg(min("cents").as("lo"), max("cents").as("hi"))
-    val bucketed = cust.crossJoin(broadcast(mm))
-      .withColumn("bucket",
-        expr("(cents - lo) div (((hi - lo) div 1024) + 1)"))
-      .select("o_custkey", "cents", "bucket")
-    val counts = bucketed.groupBy("bucket").agg(count(lit(1)).as("cnt"))
-    // ≤1024 rows — the bounded unpartitioned window (q44 precedent)
-    val wB = Window.orderBy("bucket")
-    val offsets = counts
-      .withColumn("boff", sum("cnt").over(wB) - col("cnt"))
-      .select("bucket", "boff")
-    val wIn = Window.partitionBy("bucket").orderBy("cents", "o_custkey")
     val tot = cust.agg(count(lit(1)).as("n_cust"), sum("cents").as("total_cents"))
-    bucketed.join(broadcast(offsets), "bucket")
-      .withColumn("rnk", col("boff") + row_number().over(wIn))
+    exactRank(cust, "cents", "o_custkey", "rnk")
       .crossJoin(broadcast(tot))
       .withColumn("tier", expr(s"((rnk - 1) * $tiers) div n_cust"))
       .groupBy("tier")
@@ -779,6 +779,29 @@ object RelationalOps {
         col("tier_cents").cast("double") / col("total_cents").cast("double"))
       .select("tier", "n_customers", "tier_spend", "spend_share")
       .orderBy("tier")
+  }
+
+  /** Exact global rank (1-based, ties broken by `keyCol`) of the
+    * integral `valueCol` as column `out` beside `df`'s rows — q55's
+    * hierarchical recipe, shared with q71, so no row-grain global
+    * window exists: values bucket into ≤1024 ranges (one min/max
+    * aggregation sizes the width), per-bucket counts roll into running
+    * offsets over the ≤1024-row bucket table (the bounded unpartitioned
+    * window, the q44 precedent), and each row ranks only within its
+    * bucket. At 10⁹ rows the only unpartitioned window still runs over
+    * ≤1024 rows. */
+  private[graft] def exactRank(df: DataFrame, valueCol: String, keyCol: String,
+                               out: String): DataFrame = {
+    val mm = df.agg(min(valueCol).as("lo"), max(valueCol).as("hi"))
+    val bucketed = df.crossJoin(broadcast(mm))
+      .withColumn("bucket", expr(s"($valueCol - lo) div (((hi - lo) div 1024) + 1)"))
+      .drop("lo", "hi")
+    val offsets = bucketed.groupBy("bucket").agg(count(lit(1)).as("cnt"))
+      .withColumn("boff", sum("cnt").over(Window.orderBy("bucket")) - col("cnt"))
+      .select("bucket", "boff")
+    bucketed.join(broadcast(offsets), "bucket")
+      .withColumn(out, col("boff") +
+        row_number().over(Window.partitionBy("bucket").orderBy(valueCol, keyCol)))
   }
 
   /** q72_basket_affinity — market-basket association rules over the

@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
 /** Trajectory / event-sequence surface of the reference (TrafficTeach
@@ -18,6 +18,61 @@ import org.apache.spark.sql.functions._
   */
 object TrackAnalytics {
 
+  /** The microsecond event time. Every event order and every reported
+    * interval reads time at this precision, never at nanoseconds. */
+  private def eventUs: Column = expr("ts_ns div 1000")
+
+  /** The per-entity event order: (microsecond time, event_id) within
+    * `keys`. This is the one statement of the tie contract: DuckDB
+    * truncates timestamps to microseconds, so two events in the same
+    * microsecond order by event_id, never by their nanoseconds (a
+    * nanosecond order would silently diverge from the oracle on
+    * same-microsecond events). `time` is the microsecond key as the
+    * caller's plan spells it: `eventUs`, or a column projected from it. */
+  private def eventOrder(keys: Seq[String], time: Column = eventUs): WindowSpec =
+    Window.partitionBy(keys.map(col): _*).orderBy(time, col("event_id"))
+
+  /** One-step transitions behind q09, q56 and q58: each event's
+    * successor type in the event order within `keys` (an entity's last
+    * event has none and drops), counted per (from_type, to_type), with
+    * `shareAs` = `share` of the pair's fraction of its from_type's
+    * outgoing transitions. The count collapses through a map-side
+    * partial agg to at most k² keys, so the per-from total windows
+    * over k² rows. */
+  private def transitions(events: DataFrame, keys: Seq[String], shareAs: String,
+                          share: Column => Column): DataFrame =
+    events
+      .withColumn("to_type", lead(col("event_type"), 1).over(eventOrder(keys)))
+      .filter(col("to_type").isNotNull)
+      .groupBy(col("event_type").as("from_type"), col("to_type"))
+      .agg(count(lit(1)).as("cnt"))
+      .withColumn(shareAs,
+        share(col("cnt") / sum(col("cnt")).over(Window.partitionBy("from_type"))))
+      .orderBy("from_type", "to_type")
+
+  /** Each event with its microsecond time `us` and its entity's NEXT
+    * event time `next_us` — the dwell interval (`dwellUs`) behind q59
+    * and q68. An entity's last event owns no interval and drops: its
+    * closing interval is unobserved, not zero. */
+  private def nextEvents(events: DataFrame): DataFrame =
+    events
+      .select(col("user_id"), col("event_id"), col("event_type"), eventUs.as("us"))
+      .withColumn("next_us", lead(col("us"), 1).over(eventOrder(Seq("user_id"), col("us"))))
+      .filter(col("next_us").isNotNull)
+
+  private def dwellUs: Column = col("next_us") - col("us")
+
+  /** The (keys…, day DATE, n_events) daily count under q43, q60, q67,
+    * q69, q77 and q78, and the per-trigger state of their streaming
+    * twins (StreamingFlow.dailyStateBatch). */
+  private[graft] def dailyCounts(events: DataFrame, keys: String*): DataFrame =
+    events.groupBy(keys.map(col) :+ to_date(col("ts")).as("day"): _*)
+      .agg(count(lit(1)).as("n_events"))
+
+  /** A day surfaced as its ISO `yyyy-MM-dd` string: results carry days
+    * as strings, never as raw date/time types (SURVEY §5). */
+  private[graft] def isoDay(day: Column): Column = date_format(day, "yyyy-MM-dd")
+
   /** q08_car_track — per-entity time-ordered trajectory assembly.
     * collect_list is order-free (so partial aggregation still applies);
     * the deterministic (ts, event_id) order is imposed by array_sort on
@@ -33,9 +88,7 @@ object TrackAnalytics {
     val bounded = maxEvents match {
       case None => events
       case Some(m) =>
-        val w = Window.partitionBy("user_id")
-          .orderBy(expr("ts_ns div 1000"), col("event_id"))
-        events.withColumn("ev_rn", row_number().over(w))
+        events.withColumn("ev_rn", row_number().over(eventOrder(Seq("user_id"))))
           .filter(col("ev_rn") <= m).drop("ev_rn")
     }
     bounded
@@ -43,7 +96,7 @@ object TrackAnalytics {
       .agg(
         concat_ws(">",
           transform(
-            array_sort(collect_list(struct(expr("ts_ns div 1000").as("ts_us"),
+            array_sort(collect_list(struct(eventUs.as("ts_us"),
               col("event_id"), col("event_type")))),
             x => x.getField("event_type"))).as("track"),
         count(lit(1)).as("n_events"))
@@ -53,21 +106,8 @@ object TrackAnalytics {
   /** q09_funnel_step — consecutive-step transition counts and
     * conversion rate (the reference's one-step conversion rate between
     * checkpoints: transitions / departures from the step). */
-  def funnelStep(events: DataFrame): DataFrame = {
-    // ties ordered at MICROsecond precision + event_id: DuckDB's ts is
-    // micro-truncated, so nano-level ordering would silently diverge
-    // on same-microsecond events (none in the test data; latent)
-    val w = Window.partitionBy("user_id").orderBy(expr("ts_ns div 1000"), col("event_id"))
-    val byFrom = Window.partitionBy("from_type")
-    events
-      .withColumn("to_type", lead("event_type", 1).over(w))
-      .filter(col("to_type").isNotNull)
-      .groupBy(col("event_type").as("from_type"), col("to_type"))
-      .agg(count(lit(1)).as("cnt"))
-      .withColumn("conv_rate",
-        graft.Num.stableRound(col("cnt") / sum("cnt").over(byFrom), 4))
-      .orderBy("from_type", "to_type")
-  }
+  def funnelStep(events: DataFrame): DataFrame =
+    transitions(events, Seq("user_id"), "conv_rate", graft.Num.stableRound(_, 4))
 
   /** q10_collision — two-cohort intersection (cars seen in both areas;
     * TrafficTeach "车辆碰撞" analysis). Distinct + intersect plans as a
@@ -79,12 +119,12 @@ object TrackAnalytics {
 
   /** The SHARED gap-rule session assignment behind q11, q44 and q53:
     * events + a per-user session_id from the 30-minute-gap rule —
-    * millisecond gap check, MICROsecond (ts, event_id) tie order (see
-    * funnelStep), two stacked windows on one user_id partitioning.
+    * millisecond gap check, the `eventOrder` tie order, two stacked
+    * windows on one user_id partitioning.
     * Every oracle mirrors this derivation exactly, so it exists ONCE:
     * a fix to the gap rule cannot silently miss a consumer. */
   private[graft] def withSessionIds(events: DataFrame, gapMs: Long): DataFrame = {
-    val w = Window.partitionBy("user_id").orderBy(expr("ts_ns div 1000"), col("event_id"))
+    val w = eventOrder(Seq("user_id"))
     val frame = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     events
       .withColumn("cur_ms", expr("ts_ns div 1000000"))
@@ -133,7 +173,7 @@ object TrackAnalytics {
       .agg(array_join(
         transform(
           slice(array_sort(collect_list(struct(
-            expr("ts_ns div 1000").as("us"), col("event_id"), col("event_type")))),
+            eventUs.as("us"), col("event_id"), col("event_type")))),
             1, maxSteps),
           s => s.getField("event_type")), ">").as("path"))
       .groupBy("path")
@@ -205,12 +245,10 @@ object TrackAnalytics {
     * entity key, then `last(click, ignoreNulls)` over the preceding
     * frame carries the nearest-prior click to every signup row — cost
     * is O(events log events-per-user), independent of the pair count
-    * a range join would enumerate. Nanosecond ordering with event_id
-    * tiebreak keeps it deterministic. */
+    * a range join would enumerate. The `eventOrder` tie order keeps it
+    * deterministic. */
   def asofJoin(events: DataFrame): DataFrame = {
-    val w = Window.partitionBy("user_id")
-      .orderBy(expr("ts_ns div 1000"), col("event_id"))
-      .rowsBetween(Window.unboundedPreceding, -1)
+    val w = eventOrder(Seq("user_id")).rowsBetween(Window.unboundedPreceding, -1)
     events
       .filter(col("event_type").isin("click", "signup"))
       .withColumn("prev_click",
@@ -224,7 +262,7 @@ object TrackAnalytics {
         // gap surfaced at microsecond precision: each side truncated
         // BEFORE subtracting (truncate-then-subtract is engine-stable;
         // subtract-then-truncate is not)
-        (expr("ts_ns div 1000") - expr("prev_click.ts_ns div 1000")).as("gap_us"))
+        (eventUs - expr("prev_click.ts_ns div 1000")).as("gap_us"))
       .orderBy("signup_id")
   }
 
@@ -260,13 +298,11 @@ object TrackAnalytics {
     * first. */
   def periodDelta(events: DataFrame): DataFrame = {
     val w = Window.partitionBy("event_type").orderBy("day")
-    events
-      .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("n_events"))
+    dailyCounts(events, "event_type")
       .withColumn("prev_events", lag("n_events", 1).over(w))
       .select(
         col("event_type"),
-        date_format(col("day"), "yyyy-MM-dd").as("day"),
+        isoDay(col("day")).as("day"),
         col("n_events"),
         col("prev_events"),
         (col("n_events") - col("prev_events")).as("delta"),
@@ -318,7 +354,7 @@ object TrackAnalytics {
       .groupBy("cohort_day", "day_offset")
       .agg(countDistinct(col("user_id")).as("n_users"))
       // ISO string per the SURVEY §5 protocol — never raw date/time types
-      .select(date_format(col("cohort_day"), "yyyy-MM-dd").as("cohort_day"),
+      .select(isoDay(col("cohort_day")).as("cohort_day"),
         col("day_offset"), col("n_users"))
       .orderBy("cohort_day", "day_offset")
   }
@@ -368,7 +404,7 @@ object TrackAnalytics {
     * equal to the local one), not an oracle query. */
   def graphRank(events: DataFrame, iterations: Int = 10,
                 damping: Double = 0.85, maxLocalEdges: Long = 4000000L): DataFrame = {
-    val w = Window.partitionBy("user_id").orderBy(expr("ts_ns div 1000"), col("event_id"))
+    val w = eventOrder(Seq("user_id"))
     val hops = events
       .select(col("user_id"), col("event_id"), col("ts_ns"),
         get_json_object(col("props"), "$.k").cast("int").as("node"))
@@ -439,7 +475,7 @@ object TrackAnalytics {
                    steps: Seq[String] = Seq("view", "click", "purchase"),
                    windowMicros: Long = 86400000000L): DataFrame = {
     require(steps.nonEmpty, "windowFunnel: steps must be non-empty")
-    val us = expr("ts_ns div 1000")
+    val us = eventUs
     val anchor = events.filter(col("event_type") === steps.head)
       .groupBy("user_id").agg(min(us).as("t1"))
     // survivor chain: chain(i) = users whose deepest prefix is ≥ i+1
@@ -500,8 +536,7 @@ object TrackAnalytics {
     // sessionization would run twice
     val sessions = graft.Caches.tracked(withSessionIds(events, gapMs)
       .groupBy("user_id", "session_id")
-      .agg(min(expr("ts_ns div 1000")).as("start_us"),
-        max(expr("ts_ns div 1000")).as("end_us")))
+      .agg(min(eventUs).as("start_us"), max(eventUs).as("end_us")))
     val boundaries = graft.Caches.tracked(
       sessions.select(col("start_us").as("t_us"), lit(1).as("delta"))
         .unionAll(sessions.select(col("end_us").as("t_us"), lit(-1).as("delta")))
@@ -523,7 +558,7 @@ object TrackAnalytics {
       .groupBy("day")
       .agg(max(col("run_in_day") + col("carried_in")).as("peak_concurrent"),
         sum(when(col("delta") === 1, 1L).otherwise(0L)).as("sessions_started"))
-      .select(date_format(col("day"), "yyyy-MM-dd").as("day"),
+      .select(isoDay(col("day")).as("day"),
         col("peak_concurrent"), col("sessions_started"))
       .orderBy("day")
   }
@@ -561,7 +596,7 @@ object TrackAnalytics {
       .agg(
         countDistinct("user_id").as("uniq_win"),
         countDistinct(when(col("a_day") === col("day"), col("user_id"))).as("uniq_day"))
-      .select(date_format(col("day"), "yyyy-MM-dd").as("day"),
+      .select(isoDay(col("day")).as("day"),
         col("uniq_win"), col("uniq_day"))
       .orderBy("day")
   }
@@ -605,7 +640,7 @@ object TrackAnalytics {
         hll_sketch_estimate(hll_union_agg(col("sk"))).as("uniq_win_est"),
         max(when(col("a_day") === col("day"),
           hll_sketch_estimate(col("sk")))).as("uniq_day_est"))
-      .select(date_format(col("day"), "yyyy-MM-dd").as("day"),
+      .select(isoDay(col("day")).as("day"),
         col("uniq_win_est"), col("uniq_day_est"))
       .orderBy("day")
   }
@@ -624,21 +659,10 @@ object TrackAnalytics {
     * nothing downstream of the first exchange grows with the corpus.
     * `prob` is one IEEE division of two exact longs per output cell
     * (bit-equal cross-engine). */
-  def transitionMatrix(events: DataFrame): DataFrame = {
-    val w = Window.partitionBy("user_id")
-      .orderBy(expr("ts_ns div 1000"), col("event_id"))
-    val trans = events
-      .select(col("user_id"), col("event_id"), col("event_type"), col("ts_ns"))
-      .withColumn("to_type", lead(col("event_type"), 1).over(w))
-      .filter(col("to_type").isNotNull)
-    val counts = trans
-      .groupBy(col("event_type").as("from_type"), col("to_type"))
-      .agg(count(lit(1)).as("cnt"))
-    val perFrom = Window.partitionBy("from_type")
-    counts
-      .withColumn("prob", col("cnt") / sum(col("cnt")).over(perFrom))
-      .orderBy("from_type", "to_type")
-  }
+  def transitionMatrix(events: DataFrame): DataFrame =
+    transitions(
+      events.select(col("user_id"), col("event_id"), col("event_type"), col("ts_ns")),
+      Seq("user_id"), "prob", identity)
 
   /** q58_session_transitions — q56's transition matrix restricted to
     * WITHIN-SESSION edges: the lead window partitions on (entity,
@@ -650,20 +674,8 @@ object TrackAnalytics {
     * q34/q53's), so the gap rule exists once; the session windows and
     * the lead window stack on the same user_id exchange — still ONE
     * shuffle before the k²-grain aggregation. */
-  def sessionTransitions(events: DataFrame, gapMs: Long = 1800000L): DataFrame = {
-    val w = Window.partitionBy("user_id", "session_id")
-      .orderBy(expr("ts_ns div 1000"), col("event_id"))
-    val trans = withSessionIds(events, gapMs)
-      .withColumn("to_type", lead(col("event_type"), 1).over(w))
-      .filter(col("to_type").isNotNull)
-    val counts = trans
-      .groupBy(col("event_type").as("from_type"), col("to_type"))
-      .agg(count(lit(1)).as("cnt"))
-    val perFrom = Window.partitionBy("from_type")
-    counts
-      .withColumn("prob", col("cnt") / sum(col("cnt")).over(perFrom))
-      .orderBy("from_type", "to_type")
-  }
+  def sessionTransitions(events: DataFrame, gapMs: Long = 1800000L): DataFrame =
+    transitions(withSessionIds(events, gapMs), Seq("user_id", "session_id"), "prob", identity)
 
   /** q59_dwell_time — time-in-state attribution: each event owns the
     * interval until its entity's NEXT event (the standard "time spent
@@ -673,21 +685,14 @@ object TrackAnalytics {
     * and mean dwell seconds (ONE fixed-parenthesization IEEE division
     * chain per output row). Same single entity-key exchange as every
     * sequence operator here, then a k-grain partial agg. */
-  def dwellTime(events: DataFrame): DataFrame = {
-    val w = Window.partitionBy("user_id").orderBy(col("us"), col("event_id"))
-    events
-      .select(col("user_id"), col("event_id"), col("event_type"),
-        expr("ts_ns div 1000").as("us"))
-      .withColumn("next_us", lead(col("us"), 1).over(w))
-      .filter(col("next_us").isNotNull)
+  def dwellTime(events: DataFrame): DataFrame =
+    nextEvents(events)
       .groupBy("event_type")
-      .agg(count(lit(1)).as("n_stays"),
-        sum(col("next_us") - col("us")).as("total_dwell_us"))
+      .agg(count(lit(1)).as("n_stays"), sum(dwellUs).as("total_dwell_us"))
       .withColumn("avg_dwell_s",
         col("total_dwell_us").cast("double") / col("n_stays").cast("double")
           / lit(1000000.0))
       .orderBy("event_type")
-  }
 
   /** q57_modal_event — each entity's most frequent event type
     * (deterministic tie-break: higher count, then lexicographically
@@ -734,7 +739,7 @@ object TrackAnalytics {
         min(col("value")).as("low"),
         count(lit(1)).as("volume"))
       .select(col("event_type"),
-        date_format(col("day"), "yyyy-MM-dd").as("day"),
+        isoDay(col("day")).as("day"),
         col("of.v").as("open"), col("high"), col("low"),
         col("cf.v").as("close"), col("volume"))
       .orderBy("event_type", "day")
@@ -789,14 +794,8 @@ object TrackAnalytics {
     * integer micros and the percentile columns round at 2 decimals,
     * the q63 terminating-scale protocol. */
   def dwellPercentiles(events: DataFrame): DataFrame = {
-    val w = Window.partitionBy("user_id").orderBy(col("us"), col("event_id"))
     val lags = graft.Caches.tracked(
-      events
-        .select(col("user_id"), col("event_id"), col("event_type"),
-          expr("ts_ns div 1000").as("us"))
-        .withColumn("next_us", lead(col("us"), 1).over(w))
-        .filter(col("next_us").isNotNull)
-        .select(col("event_type"), (col("next_us") - col("us")).as("dwell_us")))
+      nextEvents(events).select(col("event_type"), dwellUs.as("dwell_us")))
     val pcts = RelationalOps.exactGroupPercentiles(
       lags, "event_type", "dwell_us", Seq(0.5, 0.9, 0.99))
     lags.groupBy("event_type").agg(count(lit(1)).as("n_stays"))
@@ -821,7 +820,7 @@ object TrackAnalytics {
     withSessionIds(events, gapMs)
       .groupBy("user_id", "session_id")
       .agg(
-        min(struct(expr("ts_ns div 1000").as("us"), col("event_id").as("e"),
+        min(struct(eventUs.as("us"), col("event_id").as("e"),
           col("event_type").as("t"))).as("entry"),
         count(lit(1)).as("n_ev"))
       .groupBy(col("entry.t").as("entry_type"))
@@ -843,8 +842,7 @@ object TrackAnalytics {
     * Types with < 3 day pairs or zero variance emit null r². */
   def volumeAutocorr(events: DataFrame): DataFrame = {
     val daily = graft.Caches.tracked(
-      events.groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(count(lit(1)).as("n")))
+      dailyCounts(events, "event_type").withColumnRenamed("n_events", "n"))
     val pairs = daily.select(col("event_type"), col("day"), col("n").as("x"))
       .join(daily.select(col("event_type"), date_sub(col("day"), 1).as("day"),
         col("n").as("y")), Seq("event_type", "day"))
@@ -998,33 +996,18 @@ object TrackAnalytics {
     * exact (middle-pair averages stay on the binary 0.25 grid), and z
     * is a fixed IEEE op sequence both engines evaluate identically →
     * full hash oracle. Scale: one partial-agg exchange to (type, day)
-    * grain — ~types×days rows — and the median windows run at that
-    * aggregated grain, so the raw events never shuffle anywhere. */
+    * grain — ~types×days rows — and q46's median/MAD derivation runs at
+    * that aggregated grain, so the raw events never shuffle anywhere. */
   def eventAnomaly(events: DataFrame, k: Double = 3.0): DataFrame = {
-    val daily = graft.Caches.tracked(
-      events.groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(count(lit(1)).as("n_events")))
-    // exact interpolated median at (type, day) grain: position-pick
-    // the middle pair with one window, average it. (n+1) div 2 and
-    // (n+2) div 2 coincide for odd n — quantile_cont(0.5) semantics.
-    def medianOf(df: DataFrame, valueCol: String, as: String): DataFrame =
-      df.withColumn("rn", row_number().over(Window.partitionBy("event_type")
-          .orderBy(col(valueCol), col("day"))))
-        .withColumn("n", count(lit(1)).over(Window.partitionBy("event_type")))
-        .filter(col("rn") === expr("(n+1) div 2") ||
-          col("rn") === expr("(n+2) div 2"))
-        .groupBy("event_type").agg(avg(valueCol).as(as))
-    val med = medianOf(daily, "n_events", "med")
-    val devs = graft.Caches.tracked(
-      daily.join(broadcast(med), "event_type")
-        .withColumn("adev", abs(col("n_events") - col("med"))))
-    val mad = medianOf(devs, "adev", "mad")
+    val daily = graft.Caches.tracked(dailyCounts(events, "event_type"))
+    val (devs, mad) = RelationalOps.medianMad(daily, Some("event_type"), "n_events",
+      keep = graft.Caches.tracked)
     devs.join(broadcast(mad), "event_type")
       .withColumn("z", when(col("mad") > 0,
         graft.Num.stableRound(
           (col("n_events") - col("med")) / (lit(1.4826) * col("mad")), 4)))
       .select(col("event_type"),
-        date_format(col("day"), "yyyy-MM-dd").as("day"), col("n_events"),
+        isoDay(col("day")).as("day"), col("n_events"),
         col("med"), col("mad"), col("z").as("robust_z"),
         when(col("mad") > 0,
             abs((col("n_events") - col("med")) / (lit(1.4826) * col("mad"))) > lit(k))
@@ -1056,9 +1039,7 @@ object TrackAnalytics {
     * ≤ 32 keeps weight ≤ 2^31, so wsum stays in long for daily
     * counts up to ~2^31 per (type, day) — 100 TB headroom. */
   def ewmaVolume(events: DataFrame, horizon: Int = 16): DataFrame =
-    ewmaFromDaily(graft.Caches.tracked(
-      events.groupBy(col("event_type"), to_date(col("ts")).as("day"))
-        .agg(count(lit(1)).as("n_events"))), horizon)
+    ewmaFromDaily(graft.Caches.tracked(dailyCounts(events, "event_type")), horizon)
 
   /** q69's tiny-grain core over an already-aggregated (event_type,
     * day DATE, n_events) relation — shared with the streaming twin
@@ -1080,7 +1061,7 @@ object TrackAnalytics {
       .withColumn("ewma", graft.Num.stableRound(
         col("wsum").cast("double") / lit(denom.toDouble), 4))
       .select(col("event_type"),
-        date_format(col("day"), "yyyy-MM-dd").as("day"),
+        isoDay(col("day")).as("day"),
         col("n_events"), col("ewma"))
       .orderBy("event_type", "day")
   }
@@ -1101,7 +1082,7 @@ object TrackAnalytics {
     * the window (user-grain, never corpus-grain), and the rollup
     * output is ≤ #types rows per leg. */
   def touchAttribution(events: DataFrame, lookbackDays: Int = 7): DataFrame = {
-    val us = expr("ts_ns div 1000")
+    val us = eventUs
     val p = events.filter(col("event_type") === "purchase")
       .select(col("event_id").as("pid"), col("user_id"), us.as("p_us"),
         expr("CAST(floor(value*100 + 0.5) AS BIGINT)").as("cents"))
@@ -1133,9 +1114,10 @@ object TrackAnalytics {
     * segment label. Higher is better on every score (r_score 5 = most
     * recent).
     *
-    * The three global ranks use q55's hierarchical recipe — range
-    * buckets, a ≤1024-row prefix-sum window, within-bucket
-    * row_number — so NO user-grain global window exists (the q55/q44
+    * The three global ranks are RelationalOps.exactRank, q55's
+    * hierarchical recipe — range buckets, a ≤1024-row prefix-sum
+    * window, within-bucket row_number — so NO user-grain global window
+    * exists (the q55/q44
     * precedent; an ntile over all users would single-partition the
     * sort at 100 TB). Ties break by user_id in both engines, so ranks
     * — and therefore boundary-adjacent scores — are deterministic.
@@ -1154,21 +1136,10 @@ object TrackAnalytics {
         datediff(col("corpus_day"), col("last_day")).cast("long"))
       .select("user_id", "recency_days", "frequency", "monetary_cents"))
     // q55's global-window-free exact rank of one metric at user grain
-    def rankOf(valueCol: String, out: String): DataFrame = {
-      val mm = base.agg(min(valueCol).cast("long").as("lo"),
-        max(valueCol).cast("long").as("hi"))
-      val b = base.select(col("user_id"), col(valueCol).cast("long").as("v"))
-        .crossJoin(broadcast(mm))
-        .withColumn("bucket", expr("(v - lo) div (((hi - lo) div 1024) + 1)"))
-      val offsets = b.groupBy("bucket").agg(count(lit(1)).as("cnt"))
-        .withColumn("boff",
-          sum("cnt").over(Window.orderBy("bucket")) - col("cnt"))
-        .select("bucket", "boff")
-      val wIn = Window.partitionBy("bucket").orderBy("v", "user_id")
-      b.join(broadcast(offsets), "bucket")
-        .withColumn(out, col("boff") + row_number().over(wIn))
+    def rankOf(valueCol: String, out: String): DataFrame =
+      RelationalOps.exactRank(
+        base.select(col("user_id"), col(valueCol).cast("long").as("v")), "v", "user_id", out)
         .select("user_id", out)
-    }
     base
       .join(rankOf("recency_days", "rr"), "user_id")
       .join(rankOf("frequency", "rf"), "user_id")
@@ -1205,9 +1176,7 @@ object TrackAnalytics {
     * (constant series) makes any deviation flag immediately —
     * documented, not special-cased. */
   def cusumShift(events: DataFrame, hSigma: Double = 5.0): DataFrame =
-    cusumFromDaily(events
-      .groupBy(to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("n_events")), hSigma)
+    cusumFromDaily(dailyCounts(events), hSigma)
 
   /** The CUSUM derivation from an already-aggregated (day, n_events)
     * relation — shared by the batch op and its streaming twin (s39),
@@ -1217,17 +1186,10 @@ object TrackAnalytics {
     * that cannot be maintained incrementally). */
   private[graft] def cusumFromDaily(daily: DataFrame,
                                     hSigma: Double): DataFrame = {
-    val med = RelationalOps.exactGroupPercentiles(
-      daily.withColumn("__g", lit("all")), "__g", "n_events", Seq(0.5))
-      .select(col("__p0").as("med"))
-    val mad = RelationalOps.exactGroupPercentiles(
-      daily.crossJoin(broadcast(med))
-        .withColumn("__g", lit("all"))
-        .withColumn("adev", abs(col("n_events") - col("med"))),
-      "__g", "adev", Seq(0.5)).select(col("__p0").as("mad"))
+    val (devs, mad) = RelationalOps.medianMad(daily, None, "n_events")
     val w = Window.orderBy("day")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    daily.crossJoin(broadcast(med)).crossJoin(broadcast(mad))
+    devs.crossJoin(broadcast(mad))
       .withColumn("xs", collect_list(
         struct(col("day"), col("n_events"))).over(w))
       .withColumn("st", expr(
@@ -1238,7 +1200,7 @@ object TrackAnalytics {
       // flag on the SAME rounded values the row displays (m11 rule)
       .withColumn("cusum_up", graft.Num.stableRound(col("st.sp"), 4))
       .withColumn("cusum_down", graft.Num.stableRound(col("st.sn"), 4))
-      .select(date_format(col("day"), "yyyy-MM-dd").as("day"),
+      .select(isoDay(col("day")).as("day"),
         col("n_events"), col("cusum_up"), col("cusum_down"),
         (col("cusum_up") > lit(hSigma) * col("mad") ||
           col("cusum_down") > lit(hSigma) * col("mad")).as("shifted"))
@@ -1260,9 +1222,7 @@ object TrackAnalytics {
     * single-partition window and the O(days²) prefix folds run on
     * that ≤ horizon-days relation — free at any corpus size. */
   def holtTrend(events: DataFrame): DataFrame =
-    holtFromDaily(events
-      .groupBy(to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).as("n_events")))
+    holtFromDaily(dailyCounts(events))
 
   /** The Holt recurrence from an already-aggregated (day, n_events)
     * relation — shared by the batch op and its streaming twin (s38),
@@ -1282,7 +1242,7 @@ object TrackAnalytics {
           "'init', true), (acc, x) -> CASE WHEN acc.init THEN " +
           "named_struct('l', CAST(x.n_events AS DOUBLE), 'b', CAST(0 AS DOUBLE), " +
           s"'init', false) ELSE $step END)"))
-      .select(date_format(col("day"), "yyyy-MM-dd").as("day"),
+      .select(isoDay(col("day")).as("day"),
         col("n_events"),
         graft.Num.stableRound(col("st.l"), 4).as("level"),
         graft.Num.stableRound(col("st.b"), 4).as("trend"),
@@ -1314,7 +1274,7 @@ object TrackAnalytics {
   def survivalCurve(events: DataFrame, fromType: String = "click",
                     toType: String = "purchase"): DataFrame = {
     val us = events.select(col("user_id"), col("event_type"),
-      expr("ts_ns div 1000").as("us"))
+      eventUs.as("us"))
     val from = us.filter(col("event_type") === fromType)
       .groupBy("user_id").agg(min("us").as("t_from"))
     val to = us.filter(col("event_type") === toType)

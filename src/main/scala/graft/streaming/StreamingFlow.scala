@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.operators.TrackAnalytics
 import graft.sources.Sources
 
 /** Structured Streaming surface (SURVEY.md §2 "Streaming"): the
@@ -124,7 +125,7 @@ object StreamingFlow {
       .groupBy(window(col("ts"), s"$windowDays days", "1 day"))
       .agg(approx_count_distinct("user_id", rsd).as("uniq_win_est"))
       .select(
-        date_format(col("window.end") - expr("INTERVAL 1 DAY"), "yyyy-MM-dd").as("day"),
+        TrackAnalytics.isoDay(col("window.end") - expr("INTERVAL 1 DAY")).as("day"),
         col("uniq_win_est"))
 
   /** s07_stream_interval_join — stream-stream join with bounded state:
@@ -423,6 +424,18 @@ object StreamingFlow {
       }
     }
 
+  /** The gap rule s03 and s20 share with batch q11: an event opens a
+    * new session when none is open yet (`lastMs` is Long.MinValue) or
+    * it lands more than `gapMs` after the session's last event. */
+  private def opensSession(lastMs: Long, tsMs: Long, gapMs: Long): Boolean =
+    lastMs == Long.MinValue || tsMs - lastMs > gapMs
+
+  /** Arm the state's EventTimeTimeout at `atMs`, clamped past the
+    * current watermark: Spark rejects a timeout at or behind it, which
+    * happens when a batch's events are themselves near the watermark. */
+  private def timeoutAt(state: GroupState[_], atMs: Long): Unit =
+    state.setTimeoutTimestamp(math.max(atMs, state.getCurrentWatermarkMs() + 1))
+
   case class Ev(userId: Long, tsMs: Long)
   case class SessionState(lastMs: Long, sessions: Int)
   case class SessionCount(userId: Long, sessions: Int)
@@ -460,15 +473,11 @@ object StreamingFlow {
           } else {
             var st = state.getOption.getOrElse(SessionState(Long.MinValue, 0))
             evs.toSeq.sortBy(e => e.tsMs).foreach { e =>
-              val newSession = st.lastMs == Long.MinValue || e.tsMs - st.lastMs > gapMs
+              val newSession = opensSession(st.lastMs, e.tsMs, gapMs)
               st = SessionState(e.tsMs, if (newSession) st.sessions + 1 else st.sessions)
             }
             state.update(st)
-            // timeout must sit beyond the current watermark (Spark
-            // rejects a timestamp at/behind it — possible when this
-            // batch's events are themselves near the watermark)
-            state.setTimeoutTimestamp(
-              math.max(st.lastMs + gapMs, state.getCurrentWatermarkMs() + 1))
+            timeoutAt(state, st.lastMs + gapMs)
             Iterator(SessionCount(uid, st.sessions))
           }
       }
@@ -540,7 +549,7 @@ object StreamingFlow {
             var st = state.getOption.getOrElse(PathState(Long.MinValue, Vector.empty))
             val out = Seq.newBuilder[SessionPath]
             evs.toSeq.sortBy(e => (e.tsMs, e.eventId)).foreach { e =>
-              val newSession = st.lastMs == Long.MinValue || e.tsMs - st.lastMs > gapMs
+              val newSession = opensSession(st.lastMs, e.tsMs, gapMs)
               if (newSession && st.steps.nonEmpty)
                 out += SessionPath(uid, pathOf(st), new java.sql.Timestamp(st.lastMs))
               val steps =
@@ -550,8 +559,7 @@ object StreamingFlow {
               st = PathState(if (newSession) e.tsMs else math.max(st.lastMs, e.tsMs), steps)
             }
             state.update(st)
-            state.setTimeoutTimestamp(
-              math.max(st.lastMs + gapMs, state.getCurrentWatermarkMs() + 1))
+            timeoutAt(state, st.lastMs + gapMs)
             out.result().iterator
           }
       }
@@ -608,8 +616,7 @@ object StreamingFlow {
             }
             if (st.level > 0) {
               state.update(st)
-              state.setTimeoutTimestamp(
-                math.max((st.t1 + windowMicros) / 1000L, state.getCurrentWatermarkMs() + 1))
+              timeoutAt(state, (st.t1 + windowMicros) / 1000L)
             }
             // level 0 emits without storing state: a never-anchored
             // user costs the state store nothing
@@ -855,7 +862,7 @@ object StreamingFlow {
   private[graft] def ewmaBatch(statePath: String, resultPath: String,
                                horizon: Int): (DataFrame, Long) => Unit =
     dailyStateBatch(statePath, resultPath, "event_type")(
-      graft.operators.TrackAnalytics.ewmaFromDaily(_, horizon))
+      TrackAnalytics.ewmaFromDaily(_, horizon))
 
   /** The s32/s38/s39 trigger step: land the batch's event counts per
     * (`keys`, day) as its own `batch_id` partitions of `statePath`,
@@ -866,8 +873,7 @@ object StreamingFlow {
       derive: DataFrame => DataFrame): (DataFrame, Long) => Unit =
     (batch, batchId) => {
       val spark = batch.sparkSession
-      val grain = keys.map(col) :+ to_date(col("ts")).as("day")
-      Sources.writeBatch(batch.groupBy(grain: _*).agg(count(lit(1)).as("n_events")),
+      Sources.writeBatch(TrackAnalytics.dailyCounts(batch, keys: _*),
         statePath, Some(batchId), seeding = false)
       // An EMPTY first trigger lands a state dir holding only _SUCCESS
       // (zero batch_id partitions) — reading it fails schema inference
@@ -901,7 +907,7 @@ object StreamingFlow {
 
   private[graft] def holtBatch(statePath: String, resultPath: String
                               ): (DataFrame, Long) => Unit =
-    dailyStateBatch(statePath, resultPath)(graft.operators.TrackAnalytics.holtFromDaily)
+    dailyStateBatch(statePath, resultPath)(TrackAnalytics.holtFromDaily)
 
   /** s39_stream_cusum — q78's streaming twin on the s32/s38 state
     * recipe: replay-exact day-grain counts per trigger, the CUSUM
@@ -918,7 +924,7 @@ object StreamingFlow {
   private[graft] def cusumBatch(statePath: String, resultPath: String,
                                 hSigma: Double): (DataFrame, Long) => Unit =
     dailyStateBatch(statePath, resultPath)(
-      graft.operators.TrackAnalytics.cusumFromDaily(_, hSigma))
+      TrackAnalytics.cusumFromDaily(_, hSigma))
 
   def streamAudienceOverlap(eventStream: DataFrame, statePath: String,
                             resultPath: String, checkpoint: String,
@@ -929,7 +935,6 @@ object StreamingFlow {
   private[graft] def audienceOverlapBatch(statePath: String, resultPath: String,
                                           k: Int): (DataFrame, Long) => Unit =
     (batch, batchId) => {
-      import graft.operators.TrackAnalytics
       val spark = batch.sparkSession
       val bsk = TrackAnalytics.kmvSketches(
         batch.select("event_type", "user_id"), k)
@@ -1196,8 +1201,7 @@ object StreamingFlow {
               st = TransState(e.tsMs, e.eventId, e.eventType)
             }
             state.update(st)
-            state.setTimeoutTimestamp(
-              math.max(st.lastMs + idleMs, state.getCurrentWatermarkMs() + 1))
+            timeoutAt(state, st.lastMs + idleMs)
             out.result().iterator
           }
       }

@@ -1,6 +1,8 @@
 package graft
 
 import graft.operators.Quality
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
 class TaskRunnerSpec extends SparkSpecBase {
 
@@ -20,11 +22,29 @@ class TaskRunnerSpec extends SparkSpecBase {
     assert(tight > wide, s"1-min gap sessions ($tight) should exceed 1-day gap ($wide)")
   }
 
+  /** Whether `df`'s analyzed plan (before any cached frame stands in
+    * for its subtree) reads the events table. */
+  private def scansEvents(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.collectLeaves().exists {
+      case r: LogicalRelation => r.relation match {
+        case h: HadoopFsRelation => h.location.rootPaths.exists(_.getName == "events.parquet")
+        case _ => false
+      }
+      case _ => false
+    }
+
   test("date-range task params filter events before the operator") {
-    val all = TaskRunner.run(spark, d, "q08_car_track").count()
-    val none = TaskRunner.run(spark, d, "q08_car_track",
-      Map("startTs" -> "2099-01-01")).count()
-    assert(all > 0 && none == 0)
+    // the table: every q runner whose default plan scans the events
+    // table (the events-driven analyses are all q runners)
+    val eventsDriven = TaskRunner.runners.keys.toSeq.sorted.filter(_.startsWith("q"))
+      .filter(q => try scansEvents(TaskRunner.run(spark, d, q)) finally Caches.release())
+    assert(eventsDriven.contains("q08_car_track"), s"got $eventsDriven")
+    assert(TaskRunner.run(spark, d, "q08_car_track").count() > 0)
+    val unfiltered = eventsDriven.filter { q =>
+      try TaskRunner.run(spark, d, q, Map("startTs" -> "2099-01-01")).count() > 0
+      finally Caches.release()
+    }
+    assert(unfiltered.isEmpty, s"runners that ignore startTs: ${unfiltered.mkString(", ")}")
   }
 
   test("JSON task_parm round trip drives a run") {

@@ -41,6 +41,46 @@ class TrackSpec extends SparkSpecBase {
     assert(out.size == 3)
   }
 
+  test("same-microsecond events order by event_id, not nanoseconds, in every sequence operator") {
+    // user 1: click (id 1) and signup (id 2) share microsecond 1000000
+    // but their nanoseconds run the other way (signup first); view
+    // (id 3) follows a second later. The (microsecond, event_id) order
+    // is click > signup > view; a nanosecond order would read
+    // signup > click > view.
+    val ev = Seq(
+      (1L, 1000000700L, 1L, "click"),
+      (2L, 1000000200L, 1L, "signup"),
+      (3L, 2000000000L, 1L, "view")
+    ).toDF("event_id", "ts_ns", "user_id", "event_type")
+      .withColumn("ts", timestamp_micros(expr("ts_ns div 1000")))
+      .withColumn("value", lit(1.0))
+    val pairs = Set(("click", "signup"), ("signup", "view"))
+    def edges(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getString(0), r.getString(1))).toSet
+    // q08
+    assert(TrackAnalytics.carTrack(ev).collect().map(_.getString(1)).toSeq ==
+      Seq("click>signup>view"))
+    assert(TrackAnalytics.carTrack(ev, maxEvents = Some(1)).collect()
+      .map(_.getString(1)).toSeq == Seq("click"))
+    // q09, q56, q58
+    assert(edges(TrackAnalytics.funnelStep(ev)) == pairs)
+    assert(edges(TrackAnalytics.transitionMatrix(ev)) == pairs)
+    assert(edges(TrackAnalytics.sessionTransitions(ev)) == pairs)
+    // q11 / q53: one session whose path follows the event_id order
+    assert(TrackAnalytics.sessionize(ev).collect().map(r => (r.getLong(1), r.getLong(2))).toSeq ==
+      Seq((1L, 3L)))
+    assert(TrackAnalytics.sessionPaths(ev).collect().map(_.getString(0)).toSeq ==
+      Seq("click>signup>view"))
+    // q30: the signup's nearest prior click is id 1, zero microseconds back
+    val asof = TrackAnalytics.asofJoin(ev).collect()
+      .map(r => (r.getLong(0), r.getLong(2), r.getLong(3))).toSeq
+    assert(asof == Seq((2L, 1L, 0L)), s"got $asof")
+    // q59: the click owns 0 us up to the signup, the signup the full second
+    val dwell = TrackAnalytics.dwellTime(ev).collect()
+      .map(r => r.getString(0) -> r.getLong(2)).toMap
+    assert(dwell == Map("click" -> 0L, "signup" -> 1000000L), s"got $dwell")
+  }
+
   test("asofJoin finds the most recent prior click per signup") {
     val ev = Seq(
       (0L, 1000L, 1L, "click"),
@@ -455,14 +495,17 @@ class TrackSpec extends SparkSpecBase {
     val day = 86400000L
     // "click": daily counts 4,5,6,5,7,5,100 → med 5, mad 1;
     // "view": 5,5,5,5,6 → med 5, mad 0 (conservative branch);
-    // "buy": 2 days of 2,4 → even-count interpolated med 3, mad 1
+    // "buy": 2 days of 2,4 → even-count interpolated med 3, mad 1;
+    // "pay": 4 days of 1,3,4,12 → med 3.5 (a .5 midpoint), devs
+    // 2.5,0.5,0.5,8.5 → mad 1.5 (a midpoint on the quarter grid)
     def burst(t: String, d: Int, n: Int): Seq[(String, Long)] =
       (0 until n).map(i => (t, d * day + i * 1000L))
     val rows = burst("click", 0, 4) ++ burst("click", 1, 5) ++
       burst("click", 2, 6) ++ burst("click", 3, 5) ++ burst("click", 4, 7) ++
       burst("click", 5, 5) ++ burst("click", 6, 100) ++
       (0 until 4).flatMap(d => burst("view", d, 5)) ++ burst("view", 4, 6) ++
-      burst("buy", 0, 2) ++ burst("buy", 1, 4)
+      burst("buy", 0, 2) ++ burst("buy", 1, 4) ++
+      burst("pay", 0, 1) ++ burst("pay", 1, 3) ++ burst("pay", 2, 4) ++ burst("pay", 3, 12)
     val ev = rows.toDF("event_type", "ts_ms")
       .withColumn("ts", timestamp_millis(col("ts_ms")))
     val out = TrackAnalytics.eventAnomaly(ev).collect()
@@ -482,5 +525,11 @@ class TrackSpec extends SparkSpecBase {
     // even day count: interpolated median 3.0, both days |z| < 3
     assert(out(("buy", "1970-01-01"))._2 == 3.0 &&
       out(("buy", "1970-01-01"))._3 == 1.0 && !out(("buy", "1970-01-02"))._5)
+    // even day count with a .5 median: z = (n − 3.5)/(1.4826·1.5)
+    def z(n: Double) = math.floor((n - 3.5) / (1.4826 * 1.5) * 10000 + 0.5) / 10000
+    val pay = (0 to 3).map(i => out(("pay", s"1970-01-0${i + 1}")))
+    assert(pay.forall(p => p._2 == 3.5 && p._3 == 1.5), s"got $pay")
+    assert(pay.map(_._4.get) == Seq(1.0, 3.0, 4.0, 12.0).map(z), s"got $pay")
+    assert(pay.map(_._5) == Seq(false, false, false, true), "only the 12-count day flags")
   }
 }
