@@ -482,7 +482,7 @@ object TaskRunner {
     "t05_stopword_ratio" -> ((s, d, p) => TextStats.stopwordRatio(
       Tables.documents(s, d),
       p.get("stopwords").map(_.split(",").map(_.trim).toSeq)
-        .getOrElse(Seq("the", "a", "of", "and", "is")))),
+        .getOrElse(TextStats.defaultStopwords))),
     "t07_repetition" -> ((s, d, _) => TextStats.repetition(Tables.documents(s, d))),
     "t08_pii_scrub" -> ((s, d, _) => TextStats.piiScrub(Tables.documents(s, d))),
     "t12_bpe_tokens" -> ((s, d, _) => TextStats.bpeTokens(Tables.documents(s, d))),

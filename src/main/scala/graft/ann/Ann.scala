@@ -1404,14 +1404,8 @@ object Ann {
         if (n <= calibrateSample) embeddings
         else {
           val pKeep = calibrateSample.toDouble / n
-          // pmod, not signed %: vec_id * 2654435761 overflows negative
-          // past vec_id ~ 3.47e9, and a negative remainder is always
-          // under the threshold — the signed form silently kept every
-          // high-id row and ballooned the "sample" toward half the
-          // corpus at the scale this bound exists for
           embeddings.filter(col("vec_id") < nQueries ||
-            pmod(col("vec_id") * 2654435761L, lit(4294967296L)).cast("double")
-              < pKeep * 4294967296.0)
+            graft.Num.keeps(col("vec_id"), lit(pKeep)))
         }
       }
     val curve = bqRecallCurve(base, nQueries, k, depths).collect()

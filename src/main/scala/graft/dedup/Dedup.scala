@@ -29,6 +29,13 @@ object Dedup {
       .select("doc_id", "dup_cnt")
       .orderBy("doc_id")
 
+  /** The shingle tokenizer: `text` lowercased and split on whitespace
+    * runs WITHOUT a trim, so leading whitespace yields a leading ""
+    * token. It is the determinism contract of every shingle and
+    * SimHash consumer with its oracle (d01–d24, s09, s11, s17); the
+    * trimmed word tokenizers live in `TextStats`. */
+  private[graft] def shingleTokens(text: Column): Column = split(lower(text), "\\s+")
+
   /** Hashed shingle sets: 64-bit chained-XXH64 of each word 3-gram,
     * never materializing shingle strings (collision odds
     * ~|shingles|^2 / 2^64 are negligible for counting). The hash loop
@@ -43,7 +50,7 @@ object Dedup {
   def withShingleHashes(documents: DataFrame, n: Int = 3): DataFrame = {
     graft.functions.GraftFunctions.register(documents.sparkSession)
     graft.Scans.spreadIfNarrow(documents, col("doc_id"))
-      .withColumn("toks", split(lower(col("text")), "\\s+"))
+      .withColumn("toks", shingleTokens(col("text")))
       .filter(size(col("toks")) >= n)
       .withColumn("sh", expr(s"graft_shingle_hashes(toks, $n)"))
   }
@@ -745,7 +752,7 @@ object Dedup {
     // withShingleHashes.
     graft.functions.GraftFunctions.register(documents.sparkSession)
     val fp = graft.Scans.spreadIfNarrow(documents, col("doc_id"))
-      .withColumn("toks", array_distinct(split(lower(col("text")), "\\s+")))
+      .withColumn("toks", array_distinct(shingleTokens(col("text"))))
       .filter(size(col("toks")) > 0)
       .select(col("doc_id"), expr("graft_simhash(toks)").as("simhash"))
     simHashCandidates(fp, maxHamming)

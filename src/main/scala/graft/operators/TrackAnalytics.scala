@@ -182,17 +182,14 @@ object TrackAnalytics {
       .limit(topK)
   }
 
-  /** Deterministic pseudo-random scramble used instead of rand() so the
-    * sample is reproducible across engines and runs (Knuth
-    * multiplicative hash over the record id). */
-  private def scramble(id: Column): Column = (id * lit(2654435761L)) % lit(4294967296L)
-
   /** q14_stratified_sample — deterministic stratified sampling: N
     * records per day-stratum (the reference's RandomExtractCars samples
-    * per hour-block). One shuffle on the stratum key. */
+    * per hour-block), ordered by `Num.scramble` of the record id
+    * instead of rand(), so the sample is reproducible across engines
+    * and runs. One shuffle on the stratum key. */
   def stratifiedSample(events: DataFrame, perStratum: Int = 5): DataFrame = {
     val w = Window.partitionBy(date_trunc("day", col("ts")))
-      .orderBy(scramble(col("event_id")), col("event_id"))
+      .orderBy(graft.Num.scramble(col("event_id")), col("event_id"))
     events
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= perStratum)

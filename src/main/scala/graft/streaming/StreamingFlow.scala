@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.dedup.Dedup
 import graft.operators.TrackAnalytics
 import graft.sources.Sources
 
@@ -155,7 +156,7 @@ object StreamingFlow {
     graft.functions.GraftFunctions.register(stream.sparkSession)
     stream
       .withColumn("sim_key",
-        expr("graft_simhash(array_distinct(split(lower(text), '\\\\s+')))"))
+        call_function("graft_simhash", array_distinct(Dedup.shingleTokens(col("text")))))
       .withWatermark("ts", "1 hour")
       .dropDuplicatesWithinWatermark("sim_key")
   }
@@ -198,9 +199,7 @@ object StreamingFlow {
   def streamSourceMix(stream: DataFrame, rates: DataFrame): DataFrame =
     stream
       .join(broadcast(rates), "source")
-      .withColumn("keep",
-        ((col("doc_id") * 2654435761L) % 4294967296L).cast("double")
-          < col("rate") * 4294967296.0)
+      .withColumn("keep", graft.Num.keeps(col("doc_id"), col("rate")))
 
   /** The benchmark shingle union for [[streamDecontaminate]], derived
     * once from a static documents table (the d09 eval side), sorted
@@ -226,7 +225,7 @@ object StreamingFlow {
                           minShared: Long = 8): DataFrame = {
     graft.functions.GraftFunctions.register(stream.sparkSession)
     stream
-      .withColumn("toks", split(lower(col("text")), "\\s+"))
+      .withColumn("toks", Dedup.shingleTokens(col("text")))
       // graft_shingle_hashes already yields an empty array below n
       // tokens — no short-doc guard needed
       .withColumn("sh", expr("graft_shingle_hashes(toks, 3)"))
@@ -278,7 +277,7 @@ object StreamingFlow {
     val fname = graft.functions.GraftFunctions.registerBloomHitCount(
       stream.sparkSession, bloomBytes)
     stream
-      .withColumn("toks", split(lower(col("text")), "\\s+"))
+      .withColumn("toks", Dedup.shingleTokens(col("text")))
       .withColumn("sh", expr("graft_shingle_hashes(toks, 3)"))
       // coalesce: null text yields null shingles — route as unshared
       .withColumn("n_maybe_shared",
@@ -637,14 +636,8 @@ object StreamingFlow {
     * estimates under-count by at most N/(k+1) of the tokens seen so
     * far, so every term above that share is guaranteed present.
     * Batch twin: t26_frequent_terms. */
-  def streamFrequentTerms(docs: DataFrame, k: Int = 64): DataFrame = {
-    val sketch = udaf(new graft.functions.TypedAggregators.FreqSketch(k))
-    docs
-      .select(explode(split(lower(trim(col("text"))), "\\s+")).as("word"))
-      .filter(col("word") =!= "")
-      .agg(sketch(col("word")).as("sk"))
-      .select(explode(col("sk")).as(Seq("word", "est_freq")))
-  }
+  def streamFrequentTerms(docs: DataFrame, k: Int = 64): DataFrame =
+    graft.text.TextStats.termSketch(docs, k)
 
   /** s37_stream_chunk_ingest — live ingestion into the content-
     * addressed chunk store (`sink_chunk_store`): each micro-batch of

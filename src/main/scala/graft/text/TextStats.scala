@@ -7,8 +7,8 @@ import org.apache.spark.sql.catalyst.expressions.{Literal, Pmod, XxHash64}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import graft.{Num, Scans}
 import graft.Num.stableRound
-import graft.Scans
 import graft.sources.Sources
 
 /** Text-analysis operators for LLM-training-data pipelines
@@ -22,12 +22,37 @@ import graft.sources.Sources
   */
 object TextStats {
 
+  // ------------------------------------------------------------------
+  // Tokenizers. Each oracle copies its operator's tokenizer exactly, so
+  // the two here (and `Dedup.shingleTokens`) differ on purpose and are
+  // each written once: change one in its owner or nowhere. Neither
+  // drops the "" token an empty or whitespace-only text splits to;
+  // callers keep their own filtering.
+  // ------------------------------------------------------------------
+
+  /** The whitespace tokens of `text`, case kept: trimmed, split on
+    * whitespace runs (t01, t09, t10, t15, t23, t30, the t02/t18 token
+    * count and s13's rates). */
+  private def wsTokens(text: Column): Column = split(trim(text), "\\s+")
+
+  /** The lowercase words of `text`: trimmed, lowercased, split on
+    * whitespace runs (every word-level operator here, the retrieval
+    * family, and s21). */
+  private[graft] def lowerWords(text: Column): Column = split(lower(trim(text)), "\\s+")
+
+  /** The default stopword list of t05, t32, t33 and t34. */
+  private[graft] val defaultStopwords: Seq[String] = Seq("the", "a", "of", "and", "is")
+
+  /** Whether token `w` is in `stopwords`: literal values, never SQL
+    * text, so a stopword such as "don't" is compared, not parsed. */
+  private def isStopword(w: Column, stopwords: Seq[String]): Column = w.isin(stopwords: _*)
+
   /** t01_token_stats — tokenization + per-doc token/char counts.
     * Whitespace tokenizer (the reference for token counting; the
     * BPE-pretokenizer variant is t12 `bpeTokens` below). */
   def tokenStats(documents: DataFrame): DataFrame =
     documents
-      .withColumn("toks", split(trim(col("text")), "\\s+"))
+      .withColumn("toks", wsTokens(col("text")))
       .select(
         col("doc_id"),
         size(col("toks")).as("n_tokens"),
@@ -66,7 +91,7 @@ object TextStats {
   private def nchars = length(col("text"))
   private def alphaChars = length(regexp_replace(col("text"), "[^A-Za-z]", ""))
   private def spaceChars = length(regexp_replace(col("text"), "[^ ]", ""))
-  private def ntok = size(split(trim(col("text")), "\\s+"))
+  private def ntok = size(wsTokens(col("text")))
 
   /** The t02 quality formula over a `text` column, rounded with
     * stableRound — the SINGLE definition shared by the batch scorer
@@ -131,17 +156,16 @@ object TextStats {
   /** t05_stopword_ratio — share of stopword tokens per document (the
     * Gopher-style repetition/quality signal). Narrow, single pass. */
   def stopwordRatio(documents: DataFrame,
-                    stopwords: Seq[String] = Seq("the", "a", "of", "and", "is")): DataFrame = {
-    val inList = stopwords.map(w => s"'$w'").mkString("(", ",", ")")
+                    stopwords: Seq[String] = defaultStopwords): DataFrame = {
+    def nStop = size(filter(col("toks"), isStopword(_, stopwords)))
     documents
-      .withColumn("toks", split(lower(trim(col("text"))), "\\s+"))
+      .withColumn("toks", lowerWords(col("text")))
       .filter(size(col("toks")) > 0)
       .select(
         col("doc_id"),
         size(col("toks")).as("n_tokens"),
-        expr(s"size(filter(toks, x -> x IN $inList))").as("n_stop"),
-        stableRound(expr(s"size(filter(toks, x -> x IN $inList))") / size(col("toks")), 4)
-          .as("stop_ratio"))
+        nStop.as("n_stop"),
+        stableRound(nStop / size(col("toks")), 4).as("stop_ratio"))
       .orderBy("doc_id")
   }
 
@@ -150,9 +174,7 @@ object TextStats {
     * tiebreak. The explode shuffles only (word, partial count) pairs
     * thanks to map-side partial aggregation. */
   def wordFreq(documents: DataFrame, topN: Int = 20): DataFrame =
-    Scans.spreadIfNarrow(documents, col("doc_id"))
-      .select(explode(split(lower(trim(col("text"))), "\\s+")).as("word"))
-      .filter(col("word") =!= "")
+    wordsOf(Scans.spreadIfNarrow(documents, col("doc_id")))
       .groupBy("word")
       .agg(count(lit(1)).as("freq"))
       .orderBy(col("freq").desc, col("word"))
@@ -171,15 +193,25 @@ object TextStats {
     * over under-counted-by-a-common-bound values. Rows-only (the
     * sketch's estimates depend on merge order — the spec pins the
     * order-independent guarantees against exact t06 instead). */
-  def frequentTerms(documents: DataFrame, k: Int = 64, topN: Int = 20): DataFrame = {
-    val sketch = udaf(new graft.functions.TypedAggregators.FreqSketch(k))
-    Scans.spreadIfNarrow(documents, col("doc_id"))
-      .select(explode(split(lower(trim(col("text"))), "\\s+")).as("word"))
-      .filter(col("word") =!= "")
-      .agg(sketch(col("word")).as("sk"))
-      .select(explode(col("sk")).as(Seq("word", "est_freq")))
+  def frequentTerms(documents: DataFrame, k: Int = 64, topN: Int = 20): DataFrame =
+    termSketch(Scans.spreadIfNarrow(documents, col("doc_id")), k)
       .orderBy(col("est_freq").desc, col("word"))
       .limit(topN)
+
+  /** The non-empty lowercase words of `documents`, one `word` row per
+    * occurrence (t06 and the t26/s21 term sketch). */
+  private def wordsOf(documents: DataFrame): DataFrame =
+    documents.select(explode(lowerWords(col("text"))).as("word"))
+      .filter(col("word") =!= "")
+
+  /** The Misra–Gries term sketch with `k` counters as (word, est_freq)
+    * rows, unsorted: t26's body over a batch and s21's over a stream
+    * (whose aggregation state is the sketch buffer). */
+  private[graft] def termSketch(documents: DataFrame, k: Int): DataFrame = {
+    val sketch = udaf(new graft.functions.TypedAggregators.FreqSketch(k))
+    wordsOf(documents)
+      .agg(sketch(col("word")).as("sk"))
+      .select(explode(col("sk")).as(Seq("word", "est_freq")))
   }
 
   /** t07_repetition — within-document repetition signal (the Gopher
@@ -189,7 +221,7 @@ object TextStats {
   def repetition(documents: DataFrame): DataFrame = {
     graft.functions.GraftFunctions.register(documents.sparkSession)
     documents
-      .withColumn("toks", split(lower(trim(col("text"))), "\\s+"))
+      .withColumn("toks", lowerWords(col("text")))
       .filter(size(col("toks")) >= 2)
       .select(
         col("doc_id"),
@@ -225,7 +257,7 @@ object TextStats {
     * group aggregation. */
   def corpusStats(documents: DataFrame, shortDocTokens: Int = 20): DataFrame =
     documents
-      .select(size(split(trim(col("text")), "\\s+")).as("n_toks"))
+      .select(ntok.as("n_toks"))
       .agg(
         count(lit(1)).as("n_docs"),
         sum(col("n_toks").cast("long")).as("total_tokens"),
@@ -266,7 +298,7 @@ object TextStats {
               bucketSize: Long = 1024L): DataFrame = {
     val base = documents
       .select(col("doc_id"),
-        size(split(trim(col("text")), "\\s+")).cast("long").as("n_tokens"))
+        ntok.cast("long").as("n_tokens"))
       .withColumn("bucket", expr(s"doc_id div $bucketSize"))
     val bucketOffsets = base
       .groupBy("bucket").agg(sum("n_tokens").as("btoks"))
@@ -299,7 +331,7 @@ object TextStats {
   def spanDedup(documents: DataFrame, spanTokens: Int = 10): DataFrame = {
     graft.functions.GraftFunctions.register(documents.sparkSession)
     val spans = graft.Scans.spreadIfNarrow(documents, col("doc_id"))
-      .withColumn("toks", split(lower(trim(col("text"))), "\\s+"))
+      .withColumn("toks", lowerWords(col("text")))
       .select(col("doc_id"), expr(s"graft_span_hashes(toks, $spanTokens)").as("sh"))
       .filter(size(col("sh")) > 0)
       .select(col("doc_id"), size(col("sh")).cast("long").as("n_spans"),
@@ -356,7 +388,7 @@ object TextStats {
     graft.functions.GraftFunctions.register(documents.sparkSession)
     Scans.spreadIfNarrow(documents, col("doc_id"))
       .filter(nchars > 0)
-      .withColumn("toks", split(lower(trim(col("text"))), "\\s+"))
+      .withColumn("toks", lowerWords(col("text")))
       .withColumn("n_tokens", ntok)
       .withColumn("quality", qualityExpr)
       .withColumn("rep_ratio",
@@ -384,13 +416,11 @@ object TextStats {
     * groupBys ((doc,term) then term) → a term-keyed join → a per-doc
     * top-K window. Only (doc_id, term, counts) tuples shuffle. */
   def termSalience(documents: DataFrame, topK: Int = 3): DataFrame = {
-    val terms = graft.Scans.spreadIfNarrow(documents, col("doc_id"))
-      .select(col("doc_id"), explode(split(lower(trim(col("text"))), "\\s+")).as("term"))
     // persisted (tracked): tf feeds BOTH the DF count and the probe
     // side of the re-join (the t13 precedent) — one tokenize pass, not
-    // two; released by the caller's Caches.release()
-    val tf = graft.Caches.tracked(
-      terms.groupBy("doc_id", "term").agg(count(lit(1)).as("tf")))
+    // two; released by the caller's Caches.release(). The "" term of
+    // an empty text is kept, as in t14's oracle.
+    val tf = graft.Caches.tracked(termFreqs(documents, keepEmpty = true))
     val dfc = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val nDocs = documents.agg(count(lit(1)).as("n_docs"))
     // rank on the UNROUNDED double; ties broken by term so the cut is
@@ -426,14 +456,9 @@ object TextStats {
     * the spec pins a hand-computed twin and the rare-beats-common
     * ordering. Empty documents carry no tokens and no row. */
   def unigramSurprisal(documents: DataFrame): DataFrame = {
-    val terms = graft.Scans.spreadIfNarrow(documents, col("doc_id"))
-      .select(col("doc_id"),
-        explode(split(lower(trim(col("text"))), "\\s+")).as("term"))
-      .filter(col("term") =!= "")
     // tracked: tf feeds the corpus-frequency aggregate AND the probe
     // side of the re-join (the t14 precedent)
-    val tf = graft.Caches.tracked(
-      terms.groupBy("doc_id", "term").agg(count(lit(1)).as("tf")))
+    val tf = graft.Caches.tracked(termFreqs(documents))
     val cf = tf.groupBy("term").agg(sum("tf").as("cf"))
     val tot = cf.agg(sum("cf").as("t"))
     tf.join(cf, "term")
@@ -472,7 +497,7 @@ object TextStats {
   def bigramSurprisal(documents: DataFrame, alpha: Double = 0.5): DataFrame = {
     val toks = graft.Scans.spreadIfNarrow(documents, col("doc_id"))
       .select(col("doc_id"),
-        posexplode(split(lower(trim(col("text"))), "\\s+")).as(Seq("pos", "tok")))
+        posexplode(lowerWords(col("text"))).as(Seq("pos", "tok")))
       .filter(col("tok") =!= "")
     val w = Window.partitionBy("doc_id").orderBy("pos")
     val bi = toks
@@ -503,27 +528,19 @@ object TextStats {
       .orderBy("doc_id")
   }
 
-  /** t15_source_mix — domain-mixture sampling to a token budget: a
-    * training mix wants each source capped at an equal share of
-    * `budgetShare · total_tokens`. Two tiny aggregations derive each
-    * source's keep-rate (`min(1, budget/source_tokens)`); the corpus
-    * passes once through a broadcast rate join + the deterministic
-    * LCG-hash Bernoulli filter (q14's protocol — reproducible at any
-    * cluster size, no rand()). Undersized sources keep everything
-    * (rate 1); oversized ones downsample proportionally. */
+  /** Per-source token totals, the one derivation shared by t15's
+    * rates, t23's epochs and s13's gate. Its token rule is `wsTokens`,
+    * the determinism contract with their oracles: change it there or
+    * nowhere. Persisted (tracked): every caller reads it at least
+    * twice. */
+  private def perSourceTokens(documents: DataFrame): DataFrame =
+    graft.Caches.tracked(documents
+      .select(col("source"), ntok.cast("long").as("n_toks"))
+      .groupBy("source").agg(sum("n_toks").as("src_tokens")))
+
   /** The t15 per-source keep-rate table — the SINGLE definition shared
     * by the batch sampler and the streaming mixture gate (s13), so a
     * doc routes identically in both (the qualityExpr precedent). */
-  /** Per-source token totals — the ONE tokenization-rule-bearing
-    * derivation shared by t15's rates, t23's epochs and s13's gate
-    * (the whitespace class here is the determinism contract with
-    * their oracles; change it in one place or nowhere). Persisted
-    * (tracked): every caller reads it at least twice. */
-  private def perSourceTokens(documents: DataFrame): DataFrame =
-    graft.Caches.tracked(documents
-      .select(col("source"), size(split(trim(col("text")), "\\s+")).cast("long").as("n_toks"))
-      .groupBy("source").agg(sum("n_toks").as("src_tokens")))
-
   private[graft] def sourceRatesOf(documents: DataFrame, budgetShare: Double): DataFrame = {
     val perSrc = perSourceTokens(documents)
     val tot = perSrc.agg(sum("src_tokens").as("total_tokens"), count(lit(1)).as("n_sources"))
@@ -533,12 +550,19 @@ object TextStats {
       .select("source", "rate")
   }
 
+  /** t15_source_mix — domain-mixture sampling to a token budget: a
+    * training mix wants each source capped at an equal share of
+    * `budgetShare · total_tokens`. Two tiny aggregations derive each
+    * source's keep-rate (`min(1, budget/source_tokens)`); the corpus
+    * passes once through a broadcast rate join + the deterministic
+    * `Num.keeps` Bernoulli coin (q14's scramble — reproducible at any
+    * cluster size, no rand()). Undersized sources keep everything
+    * (rate 1); oversized ones downsample proportionally. */
   def sourceMix(documents: DataFrame, budgetShare: Double = 0.5): DataFrame = {
     val toks = documents.select(col("doc_id"), col("source"),
-      size(split(trim(col("text")), "\\s+")).cast("long").as("n_toks"))
+      ntok.cast("long").as("n_toks"))
     toks.join(broadcast(sourceRatesOf(documents, budgetShare)), "source")
-      .filter(((col("doc_id") * 2654435761L) % 4294967296L).cast("double")
-        < col("rate") * 4294967296.0)
+      .filter(Num.keeps(col("doc_id"), col("rate")))
       .select("doc_id", "source", "n_toks")
       .orderBy("doc_id")
   }
@@ -571,8 +595,8 @@ object TextStats {
     documents.select(col("doc_id"), col("source"))
       .join(broadcast(epochs), "source")
       .withColumn("n_copies", floor(col("epochs")) +
-        when(((col("doc_id") * 2654435761L) % 4294967296L).cast("double")
-          < (col("epochs") - floor(col("epochs"))) * 4294967296.0, 1L).otherwise(0L))
+        when(Num.keeps(col("doc_id"), col("epochs") - floor(col("epochs"))), 1L)
+          .otherwise(0L))
       .select(col("doc_id"), col("source"),
         explode(sequence(lit(0L), col("n_copies") - 1)).as("copy"))
       .orderBy("doc_id", "copy")
@@ -590,7 +614,7 @@ object TextStats {
   def shardAssign(documents: DataFrame, nShards: Int = 8): DataFrame = {
     val base = documents
       .select(col("doc_id"),
-        ((col("doc_id") * 2654435761L) % 4294967296L).as("h"))
+        Num.scramble(col("doc_id")).as("h"))
       .withColumn("shard", (col("h") % nShards).cast("int"))
       .withColumn("bucket", expr("h div 16777216").cast("int")) // 2^24 → ≤256 buckets
     val counts = base.groupBy("shard", "bucket").agg(count(lit(1)).as("cnt"))
@@ -618,7 +642,7 @@ object TextStats {
   def cooccurrence(documents: DataFrame, window: Int = 3, topN: Int = 20): DataFrame = {
     val toks = graft.Scans.spreadIfNarrow(documents, col("doc_id"))
       .select(col("doc_id"),
-        posexplode(split(lower(trim(col("text"))), "\\s+")).as(Seq("pos", "tok")))
+        posexplode(lowerWords(col("text"))).as(Seq("pos", "tok")))
     val w = Window.partitionBy("doc_id").orderBy("pos")
     toks
       .select(col("tok") +: (1 to window).map(o => lead("tok", o).over(w).as(s"l$o")): _*)
@@ -655,7 +679,7 @@ object TextStats {
     * corpus-sized); the top-K table and one-row total broadcast. */
   def sourceDrift(documents: DataFrame, topK: Int = 50): DataFrame = {
     val tok = Scans.spreadIfNarrow(documents, col("doc_id"))
-      .select(col("source"), explode(split(lower(trim(col("text"))), "\\s+")).as("tok"))
+      .select(col("source"), explode(lowerWords(col("text"))).as("tok"))
       .filter(col("tok") =!= "")
     // tracked: the (source, token) counts feed the global top-K, the
     // per-source totals, the grand total AND the probe join
@@ -683,23 +707,24 @@ object TextStats {
       .orderBy("source")
   }
 
-  /** t17_span_scrub — the APPLY step of exact-substring dedup (Lee et
-    * al., "Deduplicating Training Data Makes Language Models Better"):
-    * where t11 only REPORTS span-level duplication, this materializes
-    * the scrubbed corpus. Every non-overlapping `spanTokens`-token span
-    * is fingerprinted positionally (graft_span_pos_hashes — one
-    * compiled loop per doc); for each fingerprint the FIRST corpus
-    * occurrence (min (doc_id, span_pos)) is kept and every later
-    * occurrence is dropped, including repeats inside one doc; the
-    * trailing <spanTokens tail is always kept. clean_text is the doc's
-    * surviving tokens (lowercased / whitespace-normalized — the span
-    * unit) rejoined.
-    *
-    * Scale shape: the first-occurrence ranking shuffles only
-    * (doc_id, pos, 8-byte hash) triples on the hash; per-doc drop
-    * masks (arrays of int positions) join back to the corpus on
-    * doc_id, so document text crosses exactly one exchange — the one
-    * any rewrite-the-corpus op needs to co-locate mask and text. */
+  /** Every span after its fingerprint's first corpus occurrence (min
+    * (doc_id, spos)), as (doc_id, spos, h, rn) rows: the drop set of the
+    * t17 and t20 scrubs. `hashFn` fingerprints each doc's lowercase
+    * words into positional span hashes (`graft_span_pos_hashes` for
+    * t17's grid, `graft_rolling_span_hashes` for t20's windows). The
+    * rank costs one shuffle of (doc_id, spos, 8-byte hash) triples
+    * keyed on the hash. */
+  private def laterSpans(documents: DataFrame, hashFn: String,
+                         spanTokens: Int): DataFrame = {
+    graft.functions.GraftFunctions.register(documents.sparkSession)
+    Scans.spreadIfNarrow(documents, col("doc_id"))
+      .withColumn("toks", lowerWords(col("text")))
+      .select(col("doc_id"),
+        posexplode(expr(s"$hashFn(toks, $spanTokens)")).as(Seq("spos", "h")))
+      .withColumn("rn", row_number().over(Window.partitionBy("h").orderBy("doc_id", "spos")))
+      .filter(col("rn") > 1)
+  }
+
   /** t20_rolling_scrub — SHIFT-INVARIANT exact-substring dedup (the
     * t17 apply step without its span-grid blind spot): t17 fingerprints
     * a fixed non-overlapping grid, so a duplicated passage offset by
@@ -724,25 +749,15 @@ object TextStats {
     * factor is the honest price of shift invariance; the suffix-array
     * alternative is super-linear to distribute at all. */
   def rollingScrub(documents: DataFrame, spanTokens: Int = 10): DataFrame = {
-    graft.functions.GraftFunctions.register(documents.sparkSession)
-    val spans = graft.Scans.spreadIfNarrow(documents, col("doc_id"))
-      .withColumn("toks", split(lower(trim(col("text"))), "\\s+"))
-      .select(col("doc_id"),
-        posexplode(expr(s"graft_rolling_span_hashes(toks, $spanTokens)"))
-          .as(Seq("spos", "h")))
-    // rn=1 is the window's first corpus occurrence (doc_id, pos order —
-    // the t17 protocol); later occurrences contribute their token range
-    // to the doc's drop mask, deduplicated/merged by the set union
-    val wFirst = Window.partitionBy("h").orderBy("doc_id", "spos")
-    val drops = spans
-      .withColumn("rn", row_number().over(wFirst))
-      .filter(col("rn") > 1)
+    // later occurrences contribute their token range to the doc's drop
+    // mask, deduplicated/merged by the set union
+    val drops = laterSpans(documents, "graft_rolling_span_hashes", spanTokens)
       .groupBy("doc_id")
       .agg(array_sort(array_distinct(flatten(collect_list(
         sequence(col("spos"), col("spos") + lit(spanTokens - 1)))))).as("drop_pos"))
     documents
       .join(drops, Seq("doc_id"), "left")
-      .withColumn("toks", split(lower(trim(col("text"))), "\\s+"))
+      .withColumn("toks", lowerWords(col("text")))
       .select(
         col("doc_id"),
         size(col("toks")).cast("long").as("n_tokens"),
@@ -754,22 +769,29 @@ object TextStats {
       .orderBy("doc_id")
   }
 
+  /** t17_span_scrub — the APPLY step of exact-substring dedup (Lee et
+    * al., "Deduplicating Training Data Makes Language Models Better"):
+    * where t11 only REPORTS span-level duplication, this materializes
+    * the scrubbed corpus. Every non-overlapping `spanTokens`-token span
+    * is fingerprinted positionally (graft_span_pos_hashes — one
+    * compiled loop per doc); for each fingerprint the FIRST corpus
+    * occurrence (min (doc_id, span_pos)) is kept and every later
+    * occurrence is dropped, including repeats inside one doc; the
+    * trailing <spanTokens tail is always kept. clean_text is the doc's
+    * surviving tokens (lowercased / whitespace-normalized — the span
+    * unit) rejoined.
+    *
+    * Scale shape: the first-occurrence ranking shuffles only
+    * (doc_id, pos, 8-byte hash) triples on the hash; per-doc drop
+    * masks (arrays of int positions) join back to the corpus on
+    * doc_id, so document text crosses exactly one exchange — the one
+    * any rewrite-the-corpus op needs to co-locate mask and text. */
   def spanScrub(documents: DataFrame, spanTokens: Int = 10): DataFrame = {
-    graft.functions.GraftFunctions.register(documents.sparkSession)
-    val spans = graft.Scans.spreadIfNarrow(documents, col("doc_id"))
-      .withColumn("toks", split(lower(trim(col("text"))), "\\s+"))
-      .select(col("doc_id"),
-        posexplode(expr(s"graft_span_pos_hashes(toks, $spanTokens)")).as(Seq("spos", "h")))
-    // rn=1 is the span's first corpus occurrence; the rank costs one
-    // shuffle of (doc_id, pos, hash) triples keyed on the 8-byte hash
-    val wFirst = Window.partitionBy("h").orderBy("doc_id", "spos")
-    val drops = spans
-      .withColumn("rn", row_number().over(wFirst))
-      .filter(col("rn") > 1)
+    val drops = laterSpans(documents, "graft_span_pos_hashes", spanTokens)
       .groupBy("doc_id").agg(collect_set("spos").as("drop_pos"))
     documents
       .join(drops, Seq("doc_id"), "left")
-      .withColumn("toks", split(lower(trim(col("text"))), "\\s+"))
+      .withColumn("toks", lowerWords(col("text")))
       .withColumn("n_spans", expr(s"size(toks) div $spanTokens"))
       .select(
         col("doc_id"), col("n_spans"),
@@ -804,7 +826,7 @@ object TextStats {
     graft.functions.GraftFunctions.register(documents.sparkSession)
     documents
       .select(col("doc_id"),
-        expr(s"graft_hash_embed(split(lower(trim(text)), '\\\\s+'), $dim, ${seed}L)")
+        call_function("graft_hash_embed", lowerWords(col("text")), lit(dim), lit(seed))
           .as("embedding"))
       .orderBy("doc_id")
   }
@@ -834,10 +856,9 @@ object TextStats {
       lit(rate) * col("n_docs").cast("double") * col("n_chars").cast("double")
         / col("sum_w").cast("double"))
     documents.crossJoin(broadcast(tot))
-      .filter(((col("doc_id") * 2654435761L) % 4294967296L).cast("double")
-        < p * 4294967296.0)
+      .filter(Num.keeps(col("doc_id"), p))
       .select(col("doc_id"), col("source"), col("n_chars"),
-        graft.Num.stableRound(p, 6).as("p_keep"))
+        stableRound(p, 6).as("p_keep"))
       .orderBy("doc_id")
   }
 
@@ -848,13 +869,18 @@ object TextStats {
   // candidate generation all start from a BM25 top-k over the corpus.
   // ------------------------------------------------------------------
 
-  /** The shared tokenizer for the retrieval family: lowercase
-    * whitespace terms (t01's convention). */
-  private def termsOf(documents: DataFrame): DataFrame =
-    graft.Scans.spreadIfNarrow(documents, col("doc_id"))
-      .select(col("doc_id"),
-        explode(split(lower(trim(col("text"))), "\\s+")).as("term"))
-      .filter(col("term") =!= "")
+  /** (doc_id, term) rows of the lowercase words, one per occurrence,
+    * spread once: the corpus side of t14, t24, t31 and the BM25
+    * family. Only t14 keeps the "" term. */
+  private def termsOf(documents: DataFrame, keepEmpty: Boolean = false): DataFrame = {
+    val terms = Scans.spreadIfNarrow(documents, col("doc_id"))
+      .select(col("doc_id"), explode(lowerWords(col("text"))).as("term"))
+    if (keepEmpty) terms else terms.filter(col("term") =!= "")
+  }
+
+  /** The (doc_id, term, tf) term-frequency grain over [[termsOf]]. */
+  private def termFreqs(documents: DataFrame, keepEmpty: Boolean = false): DataFrame =
+    termsOf(documents, keepEmpty).groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
 
   /** Deterministic corpus-derived query set for the t28/t29 inventory
     * rows: every `every`-th document (bounded to `maxQueries` ids so
@@ -868,7 +894,7 @@ object TextStats {
       .filter(col("doc_id") % every === 0 && col("doc_id") < every * maxQueries)
       .select(col("doc_id").as("query_id"),
         explode(slice(array_distinct(filter(
-          split(lower(trim(col("text"))), "\\s+"), t => t =!= lit(""))),
+          lowerWords(col("text")), t => t =!= lit(""))),
           1, qTerms)).as("term"))
 
   /** The scoring tail shared by the live search and the index probe:
@@ -881,13 +907,9 @@ object TextStats {
     * per-document sum folds them in SORTED TERM ORDER (array_sort +
     * aggregate) so the float total — and therefore the top-k cut —
     * is reproducible run to run regardless of aggregation order.
-    * Ranking ties break by doc_id. */
+    * Ranking ties break by doc_id. Unsorted: each caller sorts. */
   private def bm25Score(cand: DataFrame, stats: DataFrame, topK: Int,
-                        k1: Double, b: Double): DataFrame =
-    bm25ScoreUnsorted(cand, stats, topK, k1, b).orderBy("query_id", "rank")
-
-  private def bm25ScoreUnsorted(cand: DataFrame, stats: DataFrame, topK: Int,
-                                k1: Double, b: Double): DataFrame = {
+                        k1: Double, b: Double): DataFrame = {
     val contrib = cand.crossJoin(broadcast(stats))
       .withColumn("avgdl", col("sum_dl").cast("double") / col("n_docs"))
       .withColumn("idf", log(lit(1.0) +
@@ -933,8 +955,7 @@ object TextStats {
     * self-retrieval property. */
   def bm25Search(documents: DataFrame, queries: DataFrame, topK: Int = 10,
                  k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val tf = graft.Caches.tracked(
-      termsOf(documents).groupBy("doc_id", "term").agg(count(lit(1)).as("tf")))
+    val tf = graft.Caches.tracked(termFreqs(documents))
     val dls = graft.Caches.tracked(
       tf.groupBy("doc_id").agg(sum("tf").as("dl")))
     val stats = dls.agg(count(lit(1)).as("n_docs"), sum("dl").as("sum_dl"))
@@ -946,7 +967,7 @@ object TextStats {
     val cand = tf.join(broadcast(qdf), Seq("term"))
       .join(dls, Seq("doc_id"))
       .select("query_id", "doc_id", "term", "tf", "df", "dl")
-    bm25Score(cand, stats, topK, k1, b)
+    bm25Score(cand, stats, topK, k1, b).orderBy("query_id", "rank")
   }
 
   /** sink_text_index — PERSIST the corpus half of t28's derivation
@@ -979,9 +1000,8 @@ object TextStats {
       if (seeding) nBuckets
       else bucketsOf(spark, path).toInt
     val tf = graft.Caches.tracked(
-      termsOf(corpus).groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-        .withColumn("bkt",
-          pmod(xxhash64(col("term")), lit(effBuckets.toLong)).cast("int")))
+      termFreqs(corpus).withColumn("bkt",
+        pmod(xxhash64(col("term")), lit(effBuckets.toLong)).cast("int")))
     val dls = graft.Caches.tracked(tf.groupBy("doc_id").agg(sum("tf").as("dl")))
     val dfs = tf.groupBy("bkt", "term").agg(count(lit(1)).as("df"))
     val stats = dls.agg(count(lit(1)).as("n_docs"), sum("dl").as("sum_dl"))
@@ -1066,7 +1086,7 @@ object TextStats {
       .join(broadcast(qdf), Seq("term"))
       .join(Sources.readParquet(spark, indexPath + "/doclens"), Seq("doc_id"))
       .select("query_id", "doc_id", "term", "tf", "df", "dl")
-    bm25ScoreUnsorted(cand, stats, topK, k1, b)
+    bm25Score(cand, stats, topK, k1, b)
   }
 
   /** The bucket modulus in a text index's `meta/`, memoized on
@@ -1131,8 +1151,7 @@ object TextStats {
       s"chunkSplit: need 0 <= overlap < chunkTokens, got $overlap/$chunkTokens")
     val stride = chunkTokens - overlap
     documents
-      .withColumn("toks", filter(
-        split(trim(col("text")), "\\s+"), t => t =!= lit("")))
+      .withColumn("toks", filter(wsTokens(col("text")), t => t =!= lit("")))
       .withColumn("n_toks", size(col("toks")).cast("long"))
       .filter(col("n_toks") > 0)
       .withColumn("n_chunks", when(col("n_toks") <= chunkTokens, lit(1L))
@@ -1172,16 +1191,12 @@ object TextStats {
     * aggregate with map-side combine at vocabulary grain; the score
     * join carries only (phrase instance, word) rows. */
   def rakeKeyphrases(documents: DataFrame,
-                     stopwords: Seq[String] = Seq("the", "a", "of", "and", "is"),
+                     stopwords: Seq[String] = defaultStopwords,
                      topK: Int = 3): DataFrame = {
-    val inList = stopwords.map(w => s"'$w'").mkString("(", ",", ")")
-    val toks = Scans.spreadIfNarrow(documents, col("doc_id"))
-      .withColumn("toks", split(lower(trim(col("text"))), "\\s+"))
-      .filter(size(col("toks")) > 0)
-      .select(col("doc_id"), posexplode(col("toks")).as(Seq("pos", "w")))
+    val toks = wordPositions(documents)
     val wDoc = Window.partitionBy("doc_id").orderBy("pos")
     val seg = toks
-      .withColumn("is_stop", expr(s"w IN $inList"))
+      .withColumn("is_stop", isStopword(col("w"), stopwords))
       .withColumn("phrase_id",
         sum(when(col("is_stop"), 1L).otherwise(0L)).over(wDoc))
       .filter(!col("is_stop"))
@@ -1209,6 +1224,14 @@ object TextStats {
       .orderBy("doc_id", "rnk")
   }
 
+  /** (doc_id, pos, w) rows of each doc's lowercase words, "" kept,
+    * spread once: the token stream t32 segments and t33 links. */
+  private def wordPositions(documents: DataFrame): DataFrame =
+    Scans.spreadIfNarrow(documents, col("doc_id"))
+      .withColumn("toks", lowerWords(col("text")))
+      .filter(size(col("toks")) > 0)
+      .select(col("doc_id"), posexplode(col("toks")).as(Seq("pos", "w")))
+
   /** t34_kwic — keyword-in-context concordance (the corpus
     * linguist's read, and the snippet generator behind the retrieval
     * tier: every occurrence of a watched term with its ±window token
@@ -1224,18 +1247,17 @@ object TextStats {
     * aggregate. Exact string/integer arithmetic → full hash oracle. */
   def kwic(documents: DataFrame, terms: Option[Seq[String]] = None,
            window: Int = 3, nTerms: Int = 3,
-           stopwords: Seq[String] = Seq("the", "a", "of", "and", "is")): DataFrame = {
+           stopwords: Seq[String] = defaultStopwords): DataFrame = {
     val spark = documents.sparkSession
     import spark.implicits._
     val withToks = Scans.spreadIfNarrow(documents, col("doc_id"))
-      .withColumn("toks", split(lower(trim(col("text"))), "\\s+"))
+      .withColumn("toks", lowerWords(col("text")))
       .select(col("doc_id"), col("toks"))
     val termDf = terms match {
       case Some(ts) => ts.toDF("term")
       case None =>
-        val inList = stopwords.map(w => s"'$w'").mkString("(", ",", ")")
         withToks.select(explode(col("toks")).as("term"))
-          .filter(!expr(s"term IN $inList") && col("term") =!= "")
+          .filter(!isStopword(col("term"), stopwords) && col("term") =!= "")
           .groupBy("term").agg(count(lit(1)).as("cnt"))
           .orderBy(col("cnt").desc, col("term")).limit(nTerms)
           .select("term")
@@ -1294,16 +1316,12 @@ object TextStats {
     * float-for-float. `tol = 0` disables the exit (fixed-count
     * mode). */
   def textrankKeywords(documents: DataFrame,
-                       stopwords: Seq[String] = Seq("the", "a", "of", "and", "is"),
+                       stopwords: Seq[String] = defaultStopwords,
                        topK: Int = 5, iterations: Int = 10,
                        damping: Double = 0.85,
                        tol: Double = 5e-6, checkEvery: Int = 2): DataFrame = {
-    val inList = stopwords.map(w => s"'$w'").mkString("(", ",", ")")
-    val toks = Scans.spreadIfNarrow(documents, col("doc_id"))
-      .withColumn("toks", split(lower(trim(col("text"))), "\\s+"))
-      .filter(size(col("toks")) > 0)
-      .select(col("doc_id"), posexplode(col("toks")).as(Seq("pos", "w")))
-      .filter(!expr(s"w IN $inList") && col("w") =!= "")
+    val toks = wordPositions(documents)
+      .filter(!isStopword(col("w"), stopwords) && col("w") =!= "")
     val wDoc = Window.partitionBy("doc_id").orderBy("pos")
     val hops = toks
       .withColumn("nxt", lead("w", 1).over(wDoc))
@@ -1362,22 +1380,6 @@ object TextStats {
       .orderBy("doc_id", "rnk")
   }
 
-  /** t35_code_detect — code-vs-prose routing, the curation gate that
-    * keeps source code out of prose mixtures (and finds it for code
-    * pipelines): two exact integer signals per doc — code-symbol
-    * occurrences ({};()=<>[]#, counted by the langId length-replace
-    * recipe: one scan per marker, no tokenize, no regex engine
-    * semantics to match cross-engine) and padded code-keyword hits
-    * (" def ", "#include", "=>", "&&", …) — thresholded into a
-    * verdict. The symbol DENSITY routes (symbols per 1000 chars,
-    * rounded at 4dp, and the verdict compares the SAME rounded value
-    * the row displays — the m11 threshold-margin lesson); keyword
-    * count is the OR-side for short snippets whose density hasn't
-    * converged. One narrow projection-only pass, no shuffle at all
-    * until the caller aggregates — at 100 TB this is a free rider on
-    * any existing scan of `text`. Exact protocol: counts are
-    * integers, the one division is integer/integer in double on both
-    * engines → full hash oracle. */
   /** t36_boilerplate_scrub — corpus-level boilerplate LINE removal
     * (the C4/RefinedWeb recipe the per-doc scrubs can't express):
     * a line recurring across ≥ `minDocs` documents OF THE SAME SOURCE
@@ -1418,6 +1420,22 @@ object TextStats {
       .orderBy("doc_id")
   }
 
+  /** t35_code_detect — code-vs-prose routing, the curation gate that
+    * keeps source code out of prose mixtures (and finds it for code
+    * pipelines): two exact integer signals per doc — code-symbol
+    * occurrences ({};()=<>[]#, counted by the langId length-replace
+    * recipe: one scan per marker, no tokenize, no regex engine
+    * semantics to match cross-engine) and padded code-keyword hits
+    * (" def ", "#include", "=>", "&&", …) — thresholded into a
+    * verdict. The symbol DENSITY routes (symbols per 1000 chars,
+    * rounded at 4dp, and the verdict compares the SAME rounded value
+    * the row displays — the m11 threshold-margin lesson); keyword
+    * count is the OR-side for short snippets whose density hasn't
+    * converged. One narrow projection-only pass, no shuffle at all
+    * until the caller aggregates — at 100 TB this is a free rider on
+    * any existing scan of `text`. Exact protocol: counts are
+    * integers, the one division is integer/integer in double on both
+    * engines → full hash oracle. */
   def codeDetect(documents: DataFrame, symPerKchar: Double = 30.0,
                  minKeywords: Int = 2): DataFrame = {
     val t = col("text")

@@ -257,6 +257,15 @@ class TaskRunnerSpec extends SparkSpecBase {
     assert(chunks(Map("stride" -> "2")) >= chunks(Map("stride" -> "8")))
   }
 
+  test("t05 stopwords param is a value list: a quote in a stopword is matched, not parsed") {
+    val viaTask = TaskRunner.run(spark, d, "t05_stopword_ratio",
+      Map("stopwords" -> "don't,the")).collect().toSeq
+    val direct = graft.text.TextStats.stopwordRatio(Tables.documents(spark, d),
+      Seq("don't", "the")).collect().toSeq
+    assert(viaTask.nonEmpty && viaTask == direct)
+    assert(viaTask.forall(r => r.getInt(2) <= r.getInt(1)))
+  }
+
   test("q74 checks are task-authorable: a JSON declaration drives the verdict table") {
     // the Deequ-style seam: a task_parm row declares its own constraint
     // suite (SQL-string predicates, all four check types) against the

@@ -99,6 +99,48 @@ class TextSpec extends SparkSpecBase {
     assert(r.getInt(1) == 4 && r.getInt(2) == 3 && r.getInt(3) == 7)
   }
 
+  test("the three tokenizers stay distinct: whitespace, lowercase words, shingle tokens") {
+    val docs = Seq(
+      (1L, "  Hello\tWORLD\n\nhello  ", 23L),
+      (2L, "", 0L),
+      (3L, "A b\t\tB", 7L)).toDF("doc_id", "text", "n_chars")
+    // whitespace tokens (t01, t09): trimmed, case kept, "" for empty text
+    val t01 = TextStats.tokenStats(docs).collect()
+      .map(r => r.getLong(0) -> ((r.getInt(1), r.getInt(2)))).toMap
+    assert(t01 == Map(1L -> ((3, 3)), 2L -> ((1, 1)), 3L -> ((3, 3))), s"t01: $t01")
+    assert(TextStats.corpusStats(docs).collect()(0).getLong(1) == 7L)
+    // lowercase words with "" dropped (t06, t24)
+    val t06 = TextStats.wordFreq(docs).collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+    assert(t06 == Seq(("b", 2L), ("hello", 2L), ("a", 1L), ("world", 1L)), s"t06: $t06")
+    val t24 = TextStats.unigramSurprisal(docs).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(t24 == Map(1L -> 3L, 3L -> 3L), s"t24: $t24")
+    // t14 keeps the "" term of the empty text
+    val t14 = TextStats.termSalience(docs).collect().map(r => (r.getLong(0), r.getString(1)))
+    assert(t14.contains((2L, "")) && !t14.exists { case (d, t) => d != 2L && t == "" },
+      s"t14: ${t14.toSeq}")
+    graft.Caches.release()
+    // shingle tokens: lowercased, NOT trimmed, so leading whitespace
+    // yields a leading "" token
+    val sh = graft.dedup.Dedup.withShingleHashes(docs, 1)
+      .filter($"doc_id" === 1L).select("toks").as[Seq[String]].collect()(0)
+    assert(sh == Seq("", "hello", "world", "hello", ""), s"shingle tokens: $sh")
+  }
+
+  test("stopwords are compared as values, never parsed: t05 and t32 take \"don't\"") {
+    val docs = Seq((1L, "Don't stop the music don't"), (2L, "the end"))
+      .toDF("doc_id", "text")
+    val stop = Seq("don't", "the")
+    val t05 = TextStats.stopwordRatio(docs, stop).collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getDouble(3))).toSeq
+    assert(t05 == Seq((1L, 5, 3, 0.6), (2L, 2, 1, 0.5)), s"t05: $t05")
+    val t32 = TextStats.rakeKeyphrases(docs, stop).collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getString(2), r.getDouble(3))).toSeq
+    graft.Caches.release()
+    assert(t32 == Seq((1L, 1, "music", 1.0), (1L, 2, "stop", 1.0), (2L, 1, "end", 1.0)),
+      s"t32: $t32")
+  }
+
   test("fingerprint matches a hand-rolled rolling hash") {
     val d = Seq((0L, "ab")).toDF("doc_id", "text")
     val fp = TextStats.fingerprint(d).collect()(0).getLong(1)
@@ -370,6 +412,25 @@ class TextSpec extends SparkSpecBase {
       s"heaviest doc p_keep: ${heavy.map(_.getDouble(3))}")
     // deterministic: a second run keeps the identical cut
     assert(TextStats.weightedSample(df, rate = 0.5).collect().toSeq == out.toSeq)
+  }
+
+  test("Num.scramble is the true (id * 2654435761) mod 2^32 past the long wrap; t27 drops a 4e9 doc") {
+    import org.apache.spark.sql.functions.col
+    // 3474701543 is the last id whose product fits a signed long
+    val ids = Seq(-1L, 0L, 1L, 97L, 3474701543L, 3474701544L, 4000000000L,
+      1000000000000L, Long.MaxValue - 1, Long.MaxValue)
+    val got = ids.toDF("id").select(col("id"), Num.scramble(col("id")))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    ids.foreach { id =>
+      val want = (BigInt(id) * BigInt(2654435761L)).mod(BigInt(1L << 32)).toLong
+      assert(got(id) == want, s"scramble($id) = ${got(id)}, want $want")
+    }
+    // the 4e9 doc's true scramble (369010688) is far above a tiny
+    // rate's threshold, so the coin must drop it like any other doc
+    val docs = ((1L to 20L).map(i => (i, "src0", 10L)) :+ ((4000000000L, "src0", 10L)))
+      .toDF("doc_id", "source", "n_chars")
+    val kept = TextStats.weightedSample(docs, rate = 1e-6).collect().map(_.getLong(0))
+    assert(kept.isEmpty, s"kept ${kept.toSeq}")
   }
 
   // ----------------------------------------------------------- BM25
