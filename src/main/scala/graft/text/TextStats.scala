@@ -907,7 +907,8 @@ object TextStats {
     * per-document sum folds them in SORTED TERM ORDER (array_sort +
     * aggregate) so the float total — and therefore the top-k cut —
     * is reproducible run to run regardless of aggregation order.
-    * Ranking ties break by doc_id. Unsorted: each caller sorts. */
+    * Ranking ties break by doc_id. Unsorted: the public searches sort
+    * it, a21 fuses it as it is. */
   private def bm25Score(cand: DataFrame, stats: DataFrame, topK: Int,
                         k1: Double, b: Double): DataFrame = {
     val contrib = cand.crossJoin(broadcast(stats))
